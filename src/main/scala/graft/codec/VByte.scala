@@ -11,13 +11,27 @@ final class ByteBuf(initial: Int = 16) {
   private var buf = new Array[Byte](math.max(initial, 4))
   private var n = 0
   @inline def +=(b: Byte): Unit = {
-    if (n == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length << 1)
+    if (n == buf.length) buf = java.util.Arrays.copyOf(buf, ByteBuf.grown(buf.length))
     buf(n) = b
     n += 1
   }
   @inline def length: Int = n
+  /** The bytes written so far. When the buffer is exactly full this IS the
+    * internal array (no copy): treat it as immutable and stop appending. */
   def toArray: Array[Byte] =
     if (n == buf.length) buf else java.util.Arrays.copyOf(buf, n)
+}
+
+object ByteBuf {
+  /** Largest array the JVM reliably allocates. */
+  val MaxCapacity: Int = Int.MaxValue - 8
+
+  /** Capacity after a full buffer of `cap` bytes grows: doubling, capped
+    * at [[MaxCapacity]] instead of overflowing to a negative size. */
+  def grown(cap: Int): Int =
+    if (cap >= MaxCapacity) throw new IllegalStateException(s"ByteBuf cannot grow past $cap bytes")
+    else if (cap > MaxCapacity / 2) MaxCapacity
+    else cap << 1
 }
 
 /** Variable-byte (VByte) codec with delta encoding for sorted docID lists

@@ -42,7 +42,8 @@ final class PosSearcher(spark: SparkSession, indexDir: String) {
       broadcast(graft.sources.TableIO.read(spark, p).select(col("docId"))),
       Seq("docId"), "left_anti"))
 
-  /** Largest positions file (listed once at construction); -1 = unknown. */
+  /** Largest positions file (listed once at construction); -1 = unknown,
+    * which forces the grouped fallback plan (logged, never silent). */
   private val maxFileLen: Long = {
     try {
       val path = new org.apache.hadoop.fs.Path(posPath)
@@ -51,7 +52,12 @@ final class PosSearcher(spark: SparkSession, indexDir: String) {
         case f if f.isFile && !f.getPath.getName.startsWith("_") &&
           !f.getPath.getName.startsWith(".") => f.getLen
       }.foldLeft(0L)(math.max)
-    } catch { case _: Throwable => -1L }
+    } catch { case scala.util.control.NonFatal(e) =>
+      org.slf4j.LoggerFactory.getLogger(classOf[PosSearcher]).warn(
+        s"listing positions at $posPath failed ($e): falling back to the " +
+          "grouped-shuffle plan (groupByKey(shard)) for every phrase query")
+      -1L
+    }
   }
 
   /** Zero-exchange kernel soundness — evaluated against the CURRENT

@@ -2,7 +2,7 @@ package graft.query
 
 import graft.analysis.{Analyzer, StopWords}
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
@@ -10,12 +10,16 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Two equivalent paths, both returning (conv_id, turn_idx, docId, score):
   *
-  *  - `topK` — the scale path: broadcast the analyzed query + its global
-  *    df slice (a handful of values — never the df table itself), prune the
-  *    postings scan to the query terms (predicate pushed to Parquet), run
-  *    the block-max WAND kernel per shard (bounded heap; doc lengths ride
-  *    INLINE in the posting blobs, so no side table is touched), then merge
-  *    the ≤ shards·k candidates with a distributed TakeOrdered.
+  *  - `topK` — the scale path, ONE Spark job per query: broadcast the
+  *    analyzed query + its global df slice (a handful of values — never
+  *    the df table itself), prune the postings scan to the query terms
+  *    (predicate pushed to Parquet), run the block-max WAND kernel per
+  *    shard (bounded heap; doc lengths ride INLINE in the posting blobs, so
+  *    no side table is touched), resolve the task's ≤ k winners to
+  *    (conv_id, turn_idx) in the SAME task ([[HitLookup]]: a filtered
+  *    Parquet point read of analyzed/), then merge the ≤ tasks·k final
+  *    rows with one TakeOrdered. The call runs that job and returns the
+  *    ≤ k rows as a local frame, so collecting it launches nothing more.
   *
   *    Shard grouping strategy (scale design):
   *     * COLOCATED (default when sound): the build writes one file per
@@ -24,9 +28,9 @@ import scala.collection.mutable.ArrayBuffer
   *       the query plan. Sound iff Spark never splits a postings file
   *       across read partitions, which is guaranteed when every file is ≤
   *       min(spark.sql.files.maxPartitionBytes, openCostInBytes) — checked
-  *       once at construction. On a production deployment the same
-  *       guarantee comes from bucketed-table layout or per-shard files
-  *       sized under the split threshold.
+  *       against the session conf of each call. On a production deployment
+  *       the same guarantee comes from bucketed-table layout or per-shard
+  *       files sized under the split threshold.
   *     * FALLBACK: groupByKey(shard) — one narrow exchange of ONLY the
   *       pruned query-term posting rows (≤ |terms|·shards rows), never the
   *       corpus and never any length table.
@@ -42,6 +46,14 @@ object Searcher {
   def docMeta(spark: SparkSession, indexDir: String): DataFrame =
     graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
       .select(col("shard"), col("docId"), col("conv_id"), col("turn_idx"), col("len"))
+
+  /** One shard's posting lists by term. A term appears once per SEGMENT
+    * (base + refresh deltas) when a partition holds both; segment docId
+    * ranges are disjoint, so the merge is a concatenation + one re-encode. */
+  private[query] def termLists(group: Seq[Posting]): Map[String, Posting] =
+    group.groupBy(_.term).map { case (t, ps) =>
+      t -> (if (ps.lengthCompare(1) == 0) ps.head else graft.codec.Postings.merge(ps))
+    }
 }
 
 final class Searcher(spark: SparkSession, indexDir: String,
@@ -92,11 +104,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
   private val postingsDF = maybeCache(graft.sources.TableIO.read(spark, postingsPaths))
   private val dfDF = maybeCache(graft.sources.TableIO.read(spark,
     graft.build.IndexBuilder.dfPathAsOf(indexDir, generation)))
-  /** Doc-meta projection for KERNEL-HIT resolution: coverage-filtered
-    * only. Kernel hits come from gen-pinned postings with tombstones
-    * already excluded in the kernel, so the tombstone anti-join would be
-    * pure redundancy — an extra tombstone-table scan + BroadcastExchange
-    * on every query's point read (PlanSpec pins its absence). */
+  /** Coverage-filtered doc-meta projection, the base of the relational
+    * doc map below. Kernel hits never read it: they resolve inside the
+    * shard task through [[hitLookup]]. */
   private lazy val hitMetaDF = maybeCache {
     val base = graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
     coveredOnly.fold(base)(base.where)
@@ -111,8 +121,14 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * the query surface's repeated doc-map reads (candidate resolution,
     * doc-length views) hit the hot frame instead of re-scanning analyzed/
     * per query. Same rows as [[Searcher.docMeta]] on an index with no
-    * unrefreshed appends; coverage-filtered like every kernel-hit read. */
+    * unrefreshed appends; coverage-filtered, tombstones not hidden. */
   private[graft] def hitMeta: DataFrame = hitMetaDF
+
+  /** In-task (conv_id, turn_idx) resolution of kernel hits over this
+    * index's analyzed/ files, listed once per Searcher through the
+    * storage seam (so catalog tables resolve too). */
+  private lazy val hitLookup: HitLookup = HitLookup(spark,
+    graft.sources.TableIO.read(spark, s"$indexDir/analyzed").inputFiles.toSeq)
 
   /** The (cached when cacheTables) base+segment postings table — exposed
     * for relational consumers that decode pruned posting slices themselves
@@ -185,7 +201,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     else math.round(statsRow.getAs[Long]("n") * statsRow.getAs[Double]("avgdl"))
 
   /** Largest posting file across base + segments (listed once at
-    * construction); -1 when listing failed. */
+    * construction); -1 when listing failed, which forces the grouped
+    * fallback plan (logged, never silent). */
   private val maxPostingsFileLen: Long = {
     try {
       postingsPaths.flatMap { p =>
@@ -196,7 +213,12 @@ final class Searcher(spark: SparkSession, indexDir: String,
             !f.getPath.getName.startsWith(".") => f.getLen
         }
       }.foldLeft(0L)(math.max)
-    } catch { case _: Throwable => -1L }
+    } catch { case scala.util.control.NonFatal(e) =>
+      org.slf4j.LoggerFactory.getLogger(classOf[Searcher]).warn(
+        s"listing postings of $indexDir failed ($e): falling back to the " +
+          "grouped-shuffle plan (groupByKey(shard)) for every query")
+      -1L
+    }
   }
 
   /** True when the zero-exchange colocated kernel is sound: no postings
@@ -237,9 +259,27 @@ final class Searcher(spark: SparkSession, indexDir: String,
     terms.iterator.map(t => t -> dfCache.get(t).longValue).filter(_._2 > 0L).toMap
   }
 
+  private def pruned(terms: Seq[String]): Dataset[Posting] =
+    postingsDF.where(col("term").isin(terms: _*)).as[Posting]
+
+  /** Run `kernel` once per shard of a pruned postings Dataset:
+    * zero-exchange mapPartitions when [[colocated]] (and not
+    * `forceGrouped`), narrow groupByKey(shard) of the pruned rows
+    * otherwise. `kernel` must capture only method-local state (never the
+    * Searcher itself). */
+  private def perShard[T: Encoder](postings: Dataset[Posting], forceGrouped: Boolean = false)(
+      kernel: Seq[Posting] => Iterator[T]): Dataset[T] =
+    if (colocated && !forceGrouped)
+      postings.mapPartitions { ps =>
+        val byShard = new java.util.HashMap[Integer, ArrayBuffer[Posting]]()
+        ps.foreach(po => byShard.computeIfAbsent(po.shard, _ => new ArrayBuffer[Posting]) += po)
+        import scala.jdk.CollectionConverters._
+        byShard.values.iterator.asScala.flatMap(g => kernel(g.toSeq))
+      }
+    else postings.groupByKey(_.shard).flatMapGroups((_, ps) => kernel(ps.toSeq))
+
   /** Run the WAND kernel per shard over a pruned postings Dataset,
-    * answering every query in `qs` in one pass. Emits (qid, docId, score).
-    * Zero-exchange when `colocated`; narrow groupByKey(shard) otherwise. */
+    * answering every query in `qs` in one pass. Emits (qid, docId, score). */
   private def shardTopK(postings: Dataset[Posting],
                         qs: Seq[(String, Map[String, Int])],
                         dfm: Map[String, Long], k: Int,
@@ -253,18 +293,12 @@ final class Searcher(spark: SparkSession, indexDir: String,
                         /** search_after page gate — see [[Wand.TopK]]. */
                         gateMax: Double = Double.PositiveInfinity,
                         /** per-ANALYZED-term query-time boosts (absent = 1). */
-                        boosts: Map[String, Double] = Map.empty): DataFrame = {
+                        boosts: Map[String, Double] = Map.empty): Dataset[(String, Long, Double)] = {
     val p = params
     val (nn, ad) = (n, avgdl)
     val tb = tombBc
     def kernel(group: Seq[Posting]): Iterator[(String, Long, Double)] = {
-      // A term can appear once per SEGMENT (base + refresh deltas) when a
-      // partition holds both; merge on the fly — segment docId ranges are
-      // disjoint, so the merge is a concatenation + one re-encode.
-      val byTerm = group.groupBy(_.term).map { case (t, ps) =>
-        t -> (if (ps.lengthCompare(1) == 0) ps.head
-              else graft.codec.Postings.merge(ps))
-      }
+      val byTerm = Searcher.termLists(group)
       val tomb = tb.value.get(group.head.shard).toSeq
       qs.iterator.flatMap { case (qid, qtf) =>
         val inputs = qtf.toSeq.collect {
@@ -280,53 +314,54 @@ final class Searcher(spark: SparkSession, indexDir: String,
         scored.iterator.map(s => (qid, s.docId, s.score))
       }
     }
-    val out =
-      if (colocated && !forceGrouped)
-        postings.mapPartitions { ps =>
-          val byShard = new java.util.HashMap[Integer, ArrayBuffer[Posting]]()
-          ps.foreach(po => byShard.computeIfAbsent(po.shard, _ => new ArrayBuffer[Posting]) += po)
-          import scala.jdk.CollectionConverters._
-          byShard.values.iterator.asScala.flatMap(g => kernel(g.toSeq))
-        }
-      else
-        postings.groupByKey(_.shard).flatMapGroups((_, ps) => kernel(ps.toSeq))
-    out.toDF("qid", "docId", "score")
+    perShard(postings, forceGrouped)(kernel)
   }
 
-  /** The kernel + merge plan of a single query, BEFORE hit collection —
-    * ends in a TakeOrdered over ≤ shards·k candidate rows. Exposed so plan
-    * tests can pin the scan pushdown / no-Exchange contracts. */
+  /** The tail of every top-k task: the best k candidates per query,
+    * resolved to (conv_id, turn_idx) inside the same task. */
+  private def resolved(scored: Dataset[(String, Long, Double)], k: Int): Dataset[Hit] = {
+    val lookup = hitLookup
+    scored.mapPartitions(it => lookup.resolveTopK(it, k))
+  }
+
+  /** Single-query top-k plan: kernel and hit resolution per task, then ONE
+    * TakeOrdered over the ≤ tasks·k resolved rows — a single job.
+    * Columns (docId, score, conv_id, turn_idx). */
+  private def topFrame(scored: Dataset[(String, Long, Double)], k: Int): DataFrame =
+    resolved(scored, k).select($"docId", $"score", $"conv_id", $"turn_idx")
+      .orderBy(desc("score"), asc("docId")).limit(k)
+
+  /** [[topFrame]] of a single-query (docId, score) shard kernel. */
+  private def hitFrame(postings: Dataset[Posting], k: Int)(
+      kernel: Seq[Posting] => Iterator[(Long, Double)]): DataFrame =
+    topFrame(perShard(postings)(g => kernel(g).map { case (d, sc) => ("q", d, sc) }), k)
+
+  /** Runs a top-k plan's one job now, under the session conf of this call
+    * (the [[colocated]] check requires it), and returns its ≤ k hits as a
+    * local (conv_id, turn_idx, docId, score) frame: collecting it launches
+    * no further job. */
+  private def collectHits(frame: DataFrame): DataFrame =
+    frame.collect().toSeq
+      .map(r => (r.getString(2), r.getInt(3), r.getLong(0), r.getDouble(1)))
+      .toDF("conv_id", "turn_idx", "docId", "score")
+
+  /** The top-k plan of a single query as [[topK]] executes it — one job
+    * ending in a TakeOrdered over ≤ tasks·k resolved rows; columns
+    * (docId, score, conv_id, turn_idx). Exposed so plan tests can pin the
+    * scan pushdown / no-Exchange contracts. */
   private[graft] def kernelFrame(query: String, k: Int,
                                  exhaustiveKernel: Boolean = false): Option[DataFrame] = {
     val qtf = analyzeQuery(query)
     if (qtf.isEmpty) return None
     val dfm = dfSlice(qtf.keys.toSeq)
     if (dfm.isEmpty) return None
-    val terms = dfm.keys.toSeq.sorted
-    val postings = postingsDF.where(col("term").isin(terms: _*)).as[Posting]
-    val perShard = shardTopK(postings, Seq(("q", qtf)), dfm, k, exhaustiveKernel)
-      .select($"docId", $"score")
-    Some(perShard.orderBy(desc("score"), asc("docId")).limit(k))
+    Some(topFrame(shardTopK(pruned(dfm.keys.toSeq.sorted), Seq(("q", qtf)), dfm, k,
+      exhaustiveKernel), k))
   }
 
   /** WAND top-k. Deterministic order: score desc, docId asc. */
-  def topK(query: String, k: Int, exhaustiveKernel: Boolean = false): DataFrame = {
-    val kernel = kernelFrame(query, k, exhaustiveKernel)
-    if (kernel.isEmpty) return emptyHits()
-    // TakeOrdered merge of the ≤ shards·k candidates; the ≤ k winners come
-    // back to the driver so the doc-meta lookup becomes a PRUNED point
-    // read (docId IN (...) gets Parquet rowgroup / in-memory batch
-    // pruning — docIds are sorted within shard files) instead of a join
-    // that scans the whole doc map per query.
-    val hits = kernel.get.as[(Long, Double)].collect()
-    if (hits.isEmpty) return emptyHits()
-    val scoreMap = typedLit(hits.toMap)
-    hitMetaDF
-      .filter(col("docId").isin(hits.map(_._1): _*))
-      .select($"conv_id", $"turn_idx", $"docId",
-        element_at(scoreMap, $"docId").as("score"))
-      .orderBy(desc("score"), asc("docId")).limit(k)
-  }
+  def topK(query: String, k: Int, exhaustiveKernel: Boolean = false): DataFrame =
+    kernelFrame(query, k, exhaustiveKernel).fold(emptyHits())(collectHits)
 
   /** minimum_should_match top-k (Lucene's msm over a SHOULD clause list):
     * OR-mode BM25, but a document qualifies only if it contains at least
@@ -340,11 +375,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     if (qtf.isEmpty) return emptyHits()
     val dfm = dfSlice(qtf.keys.toSeq)
     if (dfm.isEmpty || dfm.size < minMatch) return emptyHits()
-    val terms = dfm.keys.toSeq.sorted
-    val postings = postingsDF.where(col("term").isin(terms: _*)).as[Posting]
-    val perShard = shardTopK(postings, Seq(("q", qtf)), dfm, k,
-      exhaustive = false, minMatch = minMatch)
-    resolveHits(perShard, k)
+    collectHits(topFrame(shardTopK(pruned(dfm.keys.toSeq.sorted), Seq(("q", qtf)), dfm, k,
+      exhaustive = false, minMatch = minMatch), k))
   }
 
   /** Deep-pagination top-k (Elasticsearch's search_after): the hits whose
@@ -364,13 +396,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
     if (qtf.isEmpty) return emptyHits()
     val dfm = dfSlice(qtf.keys.toSeq)
     if (dfm.isEmpty) return emptyHits()
-    val terms = dfm.keys.toSeq.sorted
-    val postings = postingsDF.where(col("term").isin(terms: _*)).as[Posting]
     // +5e-5 = half a round-4 ulp: every doc ROUNDING to ≤ afterScore4
     // passes the raw-score gate; the caller's relational cut is exact.
-    val perShard = shardTopK(postings, Seq(("q", qtf)), dfm, k,
-      exhaustive = false, gateMax = afterScore4 + 5e-5)
-    resolveHits(perShard, k)
+    collectHits(topFrame(shardTopK(pruned(dfm.keys.toSeq.sorted), Seq(("q", qtf)), dfm, k,
+      exhaustive = false, gateMax = afterScore4 + 5e-5), k))
   }
 
   /** Synonym-aware top-k — Lucene's SynonymQuery semantics, exactly: each
@@ -401,16 +430,12 @@ final class Searcher(spark: SparkSession, indexDir: String,
     }
     if (gdf.isEmpty) return emptyHits()
     val live = allTerms.filter(dfm.contains).sorted
-    val postings = postingsDF.where(col("term").isin(live: _*)).as[Posting]
     val p = params
     val (nn, ad) = (n, avgdl)
     val tb = tombBc
     val kk = k
     def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = group.groupBy(_.term).map { case (t, ps) =>
-        t -> (if (ps.lengthCompare(1) == 0) ps.head
-              else graft.codec.Postings.merge(ps))
-      }
+      val byTerm = Searcher.termLists(group)
       val tomb = tb.value.get(group.head.shard).toSeq
       val inputs = qtf.toSeq.flatMap { case (t, f) =>
         val members = groups(t).filter(byTerm.contains)
@@ -428,7 +453,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
         else Wand.topK(inputs, nn, ad, kk, p)
       scored.iterator.map(s => (s.docId, s.score))
     }
-    resolveHits(perShardScores(postings)(kernel), k)
+    collectHits(hitFrame(pruned(live), k)(kernel))
   }
 
   /** Top-k with CALLER-supplied per-term global df — the federated path
@@ -440,10 +465,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
   def topKWithDf(query: String, k: Int, dfm: Map[String, Long]): DataFrame = {
     val qtf = analyzeQuery(query)
     if (qtf.isEmpty || dfm.isEmpty) return emptyHits()
-    val terms = dfm.keys.toSeq.sorted
-    val postings = postingsDF.where(col("term").isin(terms: _*)).as[Posting]
-    val perShard = shardTopK(postings, Seq(("q", qtf)), dfm, k, exhaustive = false)
-    resolveHits(perShard, k)
+    collectHits(topFrame(shardTopK(pruned(dfm.keys.toSeq.sorted), Seq(("q", qtf)), dfm, k,
+      exhaustive = false), k))
   }
 
   /** Boosted top-k (Lucene's `term^w` query-time weights): OR-mode BM25
@@ -464,31 +487,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     if (dfm.isEmpty) return emptyHits()
     val aboosts = boosts.flatMap { case (raw, b) =>
       analyzeQuery(raw).keys.map(_ -> b) }
-    val terms = dfm.keys.toSeq.sorted
-    val postings = postingsDF.where(col("term").isin(terms: _*)).as[Posting]
-    val perShard = shardTopK(postings, Seq(("q", qtf)), dfm, k,
-      exhaustive = false, boosts = aboosts)
-    resolveHits(perShard, k)
-  }
-
-  /** Shared per-shard kernel dispatch for single-query (docId, score)
-    * kernels: zero-exchange mapPartitions when [[colocated]], narrow
-    * groupByKey(shard) of the pruned rows otherwise — the same two plan
-    * shapes [[shardTopK]] documents. `kernel` must capture only
-    * method-local state (never the Searcher itself). */
-  private def perShardScores(postings: Dataset[Posting])(
-      kernel: Seq[Posting] => Iterator[(Long, Double)]): DataFrame = {
-    val out =
-      if (colocated)
-        postings.mapPartitions { ps =>
-          val byShard = new java.util.HashMap[Integer, ArrayBuffer[Posting]]()
-          ps.foreach(po => byShard.computeIfAbsent(po.shard, _ => new ArrayBuffer[Posting]) += po)
-          import scala.jdk.CollectionConverters._
-          byShard.values.iterator.asScala.flatMap(g => kernel(g.toSeq))
-        }
-      else
-        postings.groupByKey(_.shard).flatMapGroups((_, ps) => kernel(ps.toSeq))
-    out.toDF("docId", "score")
+    collectHits(topFrame(shardTopK(pruned(dfm.keys.toSeq.sorted), Seq(("q", qtf)), dfm, k,
+      exhaustive = false, boosts = aboosts), k))
   }
 
   /** Per-term global COLLECTION frequency (total occurrences — the
@@ -532,21 +532,17 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * The kernel is exhaustive over the pruned postings (WAND's bound
     * algebra doesn't transfer to the clamped LM contribution — see
     * [[LmDirichlet]]); everything else (colocated zero-exchange dispatch,
-    * tombstones, point-read hit resolution) is the standard path. */
+    * tombstones, in-task hit resolution) is the standard path. */
   def topKDirichlet(query: String, mu: Double, k: Int): DataFrame = {
     val qtf = analyzeQuery(query)
     if (qtf.isEmpty) return emptyHits()
     val cfm = cfSlice(qtf.keys.toSeq)
     if (cfm.isEmpty) return emptyHits()
     val live = cfm.keys.toSeq.sorted
-    val postings = postingsDF.where(col("term").isin(live: _*)).as[Posting]
     val (tt, muu, kk) = (sumlen, mu, k)
     val tb = tombBc
     def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = group.groupBy(_.term).map { case (t, ps) =>
-        t -> (if (ps.lengthCompare(1) == 0) ps.head
-              else graft.codec.Postings.merge(ps))
-      }
+      val byTerm = Searcher.termLists(group)
       val inputs = qtf.toSeq.collect {
         case (t, f) if byTerm.contains(t) && cfm.contains(t) =>
           LmDirichlet.TermInput(byTerm(t), f, cfm(t))
@@ -555,7 +551,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
           excludes = tb.value.get(group.head.shard).toSeq)
         .iterator.map(s => (s.docId, s.score))
     }
-    resolveHits(perShardScores(postings)(kernel), k)
+    collectHits(hitFrame(pruned(live), k)(kernel))
   }
 
   /** Classic TF-IDF top-k ([[ClassicTfIdf]]) — the third similarity over
@@ -567,14 +563,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
     val dfm = dfSlice(qtf.keys.toSeq)
     if (dfm.isEmpty) return emptyHits()
     val live = dfm.keys.toSeq.sorted
-    val postings = postingsDF.where(col("term").isin(live: _*)).as[Posting]
     val (nn, kk) = (n, k)
     val tb = tombBc
     def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = group.groupBy(_.term).map { case (t, ps) =>
-        t -> (if (ps.lengthCompare(1) == 0) ps.head
-              else graft.codec.Postings.merge(ps))
-      }
+      val byTerm = Searcher.termLists(group)
       val inputs = qtf.toSeq.collect {
         case (t, f) if byTerm.contains(t) && dfm.contains(t) =>
           ClassicTfIdf.TermInput(byTerm(t), f, dfm(t))
@@ -583,7 +575,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
           excludes = tb.value.get(group.head.shard).toSeq)
         .iterator.map(s => (s.docId, s.score))
     }
-    resolveHits(perShardScores(postings)(kernel), k)
+    collectHits(hitFrame(pruned(live), k)(kernel))
   }
 
   /** Disjunction-max top-k (Lucene's DisjunctionMaxQuery): each subquery
@@ -603,16 +595,12 @@ final class Searcher(spark: SparkSession, indexDir: String,
     val dfm = dfSlice(allTerms)
     if (dfm.isEmpty) return emptyHits()
     val live = allTerms.filter(dfm.contains).sorted
-    val postings = postingsDF.where(col("term").isin(live: _*)).as[Posting]
     val p = params
     val (nn, ad) = (n, avgdl)
     val tb = tombBc
     val (tiez, kk, nSub) = (tie, k, subs.size)
     def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = group.groupBy(_.term).map { case (t, ps) =>
-        t -> (if (ps.lengthCompare(1) == 0) ps.head
-              else graft.codec.Postings.merge(ps))
-      }
+      val byTerm = Searcher.termLists(group)
       val exSet = new java.util.HashSet[java.lang.Long]()
       tb.value.get(group.head.shard).foreach { e =>
         val c = new graft.codec.Postings.Cursor(e)
@@ -644,7 +632,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
       }
       topk.drainDescending().iterator.map(s => (s.docId, s.score))
     }
-    resolveHits(perShardScores(postings)(kernel), k)
+    collectHits(hitFrame(pruned(live), k)(kernel))
   }
 
   /** Significant-terms aggregation (Elasticsearch's significant_terms,
@@ -697,22 +685,6 @@ final class Searcher(spark: SparkSession, indexDir: String,
       .orderBy(round($"score", 4).desc, $"term".asc).limit(topN)
   }
 
-  /** Merge per-shard candidates to the global ≤ k winners, then resolve
-    * (conv_id, turn_idx) with a PRUNED point read of the doc map — shared
-    * tail of every single-query top-k path. */
-  private def resolveHits(perShard: DataFrame, k: Int): DataFrame = {
-    val hits = perShard.select($"docId", $"score")
-      .orderBy(desc("score"), asc("docId")).limit(k)
-      .as[(Long, Double)].collect()
-    if (hits.isEmpty) return emptyHits()
-    val scoreMap = typedLit(hits.toMap)
-    hitMetaDF
-      .filter(col("docId").isin(hits.map(_._1): _*))
-      .select($"conv_id", $"turn_idx", $"docId",
-        element_at(scoreMap, $"docId").as("score"))
-      .orderBy(desc("score"), asc("docId")).limit(k)
-  }
-
   /** Conjunctive (AND-mode) top-k: only documents containing EVERY analyzed
     * query term are ranked; scores equal the OR-mode BM25 score of the same
     * doc. A query term absent from the corpus ⇒ empty result (strict AND).
@@ -723,11 +695,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     if (qtf.isEmpty) return emptyHits()
     val dfm = dfSlice(qtf.keys.toSeq)
     if (dfm.size < qtf.size) return emptyHits() // some term nowhere in corpus
-    val terms = dfm.keys.toSeq.sorted
-    val postings = postingsDF.where(col("term").isin(terms: _*)).as[Posting]
-    val perShard = shardTopK(postings, Seq(("q", qtf)), dfm, k,
-        exhaustive = false, conjunctiveRequired = qtf.size)
-    resolveHits(perShard, k)
+    collectHits(topFrame(shardTopK(pruned(dfm.keys.toSeq.sorted), Seq(("q", qtf)), dfm, k,
+        exhaustive = false, conjunctiveRequired = qtf.size), k))
   }
 
   /** Negated (NOT-mode) top-k: OR-mode BM25 over the query terms,
@@ -748,16 +717,12 @@ final class Searcher(spark: SparkSession, indexDir: String,
     if (dfm.isEmpty) return emptyHits()
     val eterms = eset.toSeq.sorted
     val all = (dfm.keys.toSeq ++ eterms).distinct.sorted
-    val postings = postingsDF.where(col("term").isin(all: _*)).as[Posting]
     val qterms = qtf
     val p = params
     val (nn, ad) = (n, avgdl)
     val tb = tombBc
     def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = group.groupBy(_.term).map { case (t, ps) =>
-        t -> (if (ps.lengthCompare(1) == 0) ps.head
-              else graft.codec.Postings.merge(ps))
-      }
+      val byTerm = Searcher.termLists(group)
       val ex = eterms.flatMap(byTerm.get) ++ tb.value.get(group.head.shard)
       val inputs = qterms.toSeq.collect {
         case (t, f) if byTerm.contains(t) && dfm.contains(t) =>
@@ -765,7 +730,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
       }
       Wand.topKNot(inputs, ex, nn, ad, k, p).iterator.map(s => (s.docId, s.score))
     }
-    resolveHits(perShardScores(postings)(kernel), k)
+    collectHits(hitFrame(pruned(all), k)(kernel))
   }
 
   /** Per-term score breakdown for ONE document — Lucene's explain(): each
@@ -832,17 +797,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
     val mterms = m0.keys.toSeq.sorted ++ fterms.sorted
     val eterms = eset.toSeq.sorted
     val all = (dfm.keys.toSeq ++ mterms ++ eterms).distinct.sorted
-    val postings = postingsDF.where(col("term").isin(all: _*)).as[Posting]
     val qterms = qtf
     val required = mterms.size
     val p = params
     val (nn, ad) = (n, avgdl)
     val tb = tombBc
     def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = group.groupBy(_.term).map { case (t, ps) =>
-        t -> (if (ps.lengthCompare(1) == 0) ps.head
-              else graft.codec.Postings.merge(ps))
-      }
+      val byTerm = Searcher.termLists(group)
       val filterPs = mterms.flatMap(byTerm.get)
       val ex = eterms.flatMap(byTerm.get) ++ tb.value.get(group.head.shard)
       val inputs = qterms.toSeq.collect {
@@ -852,17 +813,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
       Wand.topKFiltered(inputs, filterPs, required, nn, ad, k, p, excludes = ex)
         .iterator.map(s => (s.docId, s.score))
     }
-    val out =
-      if (colocated)
-        postings.mapPartitions { ps =>
-          val byShard = new java.util.HashMap[Integer, ArrayBuffer[Posting]]()
-          ps.foreach(po => byShard.computeIfAbsent(po.shard, _ => new ArrayBuffer[Posting]) += po)
-          import scala.jdk.CollectionConverters._
-          byShard.values.iterator.asScala.flatMap(g => kernel(g.toSeq))
-        }
-      else
-        postings.groupByKey(_.shard).flatMapGroups((_, ps) => kernel(ps.toSeq))
-    resolveHits(out.toDF("docId", "score"), k)
+    collectHits(hitFrame(pruned(all), k)(kernel))
   }
 
   /** Filtered (faceted) top-k: rank only documents whose facet posting
@@ -882,17 +833,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
     val fterms = facets.toSeq.map { case (c, v) => graft.model.Facets.term(c, v) }
     val required = fterms.size
     val all = (dfm.keys.toSeq ++ fterms).distinct.sorted
-    val postings = postingsDF.where(col("term").isin(all: _*)).as[Posting]
     val qterms = qtf
     val fset = fterms.toSet
     val p = params
     val (nn, ad) = (n, avgdl)
     val tb = tombBc
     def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = group.groupBy(_.term).map { case (t, ps) =>
-        t -> (if (ps.lengthCompare(1) == 0) ps.head
-              else graft.codec.Postings.merge(ps))
-      }
+      val byTerm = Searcher.termLists(group)
       val filterPs = fterms.flatMap(byTerm.get)
       val inputs = qterms.toSeq.collect {
         case (t, f) if !fset.contains(t) && byTerm.contains(t) && dfm.contains(t) =>
@@ -902,7 +849,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
           excludes = tb.value.get(group.head.shard).toSeq)
         .iterator.map(s => (s.docId, s.score))
     }
-    resolveHits(perShardScores(postings)(kernel), k)
+    collectHits(hitFrame(pruned(all), k)(kernel))
   }
 
   /** Facet value counts over the documents matching ≥ 1 analyzed query term
@@ -930,26 +877,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
       .as[Posting]
     val tb = tombBc
     def kernel(group: Seq[Posting]): Iterator[(String, Long)] = {
-      val byTerm = group.groupBy(_.term).map { case (t, ps) =>
-        t -> (if (ps.lengthCompare(1) == 0) ps.head
-              else graft.codec.Postings.merge(ps))
-      }
+      val byTerm = Searcher.termLists(group)
       val (fac, rest) = byTerm.partition(_._1.startsWith(prefix))
       Wand.facetCounts(qterms.flatMap(rest.get), fac.values.toSeq,
           excludes = tb.value.get(group.head.shard).toSeq)
         .map { case (t, c) => (t.substring(prefixLen), c) }
     }
-    val out =
-      if (colocated)
-        postings.mapPartitions { ps =>
-          val byShard = new java.util.HashMap[Integer, ArrayBuffer[Posting]]()
-          ps.foreach(po => byShard.computeIfAbsent(po.shard, _ => new ArrayBuffer[Posting]) += po)
-          import scala.jdk.CollectionConverters._
-          byShard.values.iterator.asScala.flatMap(g => kernel(g.toSeq))
-        }
-      else
-        postings.groupByKey(_.shard).flatMapGroups((_, ps) => kernel(ps.toSeq))
-    out.toDF("value", "cnt")
+    perShard(postings)(kernel).toDF("value", "cnt")
       .groupBy($"value").agg(sum($"cnt").as("cnt"))
       .orderBy(desc("cnt"), asc("value")).limit(topN)
   }
@@ -979,10 +913,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
       .as[Posting]
     val tb = tombBc
     def kernel(group: Seq[Posting]): Iterator[(String, String, Long)] = {
-      val byTerm = group.groupBy(_.term).map { case (t, ps) =>
-        t -> (if (ps.lengthCompare(1) == 0) ps.head
-              else graft.codec.Postings.merge(ps))
-      }
+      val byTerm = Searcher.termLists(group)
       val (fac, rest) = byTerm.partition(_._1.startsWith(P))
       Wand.facetCounts(qterms.flatMap(rest.get), fac.values.toSeq,
           excludes = tb.value.get(group.head.shard).toSeq)
@@ -991,19 +922,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
           (t.substring(1, sep), t.substring(sep + 1), c)
         }
     }
-    val out =
-      if (colocated)
-        postings.mapPartitions { ps =>
-          val byShard = new java.util.HashMap[Integer, ArrayBuffer[Posting]]()
-          ps.foreach(po => byShard.computeIfAbsent(po.shard, _ => new ArrayBuffer[Posting]) += po)
-          import scala.jdk.CollectionConverters._
-          byShard.values.iterator.asScala.flatMap(g => kernel(g.toSeq))
-        }
-      else
-        postings.groupByKey(_.shard).flatMapGroups((_, ps) => kernel(ps.toSeq))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("facet").orderBy(desc("cnt"), asc("value"))
-    out.toDF("facet", "value", "cnt")
+    perShard(postings)(kernel).toDF("facet", "value", "cnt")
       .groupBy($"facet", $"value").agg(sum($"cnt").as("cnt"))
       .withColumn("rn", row_number().over(w))
       .filter($"rn" <= topN).drop("rn")
@@ -1050,17 +971,12 @@ final class Searcher(spark: SparkSession, indexDir: String,
     val dfm = dfSlice(qtf.keys.toSeq)
     if (dfm.size < qtf.size) return Seq.empty[(Long, Double)].toDF("docId", "score")
     val required = qtf.size
-    val terms = dfm.keys.toSeq.sorted
-    val postings = postingsDF.where(col("term").isin(terms: _*)).as[Posting]
     val qterms = qtf // local for closure
     val p = params
     val (nn, ad) = (n, avgdl)
     val tb = tombBc
     def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = group.groupBy(_.term).map { case (t, ps) =>
-        t -> (if (ps.lengthCompare(1) == 0) ps.head
-              else graft.codec.Postings.merge(ps))
-      }
+      val byTerm = Searcher.termLists(group)
       val inputs = qterms.toSeq.collect {
         case (t, f) if byTerm.contains(t) && dfm.contains(t) =>
           Wand.TermInput(byTerm(t), f, dfm(t))
@@ -1069,65 +985,35 @@ final class Searcher(spark: SparkSession, indexDir: String,
           excludes = tb.value.get(group.head.shard).toSeq)
         .iterator.map(s => (s.docId, s.score))
     }
-    perShardScores(postings)(kernel)
+    perShard(pruned(dfm.keys.toSeq.sorted))(kernel).toDF("docId", "score")
   }
 
   /** Batched multi-query top-k: ONE pass over the index answers every
     * query — the at-scale shape (the reference scores query-by-query; a
-    * 10^12-doc engine amortizes the scan across the query batch).
-    * Returns (qid, conv_id, turn_idx, docId, score), k rows per query,
-    * ordered (qid, score desc, docId). */
+    * 10^12-doc engine amortizes the scan across the query batch). Each
+    * shard task resolves its best k hits per query in place, and the
+    * driver merges the task results per query as they arrive — a per-qid
+    * TakeOrdered inside the result job. Runs now and returns a local frame
+    * (qid, conv_id, turn_idx, docId, score), k rows per query, ordered
+    * (qid, score desc, docId). */
   def topKBatch(queries: Map[String, String], k: Int): DataFrame = {
     val qterms: Seq[(String, Map[String, Int])] =
       queries.toSeq.map { case (qid, q) => qid -> analyzeQuery(q) }
     val allTerms = qterms.flatMap(_._2.keys).distinct.sorted
     if (allTerms.isEmpty) return emptyBatchHits()
     val dfm = dfSlice(allTerms)
-
-    val postings = postingsDF.where(col("term").isin(allTerms: _*)).as[Posting]
     // Batch mode trades one narrow exchange (the pruned rows only) for
     // shard-level parallelism of the kernel work — the colocated read may
     // pack a small index into few partitions, which is right for
     // single-query latency but serializes a 100-query batch.
-    val perShard = shardTopK(postings, qterms, dfm, k, exhaustive = false,
-      forceGrouped = true)
-
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(desc("score"), asc("docId"))
-    val top = perShard
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k).drop("rn")
-    // Hit resolution follows the single-query path whenever the batch's
-    // total hit budget is small: the ≤ |batch|·k winners come to the
-    // driver and the doc map is read with a pushed-down `docId IN (...)`
-    // POINT READ (Parquet rowgroup pruning — docIds are sorted within
-    // shard files), never a full doc-meta scan. The scan-join fallback
-    // exists only for huge batches, where |batch|·k ids outgrow a
-    // practical IN-list and one corpus pass genuinely amortizes across
-    // the whole batch.
-    if (queries.size.toLong * k <= MaxPointReadHits) {
-      val hits = top.select($"qid", $"docId", $"score")
-        .as[(String, Long, Double)].collect()
-      if (hits.isEmpty) return emptyBatchHits()
-      val hitsDF = hits.toSeq.toDF("qid", "docId", "score")
-      hitMetaDF
-        .filter(col("docId").isin(hits.map(_._2).distinct.toSeq: _*))
-        .select($"conv_id", $"turn_idx", $"docId")
-        .join(broadcast(hitsDF), "docId")
-        .select($"qid", $"conv_id", $"turn_idx", $"docId", $"score")
-        .orderBy(asc("qid"), desc("score"), asc("docId"))
-    } else
-      hitMetaDF
-        .join(broadcast(top), "docId")
-        .select($"qid", $"conv_id", $"turn_idx", $"docId", $"score")
-        .orderBy(asc("qid"), desc("score"), asc("docId"))
+    val perQid = resolved(shardTopK(pruned(allTerms), qterms, dfm, k, exhaustive = false,
+        forceGrouped = true), k)
+      .rdd.mapPartitions(hs => Iterator(hs.toSeq.groupBy(_.qid)))
+      .fold(Map.empty[String, Seq[Hit]])(HitLookup.mergeTopK(_, _, k))
+    perQid.toSeq.sortBy(_._1).flatMap(_._2)
+      .map(h => (h.qid, h.conv_id, h.turn_idx, h.docId, h.score))
+      .toDF("qid", "conv_id", "turn_idx", "docId", "score")
   }
-
-  /** Threshold between point-read and scan-join hit resolution in
-    * [[topKBatch]] — ~10^5 ids keeps the driver round-trip and the
-    * pushed-down IN list cheap while covering every realistic online
-    * batch (10^4 queries × k=10). */
-  private val MaxPointReadHits = 100000L
 
   private def emptyBatchHits(): DataFrame =
     Seq.empty[(String, String, Int, Long, Double)]
@@ -1147,18 +1033,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
     if (qtf.isEmpty) return Seq.empty[(Long, Double)].toDF("docId", "score")
     val dfm = dfSlice(qtf.keys.toSeq)
     if (dfm.isEmpty) return Seq.empty[(Long, Double)].toDF("docId", "score")
-    val terms = dfm.keys.toSeq.sorted
-    val postings = postingsDF.where(col("term").isin(terms: _*)).as[Posting]
     // sorted: deterministic float-accumulation order at any parallelism
     val qterms = qtf.toSeq.sortBy(_._1)
     val p = params
     val (nn, ad) = (n, avgdl)
     val tb = tombBc
     def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = group.groupBy(_.term).map { case (t, ps) =>
-        t -> (if (ps.lengthCompare(1) == 0) ps.head
-              else graft.codec.Postings.merge(ps))
-      }
+      val byTerm = Searcher.termLists(group)
       val inputs = qterms.collect {
         case (t, f) if byTerm.contains(t) && dfm.contains(t) =>
           Wand.TermInput(byTerm(t), f, dfm(t))
@@ -1167,7 +1048,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
           excludes = tb.value.get(group.head.shard).toSeq)
         .map(s => (s.docId, s.score))
     }
-    perShardScores(postings)(kernel)
+    perShard(pruned(dfm.keys.toSeq.sorted))(kernel).toDF("docId", "score")
   }
 
   /** Build-time doc-meta sidecar (Lucene docvalues): (shard, docId,

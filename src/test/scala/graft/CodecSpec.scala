@@ -27,6 +27,18 @@ class CodecSpec extends AnyFunSuite {
     assert(VByte.decodeInts(VByte.encodeInts(xs), xs.length).sameElements(xs))
   }
 
+  test("ByteBuf growth doubles, then caps below Int.MaxValue instead of going negative") {
+    import graft.codec.ByteBuf.{MaxCapacity, grown}
+    assert(grown(4) == 8 && grown(1 << 20) == (1 << 21))
+    assert(grown(MaxCapacity / 2) == (MaxCapacity / 2) * 2)
+    for (cap <- Seq(MaxCapacity / 2 + 1, 1 << 30, MaxCapacity - 1))
+      assert(grown(cap) == MaxCapacity, s"grown($cap) = ${grown(cap)}")
+    intercept[IllegalStateException](grown(MaxCapacity))
+    val b = new graft.codec.ByteBuf(4)
+    (0 until 100).foreach(i => b += i.toByte)
+    assert(b.toArray.toSeq == (0 until 100).map(_.toByte))
+  }
+
   test("posting encode/decode roundtrip with blocks (docs, tfs, inline lens)") {
     val rnd = new Random(7)
     for (_ <- 0 until 100) {

@@ -68,6 +68,7 @@ class DeleteSpec extends AnyFunSuite {
       assertSameScores(sRef, sDel, q)
       assertSameTopK(sRef, sDel, q, 15)
     }
+    RefreshSpec.assertHitIdentities(spark, sDel, delDir, Queries)
   }
 
   test("every query mode hides a tombstoned doc; snapshot before the delete sees it") {

@@ -94,14 +94,15 @@ class FilteredSearchSpec extends AnyFunSuite {
     assert(fIdx.size <= 2)
   }
 
-  test("filtered hits resolve as a pruned point read (no join, docId filter pushed)") {
+  test("filtered hits resolve in the kernel task (one postings-only job, no join)") {
     assert(searcher.colocated,
       "facet index must satisfy the colocated zero-exchange precondition at test scale")
-    val plan = searcher.topKFiltered(Query, Map("role" -> "user"), 10)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("In(docId"),
-      s"no pushed docId filter in:\n${plan.take(3000)}")
-    assert(!plan.contains("Join"), "filtered doc-meta lookup must not be a join")
+    searcher.topKFiltered(Query, Map("role" -> "user"), 10) // warm
+    val r = PlanProbe.ran(spark)(searcher.topKFiltered(Query, Map("role" -> "user"), 10))
+    assert(r.jobs == 1, s"warm filtered top-k ran ${r.jobs} jobs")
+    assert(r.topKPlans.size == 1, s"want one top-k plan:\n${r.plans.mkString("\n")}")
+    for (p <- r.topKPlans; why <- PlanProbe.topKViolation(p))
+      fail(s"filtered top-k plan $why:\n${p.toString.take(3000)}")
   }
 
   test("facetCounts matches a brute-force count of matching docs per value") {

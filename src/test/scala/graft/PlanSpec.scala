@@ -39,22 +39,32 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("TakeOrderedAndProject"), s"no TakeOrdered in:\n${plan.take(3000)}")
   }
 
-  test("doc-meta lookup is a pruned point read: docId IN-filter pushed to the scan") {
+  /** Runs an eager call that executes `plans` top-k plans and checks them. */
+  private def assertTopKPlans(label: String, plans: Int = 1)(call: => Any): PlanProbe.Ran = {
+    val r = PlanProbe.ran(spark)(call)
+    assert(r.topKPlans.size == plans,
+      s"$label executed ${r.topKPlans.size} top-k plans, want $plans:\n${r.plans.mkString("\n")}")
+    for (p <- r.topKPlans; why <- PlanProbe.topKViolation(p))
+      fail(s"$label: executed top-k plan $why:\n${p.toString.take(4000)}")
+    r
+  }
+
+  test("warm topK runs ONE job that scans postings only: hits resolve in the kernel task") {
+    // the ≤ k winners get (conv_id, turn_idx) inside the shard task that
+    // scored them — no second job, no analyzed scan, no doc-map join
     val s = new Searcher(spark, dir)
-    val plan = s.topK("quick brown fox", 10).queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("In(docId"),
-      s"no pushed docId filter in:\n${plan.take(3000)}")
-    assert(!plan.contains("Join"), "doc-meta lookup must not be a join")
+    assert(s.colocated)
+    s.topK("quick brown fox", 10).collect() // warm: df slice, file footers
+    val r = assertTopKPlans("topK")(s.topK("quick brown fox", 10).collect())
+    assert(r.jobs == 1, s"warm topK ran ${r.jobs} jobs")
   }
 
   test("single-query WAND plan is shuffle-free (no Exchange of any kind)") {
     val s = new Searcher(spark, dir)
     assert(s.colocated, "postings layout must satisfy the colocated precondition at test scale")
-    for (df <- Seq(s.kernelFrame("quick brown fox", 10).get, s.topK("quick brown fox", 10))) {
-      val plan = df.queryExecution.executedPlan.toString
-      val shuffles = "(?m)^.*Exchange.*$".r.findAllIn(plan).toList
-      assert(shuffles.isEmpty, s"unexpected Exchange(s): $shuffles\nin plan:\n${plan.take(4000)}")
-    }
+    val plan = s.kernelFrame("quick brown fox", 10).get.queryExecution.executedPlan.toString
+    val shuffles = "(?m)^.*Exchange.*$".r.findAllIn(plan).toList
+    assert(shuffles.isEmpty, s"unexpected Exchange(s): $shuffles\nin plan:\n${plan.take(4000)}")
   }
 
   test("tombstone exclusion keeps the WAND plan shuffle-free") {
@@ -71,38 +81,29 @@ class PlanSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.lit(7)) === 0) > 0)
     val s = new Searcher(spark, d)
     assert(s.colocated)
-    for (df <- Seq(s.topK("quick brown fox", 10), s.topKAnd("quick brown fox", 10))) {
-      val plan = df.queryExecution.executedPlan.toString
-      val shuffles = "(?m)^.*Exchange.*$".r.findAllIn(plan).toList
-      assert(shuffles.isEmpty, s"unexpected Exchange(s): $shuffles\nin plan:\n${plan.take(4000)}")
-      assert(!plan.contains("Join"), "tombstone exclusion must not plan a join on the kernel path")
-    }
+    val plan = s.kernelFrame("quick brown fox", 10).get.queryExecution.executedPlan
+    PlanProbe.topKViolation(plan).foreach(why =>
+      fail(s"tombstoned kernelFrame $why:\n${plan.toString.take(4000)}"))
+    assertTopKPlans("tombstoned topKAnd")(s.topKAnd("quick brown fox", 10))
   }
 
   test("AND-mode, matchAll and boolean plans are shuffle-free too (colocated kernel)") {
     val s = new Searcher(spark, dir)
     assert(s.colocated)
-    for (df <- Seq(s.topKAnd("quick brown fox", 10),
-                   s.matchAllDocs("quick brown fox"),
-                   s.search("learning", "retrieval relevance", "streaming", 10))) {
-      val plan = df.queryExecution.executedPlan.toString
-      val shuffles = "(?m)^.*Exchange.*$".r.findAllIn(plan).toList
-      assert(shuffles.isEmpty, s"unexpected Exchange(s): $shuffles\nin plan:\n${plan.take(4000)}")
-    }
+    val plan = s.matchAllDocs("quick brown fox").queryExecution.executedPlan.toString
+    val shuffles = "(?m)^.*Exchange.*$".r.findAllIn(plan).toList
+    assert(shuffles.isEmpty, s"unexpected Exchange(s): $shuffles\nin plan:\n${plan.take(4000)}")
+    assertTopKPlans("topKAnd")(s.topKAnd("quick brown fox", 10))
+    assertTopKPlans("search")(s.search("learning", "retrieval relevance", "streaming", 10))
   }
 
   test("similarity variants, dis_max and synonyms keep the shuffle-free kernel plan") {
     val s = new Searcher(spark, dir)
     assert(s.colocated)
-    for (df <- Seq(s.topKDirichlet("quick brown fox", 2000.0, 10),
-                   s.topKTfIdf("quick brown fox", 10),
-                   s.topKDisMax(Seq("quick brown", "learning fox"), 0.3, 10),
-                   s.topKSynonyms("quick", Map("quick" -> Seq("fast")), 10))) {
-      val plan = df.queryExecution.executedPlan.toString
-      val shuffles = "(?m)^.*Exchange.*$".r.findAllIn(plan).toList
-      assert(shuffles.isEmpty, s"unexpected Exchange(s): $shuffles\nin plan:\n${plan.take(4000)}")
-      assert(!plan.contains("Join"), "variant kernels must not plan a join")
-    }
+    assertTopKPlans("topKDirichlet")(s.topKDirichlet("quick brown fox", 2000.0, 10))
+    assertTopKPlans("topKTfIdf")(s.topKTfIdf("quick brown fox", 10))
+    assertTopKPlans("topKDisMax")(s.topKDisMax(Seq("quick brown", "learning fox"), 0.3, 10))
+    assertTopKPlans("topKSynonyms")(s.topKSynonyms("quick", Map("quick" -> Seq("fast")), 10))
   }
 
   test("complete pushes the prefix filter into the df-table scan") {
@@ -161,19 +162,14 @@ class PlanSpec extends AnyFunSuite {
     assert(s.colocated, "restoring the conf restores the zero-exchange path")
   }
 
-  test("batched hit resolution is a pruned point read, not a corpus scan-join") {
-    // |batch|·k below MaxPointReadHits must resolve hits exactly like the
-    // single-query path: winners collected (≤ |batch|·k rows), doc meta
-    // read with a pushed-down docId IN (...) point read + broadcast join
-    // of the tiny hit list — NEVER a full doc-meta scan joined by shuffle
-    // (that scan made q_bm25_batch corpus-bound at 8M docs).
+  test("topKBatch resolves hits in its shard tasks: at most 2 jobs") {
+    // the shard exchange's AQE map stage + the result job, whose per-task
+    // resolved hits merge per qid as they arrive
     val s = new Searcher(spark, dir)
     val batch = Map("q1" -> "quick brown fox", "q2" -> "machine learning")
-    val plan = s.topKBatch(batch, 5).queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("In(docId"),
-      s"no pushed docId filter in batch resolution:\n${plan.take(3000)}")
-    assert(!plan.contains("SortMergeJoin"),
-      "batch hit resolution must not shuffle-join the doc-meta table")
+    s.topKBatch(batch, 5).collect() // warm: df slice, file footers
+    val r = PlanProbe.ran(spark)(s.topKBatch(batch, 5).collect())
+    assert(r.jobs >= 1 && r.jobs <= 2, s"warm topKBatch ran ${r.jobs} jobs")
   }
 
   test("LSH pair ops generate candidates without any join (bucket-local)") {
@@ -284,13 +280,18 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("Join"), "percolation must not join — queries ride a broadcast map")
   }
 
-  test("federated merge is a TakeOrdered over pruned point reads — never a corpus join") {
+  test("federated merge is a TakeOrdered over members' in-task resolved hits") {
     val fed = new graft.query.Federated(spark, Seq(dir, dir))
+    fed.topK("quick brown fox", 10) // warm: df slices, file footers
+    // each member runs its one postings-only top-k job inside the call
+    val r = assertTopKPlans("federated members", fed.members.size)(
+      fed.topK("quick brown fox", 10))
+    assert(r.jobs == fed.members.size, s"${r.jobs} jobs for ${fed.members.size} members")
     val plan = fed.topK("quick brown fox", 10).queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
       s"no TakeOrdered merge in:\n${plan.take(3000)}")
-    assert(!plan.contains("SortMergeJoin"), "federated merge must not sort-merge")
-    assert(plan.contains("In(docId"), "members must resolve hits via pruned point reads")
+    assert(!plan.contains("Join") && !plan.contains("FileScan"),
+      s"the merge must only read the members' rows:\n${plan.take(3000)}")
   }
 
   test("asOf: ONE user-keyed shuffle + window sweep — never a quadratic range join") {
@@ -398,22 +399,7 @@ class PlanSpec extends AnyFunSuite {
     // kernel-backed, their plans must touch only the pruned postings scan
     // and the doc-meta sidecar
     val sf = "/root/testdata/sf0.001"
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    // every node, recursing through AQE wrappers AND into cached-relation
-    // plans (cacheTables=true puts the index tables behind InMemoryRelation
-    // whose child plan holds the real file scan)
-    def allNodes(p: SparkPlan): Seq[SparkPlan] =
-      p.collect {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a +: allNodes(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          q +: allNodes(q.plan)
-        case i: InMemoryTableScanExec =>
-          i +: allNodes(i.relation.cachedPlan)
-        case n => Seq(n)
-      }.flatten
     val plans = Seq(
       "funcScore" -> graft.ops.DocQueries.funcScoreTopK(spark, sf, "fast query join", 10),
       "topHits" -> graft.ops.DocQueries.topHitsByGroup(spark, sf, "fast query join", "source", 2, 5),
@@ -422,9 +408,9 @@ class PlanSpec extends AnyFunSuite {
       "groupTopK" -> graft.ops.DocQueries.groupTopK(spark, sf, "fast query join", "source", 5),
       "convTopK" -> graft.ops.DocQueries.convTopK(spark, sf, "fast query join", 3, 5))
     for ((name, df) <- plans) {
-      val nodes = allNodes(df.queryExecution.executedPlan)
-      val paths = nodes.collect { case f: FileSourceScanExec =>
-        f.relation.location.rootPaths.map(_.toString) }.flatten
+      val plan = df.queryExecution.executedPlan
+      val nodes = PlanProbe.allNodes(plan)
+      val paths = PlanProbe.scannedPaths(plan)
       assert(!paths.exists(_.contains("/analyzed")),
         s"$name must not scan the analyzed table: $paths")
       assert(!paths.exists(_.contains("documents.parquet")),

@@ -73,6 +73,16 @@ class RefreshSpec extends AnyFunSuite {
       assertSameScores(sFull, sInc, q)
       assertSameTopK(sFull, sInc, q, 15)
     }
+    RefreshSpec.assertHitIdentities(spark, sInc, incDir, Queries)
+
+    // a term-range-partitioned build serves through the grouped path and
+    // resolves its hits there
+    val rangedDir = TestSpark.tmpDir("ranged")
+    IndexBuilder.build(spark, all, rangedDir, IndexBuilder.Config(shards = 8, dictRanges = 2))
+    val sRanged = new Searcher(spark, rangedDir)
+    assert(!sRanged.colocated, "a ranged build must serve through the grouped path")
+    Queries.foreach(q => assertSameTopK(sFull, sRanged, q, 15))
+    RefreshSpec.assertHitIdentities(spark, sRanged, rangedDir, Queries)
   }
 
   test("second refresh adds a second segment; results still match; compact folds them") {
@@ -193,6 +203,7 @@ class RefreshSpec extends AnyFunSuite {
     val snap0 = new Searcher(spark, dir, asOfGen = 0L)
     assert(snap0.generation == 0L)
     assert(snap0.topK("zzsnap", 10).select("conv_id").as[String].collect().toSet == Set("cG0"))
+    RefreshSpec.assertHitIdentities(spark, snap0, dir, Seq("zzsnap", "zzsnap base"))
     assert(snap0.scoreAll("zzsnap").filter($"conv_id" === "cG1").count() == 0)
     assert(snap0.n == 2L && latest.n == 3L) // per-snapshot global stats
 
@@ -232,5 +243,31 @@ class RefreshSpec extends AnyFunSuite {
     val visible = new Searcher(spark, dir).topK("fresh appended", 5)
       .select("conv_id").as[String].collect()
     assert(visible.contains("cNEW"))
+  }
+}
+
+object RefreshSpec {
+  /** Every hit of topK, topKAnd, topKDirichlet and topKBatch carries the
+    * (conv_id, turn_idx) that analyzed/ holds for its docId — the
+    * in-task lookup read the right file and returned a real identity. */
+  def assertHitIdentities(spark: org.apache.spark.sql.SparkSession, s: Searcher,
+                          dir: String, queries: Seq[String], k: Int = 10): Unit = {
+    import spark.implicits._
+    val meta = Searcher.docMeta(spark, dir).select("docId", "conv_id", "turn_idx")
+      .as[(Long, String, Int)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    val batch = s.topKBatch(queries.zipWithIndex.map { case (q, i) => s"q$i" -> q }.toMap, k)
+    val answers = ("topKBatch" -> batch) +: queries.flatMap(q => Seq(
+      s"topK '$q'" -> s.topK(q, k),
+      s"topKAnd '$q'" -> s.topKAnd(q, k),
+      s"topKDirichlet '$q'" -> s.topKDirichlet(q, 2000.0, k)))
+    var checked = 0
+    for ((mode, df) <- answers;
+         (docId, conv, turn) <- df.select("docId", "conv_id", "turn_idx").as[(Long, String, Int)].collect()) {
+      assert(conv != null, s"$mode: null identity for doc $docId")
+      assert(meta.get(docId).contains((conv, turn)),
+        s"$mode: doc $docId resolved to ($conv, $turn), analyzed/ has ${meta.get(docId)}")
+      checked += 1
+    }
+    assert(checked > 0, s"no hits to check for $queries")
   }
 }
