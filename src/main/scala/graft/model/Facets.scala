@@ -8,7 +8,7 @@ package graft.model
   * emitted once per document at build time. A filtered query then never
   * scans or joins the attribute column: the filter IS a posting list, and
   * filtered top-k is a leapfrog intersection of the filter lists driving
-  * BM25 scoring of the query terms ([[graft.query.Wand.topKFiltered]]) —
+  * BM25 scoring of the query terms ([[graft.query.Wand.conjunction]]) —
   * cost ∝ the shortest filter list, independent of corpus size. This is the
   * classic inverted-index answer to metadata filtering (Lucene keyword
   * fields + BooleanQuery FILTER clauses); a broadcast docId-set side-filter

@@ -42,6 +42,16 @@ object Bm25 {
   @inline def qtfSat(qf: Int, p: Params): Double =
     qf * (p.k3 + 1) / (qf + p.k3)
 
+  /** BM25's per-term scorer for the kernel traversals ([[Wand]]): `weight`
+    * = idf·qtfSat·boost, folded once per query term. */
+  final case class Sim(weight: Double, avgdl: Double, p: Params) extends Wand.Bounded {
+    def score(tf: Int, dl: Int): Double = weight * tfSat(tf, dl, avgdl, p)
+    def bound(maxTf: Int): Double = weight * tfSatUpper(maxTf, p)
+  }
+
+  def sim(qtf: Int, df: Long, n: Long, avgdl: Double, p: Params, boost: Double = 1.0): Sim =
+    Sim(idf(n, df) * qtfSat(qtf, p) * boost, avgdl, p)
+
   /** Upper bound of the tf saturation over any document length (dl → 0
     * maximizes it); monotone in f, so maxTf bounds the block. Basis of the
     * WAND term/block upper bounds. */

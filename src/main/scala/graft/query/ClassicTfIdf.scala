@@ -1,8 +1,5 @@
 package graft.query
 
-import graft.codec.Postings
-import graft.model.Posting
-
 /** Classic TF-IDF vector-space scoring (the practical scoring function
   * Lucene shipped as ClassicSimilarity before BM25 became the default) —
   * the third similarity over the same index tables, completing the
@@ -23,34 +20,13 @@ import graft.model.Posting
   * simple correct kernel, and the cost stays O(pruned posting rows). */
 object ClassicTfIdf {
 
-  final case class TermInput(posting: Posting, qtf: Int, df: Long)
-
-  def topK(terms: Seq[TermInput], n: Long, k: Int,
-           excludes: Seq[Posting] = Nil): Array[Wand.Scored] = {
-    val topk = new Wand.TopK(k)
-    if (n == 0L) return topk.drainDescending()
-    val exSet = new java.util.HashSet[java.lang.Long]()
-    excludes.foreach { e =>
-      val c = new Postings.Cursor(e)
-      while (c.next()) exSet.add(c.docId)
-    }
-    val acc = new java.util.HashMap[java.lang.Long, java.lang.Double]()
-    terms.foreach { t =>
-      if (t.df > 0L) {
-        val idf = 1.0 + math.log((n + 1.0) / (t.df + 1.0))
-        val (docs, tfs, lens) = Postings.decode(t.posting)
-        var i = 0
-        while (i < docs.length) {
-          // association mirrors the SQL oracle: ((qtf·√tf)·idf)·idf / √dl
-          val part = t.qtf * math.sqrt(tfs(i).toDouble) * idf * idf /
-            math.sqrt(lens(i).toDouble)
-          val prev = acc.get(docs(i))
-          acc.put(docs(i), if (prev == null) part else prev + part)
-          i += 1
-        }
-      }
-    }
-    acc.forEach((d, s) => if (s > 0.0 && !exSet.contains(d)) topk.offer(d, s))
-    topk.drainDescending()
+  /** The per-term scorer. */
+  final case class Sim(qtf: Int, idf: Double) extends Wand.SimScorer {
+    // association mirrors the SQL oracle: ((qtf·√tf)·idf)·idf / √dl
+    def score(tf: Int, dl: Int): Double =
+      qtf * math.sqrt(tf.toDouble) * idf * idf / math.sqrt(dl.toDouble)
   }
+
+  def sim(qtf: Int, df: Long, n: Long): Sim =
+    Sim(qtf, 1.0 + math.log((n + 1.0) / (df + 1.0)))
 }

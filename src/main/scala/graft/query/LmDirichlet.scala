@@ -1,8 +1,5 @@
 package graft.query
 
-import graft.codec.Postings
-import graft.model.Posting
-
 /** Dirichlet-smoothed query-likelihood language-model ranking (Zhai &
   * Lafferty 2001; the formulation Lucene ships as LMDirichletSimilarity) —
   * an alternative similarity over the SAME index tables BM25 uses, plus
@@ -19,53 +16,28 @@ import graft.model.Posting
   * very common term would be penalized below non-matching docs). The doc
   * score is the sum over matching terms; only docs scoring > 0 rank.
   *
-  * The kernel is EXHAUSTIVE over the pruned posting lists — deliberately:
-  * block-max WAND's upper-bound algebra does not transfer, because the
-  * clamped contribution is non-monotone in doc length (the ln(μ/(dl+μ))
-  * term rides inside the clamp), so a sound tf-only bound degenerates to
-  * no pruning. Cost is O(Σ posting rows of the query terms) per shard —
-  * the same shape as the scoreAll relational twin, linear in the pruned
-  * scan, never in the corpus. */
+  * Scored EXHAUSTIVELY over the pruned posting lists ([[Wand.union]]) —
+  * deliberately: block-max WAND's upper-bound algebra does not transfer,
+  * because the clamped contribution is non-monotone in doc length (the
+  * ln(μ/(dl+μ)) term rides inside the clamp), so a sound tf-only bound
+  * degenerates to no pruning. Cost is O(Σ posting rows of the query
+  * terms) per shard — the same shape as the scoreAll relational twin,
+  * linear in the pruned scan, never in the corpus. */
 object LmDirichlet {
 
   /** Default smoothing mass, Lucene's LMDirichletSimilarity default. */
   val DefaultMu: Double = 2000.0
 
-  final case class TermInput(posting: Posting, qtf: Int, cf: Long)
-
-  /** Top-k over one shard. `totalTokens` is the exact corpus token count
-    * (IndexBuilder stats `sumlen`). Tombstoned docs (`excludes`) never
-    * rank; the accumulator drains in hash order, so exclusions decode to
-    * a set (bounded by deleted docs), like Wand.topKExhaustive. */
-  def topK(terms: Seq[TermInput], totalTokens: Long, mu: Double, k: Int,
-           excludes: Seq[Posting] = Nil): Array[Wand.Scored] = {
-    val topk = new Wand.TopK(k)
-    if (totalTokens <= 0L || mu <= 0.0) return topk.drainDescending()
-    val exSet = new java.util.HashSet[java.lang.Long]()
-    excludes.foreach { e =>
-      val c = new Postings.Cursor(e)
-      while (c.next()) exSet.add(c.docId)
-    }
-    val acc = new java.util.HashMap[java.lang.Long, java.lang.Double]()
-    terms.foreach { t =>
-      if (t.cf > 0L) {
-        // association order mirrors the SQL oracle literally:
-        // mu * ((cf + 1.0) / (T + 1.0))
-        val muPc = mu * ((t.cf + 1.0) / (totalTokens + 1.0))
-        val (docs, tfs, lens) = Postings.decode(t.posting)
-        var i = 0
-        while (i < docs.length) {
-          val part = t.qtf * math.max(0.0,
-            math.log(1.0 + tfs(i) / muPc) + math.log(mu / (lens(i) + mu)))
-          if (part > 0.0) {
-            val prev = acc.get(docs(i))
-            acc.put(docs(i), if (prev == null) part else prev + part)
-          }
-          i += 1
-        }
-      }
-    }
-    acc.forEach((d, s) => if (s > 0.0 && !exSet.contains(d)) topk.offer(d, s))
-    topk.drainDescending()
+  /** The per-term scorer; `muPc` = μ·p(t|C). */
+  final case class Sim(qtf: Int, muPc: Double, mu: Double) extends Wand.SimScorer {
+    def score(tf: Int, dl: Int): Double =
+      qtf * math.max(0.0, math.log(1.0 + tf / muPc) + math.log(mu / (dl + mu)))
   }
+
+  /** Scorer of a query term with collection frequency `cf`; `totalTokens`
+    * is the exact corpus token count (IndexBuilder stats `sumlen`). The
+    * association order mirrors the SQL oracle literally:
+    * mu * ((cf + 1.0) / (T + 1.0)). */
+  def sim(qtf: Int, cf: Long, totalTokens: Long, mu: Double): Sim =
+    Sim(qtf, mu * ((cf + 1.0) / (totalTokens + 1.0)), mu)
 }

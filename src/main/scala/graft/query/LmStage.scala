@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   *
   *  - score clamped to [0, 1]            (LMRanker.cs:246)
   *  - empty query or empty doc → 0.0     (LMRanker.cs:90-97)
-  *  - any scorer error → 0.0, never fail (LMRanker.cs:256-267)
+  *  - any scorer error → 0.0, never fail (LMRanker.cs:256-267); a JVM
+  *    error (NonFatal does not match it) still fails the query
   *
   * The scorer is any (query, docText) => Double — in production an LLM
   * call (no egress in this sandbox); tests and the driver queries use a
@@ -28,7 +29,7 @@ object LmStage {
         try {
           val s = scorer(q, text)
           math.max(0.0, math.min(1.0, s))
-        } catch { case _: Throwable => 0.0 }
+        } catch { case scala.util.control.NonFatal(_) => 0.0 } // model errors only
       }
     }
     df.select(col(idCol), f(col(textCol)).as("score"))

@@ -3,7 +3,7 @@ package graft.query
 import graft.build.PositionIndex
 import graft.codec.PosPostings
 import graft.model.PosPosting
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
@@ -42,51 +42,26 @@ final class PosSearcher(spark: SparkSession, indexDir: String) {
       broadcast(graft.sources.TableIO.read(spark, p).select(col("docId"))),
       Seq("docId"), "left_anti"))
 
-  /** Largest positions file (listed once at construction); -1 = unknown,
-    * which forces the grouped fallback plan (logged, never silent). */
-  private val maxFileLen: Long = {
-    try {
-      val path = new org.apache.hadoop.fs.Path(posPath)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(path).collect {
-        case f if f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith(".") => f.getLen
-      }.foldLeft(0L)(math.max)
-    } catch { case scala.util.control.NonFatal(e) =>
-      org.slf4j.LoggerFactory.getLogger(classOf[PosSearcher]).warn(
-        s"listing positions at $posPath failed ($e): falling back to the " +
-          "grouped-shuffle plan (groupByKey(shard)) for every phrase query")
-      -1L
-    }
-  }
+  /** Largest positions file (listed once at construction); -1 forces the
+    * grouped fallback plan. */
+  private val maxFileLen: Long = Searcher.maxFileLen(spark, Seq(posPath))
 
   /** Zero-exchange kernel soundness — evaluated against the CURRENT
-    * session conf per call, same reasoning as Searcher.colocated. */
-  def colocated: Boolean = maxFileLen >= 0 && {
-    val conf = spark.sessionState.conf
-    maxFileLen <= math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
-  }
+    * session conf per call, same rule as Searcher.colocated. */
+  def colocated: Boolean = Searcher.unsplit(spark, maxFileLen)
+
+  /** `kernel` per shard of the positions of `terms` ([[Searcher.perShard]]). */
+  private def perShard[T: Encoder](terms: Seq[String])(
+      kernel: Seq[PosPosting] => Iterator[T]): Dataset[T] =
+    Searcher.perShard(posDF.where(col("term").isin(terms: _*)).as[PosPosting],
+      (p: PosPosting) => p.shard, colocated)(kernel)
 
   /** docIds of documents containing `rawToks` as a contiguous raw-token
     * run (the containsSlice relation of DocQueries.phraseTopK's verify). */
   def matchDocs(rawToks: Seq[String]): DataFrame = {
     require(rawToks.nonEmpty, "empty phrase")
     val toks = rawToks.toArray
-    val distinctTerms = rawToks.distinct
-    val pruned = posDF.where(col("term").isin(distinctTerms: _*)).as[PosPosting]
-    val out =
-      if (colocated)
-        pruned.mapPartitions { ps =>
-          val byShard = new java.util.HashMap[Integer, ArrayBuffer[PosPosting]]()
-          ps.foreach(p =>
-            byShard.computeIfAbsent(p.shard, _ => new ArrayBuffer[PosPosting]) += p)
-          import scala.jdk.CollectionConverters._
-          byShard.values.iterator.asScala.flatMap(g => PosSearcher.shardMatches(g.toSeq, toks))
-        }
-      else
-        pruned.groupByKey(_.shard)
-          .flatMapGroups((_, ps) => PosSearcher.shardMatches(ps.toSeq, toks))
-    tombstoneFree(out.toDF("docId"))
+    tombstoneFree(perShard(rawToks.distinct)(g => PosSearcher.shardMatches(g, toks)).toDF("docId"))
   }
 
   /** (docId, span) of documents containing EVERY distinct raw token of
@@ -101,21 +76,8 @@ final class PosSearcher(spark: SparkSession, indexDir: String) {
     require(window >= rawToks.distinct.length,
       s"window $window can never hold ${rawToks.distinct.length} distinct terms")
     val terms = rawToks.distinct.toArray
-    val pruned = posDF.where(col("term").isin(terms.toSeq: _*)).as[PosPosting]
-    val out =
-      if (colocated)
-        pruned.mapPartitions { ps =>
-          val byShard = new java.util.HashMap[Integer, ArrayBuffer[PosPosting]]()
-          ps.foreach(p =>
-            byShard.computeIfAbsent(p.shard, _ => new ArrayBuffer[PosPosting]) += p)
-          import scala.jdk.CollectionConverters._
-          byShard.values.iterator.asScala
-            .flatMap(g => PosSearcher.shardSpans(g.toSeq, terms, window))
-        }
-      else
-        pruned.groupByKey(_.shard)
-          .flatMapGroups((_, ps) => PosSearcher.shardSpans(ps.toSeq, terms, window))
-    tombstoneFree(out.toDF("docId", "span"))
+    tombstoneFree(perShard(terms.toSeq)(g => PosSearcher.shardSpans(g, terms, window))
+      .toDF("docId", "span"))
   }
 
   /** Ordered sloppy-phrase matches (Lucene span_near in_order=true):
@@ -126,31 +88,13 @@ final class PosSearcher(spark: SparkSession, indexDir: String) {
     require(rawToks.nonEmpty, "empty phrase")
     require(slop >= 0, "negative slop")
     val toks = rawToks.toArray
-    val terms = toks.distinct.toSeq
-    val pruned = posDF.where(col("term").isin(terms: _*)).as[PosPosting]
-    val out =
-      if (colocated)
-        pruned.mapPartitions { ps =>
-          val byShard = new java.util.HashMap[Integer, ArrayBuffer[PosPosting]]()
-          ps.foreach(p =>
-            byShard.computeIfAbsent(p.shard, _ => new ArrayBuffer[PosPosting]) += p)
-          import scala.jdk.CollectionConverters._
-          byShard.values.iterator.asScala
-            .flatMap(g => PosSearcher.shardOrdered(g.toSeq, toks, slop))
-        }
-      else
-        pruned.groupByKey(_.shard)
-          .flatMapGroups((_, ps) => PosSearcher.shardOrdered(ps.toSeq, toks, slop))
-    tombstoneFree(out.toDF("docId", "span"))
+    tombstoneFree(perShard(toks.distinct.toSeq)(g => PosSearcher.shardOrdered(g, toks, slop))
+      .toDF("docId", "span"))
   }
 }
 
 object PosSearcher {
 
-  /** One shard's phrase matches: k-pointer intersection of the distinct
-    * tokens' doc lists (driven by the shortest), then position adjacency —
-    * anchored on the phrase offset with the fewest in-doc occurrences,
-    * binary-searching the others. Emits ascending docIds. */
   /** One shard's ORDERED sloppy-phrase matches (Lucene span_near
     * in_order=true): docs where the phrase offsets appear at strictly
     * increasing positions with minimal ordered span s satisfying
@@ -245,6 +189,10 @@ object PosSearcher {
     best
   }
 
+  /** One shard's phrase matches: k-pointer intersection of the distinct
+    * tokens' doc lists (driven by the shortest), then position adjacency —
+    * anchored on the phrase offset with the fewest in-doc occurrences,
+    * binary-searching the others. Emits ascending docIds. */
   private[graft] def shardMatches(lists: Seq[PosPosting],
                                   toks: Array[String]): Iterator[Long] = {
     val distinct = toks.distinct

@@ -2,7 +2,7 @@ package graft.query
 
 import graft.analysis.{Analyzer, StopWords}
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
@@ -10,15 +10,21 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Two equivalent paths, both returning (conv_id, turn_idx, docId, score):
   *
-  *  - `topK` — the scale path, ONE Spark job per query: broadcast the
-  *    analyzed query + its global df slice (a handful of values — never
-  *    the df table itself), prune the postings scan to the query terms
-  *    (predicate pushed to Parquet), run the block-max WAND kernel per
-  *    shard (bounded heap; doc lengths ride INLINE in the posting blobs, so
-  *    no side table is touched), resolve the task's ≤ k winners to
+  *  - the KERNEL path (`topK` and every other index-served mode): the mode
+  *    analyzes its query on the driver, takes the query terms' global
+  *    statistics (df slice — a handful of values, never the df table
+  *    itself) and folds them into one [[ShardQuery]] value: scoring
+  *    clauses with their per-term similarity scorers, filter and exclude
+  *    terms, and a sink (top-k heap, all matches or dis-max). The postings
+  *    scan is pruned to the query's terms (predicate pushed to Parquet) and
+  *    each shard's task runs `ShardQuery.run` — one of [[Wand]]'s three
+  *    traversals (block-max WAND, leapfrog conjunction, ascending-docId
+  *    union), tombstones excluded by the same forward cursor everywhere.
+  *    Doc lengths ride INLINE in the posting blobs, so no side table is
+  *    touched. A top-k mode then resolves the task's ≤ k winners to
   *    (conv_id, turn_idx) in the SAME task ([[HitLookup]]: a filtered
-  *    Parquet point read of analyzed/), then merge the ≤ tasks·k final
-  *    rows with one TakeOrdered. The call runs that job and returns the
+  *    Parquet point read of analyzed/) and merges the ≤ tasks·k rows with
+  *    one TakeOrdered — ONE Spark job, run inside the call, returning the
   *    ≤ k rows as a local frame, so collecting it launches nothing more.
   *
   *    Shard grouping strategy (scale design):
@@ -54,6 +60,51 @@ object Searcher {
     group.groupBy(_.term).map { case (t, ps) =>
       t -> (if (ps.lengthCompare(1) == 0) ps.head else graft.codec.Postings.merge(ps))
     }
+
+  /** Run `kernel` once per shard of a term-pruned index scan (postings or
+    * positions): zero-exchange mapPartitions when `colocated`, narrow
+    * groupByKey(shard) of the pruned rows otherwise. `kernel` must capture
+    * only method-local state (never a searcher). */
+  private[query] def perShard[R, T: Encoder](rows: Dataset[R], shard: R => Int, colocated: Boolean)(
+      kernel: Seq[R] => Iterator[T]): Dataset[T] =
+    if (colocated)
+      rows.mapPartitions { rs =>
+        val byShard = new java.util.HashMap[Integer, ArrayBuffer[R]]()
+        rs.foreach(r => byShard.computeIfAbsent(shard(r), _ => new ArrayBuffer[R]) += r)
+        import scala.jdk.CollectionConverters._
+        byShard.values.iterator.asScala.flatMap(g => kernel(g.toSeq))
+      }
+    else rows.groupByKey(shard)(Encoders.scalaInt).flatMapGroups((_, rs) => kernel(rs.toSeq))
+
+  /** Largest data file under the index tables at `paths`, listed once;
+    * -1 when listing failed, which forces the grouped fallback plan
+    * (logged, never silent). */
+  private[query] def maxFileLen(spark: SparkSession, paths: Seq[String]): Long =
+    try {
+      paths.flatMap { p =>
+        val path = new org.apache.hadoop.fs.Path(p)
+        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.listStatus(path).collect {
+          case f if f.isFile && !f.getPath.getName.startsWith("_") &&
+            !f.getPath.getName.startsWith(".") => f.getLen
+        }
+      }.foldLeft(0L)(math.max)
+    } catch { case scala.util.control.NonFatal(e) =>
+      org.slf4j.LoggerFactory.getLogger(classOf[Searcher]).warn(
+        s"listing ${paths.mkString(", ")} failed ($e): falling back to the " +
+          "grouped-shuffle plan (groupByKey(shard)) for every query")
+      -1L
+    }
+
+  /** True when no file of at most `maxLen` bytes (-1 = unknown) can be
+    * split across read partitions under the CURRENT session conf — split
+    * sizes are mutable session state (IndexBuilder.build temporarily
+    * lowers maxPartitionBytes on the same session), and a stale answer
+    * would let a split file be scored as two half-shards. */
+  private[query] def unsplit(spark: SparkSession, maxLen: Long): Boolean = maxLen >= 0 && {
+    val conf = spark.sessionState.conf
+    maxLen <= math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
+  }
 }
 
 final class Searcher(spark: SparkSession, indexDir: String,
@@ -201,32 +252,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
     else math.round(statsRow.getAs[Long]("n") * statsRow.getAs[Double]("avgdl"))
 
   /** Largest posting file across base + segments (listed once at
-    * construction); -1 when listing failed, which forces the grouped
-    * fallback plan (logged, never silent). */
-  private val maxPostingsFileLen: Long = {
-    try {
-      postingsPaths.flatMap { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.listStatus(path).collect {
-          case f if f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith(".") => f.getLen
-        }
-      }.foldLeft(0L)(math.max)
-    } catch { case scala.util.control.NonFatal(e) =>
-      org.slf4j.LoggerFactory.getLogger(classOf[Searcher]).warn(
-        s"listing postings of $indexDir failed ($e): falling back to the " +
-          "grouped-shuffle plan (groupByKey(shard)) for every query")
-      -1L
-    }
-  }
+    * construction); -1 forces the grouped fallback plan. */
+  private val maxPostingsFileLen: Long = Searcher.maxFileLen(spark, postingsPaths)
 
-  /** True when the zero-exchange colocated kernel is sound: no postings
-    * file can be split across read partitions (see class doc). Evaluated
-    * against the CURRENT session conf on every call — split sizes are
-    * mutable session state (IndexBuilder.build temporarily lowers
-    * maxPartitionBytes on the same session), and a stale construction-time
-    * answer would let a split file be scored as two half-shards. */
   /** Whether every postings file is DOC-complete (a doc's whole term set
     * in one file) — true for broadcast-dictionary builds and all refresh
     * segments; false for range-partitioned builds (Config.dictRanges > 1),
@@ -237,10 +265,11 @@ final class Searcher(spark: SparkSession, indexDir: String,
   private val docCompleteFiles: Boolean =
     graft.build.Manifests.read(indexDir, "postings_layout").forall(_.rows <= 1L)
 
-  def colocated: Boolean = maxPostingsFileLen >= 0 && docCompleteFiles && {
-    val conf = spark.sessionState.conf
-    maxPostingsFileLen <= math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
-  }
+  /** True when the zero-exchange colocated kernel is sound: files are
+    * doc-complete and no postings file can be split across read
+    * partitions (see class doc). Evaluated against the CURRENT session
+    * conf on every call ([[Searcher.unsplit]]). */
+  def colocated: Boolean = docCompleteFiles && Searcher.unsplit(spark, maxPostingsFileLen)
 
   def analyzeQuery(query: String): Map[String, Int] =
     Analyzer.termFreqs(Analyzer.tokenize(query, StopWords.forLang(language), normalizer))
@@ -259,82 +288,39 @@ final class Searcher(spark: SparkSession, indexDir: String,
     terms.iterator.map(t => t -> dfCache.get(t).longValue).filter(_._2 > 0L).toMap
   }
 
-  private def pruned(terms: Seq[String]): Dataset[Posting] =
-    postingsDF.where(col("term").isin(terms: _*)).as[Posting]
-
-  /** Run `kernel` once per shard of a pruned postings Dataset:
-    * zero-exchange mapPartitions when [[colocated]] (and not
-    * `forceGrouped`), narrow groupByKey(shard) of the pruned rows
-    * otherwise. `kernel` must capture only method-local state (never the
-    * Searcher itself). */
+  /** `kernel` per shard of a pruned postings scan ([[Searcher.perShard]]). */
   private def perShard[T: Encoder](postings: Dataset[Posting], forceGrouped: Boolean = false)(
       kernel: Seq[Posting] => Iterator[T]): Dataset[T] =
-    if (colocated && !forceGrouped)
-      postings.mapPartitions { ps =>
-        val byShard = new java.util.HashMap[Integer, ArrayBuffer[Posting]]()
-        ps.foreach(po => byShard.computeIfAbsent(po.shard, _ => new ArrayBuffer[Posting]) += po)
-        import scala.jdk.CollectionConverters._
-        byShard.values.iterator.asScala.flatMap(g => kernel(g.toSeq))
-      }
-    else postings.groupByKey(_.shard).flatMapGroups((_, ps) => kernel(ps.toSeq))
+    Searcher.perShard(postings, (p: Posting) => p.shard, colocated && !forceGrouped)(kernel)
 
-  /** Run the WAND kernel per shard over a pruned postings Dataset,
-    * answering every query in `qs` in one pass. Emits (qid, docId, score). */
-  private def shardTopK(postings: Dataset[Posting],
-                        qs: Seq[(String, Map[String, Int])],
-                        dfm: Map[String, Long], k: Int,
-                        exhaustive: Boolean,
-                        forceGrouped: Boolean = false,
-                        /** >0 = conjunctive (AND) mode: a doc must contain
-                          * this many distinct query terms (= all of them). */
-                        conjunctiveRequired: Int = 0,
-                        /** minimum_should_match for OR mode (1 = plain OR). */
-                        minMatch: Int = 1,
-                        /** search_after page gate — see [[Wand.TopK]]. */
-                        gateMax: Double = Double.PositiveInfinity,
-                        /** per-ANALYZED-term query-time boosts (absent = 1). */
-                        boosts: Map[String, Double] = Map.empty): Dataset[(String, Long, Double)] = {
-    val p = params
-    val (nn, ad) = (n, avgdl)
+  /** Every query of `qs` run per shard over the postings of `terms` (the
+    * shard's tombstones hidden), each match emitted as `out(qid, match)`. */
+  private def shardRun[T: Encoder](terms: Seq[String], qs: Seq[(String, ShardQuery)],
+                                   forceGrouped: Boolean = false)(
+      out: (String, Wand.Scored) => T): Dataset[T] = {
     val tb = tombBc
-    def kernel(group: Seq[Posting]): Iterator[(String, Long, Double)] = {
-      val byTerm = Searcher.termLists(group)
-      val tomb = tb.value.get(group.head.shard).toSeq
-      qs.iterator.flatMap { case (qid, qtf) =>
-        val inputs = qtf.toSeq.collect {
-          case (t, f) if byTerm.contains(t) && dfm.contains(t) =>
-            Wand.TermInput(byTerm(t), f, dfm(t), boosts.getOrElse(t, 1.0))
-        }
-        val scored =
-          if (conjunctiveRequired > 0)
-            Wand.topKAnd(inputs, conjunctiveRequired, nn, ad, k, p, excludes = tomb)
-          else if (exhaustive) Wand.topKExhaustive(inputs, nn, ad, k, p, excludes = tomb)
-          else if (tomb.nonEmpty) Wand.topKNot(inputs, tomb, nn, ad, k, p, minMatch, gateMax)
-          else Wand.topK(inputs, nn, ad, k, p, minMatch, gateMax)
-        scored.iterator.map(s => (qid, s.docId, s.score))
-      }
+    perShard(postingsDF.where(col("term").isin(terms: _*)).as[Posting], forceGrouped) { g =>
+      val lists = Searcher.termLists(g)
+      val tomb = tb.value.get(g.head.shard)
+      qs.iterator.flatMap { case (qid, q) => q.run(lists, tomb).map(out(qid, _)) }
     }
-    perShard(postings, forceGrouped)(kernel)
   }
 
-  /** The tail of every top-k task: the best k candidates per query,
-    * resolved to (conv_id, turn_idx) inside the same task. */
-  private def resolved(scored: Dataset[(String, Long, Double)], k: Int): Dataset[Hit] = {
+  /** The one top-k path: [[shardRun]], then each task's best k candidates
+    * per query resolved to (conv_id, turn_idx) in the same task. */
+  private def shardHits(terms: Seq[String], qs: Seq[(String, ShardQuery)], k: Int,
+                        forceGrouped: Boolean = false): Dataset[Hit] = {
     val lookup = hitLookup
-    scored.mapPartitions(it => lookup.resolveTopK(it, k))
+    shardRun(terms, qs, forceGrouped)((qid, s) => (qid, s.docId, s.score))
+      .mapPartitions(it => lookup.resolveTopK(it, k))
   }
 
   /** Single-query top-k plan: kernel and hit resolution per task, then ONE
     * TakeOrdered over the ≤ tasks·k resolved rows — a single job.
     * Columns (docId, score, conv_id, turn_idx). */
-  private def topFrame(scored: Dataset[(String, Long, Double)], k: Int): DataFrame =
-    resolved(scored, k).select($"docId", $"score", $"conv_id", $"turn_idx")
+  private def topFrame(terms: Seq[String], q: ShardQuery, k: Int): DataFrame =
+    shardHits(terms, Seq("q" -> q), k).select($"docId", $"score", $"conv_id", $"turn_idx")
       .orderBy(desc("score"), asc("docId")).limit(k)
-
-  /** [[topFrame]] of a single-query (docId, score) shard kernel. */
-  private def hitFrame(postings: Dataset[Posting], k: Int)(
-      kernel: Seq[Posting] => Iterator[(Long, Double)]): DataFrame =
-    topFrame(perShard(postings)(g => kernel(g).map { case (d, sc) => ("q", d, sc) }), k)
 
   /** Runs a top-k plan's one job now, under the session conf of this call
     * (the [[colocated]] check requires it), and returns its ≤ k hits as a
@@ -345,19 +331,41 @@ final class Searcher(spark: SparkSession, indexDir: String,
       .map(r => (r.getString(2), r.getInt(3), r.getLong(0), r.getDouble(1)))
       .toDF("conv_id", "turn_idx", "docId", "score")
 
+  /** The local hit frame of the top k of `clauses` over the postings of `terms`. */
+  private def topHits(terms: Seq[String], clauses: Seq[ShardQuery.Clause], k: Int): DataFrame =
+    collectHits(topFrame(terms, ShardQuery(clauses, sink = ShardQuery.Top(k)), k))
+
+  /** The analyzed query and the df of its corpus terms; None when the
+    * query analyzes to nothing or no term is in the corpus. */
+  private def analyzed(query: String): Option[(Map[String, Int], Map[String, Long])] = {
+    val qtf = analyzeQuery(query)
+    if (qtf.isEmpty) None else Some(qtf -> dfSlice(qtf.keys.toSeq)).filter(_._2.nonEmpty)
+  }
+
+  /** BM25 clauses of the query terms in `qtf` order (their summation
+    * order) that have a positive global df in `dfm`. */
+  private def bm25(qtf: Seq[(String, Int)], dfm: Map[String, Long],
+                   boosts: Map[String, Double] = Map.empty, slot: Int = 0): Seq[ShardQuery.Clause] =
+    if (n == 0 || avgdl == 0.0) Nil
+    else qtf.collect { case (t, f) if dfm.getOrElse(t, 0L) > 0L =>
+      ShardQuery.clause(t, Bm25.sim(f, dfm(t), n, avgdl, params, boosts.getOrElse(t, 1.0)), slot)
+    }
+
+  /** The one-job plan of an OR-mode BM25 top-k over `query`; None when
+    * fewer of its terms are in the corpus than the sink's minMatch. */
+  private def orFrame(query: String, sink: ShardQuery.Top,
+                      boosts: Map[String, Double] = Map.empty): Option[DataFrame] =
+    analyzed(query).filter(_._2.size >= sink.minMatch).map { case (qtf, dfm) =>
+      topFrame(dfm.keys.toSeq.sorted, ShardQuery(bm25(qtf.toSeq, dfm, boosts), sink = sink), sink.k)
+    }
+
   /** The top-k plan of a single query as [[topK]] executes it — one job
     * ending in a TakeOrdered over ≤ tasks·k resolved rows; columns
     * (docId, score, conv_id, turn_idx). Exposed so plan tests can pin the
     * scan pushdown / no-Exchange contracts. */
   private[graft] def kernelFrame(query: String, k: Int,
-                                 exhaustiveKernel: Boolean = false): Option[DataFrame] = {
-    val qtf = analyzeQuery(query)
-    if (qtf.isEmpty) return None
-    val dfm = dfSlice(qtf.keys.toSeq)
-    if (dfm.isEmpty) return None
-    Some(topFrame(shardTopK(pruned(dfm.keys.toSeq.sorted), Seq(("q", qtf)), dfm, k,
-      exhaustiveKernel), k))
-  }
+                                 exhaustiveKernel: Boolean = false): Option[DataFrame] =
+    orFrame(query, ShardQuery.Top(k, prune = !exhaustiveKernel))
 
   /** WAND top-k. Deterministic order: score desc, docId asc. */
   def topK(query: String, k: Int, exhaustiveKernel: Boolean = false): DataFrame =
@@ -370,14 +378,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * filter never changes a qualifying doc's score). Same zero-exchange
     * plan; the count check rides the kernel's existing full-evaluation
     * loop, so pruning power is unchanged. */
-  def topKMsm(query: String, minMatch: Int, k: Int): DataFrame = {
-    val qtf = analyzeQuery(query)
-    if (qtf.isEmpty) return emptyHits()
-    val dfm = dfSlice(qtf.keys.toSeq)
-    if (dfm.isEmpty || dfm.size < minMatch) return emptyHits()
-    collectHits(topFrame(shardTopK(pruned(dfm.keys.toSeq.sorted), Seq(("q", qtf)), dfm, k,
-      exhaustive = false, minMatch = minMatch), k))
-  }
+  def topKMsm(query: String, minMatch: Int, k: Int): DataFrame =
+    orFrame(query, ShardQuery.Top(k, minMatch = minMatch)).fold(emptyHits())(collectHits)
 
   /** Deep-pagination top-k (Elasticsearch's search_after): the hits whose
     * ROUND-4 score is ≤ `afterScore4` — i.e. at or below the previous
@@ -391,16 +393,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * finishes the strictly-after cut relationally on (score, its key).
     * Scores are exposed round-4 everywhere on this surface, so the cursor
     * lives in the same quantized space: stable under JSON round-trips. */
-  def topKAfter(query: String, k: Int, afterScore4: Double): DataFrame = {
-    val qtf = analyzeQuery(query)
-    if (qtf.isEmpty) return emptyHits()
-    val dfm = dfSlice(qtf.keys.toSeq)
-    if (dfm.isEmpty) return emptyHits()
+  def topKAfter(query: String, k: Int, afterScore4: Double): DataFrame =
     // +5e-5 = half a round-4 ulp: every doc ROUNDING to ≤ afterScore4
     // passes the raw-score gate; the caller's relational cut is exact.
-    collectHits(topFrame(shardTopK(pruned(dfm.keys.toSeq.sorted), Seq(("q", qtf)), dfm, k,
-      exhaustive = false, gateMax = afterScore4 + 5e-5), k))
-  }
+    orFrame(query, ShardQuery.Top(k, gateMax = afterScore4 + 5e-5)).fold(emptyHits())(collectHits)
 
   /** Synonym-aware top-k — Lucene's SynonymQuery semantics, exactly: each
     * query term and its synonyms form ONE pseudo-term whose per-doc tf is
@@ -429,31 +425,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
         t -> ms.flatMap(dfm.get).max
     }
     if (gdf.isEmpty) return emptyHits()
-    val live = allTerms.filter(dfm.contains).sorted
-    val p = params
-    val (nn, ad) = (n, avgdl)
-    val tb = tombBc
-    val kk = k
-    def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = Searcher.termLists(group)
-      val tomb = tb.value.get(group.head.shard).toSeq
-      val inputs = qtf.toSeq.flatMap { case (t, f) =>
-        val members = groups(t).filter(byTerm.contains)
-        gdf.get(t) match {
-          case Some(d) if members.nonEmpty =>
-            val posting =
-              if (members.lengthCompare(1) == 0) byTerm(members.head)
-              else graft.codec.Postings.unionSum(members.map(byTerm), t)
-            Some(Wand.TermInput(posting, f, d))
-          case _ => None
-        }
-      }
-      val scored =
-        if (tomb.nonEmpty) Wand.topKNot(inputs, tomb, nn, ad, kk, p)
-        else Wand.topK(inputs, nn, ad, kk, p)
-      scored.iterator.map(s => (s.docId, s.score))
-    }
-    collectHits(hitFrame(pruned(live), k)(kernel))
+    val clauses = bm25(qtf.toSeq, gdf).map(c => c.copy(terms = groups(c.terms.head)))
+    topHits(allTerms.filter(dfm.contains).sorted, clauses, k)
   }
 
   /** Top-k with CALLER-supplied per-term global df — the federated path
@@ -465,8 +438,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
   def topKWithDf(query: String, k: Int, dfm: Map[String, Long]): DataFrame = {
     val qtf = analyzeQuery(query)
     if (qtf.isEmpty || dfm.isEmpty) return emptyHits()
-    collectHits(topFrame(shardTopK(pruned(dfm.keys.toSeq.sorted), Seq(("q", qtf)), dfm, k,
-      exhaustive = false), k))
+    topHits(dfm.keys.toSeq.sorted, bm25(qtf.toSeq, dfm), k)
   }
 
   /** Boosted top-k (Lucene's `term^w` query-time weights): OR-mode BM25
@@ -475,20 +447,15 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * normalization can never desynchronize the key from the indexed term);
     * absent terms default to 1.0 — boosts = empty ≡ [[topK]] exactly. The
     * boost scales the kernel's pruning upper bound by the same factor
-    * ([[Wand.TermInput]]), so WAND skipping stays exact. */
+    * ([[Bm25.Sim]]), so WAND skipping stays exact. */
   def topKBoosted(query: String, boosts: Map[String, Double], k: Int): DataFrame = {
-    // driver-side twin of Wand.TermInput's require: fail before any job
-    // is launched rather than as an executor task failure
+    // Lucene's BoostQuery contract (as Wand.TermInput's require): a
+    // non-positive boost breaks WAND's bound logic — fail before any job
     boosts.foreach { case (t, b) =>
       require(b > 0.0, s"boost for term '$t' must be > 0 (got $b)") }
-    val qtf = analyzeQuery(query)
-    if (qtf.isEmpty) return emptyHits()
-    val dfm = dfSlice(qtf.keys.toSeq)
-    if (dfm.isEmpty) return emptyHits()
     val aboosts = boosts.flatMap { case (raw, b) =>
       analyzeQuery(raw).keys.map(_ -> b) }
-    collectHits(topFrame(shardTopK(pruned(dfm.keys.toSeq.sorted), Seq(("q", qtf)), dfm, k,
-      exhaustive = false, boosts = aboosts), k))
+    orFrame(query, ShardQuery.Top(k), aboosts).fold(emptyHits())(collectHits)
   }
 
   /** Per-term global COLLECTION frequency (total occurrences — the
@@ -538,45 +505,22 @@ final class Searcher(spark: SparkSession, indexDir: String,
     if (qtf.isEmpty) return emptyHits()
     val cfm = cfSlice(qtf.keys.toSeq)
     if (cfm.isEmpty) return emptyHits()
-    val live = cfm.keys.toSeq.sorted
-    val (tt, muu, kk) = (sumlen, mu, k)
-    val tb = tombBc
-    def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = Searcher.termLists(group)
-      val inputs = qtf.toSeq.collect {
-        case (t, f) if byTerm.contains(t) && cfm.contains(t) =>
-          LmDirichlet.TermInput(byTerm(t), f, cfm(t))
-      }
-      LmDirichlet.topK(inputs, tt, muu, kk,
-          excludes = tb.value.get(group.head.shard).toSeq)
-        .iterator.map(s => (s.docId, s.score))
+    val clauses = if (sumlen <= 0L || mu <= 0.0) Nil else qtf.toSeq.collect {
+      case (t, f) if cfm.contains(t) => ShardQuery.clause(t, LmDirichlet.sim(f, cfm(t), sumlen, mu))
     }
-    collectHits(hitFrame(pruned(live), k)(kernel))
+    topHits(cfm.keys.toSeq.sorted, clauses, k)
   }
 
   /** Classic TF-IDF top-k ([[ClassicTfIdf]]) — the third similarity over
     * the same index: √tf · idf² · 1/√dl, df statistics like BM25, same
     * pruned-scan dispatch, exhaustive kernel. */
-  def topKTfIdf(query: String, k: Int): DataFrame = {
-    val qtf = analyzeQuery(query)
-    if (qtf.isEmpty) return emptyHits()
-    val dfm = dfSlice(qtf.keys.toSeq)
-    if (dfm.isEmpty) return emptyHits()
-    val live = dfm.keys.toSeq.sorted
-    val (nn, kk) = (n, k)
-    val tb = tombBc
-    def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = Searcher.termLists(group)
-      val inputs = qtf.toSeq.collect {
-        case (t, f) if byTerm.contains(t) && dfm.contains(t) =>
-          ClassicTfIdf.TermInput(byTerm(t), f, dfm(t))
+  def topKTfIdf(query: String, k: Int): DataFrame =
+    analyzed(query).fold(emptyHits()) { case (qtf, dfm) =>
+      val clauses = if (n == 0L) Nil else qtf.toSeq.collect {
+        case (t, f) if dfm.contains(t) => ShardQuery.clause(t, ClassicTfIdf.sim(f, dfm(t), n))
       }
-      ClassicTfIdf.topK(inputs, nn, kk,
-          excludes = tb.value.get(group.head.shard).toSeq)
-        .iterator.map(s => (s.docId, s.score))
+      topHits(dfm.keys.toSeq.sorted, clauses, k)
     }
-    collectHits(hitFrame(pruned(live), k)(kernel))
-  }
 
   /** Disjunction-max top-k (Lucene's DisjunctionMaxQuery): each subquery
     * scores independently as OR-mode BM25; a doc's combined score is its
@@ -584,55 +528,20 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * max + tie·(sum − max) — so a doc matching several subqueries only
     * modestly outranks one nailing a single subquery (tie=0 = pure max,
     * tie=1 = plain sum). One kernel pass over the UNION of the subqueries'
-    * pruned postings accumulates per-(doc, subquery) partials, combines,
-    * and heaps per shard — the cross-subquery max needs every subquery's
-    * partial for a doc in one place, which is exactly what doc-complete
-    * shards guarantee, so the plan stays zero-exchange when colocated. */
+    * pruned postings ([[Wand.union]], one dis-max slot per subquery) sums
+    * each doc's per-subquery partials, combines, and heaps per shard — the
+    * cross-subquery max needs every subquery's partial for a doc in one
+    * place, which is exactly what doc-complete shards guarantee, so the
+    * plan stays zero-exchange when colocated. */
   def topKDisMax(queries: Seq[String], tie: Double, k: Int): DataFrame = {
     val subs: Seq[Map[String, Int]] = queries.map(analyzeQuery).filter(_.nonEmpty)
     val allTerms = subs.flatMap(_.keys).distinct
     if (allTerms.isEmpty) return emptyHits()
     val dfm = dfSlice(allTerms)
     if (dfm.isEmpty) return emptyHits()
-    val live = allTerms.filter(dfm.contains).sorted
-    val p = params
-    val (nn, ad) = (n, avgdl)
-    val tb = tombBc
-    val (tiez, kk, nSub) = (tie, k, subs.size)
-    def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = Searcher.termLists(group)
-      val exSet = new java.util.HashSet[java.lang.Long]()
-      tb.value.get(group.head.shard).foreach { e =>
-        val c = new graft.codec.Postings.Cursor(e)
-        while (c.next()) exSet.add(c.docId)
-      }
-      val acc = new java.util.HashMap[java.lang.Long, Array[Double]]()
-      subs.zipWithIndex.foreach { case (sq, si) =>
-        sq.foreach { case (t, f) =>
-          if (byTerm.contains(t) && dfm.contains(t)) {
-            val iq = Bm25.idf(nn, dfm(t)) * Bm25.qtfSat(f, p)
-            val (docs, tfs, lens) = graft.codec.Postings.decode(byTerm(t))
-            var i = 0
-            while (i < docs.length) {
-              val arr = acc.computeIfAbsent(docs(i), _ => new Array[Double](nSub))
-              arr(si) += iq * Bm25.tfSat(tfs(i), lens(i), ad, p)
-              i += 1
-            }
-          }
-        }
-      }
-      val topk = new Wand.TopK(kk)
-      acc.forEach { (d, arr) =>
-        if (!exSet.contains(d)) {
-          var mx = 0.0; var sm = 0.0; var i = 0
-          while (i < nSub) { if (arr(i) > mx) mx = arr(i); sm += arr(i); i += 1 }
-          val s = mx + tiez * (sm - mx)
-          if (s > 0.0) topk.offer(d, s)
-        }
-      }
-      topk.drainDescending().iterator.map(s => (s.docId, s.score))
-    }
-    collectHits(hitFrame(pruned(live), k)(kernel))
+    val clauses = subs.zipWithIndex.flatMap { case (sq, si) => bm25(sq.toSeq, dfm, slot = si) }
+    collectHits(topFrame(allTerms.filter(dfm.contains).sorted,
+      ShardQuery(clauses, sink = ShardQuery.DisMax(k, tie)), k))
   }
 
   /** Significant-terms aggregation (Elasticsearch's significant_terms,
@@ -689,49 +598,23 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * query term are ranked; scores equal the OR-mode BM25 score of the same
     * doc. A query term absent from the corpus ⇒ empty result (strict AND).
     * Same zero-exchange plan shape as [[topK]]; the kernel is leapfrog
-    * intersection (cost ∝ shortest posting list, not the union). */
-  def topKAnd(query: String, k: Int): DataFrame = {
-    val qtf = analyzeQuery(query)
-    if (qtf.isEmpty) return emptyHits()
-    val dfm = dfSlice(qtf.keys.toSeq)
-    if (dfm.size < qtf.size) return emptyHits() // some term nowhere in corpus
-    collectHits(topFrame(shardTopK(pruned(dfm.keys.toSeq.sorted), Seq(("q", qtf)), dfm, k,
-        exhaustive = false, conjunctiveRequired = qtf.size), k))
-  }
+    * intersection (cost ∝ shortest posting list, not the union) — the
+    * all-must shape of [[search]]. */
+  def topKAnd(query: String, k: Int): DataFrame = search(query, k = k)
 
   /** Negated (NOT-mode) top-k: OR-mode BM25 over the query terms,
     * excluding every document containing ANY analyzed `exclude` term
     * (Lucene's MUST_NOT shape). A query term that is also excluded can
     * never contribute — any doc containing it is excluded — so it is
-    * dropped from the scoring inputs; survivors' scores equal their plain
+    * dropped from the scoring clauses; survivors' scores equal their plain
     * OR-mode BM25. Same zero-exchange plan shape as [[topK]]: the exclude
     * lists ride the same term-pruned postings scan and exclusion is a
-    * forward-only leapfrog inside the kernel ([[Wand.topKNot]]) — never an
-    * anti-join of the corpus. Exclusion is per-shard-sound because a doc's
-    * query and exclude postings live in the same doc-sharded partition. */
-  def topKNot(query: String, exclude: String, k: Int): DataFrame = {
-    val eset = analyzeQuery(exclude).keySet
-    val qtf = analyzeQuery(query).filterNot { case (t, _) => eset.contains(t) }
-    if (qtf.isEmpty) return emptyHits()
-    val dfm = dfSlice(qtf.keys.toSeq)
-    if (dfm.isEmpty) return emptyHits()
-    val eterms = eset.toSeq.sorted
-    val all = (dfm.keys.toSeq ++ eterms).distinct.sorted
-    val qterms = qtf
-    val p = params
-    val (nn, ad) = (n, avgdl)
-    val tb = tombBc
-    def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = Searcher.termLists(group)
-      val ex = eterms.flatMap(byTerm.get) ++ tb.value.get(group.head.shard)
-      val inputs = qterms.toSeq.collect {
-        case (t, f) if byTerm.contains(t) && dfm.contains(t) =>
-          Wand.TermInput(byTerm(t), f, dfm(t))
-      }
-      Wand.topKNot(inputs, ex, nn, ad, k, p).iterator.map(s => (s.docId, s.score))
-    }
-    collectHits(hitFrame(pruned(all), k)(kernel))
-  }
+    * forward-only leapfrog inside the WAND kernel ([[Wand.Excl]]) — never
+    * an anti-join of the corpus. Exclusion is per-shard-sound because a
+    * doc's query and exclude postings live in the same doc-sharded
+    * partition. The should-plus-not shape of [[search]]. */
+  def topKNot(query: String, exclude: String, k: Int): DataFrame =
+    search("", query, exclude, k)
 
   /** Per-term score breakdown for ONE document — Lucene's explain(): each
     * query term's (tf, df, contribution) on `docId`, the contributions
@@ -769,25 +652,23 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * BM25 over must ∪ should (a term in both clauses scores once, with the
     * must qtf; a should term that is also excluded can never contribute
     * and is dropped; a must term that is also excluded is unsatisfiable —
-    * empty result, Lucene's contract). Degenerate shapes delegate to the
-    * specialized kernels: no must → [[topKNot]], no should and no not →
-    * [[topKAnd]]. `facets` adds metadata (column = value) filters — facet
-    * posting lists ([[graft.model.Facets]]; the index must carry them via
-    * Config.facetCols) join the must lists in the filter cursor set,
-    * required but never scoring. Plan shape is [[topKFiltered]]'s: the
-    * must + facet lists drive the kernel as filter cursors (cost ∝
-    * shortest filter list per shard), the not lists ride the same
-    * term-pruned postings scan as forward-leapfrog exclusion cursors —
-    * zero exchange when colocated, never an anti-join of the corpus. */
+    * empty result, Lucene's contract). `facets` adds metadata (column =
+    * value) filters — facet posting lists ([[graft.model.Facets]]; the
+    * index must carry them via Config.facetCols) join the must lists in
+    * the filter cursor set, required but never scoring. The must + facet
+    * lists drive the kernel as a leapfrog conjunction (cost ∝ shortest
+    * filter list per shard; a must term scores through its filter cursor,
+    * so its list decodes once); with neither, the kernel is OR-mode WAND.
+    * The not lists ride the same term-pruned postings scan as
+    * forward-leapfrog exclusion cursors — zero exchange when colocated,
+    * never an anti-join of the corpus. */
   def search(must: String, should: String = "", not: String = "",
              k: Int = 10, facets: Map[String, String] = Map.empty): DataFrame = {
     val eset = analyzeQuery(not).keySet
     val m0 = analyzeQuery(must)
     if (m0.keys.exists(eset.contains)) return emptyHits()
-    if (facets.isEmpty && m0.isEmpty) return topKNot(should, not, k)
     val stf = analyzeQuery(should)
       .filterNot { case (t, _) => eset.contains(t) || m0.contains(t) }
-    if (facets.isEmpty && stf.isEmpty && eset.isEmpty) return topKAnd(must, k)
     val qtf = m0 ++ stf
     if (qtf.isEmpty) return emptyHits()
     val dfm = dfSlice(qtf.keys.toSeq)
@@ -796,24 +677,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     val fterms = facets.toSeq.map { case (c, v) => graft.model.Facets.term(c, v) }
     val mterms = m0.keys.toSeq.sorted ++ fterms.sorted
     val eterms = eset.toSeq.sorted
-    val all = (dfm.keys.toSeq ++ mterms ++ eterms).distinct.sorted
-    val qterms = qtf
-    val required = mterms.size
-    val p = params
-    val (nn, ad) = (n, avgdl)
-    val tb = tombBc
-    def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = Searcher.termLists(group)
-      val filterPs = mterms.flatMap(byTerm.get)
-      val ex = eterms.flatMap(byTerm.get) ++ tb.value.get(group.head.shard)
-      val inputs = qterms.toSeq.collect {
-        case (t, f) if byTerm.contains(t) && dfm.contains(t) =>
-          Wand.TermInput(byTerm(t), f, dfm(t))
-      }
-      Wand.topKFiltered(inputs, filterPs, required, nn, ad, k, p, excludes = ex)
-        .iterator.map(s => (s.docId, s.score))
-    }
-    collectHits(hitFrame(pruned(all), k)(kernel))
+    collectHits(topFrame((dfm.keys.toSeq ++ mterms ++ eterms).distinct.sorted,
+      ShardQuery(bm25(qtf.toSeq, dfm), mterms, eterms, ShardQuery.Top(k)), k))
   }
 
   /** Filtered (faceted) top-k: rank only documents whose facet posting
@@ -823,34 +688,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * OR-mode BM25 over the query terms; zero-overlap docs are not emitted.
     * Same zero-exchange plan shape as [[topK]]: the facet lists are scanned
     * term-pruned alongside the query postings, and the kernel drives from
-    * the filter intersection (cost ∝ shortest filter list per shard). */
-  def topKFiltered(query: String, facets: Map[String, String], k: Int): DataFrame = {
-    if (facets.isEmpty) return topK(query, k)
-    val qtf = analyzeQuery(query)
-    if (qtf.isEmpty) return emptyHits()
-    val dfm = dfSlice(qtf.keys.toSeq)
-    if (dfm.isEmpty) return emptyHits()
-    val fterms = facets.toSeq.map { case (c, v) => graft.model.Facets.term(c, v) }
-    val required = fterms.size
-    val all = (dfm.keys.toSeq ++ fterms).distinct.sorted
-    val qterms = qtf
-    val fset = fterms.toSet
-    val p = params
-    val (nn, ad) = (n, avgdl)
-    val tb = tombBc
-    def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = Searcher.termLists(group)
-      val filterPs = fterms.flatMap(byTerm.get)
-      val inputs = qterms.toSeq.collect {
-        case (t, f) if !fset.contains(t) && byTerm.contains(t) && dfm.contains(t) =>
-          Wand.TermInput(byTerm(t), f, dfm(t))
-      }
-      Wand.topKFiltered(inputs, filterPs, required, nn, ad, k, p,
-          excludes = tb.value.get(group.head.shard).toSeq)
-        .iterator.map(s => (s.docId, s.score))
-    }
-    collectHits(hitFrame(pruned(all), k)(kernel))
-  }
+    * the filter intersection (cost ∝ shortest filter list per shard) — the
+    * should-plus-facets shape of [[search]]. */
+  def topKFiltered(query: String, facets: Map[String, String], k: Int): DataFrame =
+    search("", query, k = k, facets = facets)
 
   /** Facet value counts over the documents matching ≥ 1 analyzed query term
     * (the OR-match set — identical to the score>0 set, since this engine's
@@ -876,14 +717,12 @@ final class Searcher(spark: SparkSession, indexDir: String,
       .where(col("term").isin(qterms: _*) || col("term").startsWith(prefix))
       .as[Posting]
     val tb = tombBc
-    def kernel(group: Seq[Posting]): Iterator[(String, Long)] = {
-      val byTerm = Searcher.termLists(group)
-      val (fac, rest) = byTerm.partition(_._1.startsWith(prefix))
+    perShard(postings) { group =>
+      val (fac, rest) = Searcher.termLists(group).partition(_._1.startsWith(prefix))
       Wand.facetCounts(qterms.flatMap(rest.get), fac.values.toSeq,
           excludes = tb.value.get(group.head.shard).toSeq)
         .map { case (t, c) => (t.substring(prefixLen), c) }
-    }
-    perShard(postings)(kernel).toDF("value", "cnt")
+    }.toDF("value", "cnt")
       .groupBy($"value").agg(sum($"cnt").as("cnt"))
       .orderBy(desc("cnt"), asc("value")).limit(topN)
   }
@@ -912,19 +751,17 @@ final class Searcher(spark: SparkSession, indexDir: String,
         prefixes.map(p => col("term").startsWith(p)).reduce(_ || _))
       .as[Posting]
     val tb = tombBc
-    def kernel(group: Seq[Posting]): Iterator[(String, String, Long)] = {
-      val byTerm = Searcher.termLists(group)
-      val (fac, rest) = byTerm.partition(_._1.startsWith(P))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("facet").orderBy(desc("cnt"), asc("value"))
+    perShard(postings) { group =>
+      val (fac, rest) = Searcher.termLists(group).partition(_._1.startsWith(P))
       Wand.facetCounts(qterms.flatMap(rest.get), fac.values.toSeq,
           excludes = tb.value.get(group.head.shard).toSeq)
         .map { case (t, c) =>
           val sep = t.indexOf(P, 1)
           (t.substring(1, sep), t.substring(sep + 1), c)
         }
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("facet").orderBy(desc("cnt"), asc("value"))
-    perShard(postings)(kernel).toDF("facet", "value", "cnt")
+    }.toDF("facet", "value", "cnt")
       .groupBy($"facet", $"value").agg(sum($"cnt").as("cnt"))
       .withColumn("rn", row_number().over(w))
       .filter($"rn" <= topN).drop("rn")
@@ -965,28 +802,19 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * enumerator for phrase/positional verification. Output size ≤ the
     * query's shortest posting list; the caller point-reads only these
     * candidates (never the corpus). */
-  def matchAllDocs(query: String): DataFrame = {
-    val qtf = analyzeQuery(query)
-    if (qtf.isEmpty) return Seq.empty[(Long, Double)].toDF("docId", "score")
-    val dfm = dfSlice(qtf.keys.toSeq)
-    if (dfm.size < qtf.size) return Seq.empty[(Long, Double)].toDF("docId", "score")
-    val required = qtf.size
-    val qterms = qtf // local for closure
-    val p = params
-    val (nn, ad) = (n, avgdl)
-    val tb = tombBc
-    def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = Searcher.termLists(group)
-      val inputs = qterms.toSeq.collect {
-        case (t, f) if byTerm.contains(t) && dfm.contains(t) =>
-          Wand.TermInput(byTerm(t), f, dfm(t))
-      }
-      Wand.matchAll(inputs, required, nn, ad, p,
-          excludes = tb.value.get(group.head.shard).toSeq)
-        .iterator.map(s => (s.docId, s.score))
+  def matchAllDocs(query: String): DataFrame =
+    matchFrame(analyzed(query).filter { case (qtf, dfm) => dfm.size == qtf.size }.map {
+      case (qtf, dfm) =>
+        val terms = dfm.keys.toSeq.sorted
+        terms -> ShardQuery(bm25(qtf.toSeq, dfm), terms, sink = ShardQuery.All)
+    })
+
+  /** Every match of a query over the postings of its terms, as (docId,
+    * score); no rows for None. */
+  private def matchFrame(q: Option[(Seq[String], ShardQuery)]): DataFrame =
+    q.fold(Seq.empty[(Long, Double)].toDF("docId", "score")) { case (terms, sq) =>
+      shardRun(terms, Seq("q" -> sq))((_, s) => (s.docId, s.score)).toDF("docId", "score")
     }
-    perShard(pruned(dfm.keys.toSeq.sorted))(kernel).toDF("docId", "score")
-  }
 
   /** Batched multi-query top-k: ONE pass over the index answers every
     * query — the at-scale shape (the reference scores query-by-query; a
@@ -1000,14 +828,16 @@ final class Searcher(spark: SparkSession, indexDir: String,
     val qterms: Seq[(String, Map[String, Int])] =
       queries.toSeq.map { case (qid, q) => qid -> analyzeQuery(q) }
     val allTerms = qterms.flatMap(_._2.keys).distinct.sorted
-    if (allTerms.isEmpty) return emptyBatchHits()
+    if (allTerms.isEmpty) return Seq.empty[(String, String, Int, Long, Double)]
+      .toDF("qid", "conv_id", "turn_idx", "docId", "score")
     val dfm = dfSlice(allTerms)
+    val qs = qterms.map { case (qid, qtf) =>
+      qid -> ShardQuery(bm25(qtf.toSeq, dfm), sink = ShardQuery.Top(k)) }
     // Batch mode trades one narrow exchange (the pruned rows only) for
     // shard-level parallelism of the kernel work — the colocated read may
     // pack a small index into few partitions, which is right for
     // single-query latency but serializes a 100-query batch.
-    val perQid = resolved(shardTopK(pruned(allTerms), qterms, dfm, k, exhaustive = false,
-        forceGrouped = true), k)
+    val perQid = shardHits(allTerms, qs, k, forceGrouped = true)
       .rdd.mapPartitions(hs => Iterator(hs.toSeq.groupBy(_.qid)))
       .fold(Map.empty[String, Seq[Hit]])(HitLookup.mergeTopK(_, _, k))
     perQid.toSeq.sortBy(_._1).flatMap(_._2)
@@ -1015,41 +845,20 @@ final class Searcher(spark: SparkSession, indexDir: String,
       .toDF("qid", "conv_id", "turn_idx", "docId", "score")
   }
 
-  private def emptyBatchHits(): DataFrame =
-    Seq.empty[(String, String, Int, Long, Double)]
-      .toDF("qid", "conv_id", "turn_idx", "docId", "score")
-
   /** Every doc with ≥1 analyzed query term, as (docId, score) with the
     * OR-mode BM25 score — [[scoreAll]]'s positive-score set served from
-    * the INDEX: a pruned postings scan + the streaming [[Wand.matchAny]]
+    * the INDEX: a pruned postings scan + the streaming [[Wand.union]]
     * kernel, cost ∝ the union of the query terms' posting lists, never an
     * analyzed-table scan. The backbone of scoring aggregations
     * (function_score, top_hits, collapse, recency rerank): they need every
     * match's score, not a top-k heap, and they resolve metadata against
     * the doc-meta sidecar ([[docMetaSidecar]]) — the whole plan touches
     * postings + docmeta only (PlanSpec pins this). */
-  def scoreMatches(query: String): DataFrame = {
-    val qtf = analyzeQuery(query)
-    if (qtf.isEmpty) return Seq.empty[(Long, Double)].toDF("docId", "score")
-    val dfm = dfSlice(qtf.keys.toSeq)
-    if (dfm.isEmpty) return Seq.empty[(Long, Double)].toDF("docId", "score")
-    // sorted: deterministic float-accumulation order at any parallelism
-    val qterms = qtf.toSeq.sortBy(_._1)
-    val p = params
-    val (nn, ad) = (n, avgdl)
-    val tb = tombBc
-    def kernel(group: Seq[Posting]): Iterator[(Long, Double)] = {
-      val byTerm = Searcher.termLists(group)
-      val inputs = qterms.collect {
-        case (t, f) if byTerm.contains(t) && dfm.contains(t) =>
-          Wand.TermInput(byTerm(t), f, dfm(t))
-      }
-      Wand.matchAny(inputs, nn, ad, p,
-          excludes = tb.value.get(group.head.shard).toSeq)
-        .map(s => (s.docId, s.score))
-    }
-    perShard(pruned(dfm.keys.toSeq.sorted))(kernel).toDF("docId", "score")
-  }
+  def scoreMatches(query: String): DataFrame =
+    matchFrame(analyzed(query).map { case (qtf, dfm) =>
+      // sorted: deterministic float-accumulation order at any parallelism
+      dfm.keys.toSeq.sorted -> ShardQuery(bm25(qtf.toSeq.sortBy(_._1), dfm), sink = ShardQuery.All)
+    })
 
   /** Build-time doc-meta sidecar (Lucene docvalues): (shard, docId,
     * conv_id, turn_idx, <metaCols…>) materialized by IndexBuilder when

@@ -3,26 +3,56 @@ package graft.query
 import graft.codec.Postings
 import graft.model.Posting
 
-/** Block-max WAND top-k kernel (SURVEY.md §4 item 3).
+/** The posting-list traversals every shard kernel runs (SURVEY.md §4
+  * item 3). Each [[ShardQuery]] picks one of three:
   *
-  * Runs per index shard inside a `mapGroups`/`mapPartitions` — the only
-  * piece of the query path that is imperative by design: posting-list
-  * traversal with threshold-based skipping is not expressible relationally.
+  *  - [[wand]] — block-max WAND into a top-k heap: the pruning path of
+  *    every OR-mode BM25 query. Identical top-k to exhaustive OR-mode BM25
+  *    (any overlapping term contributes; the reference's scorer is
+  *    OR-mode, BM25Reranker.cs:405-408); it only *skips* documents that
+  *    provably cannot enter the current heap:
+  *     - term upper bound  ub(t) = idf(t)·qtfSat(t)·tfSatUpper(maxTf(t));
+  *     - pivot selection over cursors sorted by current docId;
+  *     - block-max refinement: before scoring a pivot, re-check with the
+  *       *current block* max tf of each aligned cursor.
+  *  - [[conjunction]] — leapfrog intersection of required (filter) lists,
+  *    each survivor scored by the query terms: AND mode, boolean must,
+  *    facet filters, phrase candidates. Cost ∝ shortest filter list.
+  *  - [[union]] — ascending-docId union of the query terms with no
+  *    pruning: every match's score (scoring aggregations), the similarities
+  *    without an upper bound (Dirichlet, TF-IDF), dis-max, and the
+  *    exhaustive correctness twin [[topKExhaustive]].
   *
-  * Semantics: identical top-k to exhaustive OR-mode BM25 (any overlapping
-  * term contributes; the reference's scorer is OR-mode, BM25Reranker.cs:
-  * 405-408). WAND only *prunes* documents that provably cannot enter the
-  * current top-k heap:
-  *  - term upper bound  ub(t) = idf(t)·qtfSat(t)·tfSatUpper(maxTf(t))
-  *  - pivot selection over cursors sorted by current docId;
-  *  - block-max refinement: before scoring a pivot, re-check with the
-  *    *current block* max tf of each aligned cursor.
+  * All three score a document as Σ score(tf, dl) over its terms in clause
+  * order, with the per-term [[SimScorer]] of a similarity, and skip
+  * excluded documents (MUST_NOT terms, delete tombstones) through one
+  * forward-only [[Excl]] cursor set. These loops are the only imperative
+  * piece of the query path by design: posting-list traversal with
+  * threshold-based skipping is not expressible relationally.
   */
 object Wand {
 
-  /** `boost` is the query-time per-term weight (Lucene's `term^w`): it
-    * scales the term's every contribution AND its pruning upper bound by
-    * the same factor, so WAND thresholding stays exact under boosting. */
+  /** A similarity's contribution of one query term to one document, from
+    * the term's in-doc frequency and the document's length. */
+  trait SimScorer extends Serializable {
+    def score(tf: Int, dl: Int): Double
+  }
+
+  /** A scorer with an upper bound over every document length — what
+    * [[wand]] needs to prune. */
+  trait Bounded extends SimScorer {
+    /** Max of `score(tf, dl)` over every dl, for tf ≤ maxTf. */
+    def bound(maxTf: Int): Double
+  }
+
+  /** One traversal input: a posting list, its scorer and the dis-max
+    * subquery (`slot`) its contribution sums into. */
+  final case class Term(posting: Posting, sim: SimScorer, slot: Int = 0)
+
+  /** A BM25 query term over one shard's posting list. `boost` is the
+    * query-time per-term weight (Lucene's `term^w`): it scales the term's
+    * every contribution AND its pruning upper bound by the same factor, so
+    * WAND thresholding stays exact under boosting. */
   final case class TermInput(posting: Posting, qtf: Int, globalDf: Long,
                              boost: Double = 1.0) {
     // Lucene's BoostQuery contract: a zero/negative/NaN boost would make
@@ -69,13 +99,13 @@ object Wand {
     }
   }
 
-  /** Number of documents fully scored by the most recent topK call ON THIS
-    * THREAD — instrumentation for pruning-effectiveness tests only. */
+  /** Number of documents fully scored by the most recent [[wand]] call ON
+    * THIS THREAD — instrumentation for pruning-effectiveness tests only. */
   val lastScoredCount = new ThreadLocal[Long] { override def initialValue(): Long = 0L }
 
   /** Forward-only exclusion check over posting lists (MUST_NOT terms,
     * delete tombstones). Sound only when probed with NON-DECREASING docIds
-    * — which every kernel here guarantees, because candidates are
+    * — which every traversal here guarantees, because candidates are
     * enumerated in strictly ascending docId order. Each probe leapfrogs the
     * exclusion cursors forward, so total cost over a kernel run is one
     * block-skipping pass per exclusion list, never a pass per candidate. */
@@ -83,7 +113,6 @@ object Wand {
     private val cs = lists.filter(_.count > 0).map { e =>
       val c = new Postings.Cursor(e); c.next(); c
     }.toArray
-    def isEmpty: Boolean = cs.isEmpty
     def excluded(doc: Long): Boolean = {
       var j = 0
       while (j < cs.length) {
@@ -96,35 +125,63 @@ object Wand {
     }
   }
 
-  /** Top-k over one shard. Doc lengths come inline from the posting blobs
-    * (Cursor.dl); stats are GLOBAL (n, avgdl, per-term global df).
+  private def cursor(p: Posting): Postings.Cursor = {
+    val c = new Postings.Cursor(p); c.next(); c
+  }
+
+  /** The live BM25 terms of `terms` (non-empty list, df > 0) as traversal
+    * inputs; none when the collection statistics are empty. */
+  private def bm25(terms: Seq[TermInput], n: Long, avgdl: Double, p: Bm25.Params): Seq[Term] =
+    if (n == 0 || avgdl == 0.0) Nil
+    else terms.filter(t => t.posting.count > 0 && t.globalDf > 0)
+      .map(t => Term(t.posting, Bm25.sim(t.qtf, t.globalDf, n, avgdl, p, t.boost)))
+
+  /** OR-mode BM25 top-k over one shard by [[wand]]. Doc lengths come
+    * inline from the posting blobs (Cursor.dl); stats are GLOBAL (n,
+    * avgdl, per-term global df). `minMatch`, `gateMax` and `excludes` as
+    * in [[wand]] and [[TopK]]. */
+  def topK(terms: Seq[TermInput], n: Long, avgdl: Double,
+           k: Int, p: Bm25.Params, minMatch: Int = 1,
+           gateMax: Double = Double.PositiveInfinity,
+           excludes: Seq[Posting] = Nil): Array[Scored] = {
+    val top = new TopK(k, gateMax)
+    wand(bm25(terms, n, avgdl, p), minMatch, new Excl(excludes), top)
+    top.drainDescending()
+  }
+
+  /** Exhaustive (no pruning) twin of [[topK]] over the same inputs, by
+    * [[union]] — the reference WAND is checked against (WAND ≡ this on
+    * every corpus, tested). */
+  def topKExhaustive(terms: Seq[TermInput], n: Long,
+                     avgdl: Double, k: Int, p: Bm25.Params,
+                     excludes: Seq[Posting] = Nil): Array[Scored] = {
+    val top = new TopK(k)
+    union(bm25(terms, n, avgdl, p), 0.0, 1, new Excl(excludes))
+      .foreach(s => top.offer(s.docId, s.score))
+    top.drainDescending()
+  }
+
+  /** Block-max WAND over `terms` into `top`.
     *
     * `minMatch` is Lucene's minimum_should_match: a document qualifies only
     * if it contains at least that many DISTINCT query terms (1 = plain OR).
     * It filters at full-evaluation time only — threshold pruning stays
     * sound because dropping candidates never raises the true k-th score.
-    * `gateMax` is the search_after page gate (see [[TopK]]). */
-  def topK(terms: Seq[TermInput], n: Long, avgdl: Double,
-           k: Int, p: Bm25.Params, minMatch: Int = 1,
-           gateMax: Double = Double.PositiveInfinity): Array[Scored] = {
+    *
+    * Excluded documents (Lucene's MUST_NOT / ReqExclScorer shape) are
+    * checked before the block-max recheck: WAND fully scores candidates in
+    * strictly increasing docId order (after a candidate is scored, every
+    * cursor sitting on it advances past it), so the forward-only [[Excl]]
+    * costs only the excluded lists' block skips, and exclusion only ever
+    * REMOVES candidates, so the heap threshold stays a lower bound on the
+    * final k-th score. */
+  def wand(terms: Seq[Term], minMatch: Int, ex: Excl, topk: TopK): Unit = {
     lastScoredCount.set(0L)
-    val live = terms.filter(t => t.posting.count > 0 && t.globalDf > 0)
-    val topk = new TopK(k, gateMax)
-    if (live.isEmpty || live.size < minMatch || n == 0 || avgdl == 0.0)
-      return topk.drainDescending()
-
-    val m = live.size
-    val cursors = new Array[Postings.Cursor](m)
-    val ubs = new Array[Double](m) // term-level upper bound
-    val idfQtf = new Array[Double](m) // idf * qtfSat, reused per hit
-    var i = 0
-    live.foreach { t =>
-      cursors(i) = new Postings.Cursor(t.posting)
-      cursors(i).next()
-      idfQtf(i) = Bm25.idf(n, t.globalDf) * Bm25.qtfSat(t.qtf, p) * t.boost
-      ubs(i) = idfQtf(i) * Bm25.tfSatUpper(t.posting.maxTf, p)
-      i += 1
-    }
+    val m = terms.size
+    if (m == 0 || m < minMatch) return
+    val cursors = terms.map(t => cursor(t.posting)).toArray
+    val sims = terms.map(_.sim.asInstanceOf[Bounded]).toArray
+    val ubs = terms.map(t => t.sim.asInstanceOf[Bounded].bound(t.posting.maxTf)).toArray
     // order[] = cursor indices sorted by current docId (insertion-sorted,
     // m is the query length — tiny)
     val order = Array.range(0, m)
@@ -145,7 +202,7 @@ object Wand {
       sortOrder()
       // drop exhausted cursors (they sort to the end with MaxValue)
       while (liveCount > 0 && cursors(order(liveCount - 1)).exhausted) liveCount -= 1
-      if (liveCount == 0) return topk.drainDescending()
+      if (liveCount == 0) return
 
       // pivot: first position where the cumulative UB clears the threshold
       val theta = topk.threshold
@@ -157,41 +214,43 @@ object Wand {
         if (acc > theta) pivotPos = j
         j += 1
       }
-      if (pivotPos < 0) return topk.drainDescending() // nothing can qualify
+      if (pivotPos < 0) return // nothing can qualify
 
       val pivotDoc = cursors(order(pivotPos)).docId
       if (cursors(order(0)).docId == pivotDoc) {
-        // block-max recheck: tighter bound using current blocks. Must scan
-        // ALL live cursors — ones beyond the pivot position can also sit on
-        // pivotDoc and contribute to its true score.
-        var blockUb = 0.0
-        var jj = 0
-        while (jj < liveCount) {
-          val ci = order(jj)
-          val c = cursors(ci)
-          if (!c.exhausted) {
-            if (c.docId < pivotDoc) c.advanceTo(pivotDoc)
-            if (!c.exhausted && c.docId == pivotDoc)
-              blockUb += idfQtf(ci) * Bm25.tfSatUpper(c.currentBlockMaxTf, p)
-          }
-          jj += 1
-        }
-        if (blockUb > theta) {
-          // fully score pivotDoc (doc length rides inline on each cursor)
-          lastScoredCount.set(lastScoredCount.get + 1)
-          var s = 0.0
-          var matched = 0
-          var jk = 0
-          while (jk < liveCount) {
-            val ci = order(jk)
+        if (!ex.excluded(pivotDoc)) {
+          // block-max recheck: tighter bound using current blocks. Must scan
+          // ALL live cursors — ones beyond the pivot position can also sit on
+          // pivotDoc and contribute to its true score.
+          var blockUb = 0.0
+          var jj = 0
+          while (jj < liveCount) {
+            val ci = order(jj)
             val c = cursors(ci)
-            if (!c.exhausted && c.docId == pivotDoc) {
-              s += idfQtf(ci) * Bm25.tfSat(c.tf, c.dl, avgdl, p)
-              matched += 1
+            if (!c.exhausted) {
+              if (c.docId < pivotDoc) c.advanceTo(pivotDoc)
+              if (!c.exhausted && c.docId == pivotDoc)
+                blockUb += sims(ci).bound(c.currentBlockMaxTf)
             }
-            jk += 1
+            jj += 1
           }
-          if (s > 0.0 && matched >= minMatch) topk.offer(pivotDoc, s)
+          if (blockUb > theta) {
+            // fully score pivotDoc (doc length rides inline on each cursor)
+            lastScoredCount.set(lastScoredCount.get + 1)
+            var s = 0.0
+            var matched = 0
+            var jk = 0
+            while (jk < liveCount) {
+              val ci = order(jk)
+              val c = cursors(ci)
+              if (!c.exhausted && c.docId == pivotDoc) {
+                s += sims(ci).score(c.tf, c.dl)
+                matched += 1
+              }
+              jk += 1
+            }
+            if (s > 0.0 && matched >= minMatch) topk.offer(pivotDoc, s)
+          }
         }
         // advance every cursor sitting on pivotDoc
         var ja = 0
@@ -209,381 +268,146 @@ object Wand {
         }
       }
     }
-    topk.drainDescending()
   }
 
-  /** NOT-mode top-k over one shard: OR-mode WAND top-k, excluding every
-    * document present in ANY of the `excludes` posting lists (Lucene's
-    * MUST_NOT / ReqExclScorer shape). The exclusion cursors leapfrog
-    * forward only — valid because WAND fully scores candidates in strictly
-    * increasing docId order (after a candidate is scored, every cursor
-    * sitting on it advances past it) — so the extra cost is the excluded
-    * lists' block skips, never a second pass. Threshold pruning stays
-    * sound: exclusion only ever REMOVES candidates, and the heap
-    * threshold is a lower bound on the final k-th score either way. */
-  def topKNot(terms: Seq[TermInput], excludes: Seq[Posting], n: Long,
-              avgdl: Double, k: Int, p: Bm25.Params, minMatch: Int = 1,
-              gateMax: Double = Double.PositiveInfinity): Array[Scored] = {
-    val ex = new Excl(excludes)
-    if (ex.isEmpty) return topK(terms, n, avgdl, k, p, minMatch, gateMax)
-    def excluded(doc: Long): Boolean = ex.excluded(doc)
+  /** A traversal that streams its matches in ascending docId order:
+    * `advance` positions (doc, score) on the next one or returns false.
+    * O(|terms|) cursor state, nothing buffered. */
+  private abstract class Matches extends scala.collection.AbstractIterator[Scored] {
+    protected var doc = 0L
+    protected var score = 0.0
+    private var ready = false
+    private var done = false
+    protected def advance(): Boolean
+    def hasNext: Boolean = {
+      if (!ready && !done) { ready = advance(); done = !ready }
+      ready
+    }
+    def next(): Scored = {
+      if (!hasNext) throw new NoSuchElementException("traversal exhausted")
+      ready = false
+      Scored(doc, score)
+    }
+  }
 
-    val live = terms.filter(t => t.posting.count > 0 && t.globalDf > 0)
-    val topk = new TopK(k, gateMax)
-    if (live.isEmpty || live.size < minMatch || n == 0 || avgdl == 0.0)
-      return topk.drainDescending()
-    val m = live.size
-    val cursors = new Array[Postings.Cursor](m)
-    val ubs = new Array[Double](m)
-    val idfQtf = new Array[Double](m)
-    var i = 0
-    live.foreach { t =>
-      cursors(i) = new Postings.Cursor(t.posting)
-      cursors(i).next()
-      idfQtf(i) = Bm25.idf(n, t.globalDf) * Bm25.qtfSat(t.qtf, p) * t.boost
-      ubs(i) = idfQtf(i) * Bm25.tfSatUpper(t.posting.maxTf, p)
-      i += 1
-    }
-    val order = Array.range(0, m)
-    def sortOrder(): Unit = {
-      var a = 1
-      while (a < m) {
-        val x = order(a); var b = a - 1
-        while (b >= 0 && cursors(order(b)).docId > cursors(x).docId) {
-          order(b + 1) = order(b); b -= 1
-        }
-        order(b + 1) = x
-        a += 1
-      }
-    }
-    var liveCount = m
-    while (liveCount > 0) {
-      sortOrder()
-      while (liveCount > 0 && cursors(order(liveCount - 1)).exhausted) liveCount -= 1
-      if (liveCount == 0) return topk.drainDescending()
-      val theta = topk.threshold
-      var acc = 0.0
-      var pivotPos = -1
-      var j = 0
-      while (j < liveCount && pivotPos < 0) {
-        acc += ubs(order(j))
-        if (acc > theta) pivotPos = j
-        j += 1
-      }
-      if (pivotPos < 0) return topk.drainDescending()
-      val pivotDoc = cursors(order(pivotPos)).docId
-      if (cursors(order(0)).docId == pivotDoc) {
-        // exclusion check FIRST: an excluded doc skips the block-max
-        // recheck and the full scoring entirely
-        if (!excluded(pivotDoc)) {
-          var blockUb = 0.0
+  /** Leapfrog conjunction: every doc (ascending) present in ALL `filters`
+    * lists, scored by `terms` — a doc passing the filters but scoring 0
+    * (no query term) is not emitted. The caller passes only filter lists
+    * present in the shard; one missing means no doc can match.
+    *
+    * The filter intersection drives iteration: repeatedly advance the
+    * lagging filter cursor to the current candidate; agreement of all of
+    * them is a match. A query term whose list IS a filter list reads that
+    * filter's cursor (each list decodes once); any other term's cursor only
+    * `advanceTo`s each survivor. Cost ∝ shortest filter list · block skips
+    * — for selective filters this beats WAND over the query union by the
+    * selectivity factor, and for a filter covering ~the whole corpus it
+    * degrades to one extra always-matching cursor on an OR-mode scan. A
+    * matching doc's score equals its OR-mode score (the reference's scorer
+    * is OR-only; AND is this engine's extension, rank-consistent across
+    * modes). */
+  def conjunction(filters: Seq[Posting], terms: Seq[Term], ex: Excl): Iterator[Scored] =
+    if (filters.isEmpty || terms.isEmpty) Iterator.empty
+    else new Matches {
+      private val fc = filters.map(cursor).toArray
+      private val cs = terms.map(t => filters.indexWhere(_ eq t.posting) match {
+        case -1 => cursor(t.posting)
+        case f => fc(f)
+      }).toArray
+      private val sims = terms.map(_.sim).toArray
+      private var target = fc.map(_.docId).max
+      private var finished = false
+
+      protected def advance(): Boolean = {
+        while (!finished) {
+          // leapfrog the filter cursors to a common docId
+          var matched = true
           var jj = 0
-          while (jj < liveCount) {
-            val ci = order(jj)
-            val c = cursors(ci)
-            if (!c.exhausted) {
-              if (c.docId < pivotDoc) c.advanceTo(pivotDoc)
-              if (!c.exhausted && c.docId == pivotDoc)
-                blockUb += idfQtf(ci) * Bm25.tfSatUpper(c.currentBlockMaxTf, p)
-            }
+          while (jj < fc.length && matched) {
+            val c = fc(jj)
+            if (c.docId < target) c.advanceTo(target)
+            if (c.exhausted) return false
+            if (c.docId != target) { target = c.docId; matched = false }
             jj += 1
           }
-          if (blockUb > theta) {
+          if (matched) {
+            // score the candidate: query cursors catch up, equal docIds add in
+            val d = target
             var s = 0.0
-            var matched = 0
+            var liveQ = false
             var jk = 0
-            while (jk < liveCount) {
-              val ci = order(jk)
-              val c = cursors(ci)
-              if (!c.exhausted && c.docId == pivotDoc) {
-                s += idfQtf(ci) * Bm25.tfSat(c.tf, c.dl, avgdl, p)
-                matched += 1
+            while (jk < cs.length) {
+              val c = cs(jk)
+              if (!c.exhausted && c.docId < d) c.advanceTo(d)
+              if (!c.exhausted) {
+                liveQ = true
+                if (c.docId == d) s += sims(jk).score(c.tf, c.dl)
               }
               jk += 1
             }
-            if (s > 0.0 && matched >= minMatch) topk.offer(pivotDoc, s)
+            // every query list exhausted: nothing further can score
+            if (!liveQ || !fc(0).next()) finished = true
+            else target = fc(0).docId
+            if (s > 0.0 && !ex.excluded(d)) { doc = d; score = s; return true }
           }
         }
-        var ja = 0
-        while (ja < liveCount) {
-          val c = cursors(order(ja))
-          if (!c.exhausted && c.docId == pivotDoc) c.next()
-          ja += 1
-        }
-      } else {
-        var ja = 0
-        while (ja < pivotPos && cursors(order(ja)).docId < pivotDoc) {
-          cursors(order(ja)).advanceTo(pivotDoc)
-          ja += 1
-        }
+        false
       }
     }
-    topk.drainDescending()
-  }
 
-  /** Conjunctive (AND-mode) top-k over one shard: only documents containing
-    * EVERY query term score. `required` is the number of distinct analyzed
-    * query terms — when this shard's inputs cover fewer (a term has no
-    * posting here), no document in the shard can match and the kernel
-    * returns empty without touching a blob.
+  /** Ascending-docId union: every doc on at least one of `terms`' lists
+    * and on at least `minMatch` of them, scored with no pruning. Cost ∝ the
+    * UNION of the lists — never the corpus; streaming, so a non-selective
+    * query's match set never materializes in kernel memory.
     *
-    * Leapfrog intersection over the block-skipping cursors: repeatedly
-    * advance the lagging cursor to the current candidate docId; agreement
-    * of all m cursors is a match, scored with the same BM25 sum as OR-mode
-    * (the reference's scorer is OR-only; AND is this engine's extension, so
-    * its score on a matching doc equals the OR-mode score by design —
-    * rank-consistent across modes). Cost is O(shortest list · block
-    * skips), never O(union). */
-  def topKAnd(terms: Seq[TermInput], required: Int, n: Long, avgdl: Double,
-              k: Int, p: Bm25.Params,
-              /** Docs present in any of these lists never match (delete
-                * tombstones); same forward-leapfrog as [[topKNot]]. */
-              excludes: Seq[Posting] = Nil): Array[Scored] = {
-    val ex = new Excl(excludes)
-    val topk = new TopK(k)
-    val live = terms.filter(t => t.posting.count > 0 && t.globalDf > 0)
-    if (live.size < required || live.isEmpty || n == 0 || avgdl == 0.0)
-      return topk.drainDescending()
-    val m = live.size
-    val cursors = new Array[Postings.Cursor](m)
-    val idfQtf = new Array[Double](m)
-    var i = 0
-    live.foreach { t =>
-      cursors(i) = new Postings.Cursor(t.posting)
-      cursors(i).next()
-      idfQtf(i) = Bm25.idf(n, t.globalDf) * Bm25.qtfSat(t.qtf, p) * t.boost
-      i += 1
-    }
-    var target = 0L
-    var j = 0
-    while (j < m) { if (cursors(j).docId > target) target = cursors(j).docId; j += 1 }
-    var done = false
-    while (!done) {
-      var matched = true
-      var jj = 0
-      while (jj < m && matched) {
-        val c = cursors(jj)
-        if (c.docId < target) c.advanceTo(target)
-        if (c.exhausted) { done = true; matched = false }
-        else if (c.docId != target) { target = c.docId; matched = false } // re-scan from 0
-        jj += 1
-      }
-      if (!done && matched) {
-        if (!ex.excluded(target)) {
-          var s = 0.0
-          var jk = 0
-          while (jk < m) {
-            s += idfQtf(jk) * Bm25.tfSat(cursors(jk).tf, cursors(jk).dl, avgdl, p)
-            jk += 1
-          }
-          topk.offer(target, s)
-        }
-        if (cursors(0).next()) target = cursors(0).docId else done = true
-      }
-    }
-    topk.drainDescending()
-  }
+    * Contributions sum per dis-max `slot` in clause order; with one slot
+    * the sum IS the score (callers order clauses deterministically, so the
+    * float sum is the same at any parallelism — N ≡ 4N output, the
+    * north-rule invariant). With several slots the score is Lucene's
+    * DisjunctionMaxQuery combination max + tie·(sum − max) over the slot
+    * sums. Only docs scoring > 0 are emitted. */
+  def union(terms: Seq[Term], tie: Double, minMatch: Int, ex: Excl): Iterator[Scored] =
+    if (terms.isEmpty) Iterator.empty
+    else new Matches {
+      private val cursors = terms.map(t => cursor(t.posting)).toArray
+      private val sims = terms.map(_.sim).toArray
+      private val slot = terms.map(_.slot).toArray
+      private val acc = new Array[Double](slot.max + 1)
 
-  /** Filtered (faceted) top-k over one shard: rank only documents that
-    * appear in EVERY filter posting list (facet lists — see
-    * [[graft.model.Facets]]), scoring them with the normal OR-mode BM25 sum
-    * over the query terms (a doc passing the filter but overlapping no
-    * query term scores 0 and is not emitted, mirroring [[topK]]).
-    *
-    * `required` is the number of distinct filters the caller requested —
-    * when this shard holds fewer filter lists (some facet value absent
-    * here), no document in the shard can match.
-    *
-    * The FILTER intersection drives iteration (leapfrog over the filter
-    * cursors, same as [[topKAnd]]); query-term cursors only `advanceTo`
-    * each surviving candidate. Cost ∝ shortest filter list · block skips —
-    * for selective facets this beats WAND over the query union by the
-    * selectivity factor, and for a facet covering ~the whole corpus it
-    * degrades to one extra always-matching cursor on an OR-mode scan, so
-    * driving from the filter is the right default at any selectivity. */
-  def topKFiltered(query: Seq[TermInput], filters: Seq[Posting], required: Int,
-                   n: Long, avgdl: Double, k: Int, p: Bm25.Params,
-                   excludes: Seq[Posting] = Nil): Array[Scored] = {
-    val ex = new Excl(excludes)
-    val topk = new TopK(k)
-    val liveF = filters.filter(_.count > 0)
-    if (liveF.size < required || liveF.isEmpty || n == 0 || avgdl == 0.0)
-      return topk.drainDescending()
-    val live = query.filter(t => t.posting.count > 0 && t.globalDf > 0)
-    if (live.isEmpty) return topk.drainDescending()
-
-    val fm = liveF.size
-    val fc = new Array[Postings.Cursor](fm)
-    var i = 0
-    liveF.foreach { f => fc(i) = new Postings.Cursor(f); fc(i).next(); i += 1 }
-    val m = live.size
-    val qc = new Array[Postings.Cursor](m)
-    val idfQtf = new Array[Double](m)
-    i = 0
-    live.foreach { t =>
-      qc(i) = new Postings.Cursor(t.posting)
-      qc(i).next()
-      idfQtf(i) = Bm25.idf(n, t.globalDf) * Bm25.qtfSat(t.qtf, p) * t.boost
-      i += 1
-    }
-
-    var target = 0L
-    var j = 0
-    while (j < fm) { if (fc(j).docId > target) target = fc(j).docId; j += 1 }
-    var done = false
-    while (!done) {
-      // leapfrog the filter cursors to a common docId
-      var matched = true
-      var jj = 0
-      while (jj < fm && matched) {
-        val c = fc(jj)
-        if (c.docId < target) c.advanceTo(target)
-        if (c.exhausted) { done = true; matched = false }
-        else if (c.docId != target) { target = c.docId; matched = false }
-        jj += 1
-      }
-      if (!done && matched) {
-        // score the candidate: query cursors catch up, equal docIds add in
-        var s = 0.0
-        var liveQ = false
-        var jk = 0
-        while (jk < m) {
-          val c = qc(jk)
-          if (!c.exhausted && c.docId < target) c.advanceTo(target)
-          if (!c.exhausted) {
-            liveQ = true
-            if (c.docId == target) s += idfQtf(jk) * Bm25.tfSat(c.tf, c.dl, avgdl, p)
-          }
-          jk += 1
-        }
-        if (s > 0.0 && !ex.excluded(target)) topk.offer(target, s)
-        if (!liveQ) done = true // every query list exhausted: nothing can score
-        else if (fc(0).next()) target = fc(0).docId
-        else done = true
-      }
-    }
-    topk.drainDescending()
-  }
-
-  /** Every doc (ascending docId) containing ALL query terms in this shard,
-    * with its BM25 score — the candidate enumerator for phrase/positional
-    * verification. Same leapfrog as [[topKAnd]], no heap; output size is
-    * bounded by the SHORTEST posting list, which is what makes
-    * verify-on-candidates a scale-safe plan for selective phrases. */
-  def matchAll(terms: Seq[TermInput], required: Int, n: Long,
-               avgdl: Double, p: Bm25.Params,
-               excludes: Seq[Posting] = Nil): Array[Scored] = {
-    val ex = new Excl(excludes)
-    val live = terms.filter(t => t.posting.count > 0 && t.globalDf > 0)
-    if (live.size < required || live.isEmpty || n == 0 || avgdl == 0.0)
-      return Array.empty[Scored]
-    val m = live.size
-    val cursors = new Array[Postings.Cursor](m)
-    val idfQtf = new Array[Double](m)
-    var i = 0
-    live.foreach { t =>
-      cursors(i) = new Postings.Cursor(t.posting)
-      cursors(i).next()
-      idfQtf(i) = Bm25.idf(n, t.globalDf) * Bm25.qtfSat(t.qtf, p) * t.boost
-      i += 1
-    }
-    val out = new scala.collection.mutable.ArrayBuffer[Scored]()
-    var target = 0L
-    var j = 0
-    while (j < m) { if (cursors(j).docId > target) target = cursors(j).docId; j += 1 }
-    var done = false
-    while (!done) {
-      var matched = true
-      var jj = 0
-      while (jj < m && matched) {
-        val c = cursors(jj)
-        if (c.docId < target) c.advanceTo(target)
-        if (c.exhausted) { done = true; matched = false }
-        else if (c.docId != target) { target = c.docId; matched = false }
-        jj += 1
-      }
-      if (!done && matched) {
-        if (!ex.excluded(target)) {
-          var s = 0.0
-          var jk = 0
-          while (jk < m) {
-            s += idfQtf(jk) * Bm25.tfSat(cursors(jk).tf, cursors(jk).dl, avgdl, p)
-            jk += 1
-          }
-          out += Scored(target, s)
-        }
-        if (cursors(0).next()) target = cursors(0).docId else done = true
-      }
-    }
-    out.toArray
-  }
-
-  /** Every doc (ascending docId) containing AT LEAST ONE live query term
-    * in this shard, with its full OR-mode BM25 score — the match-set
-    * enumerator behind scoring AGGREGATIONS (function_score, top_hits,
-    * collapse, recency rerank), which need every matching doc's score but
-    * never the corpus: cost ∝ the UNION of the query terms' posting
-    * lists. Same per-term contribution formula as [[topK]] (reference
-    * O5 semantics, BM25Reranker.cs:83-111 restricted to score > 0), no
-    * heap cut. STREAMING: O(|terms|) cursor state, nothing buffered —
-    * a non-selective query's match set never materializes in kernel
-    * memory. */
-  def matchAny(terms: Seq[TermInput], n: Long, avgdl: Double, p: Bm25.Params,
-               excludes: Seq[Posting] = Nil): Iterator[Scored] = {
-    val live = terms.filter(t => t.posting.count > 0 && t.globalDf > 0)
-    if (live.isEmpty || n == 0 || avgdl == 0.0) return Iterator.empty
-    val ex = new Excl(excludes)
-    val m = live.size
-    val cursors = new Array[Postings.Cursor](m)
-    val idfQtf = new Array[Double](m)
-    var i = 0
-    live.foreach { t =>
-      cursors(i) = new Postings.Cursor(t.posting)
-      cursors(i).next()
-      idfQtf(i) = Bm25.idf(n, t.globalDf) * Bm25.qtfSat(t.qtf, p) * t.boost
-      i += 1
-    }
-    new scala.collection.AbstractIterator[Scored] {
-      private var outDoc = 0L
-      private var outScore = 0.0
-      private var ready = false
-      private var done = false
-      private def advance(): Unit = {
-        while (!ready && !done) {
+      protected def advance(): Boolean = {
+        while (true) {
           var minDoc = Long.MaxValue
           var j = 0
-          while (j < m) {
+          while (j < cursors.length) {
             val c = cursors(j)
             if (!c.exhausted && c.docId < minDoc) minDoc = c.docId
             j += 1
           }
-          if (minDoc == Long.MaxValue) { done = true; return }
-          // terms arrive sorted from the caller, so the accumulation
-          // order — and therefore the float sum — is deterministic at
-          // any parallelism (N ≡ 4N output, the north-rule invariant)
-          var s = 0.0
-          var j2 = 0
-          while (j2 < m) {
-            val c = cursors(j2)
+          if (minDoc == Long.MaxValue) return false
+          java.util.Arrays.fill(acc, 0.0)
+          var matched = 0
+          j = 0
+          while (j < cursors.length) {
+            val c = cursors(j)
             if (!c.exhausted && c.docId == minDoc) {
-              s += idfQtf(j2) * Bm25.tfSat(c.tf, c.dl, avgdl, p)
+              acc(slot(j)) += sims(j).score(c.tf, c.dl)
+              matched += 1
               c.next()
             }
-            j2 += 1
+            j += 1
           }
-          if (s > 0.0 && !ex.excluded(minDoc)) {
-            outDoc = minDoc; outScore = s; ready = true
+          val s = if (acc.length == 1) acc(0) else {
+            var mx = 0.0; var sm = 0.0; var i = 0
+            while (i < acc.length) { if (acc(i) > mx) mx = acc(i); sm += acc(i); i += 1 }
+            mx + tie * (sm - mx)
+          }
+          if (s > 0.0 && matched >= minMatch && !ex.excluded(minDoc)) {
+            doc = minDoc; score = s; return true
           }
         }
-      }
-      def hasNext: Boolean = { if (!ready) advance(); ready }
-      def next(): Scored = {
-        if (!hasNext) throw new NoSuchElementException("matchAny exhausted")
-        ready = false
-        Scored(outDoc, outScore)
+        false
       }
     }
-  }
 
   /** Growable two-level bitmap over per-shard document RANKS (dense by
     * construction — Ids.rankOf). Pages of 2^26 bits (8 MB) allocate lazily,
@@ -645,38 +469,5 @@ object Wand {
       while (c.next()) if (matched.get(graft.model.Ids.rankOf(c.docId))) cnt += 1
       if (cnt > 0) Iterator.single((fp.term, cnt)) else Iterator.empty
     }
-  }
-
-  /** Exhaustive (no pruning) scorer over the same inputs — the correctness
-    * twin of topK; WAND ≡ this on every corpus (tested). */
-  def topKExhaustive(terms: Seq[TermInput], n: Long,
-                     avgdl: Double, k: Int, p: Bm25.Params,
-                     excludes: Seq[Posting] = Nil): Array[Scored] = {
-    val topk = new TopK(k)
-    if (n == 0 || avgdl == 0.0) return topk.drainDescending()
-    // the accumulator is drained in hash order, so forward-only exclusion
-    // cursors don't apply — decode the exclusion lists into a set (this
-    // kernel is the correctness twin, not the scale path)
-    val exSet = new java.util.HashSet[java.lang.Long]()
-    excludes.foreach { e =>
-      val c = new Postings.Cursor(e)
-      while (c.next()) exSet.add(c.docId)
-    }
-    val acc = new java.util.HashMap[java.lang.Long, java.lang.Double]()
-    terms.foreach { t =>
-      if (t.globalDf > 0) {
-        val iq = Bm25.idf(n, t.globalDf) * Bm25.qtfSat(t.qtf, p) * t.boost
-        val (docs, tfs, lens) = Postings.decode(t.posting)
-        var i = 0
-        while (i < docs.length) {
-          val add = iq * Bm25.tfSat(tfs(i), lens(i), avgdl, p)
-          val prev = acc.get(docs(i))
-          acc.put(docs(i), if (prev == null) add else prev + add)
-          i += 1
-        }
-      }
-    }
-    acc.forEach((d, s) => if (s > 0.0 && !exSet.contains(d)) topk.offer(d, s))
-    topk.drainDescending()
   }
 }

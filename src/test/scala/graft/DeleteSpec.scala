@@ -69,6 +69,14 @@ class DeleteSpec extends AnyFunSuite {
       assertSameTopK(sRef, sDel, q, 15)
     }
     RefreshSpec.assertHitIdentities(spark, sDel, delDir, Queries)
+    // Dirichlet too never ranks a deleted doc (the three-doc fixture below
+    // cannot show it: there every doc's Dirichlet score clamps to 0)
+    val doomedConvs = all.filter(doomedPred).select($"conv_id").distinct()
+    Queries.foreach { q =>
+      val lm = sDel.topKDirichlet(q, 2000.0, 15)
+      assert(lm.count() > 0, s"no Dirichlet hits for '$q'")
+      assert(lm.join(doomedConvs, "conv_id").count() == 0, s"deleted doc ranked for '$q'")
+    }
   }
 
   test("every query mode hides a tombstoned doc; snapshot before the delete sees it") {
@@ -95,6 +103,15 @@ class DeleteSpec extends AnyFunSuite {
     assert(s.scoreAll("", keepZeros = true).count() == 2)
     // MUST_NOT composes with tombstones (term exclusion + tombstone cursor)
     assert(s.topKNot("shared", "filler", 10).count() == 1)
+    // TF-IDF, dis-max, synonyms, boosts, msm, paging, boolean, all matches
+    assert(s.topKTfIdf("zzdel shared", 10).count() == 1)
+    assert(s.topKDisMax(Seq("zzdel", "shared"), 0.3, 10).count() == 1)
+    assert(s.topKSynonyms("zzdel", Map("zzdel" -> Seq("shared")), 10).count() == 1)
+    assert(s.topKBoosted("zzdel shared", Map("shared" -> 2.0), 10).count() == 1)
+    assert(s.topKMsm("zzdel shared", 2, 10).count() == 1)
+    assert(s.topKAfter("zzdel shared", 10, 100.0).count() == 1)
+    assert(s.search("zzdel", "shared", "filler", 10).count() == 1)
+    assert(s.scoreMatches("zzdel shared").count() == 1)
 
     // the pre-delete snapshot still serves the doomed doc with gen-0 stats
     val snap = new Searcher(spark, dir, asOfGen = 0L)

@@ -3,7 +3,7 @@ package graft
 import graft.analysis.Analyzer
 import graft.build.IndexBuilder
 import graft.codec.Postings
-import graft.query.{Bm25, LmDirichlet, Searcher, Wand}
+import graft.query.{Bm25, LmDirichlet, Searcher, ShardQuery, Wand}
 import graft.sources.Transcripts
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -82,9 +82,11 @@ class RankVariantsSpec extends AnyFunSuite {
       qtf * math.max(0.0,
         math.log(1.0 + tf / (mu * ((cf + 1.0) / (tTot + 1.0))))
           + math.log(mu / (dl + mu)))
-    val out = LmDirichlet.topK(Seq(
-      LmDirichlet.TermInput(a, 1, 3L), LmDirichlet.TermInput(b, 2, 4L)),
-      tTot, mu, 10).map(sc => sc.docId -> sc.score).toMap
+    val out = ShardQuery(Seq(
+      ShardQuery.clause("a", LmDirichlet.sim(1, 3L, tTot, mu)),
+      ShardQuery.clause("b", LmDirichlet.sim(2, 4L, tTot, mu))),
+      sink = ShardQuery.Top(10)).run(Map("a" -> a, "b" -> b), None)
+      .map(sc => sc.docId -> sc.score).toMap
     val expect = Map(
       1L -> part(1, 2, 3L, 10),
       5L -> (part(1, 1, 3L, 40) + part(2, 3, 4L, 40)),

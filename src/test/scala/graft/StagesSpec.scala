@@ -54,6 +54,14 @@ class StagesSpec extends AnyFunSuite {
     val s = LmStage.score(df, "id", "text", "query", LmStage.mockScorer())
       .orderBy("id").as[(Long, Double)].collect()
     assert(s(0)._2 > 0.0 && s(1)._2 == 0.0)
+    val thrown = LmStage.score(df, "id", "text", "query",
+      (_, _) => throw new RuntimeException("model unavailable")).as[(Long, Double)].collect()
+    assert(thrown.map(_._2).toSeq == Seq(0.0, 0.0))
+    // a JVM linkage failure is not a model error: the query fails
+    intercept[LinkageError] {
+      LmStage.score(df, "id", "text", "query",
+        (_, _) => throw new LinkageError("scorer class unusable")).collect()
+    }
   }
 
   test("O13: cascade metrics report per-stage lineage; cuts respect TopK/TopM/threshold") {

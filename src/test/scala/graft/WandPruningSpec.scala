@@ -58,15 +58,15 @@ class WandPruningSpec extends AnyFunSuite {
     val avgdl = lens.map(_.toLong).sum.toDouble / nDocs
 
     for (k <- Seq(1, 10, 50)) {
-      val got = Wand.topKNot(terms, Seq(ex), n, avgdl, k, Bm25.RefDefaults)
+      val got = Wand.topK(terms, n, avgdl, k, Bm25.RefDefaults, excludes = Seq(ex))
       val want = Wand.topKExhaustive(terms, n, avgdl, nDocs, Bm25.RefDefaults)
         .filterNot(s => s.docId % 5 == 0).take(k)
       assert(got.map(_.docId).sameElements(want.map(_.docId)),
         s"k=$k: ${got.map(_.docId).toSeq} vs ${want.map(_.docId).toSeq}")
       got.zip(want).foreach { case (a, b) => assert(math.abs(a.score - b.score) < 1e-9) }
     }
-    // empty exclusion delegates to plain OR-mode WAND
-    val plain = Wand.topKNot(terms, Seq.empty, n, avgdl, 10, Bm25.RefDefaults)
+    // empty exclusion ≡ plain OR-mode WAND
+    val plain = Wand.topK(terms, n, avgdl, 10, Bm25.RefDefaults, excludes = Seq.empty)
     val or = Wand.topK(terms, n, avgdl, 10, Bm25.RefDefaults)
     assert(plain.map(_.docId).sameElements(or.map(_.docId)))
   }
