@@ -121,10 +121,7 @@ object DocQueries {
     * containing other inflections of the same stem. */
   def stemTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame = {
     stemCorpusDir = Some(sfDir)
-    stemSearcher(spark, sfDir).topK(query, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(stemSearcher(spark, sfDir).topK(query, k + 50), k)
   }
 
   // BM25F-simple combined-fields index: the `source` metadata field folded
@@ -154,10 +151,7 @@ object DocQueries {
     * build. */
   def combinedFieldsTopKIndexed(spark: SparkSession, sfDir: String, query: String,
                                 w: Int, k: Int): DataFrame =
-    combinedSearcher(spark, sfDir, w).topK(query, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(combinedSearcher(spark, sfDir, w).topK(query, k + 50), k)
 
   // Auxiliary SOURCE-FIELD index (one per corpus, weight-INDEPENDENT):
   // the source metadata values indexed as their own pseudo-text. Together
@@ -395,15 +389,19 @@ object DocQueries {
       .select(col("conv_id").cast("long").as("doc_id"), round(col("score"), 4).as("score"))
       .orderBy("doc_id")
 
+  /** The (round4 score desc, doc_id asc) top-k cut of a Searcher hit frame
+    * fetched with slack, conv_id restored to the numeric doc_id. */
+  private def topKCut(hits: DataFrame, k: Int): DataFrame =
+    hits.select(col("conv_id").cast("long").as("doc_id"), col("score"))
+      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
+      .select(col("doc_id"), round(col("score"), 4).as("score"))
+
   /** Deterministic top-k through either kernel; slack absorbs rounding-ties
     * at the k boundary before the (round4, doc_id) cut. */
   def topK(spark: SparkSession, sfDir: String, query: String, k: Int,
            relational: Boolean): DataFrame = {
     val s = searcher(spark, sfDir)
-    val hits = if (relational) s.topKExhaustive(query, k + 50) else s.topK(query, k + 50)
-    hits.select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(if (relational) s.topKExhaustive(query, k + 50) else s.topK(query, k + 50), k)
   }
 
   /** Group-level retrieval (the conversation/source rollup of a transcript
@@ -781,29 +779,20 @@ object DocQueries {
     * query term; scores equal the OR-mode BM25 score. Slack + (round4,
     * doc_id) re-cut like [[topK]]. */
   def topKAnd(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame =
-    searcher(spark, sfDir).topKAnd(query, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(searcher(spark, sfDir).topKAnd(query, k + 50), k)
 
   /** Negated (NOT-mode) top-k: OR-mode BM25 over the query terms among
     * docs containing NO analyzed exclude term (Lucene MUST_NOT). Slack +
     * (round4, doc_id) re-cut like [[topKAnd]]. */
   def topKNot(spark: SparkSession, sfDir: String, query: String,
               exclude: String, k: Int): DataFrame =
-    searcher(spark, sfDir).topKNot(query, exclude, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(searcher(spark, sfDir).topKNot(query, exclude, k + 50), k)
 
   /** minimum_should_match top-k: docs containing ≥ `minMatch` distinct
     * analyzed query terms, OR-mode BM25 scores, (round4, doc_id) cut. */
   def msmTopK(spark: SparkSession, sfDir: String, query: String,
               minMatch: Int, k: Int): DataFrame =
-    searcher(spark, sfDir).topKMsm(query, minMatch, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(searcher(spark, sfDir).topKMsm(query, minMatch, k + 50), k)
 
   /** Deep pagination (search_after): page 2 of size k — ranks k+1..2k of
     * the (round4 desc, doc_id asc) ranking — WITHOUT a 2k-heap: page 1's
@@ -933,27 +922,18 @@ object DocQueries {
     * group df = max member df), (round4, doc_id) cut. */
   def synonymTopK(spark: SparkSession, sfDir: String, query: String,
                   synonyms: Map[String, Seq[String]], k: Int): DataFrame =
-    searcher(spark, sfDir).topKSynonyms(query, synonyms, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(searcher(spark, sfDir).topKSynonyms(query, synonyms, k + 50), k)
 
   /** Dirichlet-smoothed LM top-k (Searcher.topKDirichlet), (round4,
     * doc_id) cut. */
   def dirichletTopK(spark: SparkSession, sfDir: String, query: String,
                     mu: Double, k: Int): DataFrame =
-    searcher(spark, sfDir).topKDirichlet(query, mu, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(searcher(spark, sfDir).topKDirichlet(query, mu, k + 50), k)
 
   /** Disjunction-max top-k (Searcher.topKDisMax), (round4, doc_id) cut. */
   def disMaxTopK(spark: SparkSession, sfDir: String, queries: Seq[String],
                  tie: Double, k: Int): DataFrame =
-    searcher(spark, sfDir).topKDisMax(queries, tie, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(searcher(spark, sfDir).topKDisMax(queries, tie, k + 50), k)
 
   /** Significant-terms aggregation over the conjunctive foreground of
     * `query` (Searcher.significantTerms; already round-4 cut). */
@@ -1005,10 +985,7 @@ object DocQueries {
   /** Classic TF-IDF top-k (Searcher.topKTfIdf), (round4, doc_id) cut. */
   def tfidfTopK(spark: SparkSession, sfDir: String, query: String,
                 k: Int): DataFrame =
-    searcher(spark, sfDir).topKTfIdf(query, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(searcher(spark, sfDir).topKTfIdf(query, k + 50), k)
 
   /** ES-style rescore window: the top `poolN` BM25 hits of `query`
     * re-ranked by score + w·[doc contains the exact phrase], the phrase
@@ -1068,19 +1045,13 @@ object DocQueries {
     * scaled inside the kernel, (round4, doc_id) cut. */
   def boostTopK(spark: SparkSession, sfDir: String, query: String,
                 boosts: Map[String, Double], k: Int): DataFrame =
-    searcher(spark, sfDir).topKBoosted(query, boosts, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(searcher(spark, sfDir).topKBoosted(query, boosts, k + 50), k)
 
   /** Boolean (must/should/not) retrieval over the standing index — one
     * kernel pass (Searcher.search). */
   def boolTopK(spark: SparkSession, sfDir: String, must: String,
                should: String, not: String, k: Int): DataFrame =
-    searcher(spark, sfDir).search(must, should, not, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(searcher(spark, sfDir).search(must, should, not, k + 50), k)
 
   /** Per-term score breakdown (Lucene's explain()) of the top-1 hit of
     * `query` — target selected by the same (round-4 score, doc_id) cut
@@ -1102,10 +1073,7 @@ object DocQueries {
   def boolFilteredTopK(spark: SparkSession, sfDir: String, must: String,
                        should: String, not: String,
                        facets: Map[String, String], k: Int): DataFrame =
-    facetSearcher(spark, sfDir).search(must, should, not, k + 50, facets)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(facetSearcher(spark, sfDir).search(must, should, not, k + 50, facets), k)
 
   /** Phrase top-k WITHOUT a positional index — the verify-on-candidates
     * scale pattern: (1) the conjunctive kernel enumerates + scores the docs
@@ -1143,55 +1111,47 @@ object DocQueries {
       new PosSearcher(spark, dir)
     })
 
-  /** Phrase top-k WITH the positional sidecar: adjacency comes from the
-    * index alone (PosSearcher.matchDocs — no candidate point-read of source
-    * text, no verify UDF); scores are the same conjunctive BM25 as
+  /** Phrase top-k WITH the positional sidecar: the ordered sloppy phrase
+    * at slop 0 ([[phraseSlopTopK]]) without its span column — adjacency
+    * comes from the index alone (no candidate point-read of source text,
+    * no verify UDF); scores are the same conjunctive BM25 as
     * [[phraseTopK]], so the two paths are result-identical on any phrase
     * with ≥ 1 analyzed term. A stopword-only phrase — empty under the
     * non-positional path, which has no indexed prefilter for it — here
     * returns its true matches with score 0 (no scoring term survives
     * analysis), first k by doc_id. */
-  def phraseTopKPos(spark: SparkSession, sfDir: String, phrase: String, k: Int): DataFrame = {
-    val ps = posSearcher(spark, sfDir)
-    val rawToks = graft.analysis.Analyzer.tokenizeRaw(phrase).toSeq
-    val matches = ps.matchDocs(rawToks)
-    val s = searcher(spark, sfDir)
-    if (s.analyzeQuery(phrase).isEmpty)
-      matches.join(docMap(spark, sfDir).select("doc_id", "docId"), "docId")
-        .select(col("doc_id"), lit(0.0).as("score"))
-        .orderBy(asc("doc_id")).limit(k)
-    else
-      s.matchAllDocs(phrase)
-        .join(broadcast(matches), "docId") // phrase matches ⊆ conjunctive candidates
-        .join(docMap(spark, sfDir).select("doc_id", "docId"), "docId")
-        .select(col("doc_id"), round(col("score"), 4).as("score"))
-        .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-  }
+  def phraseTopKPos(spark: SparkSession, sfDir: String, phrase: String, k: Int): DataFrame =
+    phraseSlopTopK(spark, sfDir, phrase, 0, k).select(col("doc_id"), col("score"))
 
   /** Ordered sloppy-phrase top-k (Lucene's span_near in_order=true /
     * sloppy PhraseQuery): docs whose phrase tokens appear IN ORDER with
     * minimal ordered span s, matched when s − m ≤ slop (slop 0 ≡ exact
-    * adjacency). Candidates come from the positional sidecar's ordered
-    * k-pointer sweep ([[graft.query.PosSearcher.phraseSlopDocs]]) and join
-    * the conjunctive scoring kernel exactly like [[phraseTopKPos]]; the
-    * minimal ordered span rides along. */
+    * adjacency). Candidates come from the positional sidecar
+    * ([[graft.query.PosSearcher.phraseSlopDocs]]) and are scored by
+    * [[positionalTopK]]; the minimal ordered span rides along. A
+    * stopword-only phrase returns its matches at score 0, first k by
+    * doc_id. */
   def phraseSlopTopK(spark: SparkSession, sfDir: String, phrase: String,
                      slop: Int, k: Int): DataFrame = {
-    val ps = posSearcher(spark, sfDir)
     val rawToks = graft.analysis.Analyzer.tokenizeRaw(phrase).toSeq
-    val matches = ps.phraseSlopDocs(rawToks, slop)
-    val s = searcher(spark, sfDir)
-    if (s.analyzeQuery(phrase).isEmpty)
+    val matches = posSearcher(spark, sfDir).phraseSlopDocs(rawToks, slop)
+    if (searcher(spark, sfDir).analyzeQuery(phrase).isEmpty)
       matches.join(docMap(spark, sfDir).select("doc_id", "docId"), "docId")
         .select(col("doc_id"), lit(0.0).as("score"), col("span"))
         .orderBy(asc("doc_id")).limit(k)
-    else
-      s.matchAllDocs(phrase)
-        .join(broadcast(matches), "docId") // slop matches ⊆ conjunctive
-        .join(docMap(spark, sfDir).select("doc_id", "docId"), "docId")
-        .select(col("doc_id"), round(col("score"), 4).as("score"), col("span"))
-        .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
+    else positionalTopK(spark, sfDir, phrase, matches, k)
   }
+
+  /** Positional (docId, span) `matches` joined to the conjunctive BM25
+    * scores of `query` (matches ⊆ conjunctive candidates for stopword-free
+    * queries) and cut on (round4, doc_id): (doc_id, score, span). */
+  private def positionalTopK(spark: SparkSession, sfDir: String, query: String,
+                             matches: DataFrame, k: Int): DataFrame =
+    searcher(spark, sfDir).matchAllDocs(query)
+      .join(broadcast(matches), "docId")
+      .join(docMap(spark, sfDir).select("doc_id", "docId"), "docId")
+      .select(col("doc_id"), round(col("score"), 4).as("score"), col("span"))
+      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
 
   /** MMR-diversified rerank: greedy maximal-marginal-relevance over the
     * BM25 top-`m` pool — pick argmax of λ·score − (1−λ)·max-cosine-to-
@@ -1259,10 +1219,7 @@ object DocQueries {
     if (variants.isEmpty) // nothing in the dictionary within maxDist
       return spark.emptyDataFrame
         .select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
-    val hits = searcher(spark, sfDir).topK(variants.mkString(" "), k + 50)
-    hits.select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(searcher(spark, sfDir).topK(variants.mkString(" "), k + 50), k)
   }
 
   /** Wildcard retrieval (Lucene's WildcardQuery): dictionary terms
@@ -1290,10 +1247,7 @@ object DocQueries {
     if (variants.isEmpty)
       return spark.emptyDataFrame
         .select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
-    val hits = searcher(spark, sfDir).topK(variants.mkString(" "), k + 50)
-    hits.select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(searcher(spark, sfDir).topK(variants.mkString(" "), k + 50), k)
   }
 
   /** Proximity (unordered span-near) top-k: documents containing every
@@ -1301,19 +1255,12 @@ object DocQueries {
     * consecutive positions, BM25-scored and cut on (round4, doc_id).
     * Emits the per-doc minimal span alongside the score — proximity comes
     * from the positional sidecar alone (PosSearcher.spanDocs' linear
-    * k-pointer sweep), no text point-read; candidates join the conjunctive
-    * scoring kernel exactly like [[phraseTopKPos]] (span matches are a
-    * subset of conjunctive matches for stopword-free queries). */
+    * k-pointer sweep), no text point-read; scored by [[positionalTopK]]
+    * like [[phraseSlopTopK]]. */
   def spanNearTopK(spark: SparkSession, sfDir: String, query: String,
                    window: Int, k: Int): DataFrame = {
-    val ps = posSearcher(spark, sfDir)
     val rawToks = graft.analysis.Analyzer.tokenizeRaw(query).toSeq
-    val matches = ps.spanDocs(rawToks, window)
-    searcher(spark, sfDir).matchAllDocs(query)
-      .join(broadcast(matches), "docId")
-      .join(docMap(spark, sfDir).select("doc_id", "docId"), "docId")
-      .select(col("doc_id"), round(col("score"), 4).as("score"), col("span"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
+    positionalTopK(spark, sfDir, query, posSearcher(spark, sfDir).spanDocs(rawToks, window), k)
   }
 
   /** Batched multi-query top-k through one index pass (Searcher.topKBatch);
@@ -1409,10 +1356,7 @@ object DocQueries {
     * join of the metadata column). Slack + (round4, doc_id) re-cut. */
   def filteredTopK(spark: SparkSession, sfDir: String, query: String,
                    facets: Map[String, String], k: Int): DataFrame =
-    facetSearcher(spark, sfDir).topKFiltered(query, facets, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(facetSearcher(spark, sfDir).topKFiltered(query, facets, k + 50), k)
 
   /** Facet value counts among the docs matching the query (cnt desc, value
     * asc, top N) — the faceted-search aggregation panel. */
@@ -1477,10 +1421,7 @@ object DocQueries {
     * from the delete's exact decrement). */
   def deleteTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame = {
     val s = auxSearcher(spark, deletedIndexDir(spark, sfDir))
-    s.topK(query, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(s.topK(query, k + 50), k)
   }
 
   /** Corpus stats of the tombstone-deleted index — pins the delete's exact
@@ -1564,20 +1505,14 @@ object DocQueries {
       val (a, b) = fedIndexDirs(spark, sfDir)
       new graft.query.Federated(spark, Seq(a, b), P)
     })
-    fed.topK(query, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(fed.topK(query, k + 50), k)
   }
 
   /** Top-k over the merged index — must match the full-corpus oracle
     * exactly (merge ≡ from-scratch build over the union). */
   def mergeTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame = {
     val s = auxSearcher(spark, mergedIndexDir(spark, sfDir))
-    s.topK(query, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(s.topK(query, k + 50), k)
   }
 
   /** Corpus stats of the merged index — pins merge's stats rebuild against
@@ -1617,10 +1552,7 @@ object DocQueries {
     * use the post-update global stats exactly. */
   def updateTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame = {
     val s = auxSearcher(spark, updatedIndexDir(spark, sfDir))
-    s.topK(query, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(s.topK(query, k + 50), k)
   }
 
   /** Corpus stats of the upserted index — n is unchanged (replace, not
@@ -1632,10 +1564,7 @@ object DocQueries {
 
   def refreshTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame = {
     val s = auxSearcher(spark, refreshedIndexDir(spark, sfDir))
-    s.topK(query, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(s.topK(query, k + 50), k)
   }
 
   /** Snapshot (time-travel) proof over the SAME refresh-demo index: open it
@@ -1645,10 +1574,7 @@ object DocQueries {
     * the cover filter that hides later generations' analyzed rows. */
   def snapshotTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame = {
     val s = auxSearcher(spark, refreshedIndexDir(spark, sfDir), asOfGen = 0L)
-    s.topK(query, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    topKCut(s.topK(query, k + 50), k)
   }
 
   def emptyQuery(spark: SparkSession, sfDir: String): DataFrame =

@@ -96,6 +96,12 @@ object Searcher {
       -1L
     }
 
+  /** Scores every matching term 1: a clause set under it matches exactly
+    * the docs on ≥ 1 of its lists, whatever their statistics. */
+  private[query] object Matched extends Wand.SimScorer {
+    def score(tf: Int, dl: Int): Double = 1.0
+  }
+
   /** True when no file of at most `maxLen` bytes (-1 = unknown) can be
     * split across read partitions under the CURRENT session conf — split
     * sizes are mutable session state (IndexBuilder.build temporarily
@@ -696,77 +702,54 @@ final class Searcher(spark: SparkSession, indexDir: String,
   /** Facet value counts over the documents matching ≥ 1 analyzed query term
     * (the OR-match set — identical to the score>0 set, since this engine's
     * idf variant is strictly positive): the aggregation panel of a faceted
-    * search. Returns (value, cnt), cnt desc / value asc, top `topN`.
-    *
-    * Scale shape: the per-shard kernel marks the query postings in a rank
-    * bitmap and counts each facet posting list against it
-    * ([[Wand.facetCounts]]) — zero-exchange under the colocated layout; the
-    * only shuffle is the final ≤ shards·|values| aggregate. The facet lists
-    * are read via a PREFIX-pushed scan (StringStartsWith reaches Parquet),
-    * never an explode/join of the corpus. */
-  def facetCounts(query: String, facetCol: String, topN: Int): DataFrame = {
-    val empty = Seq.empty[(String, Long)].toDF("value", "cnt")
-    val qtf = analyzeQuery(query)
-    if (qtf.isEmpty) return empty
-    val dfm = dfSlice(qtf.keys.toSeq)
-    if (dfm.isEmpty) return empty
-    val qterms = dfm.keys.toSeq.sorted
-    val prefix = graft.model.Facets.Prefix + facetCol + graft.model.Facets.Prefix
-    val prefixLen = prefix.length
-    val postings = postingsDF
-      .where(col("term").isin(qterms: _*) || col("term").startsWith(prefix))
-      .as[Posting]
-    val tb = tombBc
-    perShard(postings) { group =>
-      val (fac, rest) = Searcher.termLists(group).partition(_._1.startsWith(prefix))
-      Wand.facetCounts(qterms.flatMap(rest.get), fac.values.toSeq,
-          excludes = tb.value.get(group.head.shard).toSeq)
-        .map { case (t, c) => (t.substring(prefixLen), c) }
-    }.toDF("value", "cnt")
-      .groupBy($"value").agg(sum($"cnt").as("cnt"))
+    * search. Returns (value, cnt), cnt desc / value asc, top `topN`. Scale
+    * shape as [[facetPanel]]. */
+  def facetCounts(query: String, facetCol: String, topN: Int): DataFrame =
+    facetPanel(query, Seq(facetCol)).select($"value", $"cnt")
       .orderBy(desc("cnt"), asc("value")).limit(topN)
-  }
 
   /** Multi-column facet panel: value counts for SEVERAL facet columns in
-    * ONE kernel pass. The rank bitmap over the query's OR-match set is
-    * built once per shard and every column's facet lists are counted
-    * against it ([[Wand.facetCounts]] already takes the whole facet list
-    * set) — calling facetCounts per column would rescan the query postings
-    * and rebuild the bitmap |columns| times. Same zero-exchange plan shape:
-    * one term+prefix-pruned postings scan, then a ≤ shards·|values|
-    * aggregate. Returns (facet, value, cnt), the top `topN` values per
-    * facet, ordered (facet asc, cnt desc, value asc). */
+    * ONE kernel pass ([[facetPanel]]) — calling facetCounts per column would
+    * rescan the query postings and rebuild the match bitmap |columns|
+    * times. Returns (facet, value, cnt), the top `topN` values per facet,
+    * ordered (facet asc, cnt desc, value asc). */
   def facetCountsMulti(query: String, facetCols: Seq[String], topN: Int): DataFrame = {
-    val empty = Seq.empty[(String, String, Long)].toDF("facet", "value", "cnt")
-    if (facetCols.isEmpty) return empty
-    val qtf = analyzeQuery(query)
-    if (qtf.isEmpty) return empty
-    val dfm = dfSlice(qtf.keys.toSeq)
-    if (dfm.isEmpty) return empty
-    val qterms = dfm.keys.toSeq.sorted
-    val P = graft.model.Facets.Prefix
-    val prefixes = facetCols.distinct.sorted.map(c => P + c + P)
-    val postings = postingsDF
-      .where(col("term").isin(qterms: _*) ||
-        prefixes.map(p => col("term").startsWith(p)).reduce(_ || _))
-      .as[Posting]
-    val tb = tombBc
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("facet").orderBy(desc("cnt"), asc("value"))
-    perShard(postings) { group =>
-      val (fac, rest) = Searcher.termLists(group).partition(_._1.startsWith(P))
-      Wand.facetCounts(qterms.flatMap(rest.get), fac.values.toSeq,
-          excludes = tb.value.get(group.head.shard).toSeq)
-        .map { case (t, c) =>
-          val sep = t.indexOf(P, 1)
-          (t.substring(1, sep), t.substring(sep + 1), c)
-        }
-    }.toDF("facet", "value", "cnt")
-      .groupBy($"facet", $"value").agg(sum($"cnt").as("cnt"))
+    facetPanel(query, facetCols)
       .withColumn("rn", row_number().over(w))
       .filter($"rn" <= topN).drop("rn")
       .orderBy(asc("facet"), desc("cnt"), asc("value"))
   }
+
+  /** (facet, value, cnt) for every value of the columns `facetCols` over
+    * the query's OR-match set. One term+prefix-pruned postings scan (the
+    * facet lists found by a PREFIX-pushed filter — StringStartsWith reaches
+    * Parquet — never an explode/join of the corpus); per shard, the query
+    * clauses under a constant scorer stream their ascending-docId union
+    * ([[ShardQuery]] with the [[ShardQuery.All]] sink, tombstones excluded
+    * like every kernel) into [[Wand.facetCounts]]. Zero-exchange under the
+    * colocated layout; the only shuffle is the ≤ shards·|values| aggregate. */
+  private def facetPanel(query: String, facetCols: Seq[String]): DataFrame =
+    (if (facetCols.isEmpty) None else analyzed(query))
+      .fold(Seq.empty[(String, String, Long)].toDF("facet", "value", "cnt")) { case (_, dfm) =>
+        val qterms = dfm.keys.toSeq.sorted
+        val P = graft.model.Facets.Prefix
+        val q = ShardQuery(qterms.map(ShardQuery.clause(_, Searcher.Matched)), sink = ShardQuery.All)
+        val scanned = facetCols.distinct.sorted
+          .foldLeft(col("term").isin(qterms: _*))((c, f) => c || col("term").startsWith(P + f + P))
+        val tb = tombBc
+        perShard(postingsDF.where(scanned).as[Posting]) { g =>
+          val lists = Searcher.termLists(g)
+          Wand.facetCounts(q.run(lists, tb.value.get(g.head.shard)),
+              lists.collect { case (t, p) if t.startsWith(P) => p }.toSeq)
+            .map { case (t, c) =>
+              val sep = t.indexOf(P, 1)
+              (t.substring(1, sep), t.substring(sep + 1), c)
+            }
+        }.toDF("facet", "value", "cnt")
+          .groupBy($"facet", $"value").agg(sum($"cnt").as("cnt"))
+      }
 
   /** Numeric-range facet panel: matching-doc counts per [lo, hi) bucket of
     * a NUMERIC facet column. `bounds` are the B+1 ascending bucket edges;

@@ -26,9 +26,11 @@ import graft.model.Posting
   * All three score a document as Σ score(tf, dl) over its terms in clause
   * order, with the per-term [[SimScorer]] of a similarity, and skip
   * excluded documents (MUST_NOT terms, delete tombstones) through one
-  * forward-only [[Excl]] cursor set. These loops are the only imperative
-  * piece of the query path by design: posting-list traversal with
-  * threshold-based skipping is not expressible relationally.
+  * forward-only [[Excl]] cursor set. The facet panel is a collector over
+  * a [[union]] match stream ([[facetCounts]]), not a traversal of its own.
+  * These loops are the only imperative piece of the query path by design:
+  * posting-list traversal with threshold-based skipping is not
+  * expressible relationally.
   */
 object Wand {
 
@@ -413,7 +415,7 @@ object Wand {
     * construction — Ids.rankOf). Pages of 2^26 bits (8 MB) allocate lazily,
     * so memory tracks the highest rank actually touched, and the long page
     * index supports the full 2^40 ranks-per-shard docId space (no toInt
-    * anywhere). Used by the facet-count kernel. */
+    * anywhere). Used by the facet-count collector. */
   final class RankBitmap {
     private val PageBits = 26
     private val PageWords = 1 << (PageBits - 6)
@@ -433,36 +435,17 @@ object Wand {
     }
   }
 
-  /** Facet-count kernel for one shard: mark every doc on any query posting
-    * (OR-match set, == the score>0 set since this engine's idf is strictly
-    * positive) in a rank bitmap, then for each facet posting list count its
-    * docs that hit the bitmap. Returns (facetTerm, count) with count > 0.
-    * Cost: one pass over the query postings + one over the facet lists; no
-    * per-doc state beyond the bitmap (8 MB per 64M docs touched). */
-  def facetCounts(queryPostings: Seq[Posting],
-                  facetPostings: Seq[Posting],
-                  excludes: Seq[Posting] = Nil): Iterator[(String, Long)] = {
-    if (queryPostings.isEmpty || facetPostings.isEmpty) return Iterator.empty
-    // the matched bitmap is probed in FACET-list order (not ascending
-    // docIds), so exclusion must land while MARKING: pre-decode the
-    // exclusion lists into their own bitmap (one pass, O(1) probes in any
-    // order) and never mark an excluded doc
-    val exMap = if (excludes.isEmpty) null else {
-      val b = new RankBitmap
-      excludes.foreach { e =>
-        val c = new Postings.Cursor(e)
-        while (c.next()) b.set(graft.model.Ids.rankOf(c.docId))
-      }
-      b
-    }
+  /** Facet-count collector for one shard: mark every doc of `matches` (a
+    * traversal's match stream — tombstones already excluded by its [[Excl]])
+    * in a rank bitmap, then for each facet posting list count its docs that
+    * hit the bitmap. Returns (facetTerm, count) with count > 0. Cost: one
+    * pass over the matches + one over the facet lists; no per-doc state
+    * beyond the bitmap (8 MB per 64M docs touched). */
+  def facetCounts(matches: Iterator[Scored],
+                  facetPostings: Seq[Posting]): Iterator[(String, Long)] = {
+    if (facetPostings.isEmpty || !matches.hasNext) return Iterator.empty
     val matched = new RankBitmap
-    queryPostings.foreach { qp =>
-      val c = new Postings.Cursor(qp)
-      while (c.next()) {
-        val r = graft.model.Ids.rankOf(c.docId)
-        if (exMap == null || !exMap.get(r)) matched.set(r)
-      }
-    }
+    matches.foreach(s => matched.set(graft.model.Ids.rankOf(s.docId)))
     facetPostings.iterator.flatMap { fp =>
       val c = new Postings.Cursor(fp)
       var cnt = 0L

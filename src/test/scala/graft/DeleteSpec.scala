@@ -140,6 +140,34 @@ class DeleteSpec extends AnyFunSuite {
     val ps = new graft.query.PosSearcher(spark, dir)
     assert(ps.matchDocs(Seq("alpha", "beta", "gamma")).count() == 1)
     assert(ps.spanDocs(Seq("zzph", "gamma"), 5).count() == 1)
+    assert(ps0.phraseSlopDocs(Seq("zzph", "gamma"), 2).count() == 2)
+    assert(ps.phraseSlopDocs(Seq("zzph", "gamma"), 2).count() == 1)
+  }
+
+  test("facet panels hide tombstoned docs (facetCounts + facetCountsMulti)") {
+    val dir = TestSpark.tmpDir("delfacet")
+    val turns = Seq(
+      ("c0", 0, "zzfac alpha", "web"),   // doomed
+      ("c1", 0, "zzfac beta", "web"),
+      ("c2", 0, "zzfac gamma", "mail"),
+      ("c3", 0, "unrelated filler", "web")
+    ).toDF("conv_id", "turn_idx", "text", "origin")
+      .withColumn("role", lit("user")).withColumn("tool", lit(""))
+      .withColumn("ts", to_timestamp(lit("2024-01-01 00:00:00")))
+    IndexBuilder.build(spark, turns, dir,
+      IndexBuilder.Config(shards = 2, facetCols = Seq("origin")))
+    def panels(s: Searcher, q: String): (Seq[(String, Long)], Seq[(String, String, Long)]) = (
+      s.facetCounts(q, "origin", 10).as[(String, Long)].collect().toSeq,
+      s.facetCountsMulti(q, Seq("origin"), 10).as[(String, String, Long)].collect().toSeq)
+    assert(panels(new Searcher(spark, dir), "zzfac") ==
+      (Seq("web" -> 2L, "mail" -> 1L), Seq(("origin", "web", 2L), ("origin", "mail", 1L))))
+
+    assert(IndexBuilder.delete(spark, dir, $"conv_id" === "c0") == 1L)
+    val s = new Searcher(spark, dir)
+    assert(panels(s, "zzfac") ==
+      (Seq("mail" -> 1L, "web" -> 1L), Seq(("origin", "mail", 1L), ("origin", "web", 1L))))
+    // the deleted doc was alpha's only match: both panels come back empty
+    assert(panels(s, "alpha") == ((Nil, Nil)))
   }
 
   test("second delete accumulates; empty delete commits nothing") {

@@ -117,6 +117,9 @@ class FilteredSearchSpec extends AnyFunSuite {
         .as[(String, Long)].collect().filter(_._1.nonEmpty).take(5)
       assert(g.toSeq == e.toSeq, s"$fcol: ${g.toSeq} vs ${e.toSeq}")
       assert(g.nonEmpty)
+      val gm = searcher.facetCountsMulti(Query, Seq(fcol), 10).select("value", "cnt")
+        .as[(String, Long)].collect().filter(_._1.nonEmpty).take(5)
+      assert(gm.toSeq == e.toSeq, s"$fcol (multi): ${gm.toSeq} vs ${e.toSeq}")
     }
   }
 
