@@ -84,9 +84,10 @@ object IndexBuilder {
         * assembled range by range, each range broadcasting only its own
         * dictionary slice. Cost: R column-pruned passes over the analyzed
         * terms; trade: posting files per shard multiply by R, so the
-        * Searcher serves through its grouped (per-shard merge) path
-        * instead of the zero-exchange colocated kernel — unavoidable, a
-        * 10^8+-term shard's postings never fit one file anyway. The
+        * Searcher's top-k job reads a shard's R files in one task and its
+        * relational consumers serve through the grouped (per-shard merge)
+        * path instead of the zero-exchange colocated kernel — unavoidable,
+        * a 10^8+-term shard's postings never fit one file anyway. The
         * config is explicit rather than auto-detected because detection
         * would charge every build a vocabulary count. */
       dictRanges: Int = 1,
@@ -849,8 +850,9 @@ object IndexBuilder {
         // Layout contract for the serving path: rows = dictRanges. 1 ⇒
         // every postings file is DOC-complete (a doc's whole term set in
         // one file), the precondition of the Searcher's zero-exchange
-        // colocated kernel; > 1 ⇒ a doc's terms span range files and the
-        // Searcher MUST serve through its grouped per-shard merge.
+        // colocated relational kernel; > 1 ⇒ a doc's terms span range
+        // files and those paths MUST serve through the grouped per-shard
+        // merge (the top-k shard job groups a shard's files by footer).
         Manifests.write(indexDir,
           StageManifest("postings_layout", cfg.dictRanges, 0, "layout", 0))
         graft.sources.TableIO.read(spark, s"$indexDir/postings").count()

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *
   * Cost shape: one tiny stats read per member at construction, one
   * vocabulary-SLICED df lookup per member per query (the members' own
-  * memoized dfSlice — never a df-table join), then each member's normal
-  * zero-exchange kernel; the merge is a TakeOrdered over ≤ members·k
+  * memoized dfSlice — never a df-table join), then each member's one
+  * shard job; the merge is a TakeOrdered over ≤ members·k
   * resolved hits. Nothing corpus-sized moves, ever. */
 final class Federated(spark: SparkSession, dirs: Seq[String],
                       params: Bm25.Params = Bm25.RefDefaults) {

@@ -18,9 +18,9 @@ import scala.collection.mutable.ArrayBuffer
   * per-doc measure — the minimal ordered span (phrase: exact is slop 0) or
   * the minimal unordered window (span-near).
   *
-  * Plan shape mirrors [[Searcher]]'s serving path: the positions scan is
-  * pruned to the query's distinct raw tokens (predicate pushed to
-  * Parquet), then the per-shard kernel runs either COLOCATED (zero
+  * Plan shape mirrors [[Searcher]]'s relational kernel paths: the
+  * positions scan is pruned to the query's distinct raw tokens (predicate
+  * pushed to Parquet), then the per-shard kernel runs either COLOCATED (zero
   * exchange — sound iff no positions file can split across read
   * partitions, same rule as Searcher.colocated) or behind a narrow
   * groupByKey(shard) of ≤ |distinct tokens|·shards rows. Kernel cost is
@@ -48,9 +48,22 @@ final class PosSearcher(spark: SparkSession, indexDir: String) {
       broadcast(graft.sources.TableIO.read(spark, p).select(col("docId"))),
       Seq("docId"), "left_anti"))
 
-  /** Largest positions file (listed once at construction); -1 forces the
-    * grouped fallback plan. */
-  private val maxFileLen: Long = Searcher.maxFileLen(spark, Seq(posPath))
+  /** Largest positions file, listed once at construction; -1 when listing
+    * failed, which forces the grouped fallback plan for every query
+    * (logged, never silent). */
+  private val maxFileLen: Long =
+    try {
+      val path = new org.apache.hadoop.fs.Path(posPath)
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(path).collect {
+        case f if f.isFile && !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith(".") => f.getLen
+      }.foldLeft(0L)(math.max)
+    } catch { case scala.util.control.NonFatal(e) =>
+      org.slf4j.LoggerFactory.getLogger(classOf[PosSearcher]).warn(
+        s"listing $posPath failed ($e): falling back to the grouped-shuffle plan " +
+          "(groupByKey(shard)) for every query")
+      -1L
+    }
 
   /** Zero-exchange kernel soundness — evaluated against the CURRENT
     * session conf per call, same rule as Searcher.colocated. */

@@ -2,9 +2,11 @@ package graft.query
 
 import graft.analysis.{Analyzer, StopWords}
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** Query executor over a built index (SURVEY.md §3 entry points 1-2).
   *
@@ -12,34 +14,36 @@ import scala.collection.mutable.ArrayBuffer
   *
   *  - the KERNEL path (`topK` and every other index-served mode): the mode
   *    analyzes its query on the driver, takes the query terms' global
-  *    statistics (df slice — a handful of values, never the df table
-  *    itself) and folds them into one [[ShardQuery]] value: scoring
-  *    clauses with their per-term similarity scorers, filter and exclude
-  *    terms, and a sink (top-k heap, all matches or dis-max). The postings
-  *    scan is pruned to the query's terms (predicate pushed to Parquet) and
-  *    each shard's task runs `ShardQuery.run` — one of [[Wand]]'s three
-  *    traversals (block-max WAND, leapfrog conjunction, ascending-docId
-  *    union), tombstones excluded by the same forward cursor everywhere.
-  *    Doc lengths ride INLINE in the posting blobs, so no side table is
-  *    touched. A top-k mode then resolves the task's ≤ k winners to
-  *    (conv_id, turn_idx) in the SAME task ([[HitLookup]]: a filtered
-  *    Parquet point read of analyzed/) and merges the ≤ tasks·k rows with
-  *    one TakeOrdered — ONE Spark job, run inside the call, returning the
-  *    ≤ k rows as a local frame, so collecting it launches nothing more.
+  *    statistics (df slice — a handful of values point-read from the df
+  *    files, never the df table itself, never a Spark job) and folds them
+  *    into one [[ShardQuery]] value: scoring clauses with their per-term
+  *    similarity scorers, filter and exclude terms, and a sink (top-k heap,
+  *    all matches or dis-max). Each shard runs `ShardQuery.run` — one of
+  *    [[Wand]]'s three traversals (block-max WAND, leapfrog conjunction,
+  *    ascending-docId union), tombstones excluded by the same forward
+  *    cursor everywhere. Doc lengths ride INLINE in the posting blobs, so
+  *    no side table is touched.
   *
-  *    Shard grouping strategy (scale design):
-  *     * COLOCATED (default when sound): the build writes one file per
-  *       build partition and a shard never spans files, so a mapPartitions
-  *       over the pruned scan sees whole shards — ZERO exchange anywhere in
-  *       the query plan. Sound iff Spark never splits a postings file
-  *       across read partitions, which is guaranteed when every file is ≤
-  *       min(spark.sql.files.maxPartitionBytes, openCostInBytes) — checked
-  *       against the session conf of each call. On a production deployment
-  *       the same guarantee comes from bucketed-table layout or per-shard
-  *       files sized under the split threshold.
+  *    Single-query top-k modes build no Dataset and no Catalyst plan: a
+  *    call is ONE `runJob` over the Searcher's prepared [[ShardJob]] — its
+  *    postings files, grouped at construction from their footers so that
+  *    a shard never spans partitions, whatever the layout (doc-complete,
+  *    term-ranged, base + delta) or the session's split conf. Each task
+  *    point-reads only the query terms' rows of its files, runs the kernel
+  *    per shard and resolves its best k to (conv_id, turn_idx) in place
+  *    ([[HitLookup]]); the driver merges the task heaps and wraps the ≤ k
+  *    hits in a local frame, so collecting it launches nothing more.
+  *
+  *    [[topKBatch]] (always through the FALLBACK exchange) and the
+  *    relational kernel consumers ([[matchAllDocs]], [[scoreMatches]], the
+  *    facet panels, [[cfSlice]]) run over a term-pruned postings scan:
+  *     * COLOCATED (when sound): a mapPartitions over the scan sees whole
+  *       shards — ZERO exchange — iff files are doc-complete and Spark
+  *       never splits a postings file across read partitions (every file ≤
+  *       min(spark.sql.files.maxPartitionBytes, openCostInBytes), checked
+  *       against the session conf of each call).
   *     * FALLBACK: groupByKey(shard) — one narrow exchange of ONLY the
-  *       pruned query-term posting rows (≤ |terms|·shards rows), never the
-  *       corpus and never any length table.
+  *       pruned query-term posting rows, never the corpus.
   *
   *  - `topKExhaustive` / `scoreAll` — the relational twin: explode analyzed
   *    docs, broadcast-hash-join query terms, aggregate the codegen'd BM25
@@ -71,30 +75,9 @@ object Searcher {
       rows.mapPartitions { rs =>
         val byShard = new java.util.HashMap[Integer, ArrayBuffer[R]]()
         rs.foreach(r => byShard.computeIfAbsent(shard(r), _ => new ArrayBuffer[R]) += r)
-        import scala.jdk.CollectionConverters._
         byShard.values.iterator.asScala.flatMap(g => kernel(g.toSeq))
       }
     else rows.groupByKey(shard)(Encoders.scalaInt).flatMapGroups((_, rs) => kernel(rs.toSeq))
-
-  /** Largest data file under the index tables at `paths`, listed once;
-    * -1 when listing failed, which forces the grouped fallback plan
-    * (logged, never silent). */
-  private[query] def maxFileLen(spark: SparkSession, paths: Seq[String]): Long =
-    try {
-      paths.flatMap { p =>
-        val path = new org.apache.hadoop.fs.Path(p)
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.listStatus(path).collect {
-          case f if f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith(".") => f.getLen
-        }
-      }.foldLeft(0L)(math.max)
-    } catch { case scala.util.control.NonFatal(e) =>
-      org.slf4j.LoggerFactory.getLogger(classOf[Searcher]).warn(
-        s"listing ${paths.mkString(", ")} failed ($e): falling back to the " +
-          "grouped-shuffle plan (groupByKey(shard)) for every query")
-      -1L
-    }
 
   /** Scores every matching term 1: a clause set under it matches exactly
     * the docs on ≥ 1 of its lists, whatever their statistics. */
@@ -111,6 +94,10 @@ object Searcher {
     val conf = spark.sessionState.conf
     maxLen <= math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
   }
+
+  /** Columns of every single-query hit frame. */
+  private val HitSchema = StructType.fromDDL(
+    "conv_id STRING, turn_idx INT NOT NULL, docId BIGINT NOT NULL, score DOUBLE NOT NULL")
 }
 
 final class Searcher(spark: SparkSession, indexDir: String,
@@ -161,6 +148,12 @@ final class Searcher(spark: SparkSession, indexDir: String,
   private val postingsDF = maybeCache(graft.sources.TableIO.read(spark, postingsPaths))
   private val dfDF = maybeCache(graft.sources.TableIO.read(spark,
     graft.build.IndexBuilder.dfPathAsOf(indexDir, generation)))
+  /** The df files, listed once for [[dfSlice]]'s point reads. */
+  private val dfFiles: Seq[String] = PointRead.files(dfDF)
+  /** The session's Hadoop conf, broadcast once for the point reads of
+    * [[dfSlice]] and the shard job. */
+  private val hadoopConf = spark.sparkContext.broadcast(
+    new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))
   /** Coverage-filtered doc-meta projection, the base of the relational
     * doc map below. Kernel hits never read it: they resolve inside the
     * shard task through [[hitLookup]]. */
@@ -182,10 +175,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
   private[graft] def hitMeta: DataFrame = hitMetaDF
 
   /** In-task (conv_id, turn_idx) resolution of kernel hits over this
-    * index's analyzed/ files, listed once per Searcher through the
-    * storage seam (so catalog tables resolve too). */
-  private lazy val hitLookup: HitLookup = HitLookup(spark,
-    graft.sources.TableIO.read(spark, s"$indexDir/analyzed").inputFiles.toSeq)
+    * index's analyzed/ files, listed and footer-read once at construction
+    * through the storage seam (so catalog tables resolve too). */
+  private val hitLookup: HitLookup = HitLookup(spark,
+    PointRead.files(graft.sources.TableIO.read(spark, s"$indexDir/analyzed")))
 
   /** The (cached when cacheTables) base+segment postings table — exposed
     * for relational consumers that decode pruned posting slices themselves
@@ -257,38 +250,43 @@ final class Searcher(spark: SparkSession, indexDir: String,
     if (statsRow.schema.fieldNames.contains("sumlen")) statsRow.getAs[Long]("sumlen")
     else math.round(statsRow.getAs[Long]("n") * statsRow.getAs[Double]("avgdl"))
 
-  /** Largest posting file across base + segments (listed once at
-    * construction); -1 forces the grouped fallback plan. */
-  private val maxPostingsFileLen: Long = Searcher.maxFileLen(spark, postingsPaths)
+  /** The prepared single-query top-k job over this generation's postings
+    * files, listed once through the storage seam; an unreadable footer
+    * fails construction, naming the file. */
+  private val shardJob: ShardJob =
+    ShardJob(spark.sparkContext, PointRead.files(postingsDF), hadoopConf, tombBc)
 
   /** Whether every postings file is DOC-complete (a doc's whole term set
     * in one file) — true for broadcast-dictionary builds and all refresh
     * segments; false for range-partitioned builds (Config.dictRanges > 1),
     * whose files each hold one TERM range of a shard. The colocated
-    * kernel scores each partition independently, which is only sound when
-    * a doc's full term set is visible in one partition. Legacy indexes
-    * (no layout manifest) predate the ranged path and are doc-complete. */
+    * relational kernel scores each read partition independently, which is
+    * only sound when a doc's full term set is visible in one partition.
+    * Legacy indexes (no layout manifest) predate the ranged path and are
+    * doc-complete. */
   private val docCompleteFiles: Boolean =
     graft.build.Manifests.read(indexDir, "postings_layout").forall(_.rows <= 1L)
 
-  /** True when the zero-exchange colocated kernel is sound: files are
-    * doc-complete and no postings file can be split across read
+  /** True when the relational kernel consumers may run zero-exchange:
+    * files are doc-complete and no postings file can be split across read
     * partitions (see class doc). Evaluated against the CURRENT session
-    * conf on every call ([[Searcher.unsplit]]). */
-  def colocated: Boolean = docCompleteFiles && Searcher.unsplit(spark, maxPostingsFileLen)
+    * conf on every call ([[Searcher.unsplit]]). Single-query top-k never
+    * depends on it. */
+  def colocated: Boolean = docCompleteFiles && Searcher.unsplit(spark, shardJob.maxFileLen)
 
   def analyzeQuery(query: String): Map[String, Int] =
     Analyzer.termFreqs(Analyzer.tokenize(query, StopWords.forLang(language), normalizer))
 
   /** Per-term global df, memoized across queries (misses cached as 0).
-    * First sight of a term costs one pushed-down ≤|terms|-row scan of the
-    * df table; repeat queries then build their plans without any job. */
+    * First sight of a term costs one driver-side point read of the df
+    * files ([[PointRead]]) — never a Spark job. */
   private val dfCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def dfSlice(terms: Seq[String]): Map[String, Long] = {
     val missing = terms.filterNot(dfCache.containsKey)
     if (missing.nonEmpty) {
-      val found = dfDF.where(col("term").isin(missing: _*))
-        .as[TermStat].collect().map(t => t.term -> t.df).toMap
+      val keys = PointRead.strings(missing)
+      val found = dfFiles.flatMap(f => PointRead.rows(f, hadoopConf.value.value, "term", keys,
+        Seq("term", "df")).map(r => r.string(0) -> r.long(1))).toMap
       missing.foreach(t => dfCache.put(t, java.lang.Long.valueOf(found.getOrElse(t, 0L))))
     }
     terms.iterator.map(t => t -> dfCache.get(t).longValue).filter(_._2 > 0L).toMap
@@ -312,34 +310,26 @@ final class Searcher(spark: SparkSession, indexDir: String,
     }
   }
 
-  /** The one top-k path: [[shardRun]], then each task's best k candidates
-    * per query resolved to (conv_id, turn_idx) in the same task. */
-  private def shardHits(terms: Seq[String], qs: Seq[(String, ShardQuery)], k: Int,
-                        forceGrouped: Boolean = false): Dataset[Hit] = {
+  /** The top k of one query over the postings of `terms` — score desc,
+    * docId asc: one [[ShardJob]] run whose tasks resolve their own best k,
+    * the ≤ tasks·k task heaps merged on the driver. */
+  private def hits(terms: Seq[String], q: ShardQuery, k: Int): Seq[Hit] = {
     val lookup = hitLookup
-    shardRun(terms, qs, forceGrouped)((qid, s) => (qid, s.docId, s.score))
-      .mapPartitions(it => lookup.resolveTopK(it, k))
+    shardJob.run(terms) { shards =>
+      lookup.resolveTopK(shards.flatMap { case (lists, tomb) =>
+        q.run(lists, tomb).map(s => ("q", s.docId, s.score))
+      }, k).toArray
+    }.flatten.sorted(HitLookup.HitRank).take(k).toSeq
   }
 
-  /** Single-query top-k plan: kernel and hit resolution per task, then ONE
-    * TakeOrdered over the ≤ tasks·k resolved rows — a single job.
-    * Columns (docId, score, conv_id, turn_idx). */
-  private def topFrame(terms: Seq[String], q: ShardQuery, k: Int): DataFrame =
-    shardHits(terms, Seq("q" -> q), k).select($"docId", $"score", $"conv_id", $"turn_idx")
-      .orderBy(desc("score"), asc("docId")).limit(k)
-
-  /** Runs a top-k plan's one job now, under the session conf of this call
-    * (the [[colocated]] check requires it), and returns its ≤ k hits as a
-    * local (conv_id, turn_idx, docId, score) frame: collecting it launches
-    * no further job. */
-  private def collectHits(frame: DataFrame): DataFrame =
-    frame.collect().toSeq
-      .map(r => (r.getString(2), r.getInt(3), r.getLong(0), r.getDouble(1)))
-      .toDF("conv_id", "turn_idx", "docId", "score")
+  /** `hits` as a local (conv_id, turn_idx, docId, score) frame: collecting
+    * it launches no job. */
+  private def collectHits(hits: Seq[Hit]): DataFrame = spark.createDataFrame(
+    hits.map(h => Row(h.conv_id, h.turn_idx, h.docId, h.score)).asJava, Searcher.HitSchema)
 
   /** The local hit frame of the top k of `clauses` over the postings of `terms`. */
   private def topHits(terms: Seq[String], clauses: Seq[ShardQuery.Clause], k: Int): DataFrame =
-    collectHits(topFrame(terms, ShardQuery(clauses, sink = ShardQuery.Top(k)), k))
+    collectHits(hits(terms, ShardQuery(clauses, sink = ShardQuery.Top(k)), k))
 
   /** The analyzed query and the df of its corpus terms; None when the
     * query analyzes to nothing or no term is in the corpus. */
@@ -357,35 +347,40 @@ final class Searcher(spark: SparkSession, indexDir: String,
       ShardQuery.clause(t, Bm25.sim(f, dfm(t), n, avgdl, params, boosts.getOrElse(t, 1.0)), slot)
     }
 
-  /** The one-job plan of an OR-mode BM25 top-k over `query`; None when
-    * fewer of its terms are in the corpus than the sink's minMatch. */
-  private def orFrame(query: String, sink: ShardQuery.Top,
-                      boosts: Map[String, Double] = Map.empty): Option[DataFrame] =
+  /** The hits of an OR-mode BM25 top-k over `query`; None when fewer of
+    * its terms are in the corpus than the sink's minMatch. */
+  private def orHits(query: String, sink: ShardQuery.Top,
+                     boosts: Map[String, Double] = Map.empty): Option[Seq[Hit]] =
     analyzed(query).filter(_._2.size >= sink.minMatch).map { case (qtf, dfm) =>
-      topFrame(dfm.keys.toSeq.sorted, ShardQuery(bm25(qtf.toSeq, dfm, boosts), sink = sink), sink.k)
+      hits(dfm.keys.toSeq.sorted, ShardQuery(bm25(qtf.toSeq, dfm, boosts), sink = sink), sink.k)
     }
 
-  /** The top-k plan of a single query as [[topK]] executes it — one job
-    * ending in a TakeOrdered over ≤ tasks·k resolved rows; columns
-    * (docId, score, conv_id, turn_idx). Exposed so plan tests can pin the
-    * scan pushdown / no-Exchange contracts. */
+  /** The local hit frame of [[orHits]]. */
+  private def orFrame(query: String, sink: ShardQuery.Top,
+                      boosts: Map[String, Double] = Map.empty): DataFrame =
+    collectHits(orHits(query, sink, boosts).getOrElse(Nil))
+
+  /** A single query's hits as [[topK]] computes them — its one job runs
+    * inside the call — as a local frame with columns (docId, score,
+    * conv_id, turn_idx); None when no query term is in the corpus. */
   private[graft] def kernelFrame(query: String, k: Int,
                                  exhaustiveKernel: Boolean = false): Option[DataFrame] =
-    orFrame(query, ShardQuery.Top(k, prune = !exhaustiveKernel))
+    orHits(query, ShardQuery.Top(k, prune = !exhaustiveKernel))
+      .map(collectHits(_).select("docId", "score", "conv_id", "turn_idx"))
 
   /** WAND top-k. Deterministic order: score desc, docId asc. */
   def topK(query: String, k: Int, exhaustiveKernel: Boolean = false): DataFrame =
-    kernelFrame(query, k, exhaustiveKernel).fold(emptyHits())(collectHits)
+    orFrame(query, ShardQuery.Top(k, prune = !exhaustiveKernel))
 
   /** minimum_should_match top-k (Lucene's msm over a SHOULD clause list):
     * OR-mode BM25, but a document qualifies only if it contains at least
     * `minMatch` DISTINCT analyzed query terms. minMatch = 1 ≡ [[topK]];
     * minMatch = all terms ≡ [[topKAnd]] (with identical scores — the count
-    * filter never changes a qualifying doc's score). Same zero-exchange
-    * plan; the count check rides the kernel's existing full-evaluation
+    * filter never changes a qualifying doc's score). Same one-job shard
+    * path; the count check rides the kernel's existing full-evaluation
     * loop, so pruning power is unchanged. */
   def topKMsm(query: String, minMatch: Int, k: Int): DataFrame =
-    orFrame(query, ShardQuery.Top(k, minMatch = minMatch)).fold(emptyHits())(collectHits)
+    orFrame(query, ShardQuery.Top(k, minMatch = minMatch))
 
   /** Deep-pagination top-k (Elasticsearch's search_after): the hits whose
     * ROUND-4 score is ≤ `afterScore4` — i.e. at or below the previous
@@ -402,7 +397,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
   def topKAfter(query: String, k: Int, afterScore4: Double): DataFrame =
     // +5e-5 = half a round-4 ulp: every doc ROUNDING to ≤ afterScore4
     // passes the raw-score gate; the caller's relational cut is exact.
-    orFrame(query, ShardQuery.Top(k, gateMax = afterScore4 + 5e-5)).fold(emptyHits())(collectHits)
+    orFrame(query, ShardQuery.Top(k, gateMax = afterScore4 + 5e-5))
 
   /** Synonym-aware top-k — Lucene's SynonymQuery semantics, exactly: each
     * query term and its synonyms form ONE pseudo-term whose per-doc tf is
@@ -412,8 +407,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * group never scores above a genuinely-frequent single term. Synonym
     * strings are analyzed with the index's own analyzer. Member lists
     * union-merge per shard inside the kernel (bounded by the group's
-    * pruned posting rows); everything else — pruning, tombstones, plan
-    * shape — is the standard zero-exchange kernel path. Empty synonym
+    * pruned posting rows); everything else — pruning, tombstones, the one
+    * shard job — is the standard kernel path. Empty synonym
     * map ≡ [[topK]]. */
   def topKSynonyms(query: String, synonyms: Map[String, Seq[String]],
                    k: Int): DataFrame = {
@@ -461,7 +456,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
       require(b > 0.0, s"boost for term '$t' must be > 0 (got $b)") }
     val aboosts = boosts.flatMap { case (raw, b) =>
       analyzeQuery(raw).keys.map(_ -> b) }
-    orFrame(query, ShardQuery.Top(k), aboosts).fold(emptyHits())(collectHits)
+    orFrame(query, ShardQuery.Top(k), aboosts)
   }
 
   /** Per-term global COLLECTION frequency (total occurrences — the
@@ -500,12 +495,12 @@ final class Searcher(spark: SparkSession, indexDir: String,
       .orderBy(desc("df"), asc("term")).limit(k)
 
   /** Dirichlet-smoothed query-likelihood top-k ([[LmDirichlet]]) — the
-    * alternative similarity seam: same index, same pruned-scan plan shape
-    * as [[topK]], a different per-term formula needing cf instead of df.
+    * alternative similarity seam: same index, same shard job as
+    * [[topK]], a different per-term formula needing cf instead of df.
     * The kernel is exhaustive over the pruned postings (WAND's bound
     * algebra doesn't transfer to the clamped LM contribution — see
-    * [[LmDirichlet]]); everything else (colocated zero-exchange dispatch,
-    * tombstones, in-task hit resolution) is the standard path. */
+    * [[LmDirichlet]]); everything else (the one shard job, tombstones,
+    * in-task hit resolution) is the standard path. */
   def topKDirichlet(query: String, mu: Double, k: Int): DataFrame = {
     val qtf = analyzeQuery(query)
     if (qtf.isEmpty) return emptyHits()
@@ -519,7 +514,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
 
   /** Classic TF-IDF top-k ([[ClassicTfIdf]]) — the third similarity over
     * the same index: √tf · idf² · 1/√dl, df statistics like BM25, same
-    * pruned-scan dispatch, exhaustive kernel. */
+    * shard job, exhaustive kernel. */
   def topKTfIdf(query: String, k: Int): DataFrame =
     analyzed(query).fold(emptyHits()) { case (qtf, dfm) =>
       val clauses = if (n == 0L) Nil else qtf.toSeq.collect {
@@ -537,8 +532,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * pruned postings ([[Wand.union]], one dis-max slot per subquery) sums
     * each doc's per-subquery partials, combines, and heaps per shard — the
     * cross-subquery max needs every subquery's partial for a doc in one
-    * place, which is exactly what doc-complete shards guarantee, so the
-    * plan stays zero-exchange when colocated. */
+    * place, which is exactly what the shard job's whole-shard tasks
+    * guarantee — no exchange. */
   def topKDisMax(queries: Seq[String], tie: Double, k: Int): DataFrame = {
     val subs: Seq[Map[String, Int]] = queries.map(analyzeQuery).filter(_.nonEmpty)
     val allTerms = subs.flatMap(_.keys).distinct
@@ -546,7 +541,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
     val dfm = dfSlice(allTerms)
     if (dfm.isEmpty) return emptyHits()
     val clauses = subs.zipWithIndex.flatMap { case (sq, si) => bm25(sq.toSeq, dfm, slot = si) }
-    collectHits(topFrame(allTerms.filter(dfm.contains).sorted,
+    collectHits(hits(allTerms.filter(dfm.contains).sorted,
       ShardQuery(clauses, sink = ShardQuery.DisMax(k, tie)), k))
   }
 
@@ -603,7 +598,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
   /** Conjunctive (AND-mode) top-k: only documents containing EVERY analyzed
     * query term are ranked; scores equal the OR-mode BM25 score of the same
     * doc. A query term absent from the corpus ⇒ empty result (strict AND).
-    * Same zero-exchange plan shape as [[topK]]; the kernel is leapfrog
+    * Same one-job shard path as [[topK]]; the kernel is leapfrog
     * intersection (cost ∝ shortest posting list, not the union) — the
     * all-must shape of [[search]]. */
   def topKAnd(query: String, k: Int): DataFrame = search(query, k = k)
@@ -613,8 +608,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * (Lucene's MUST_NOT shape). A query term that is also excluded can
     * never contribute — any doc containing it is excluded — so it is
     * dropped from the scoring clauses; survivors' scores equal their plain
-    * OR-mode BM25. Same zero-exchange plan shape as [[topK]]: the exclude
-    * lists ride the same term-pruned postings scan and exclusion is a
+    * OR-mode BM25. Same one-job shard path as [[topK]]: the exclude
+    * lists ride the same term-pruned postings read and exclusion is a
     * forward-only leapfrog inside the WAND kernel ([[Wand.Excl]]) — never
     * an anti-join of the corpus. Exclusion is per-shard-sound because a
     * doc's query and exclude postings live in the same doc-sharded
@@ -665,9 +660,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * lists drive the kernel as a leapfrog conjunction (cost ∝ shortest
     * filter list per shard; a must term scores through its filter cursor,
     * so its list decodes once); with neither, the kernel is OR-mode WAND.
-    * The not lists ride the same term-pruned postings scan as
-    * forward-leapfrog exclusion cursors — zero exchange when colocated,
-    * never an anti-join of the corpus. */
+    * The not lists ride the same term-pruned postings read as
+    * forward-leapfrog exclusion cursors — one shard job, never an
+    * anti-join of the corpus. */
   def search(must: String, should: String = "", not: String = "",
              k: Int = 10, facets: Map[String, String] = Map.empty): DataFrame = {
     val eset = analyzeQuery(not).keySet
@@ -683,7 +678,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
     val fterms = facets.toSeq.map { case (c, v) => graft.model.Facets.term(c, v) }
     val mterms = m0.keys.toSeq.sorted ++ fterms.sorted
     val eterms = eset.toSeq.sorted
-    collectHits(topFrame((dfm.keys.toSeq ++ mterms ++ eterms).distinct.sorted,
+    collectHits(hits((dfm.keys.toSeq ++ mterms ++ eterms).distinct.sorted,
       ShardQuery(bm25(qtf.toSeq, dfm), mterms, eterms, ShardQuery.Top(k)), k))
   }
 
@@ -692,7 +687,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * IS a posting list ([[graft.model.Facets]]; the index must have been
     * built with these columns in Config.facetCols). Scores are the normal
     * OR-mode BM25 over the query terms; zero-overlap docs are not emitted.
-    * Same zero-exchange plan shape as [[topK]]: the facet lists are scanned
+    * Same one-job shard path as [[topK]]: the facet lists are read
     * term-pruned alongside the query postings, and the kernel drives from
     * the filter intersection (cost ∝ shortest filter list per shard) — the
     * should-plus-facets shape of [[search]]. */
@@ -818,9 +813,11 @@ final class Searcher(spark: SparkSession, indexDir: String,
       qid -> ShardQuery(bm25(qtf.toSeq, dfm), sink = ShardQuery.Top(k)) }
     // Batch mode trades one narrow exchange (the pruned rows only) for
     // shard-level parallelism of the kernel work — the colocated read may
-    // pack a small index into few partitions, which is right for
-    // single-query latency but serializes a 100-query batch.
-    val perQid = shardHits(allTerms, qs, k, forceGrouped = true)
+    // pack a small index into few partitions, which serializes a 100-query
+    // batch. Each task resolves its best k candidates per query in place.
+    val lookup = hitLookup
+    val perQid = shardRun(allTerms, qs, forceGrouped = true)((qid, s) => (qid, s.docId, s.score))
+      .mapPartitions(it => lookup.resolveTopK(it, k))
       .rdd.mapPartitions(hs => Iterator(hs.toSeq.groupBy(_.qid)))
       .fold(Map.empty[String, Seq[Hit]])(HitLookup.mergeTopK(_, _, k))
     perQid.toSeq.sortBy(_._1).flatMap(_._2)
@@ -892,6 +889,5 @@ final class Searcher(spark: SparkSession, indexDir: String,
       .limit(k)
       .select($"conv_id", $"turn_idx", $"docId", $"score")
 
-  private def emptyHits(): DataFrame =
-    Seq.empty[(String, Int, Long, Double)].toDF("conv_id", "turn_idx", "docId", "score")
+  private def emptyHits(): DataFrame = collectHits(Nil)
 }

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -8,25 +9,38 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 
-/** What a call ran: the Spark jobs it launched and the executed plan of
-  * every Dataset action inside it — for pins on eager entry points
-  * (topK and friends execute inside the call and return local rows). */
+/** What a call ran: the Spark jobs it launched, the stages that ran for
+  * them and the bytes they shuffled, and the executed plan of every
+  * Dataset action inside it — for pins on eager entry points (topK and
+  * friends execute inside the call and return local rows). */
 object PlanProbe {
-  final case class Ran(jobs: Int, plans: Seq[SparkPlan]) {
-    /** The executed top-k plans: those ending in a TakeOrdered merge (the
-      * others are df/cf slices and collects of local rows). */
-    def topKPlans: Seq[SparkPlan] = plans.filter(_.toString.contains("TakeOrderedAndProject"))
+  final case class Ran(jobs: Int, stages: Int, shuffleBytes: Long, plans: Seq[SparkPlan]) {
+    /** Index tables (analyzed/, postings) scanned by a SQL execution. */
+    def indexScans: Seq[String] =
+      plans.flatMap(scannedPaths).filter(p => p.contains("/analyzed") || p.contains("/postings"))
   }
 
   def ran(spark: SparkSession)(body: => Any): Ran = {
     val sc = spark.sparkContext
     val group = s"plan-probe-${java.util.UUID.randomUUID}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
+    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
     val jl = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
           jobs.incrementAndGet()
+          e.stageIds.foreach(ours.add)
+        }
+      // only submitted stages complete: skipped (reused) stages never count
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (ours.contains(e.stageInfo.stageId)) stages.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (ours.contains(e.stageId) && e.taskMetrics != null)
+          shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten +
+            e.taskMetrics.shuffleReadMetrics.totalBytesRead)
     }
     val ql = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
@@ -43,8 +57,18 @@ object PlanProbe {
       sc.removeSparkListener(jl)
       spark.listenerManager.unregister(ql)
     }
-    Ran(jobs.get, plans.asScala.toSeq)
+    Ran(jobs.get, stages.get, shuffled.get, plans.asScala.toSeq)
   }
+
+  /** Why `r` breaks the prepared-job contract of the kernel's top-k
+    * entry points — `jobs` jobs of one stage each, nothing shuffled, no
+    * SQL execution scanning analyzed/ or postings — or None. */
+  def jobViolation(r: Ran, jobs: Int = 1): Option[String] =
+    if (r.jobs != jobs || r.stages != jobs)
+      Some(s"ran ${r.jobs} jobs / ${r.stages} stages, want $jobs / $jobs")
+    else if (r.shuffleBytes != 0L) Some(s"shuffled ${r.shuffleBytes} bytes")
+    else if (r.indexScans.nonEmpty) Some(s"planned SQL scans of ${r.indexScans}")
+    else None
 
   /** Every node, recursing through AQE wrappers and into cached-relation
     * plans (whose child plan holds the real file scan). */
@@ -59,16 +83,4 @@ object PlanProbe {
   def scannedPaths(p: SparkPlan): Seq[String] =
     allNodes(p).collect { case f: FileSourceScanExec =>
       f.relation.location.rootPaths.map(_.toString) }.flatten
-
-  /** Why `p` breaks the top-k contract — it scans postings only (never
-    * analyzed/), joins nothing and shuffles nothing — or None. */
-  def topKViolation(p: SparkPlan): Option[String] = {
-    val text = p.toString
-    val paths = scannedPaths(p)
-    if (paths.isEmpty || !paths.forall(_.contains("/postings")))
-      Some(s"scans $paths, not postings only")
-    else if (text.contains("Join")) Some("plans a join")
-    else if (text.contains("Exchange")) Some("plans an Exchange")
-    else None
-  }
 }

@@ -17,13 +17,18 @@ class PlanSpec extends AnyFunSuite {
     d
   }
 
-  test("postings scan pushes the query-term filter into Parquet") {
+  test("df slice launches no job: a fresh searcher's first topK is one job") {
     val s = new Searcher(spark, dir)
-    val plan = s.kernelFrame("quick brown fox", 10).get
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") &&
-      (plan.contains("In(term") || plan.contains("term IN") || plan.contains("EqualTo(term")),
-      s"no pushed term filter in:\n${plan.take(3000)}")
+    val terms = Seq("quick", "brown", "zzznope")
+    val slice = PlanProbe.ran(spark)(assert(s.dfSlice(terms).keySet == Set("quick", "brown")))
+    assert(slice.jobs == 0, s"cold dfSlice ran ${slice.jobs} jobs")
+    val table = spark.read.parquet(s"$dir/df").where(
+      org.apache.spark.sql.functions.col("term").isin(terms: _*))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(s.dfSlice(terms) == table)
+    val fresh = new Searcher(spark, dir)
+    PlanProbe.jobViolation(PlanProbe.ran(spark)(fresh.topK("quick brown fox", 10)))
+      .foreach(why => fail(s"first topK of a fresh searcher $why"))
   }
 
   test("relational scorer broadcasts the query-term tables") {
@@ -39,32 +44,27 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("TakeOrderedAndProject"), s"no TakeOrdered in:\n${plan.take(3000)}")
   }
 
-  /** Runs an eager call that executes `plans` top-k plans and checks them. */
-  private def assertTopKPlans(label: String, plans: Int = 1)(call: => Any): PlanProbe.Ran = {
-    val r = PlanProbe.ran(spark)(call)
-    assert(r.topKPlans.size == plans,
-      s"$label executed ${r.topKPlans.size} top-k plans, want $plans:\n${r.plans.mkString("\n")}")
-    for (p <- r.topKPlans; why <- PlanProbe.topKViolation(p))
-      fail(s"$label: executed top-k plan $why:\n${p.toString.take(4000)}")
-    r
+  /** Runs an eager call twice (the first warms the df/cf memos) and pins
+    * the second to the prepared-job contract ([[PlanProbe.jobViolation]]). */
+  private def assertOneJob(label: String)(call: => Any): Unit = {
+    call
+    PlanProbe.jobViolation(PlanProbe.ran(spark)(call)).foreach(why => fail(s"warm $label $why"))
   }
 
   test("warm topK runs ONE job that scans postings only: hits resolve in the kernel task") {
     // the ≤ k winners get (conv_id, turn_idx) inside the shard task that
     // scored them — no second job, no analyzed scan, no doc-map join
     val s = new Searcher(spark, dir)
-    assert(s.colocated)
-    s.topK("quick brown fox", 10).collect() // warm: df slice, file footers
-    val r = assertTopKPlans("topK")(s.topK("quick brown fox", 10).collect())
-    assert(r.jobs == 1, s"warm topK ran ${r.jobs} jobs")
+    assertOneJob("topK")(s.topK("quick brown fox", 10).collect())
   }
 
   test("single-query WAND plan is shuffle-free (no Exchange of any kind)") {
     val s = new Searcher(spark, dir)
-    assert(s.colocated, "postings layout must satisfy the colocated precondition at test scale")
-    val plan = s.kernelFrame("quick brown fox", 10).get.queryExecution.executedPlan.toString
-    val shuffles = "(?m)^.*Exchange.*$".r.findAllIn(plan).toList
-    assert(shuffles.isEmpty, s"unexpected Exchange(s): $shuffles\nin plan:\n${plan.take(4000)}")
+    assertOneJob("exhaustive topK")(s.topK("quick brown fox", 10, exhaustiveKernel = true))
+    assertOneJob("kernelFrame")(s.kernelFrame("quick brown fox", 10).get.collect())
+    assertOneJob("topKMsm")(s.topKMsm("quick brown fox", 2, 10))
+    assertOneJob("topKAfter")(s.topKAfter("quick brown fox", 10, 5.0))
+    assertOneJob("topKBoosted")(s.topKBoosted("quick brown fox", Map("fox" -> 2.0), 10))
   }
 
   test("tombstone exclusion keeps the WAND plan shuffle-free") {
@@ -80,11 +80,8 @@ class PlanSpec extends AnyFunSuite {
           org.apache.spark.sql.functions.col("conv_id")),
         org.apache.spark.sql.functions.lit(7)) === 0) > 0)
     val s = new Searcher(spark, d)
-    assert(s.colocated)
-    val plan = s.kernelFrame("quick brown fox", 10).get.queryExecution.executedPlan
-    PlanProbe.topKViolation(plan).foreach(why =>
-      fail(s"tombstoned kernelFrame $why:\n${plan.toString.take(4000)}"))
-    assertTopKPlans("tombstoned topKAnd")(s.topKAnd("quick brown fox", 10))
+    assertOneJob("tombstoned topK")(s.topK("quick brown fox", 10))
+    assertOneJob("tombstoned topKAnd")(s.topKAnd("quick brown fox", 10))
   }
 
   test("AND-mode, matchAll and boolean plans are shuffle-free too (colocated kernel)") {
@@ -93,17 +90,16 @@ class PlanSpec extends AnyFunSuite {
     val plan = s.matchAllDocs("quick brown fox").queryExecution.executedPlan.toString
     val shuffles = "(?m)^.*Exchange.*$".r.findAllIn(plan).toList
     assert(shuffles.isEmpty, s"unexpected Exchange(s): $shuffles\nin plan:\n${plan.take(4000)}")
-    assertTopKPlans("topKAnd")(s.topKAnd("quick brown fox", 10))
-    assertTopKPlans("search")(s.search("learning", "retrieval relevance", "streaming", 10))
+    assertOneJob("topKAnd")(s.topKAnd("quick brown fox", 10))
+    assertOneJob("search")(s.search("learning", "retrieval relevance", "streaming", 10))
   }
 
   test("similarity variants, dis_max and synonyms keep the shuffle-free kernel plan") {
     val s = new Searcher(spark, dir)
-    assert(s.colocated)
-    assertTopKPlans("topKDirichlet")(s.topKDirichlet("quick brown fox", 2000.0, 10))
-    assertTopKPlans("topKTfIdf")(s.topKTfIdf("quick brown fox", 10))
-    assertTopKPlans("topKDisMax")(s.topKDisMax(Seq("quick brown", "learning fox"), 0.3, 10))
-    assertTopKPlans("topKSynonyms")(s.topKSynonyms("quick", Map("quick" -> Seq("fast")), 10))
+    assertOneJob("topKDirichlet")(s.topKDirichlet("quick brown fox", 2000.0, 10))
+    assertOneJob("topKTfIdf")(s.topKTfIdf("quick brown fox", 10))
+    assertOneJob("topKDisMax")(s.topKDisMax(Seq("quick brown", "learning fox"), 0.3, 10))
+    assertOneJob("topKSynonyms")(s.topKSynonyms("quick", Map("quick" -> Seq("fast")), 10))
   }
 
   test("complete pushes the prefix filter into the df-table scan") {
@@ -283,9 +279,9 @@ class PlanSpec extends AnyFunSuite {
   test("federated merge is a TakeOrdered over members' in-task resolved hits") {
     val fed = new graft.query.Federated(spark, Seq(dir, dir))
     fed.topK("quick brown fox", 10) // warm: df slices, file footers
-    // each member runs its one postings-only top-k job inside the call
-    val r = assertTopKPlans("federated members", fed.members.size)(
-      fed.topK("quick brown fox", 10))
+    // each member runs its one shard job inside the call
+    val r = PlanProbe.ran(spark)(fed.topK("quick brown fox", 10))
+    PlanProbe.jobViolation(r, fed.members.size).foreach(why => fail(s"federated members $why"))
     assert(r.jobs == fed.members.size, s"${r.jobs} jobs for ${fed.members.size} members")
     val plan = fed.topK("quick brown fox", 10).queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
