@@ -30,8 +30,8 @@ final case class AnalyzedRow(
   *              INLINE in each posting (Lucene-norms-style), so the query
   *              path needs no side length table — no per-query shuffle and
   *              no O(shard) state anywhere. One output file per build
-  *              partition; a shard never spans files (the colocated
-  *              zero-exchange read path relies on this).
+  *              partition; a shard never spans files unless dictRanges > 1
+  *              (the Searcher's shard job groups a shard's files either way).
   *   postings_seg_<g>/  delta posting segments written by [[refresh]] —
   *              Lucene's segment model re-expressed: index maintenance
   *              costs ∝ NEW data, never the corpus. [[compact]] folds
@@ -84,10 +84,9 @@ object IndexBuilder {
         * assembled range by range, each range broadcasting only its own
         * dictionary slice. Cost: R column-pruned passes over the analyzed
         * terms; trade: posting files per shard multiply by R, so the
-        * Searcher's top-k job reads a shard's R files in one task and its
-        * relational consumers serve through the grouped (per-shard merge)
-        * path instead of the zero-exchange colocated kernel — unavoidable,
-        * a 10^8+-term shard's postings never fit one file anyway. The
+        * Searcher's shard job reads a shard's R files in one task —
+        * unavoidable, a 10^8+-term shard's postings never fit one file
+        * anyway. The
         * config is explicit rather than auto-detected because detection
         * would charge every build a vocabulary count. */
       dictRanges: Int = 1,
@@ -430,10 +429,6 @@ object IndexBuilder {
       if (f.getPath.getName.startsWith("postings_seg_")) fs.delete(f.getPath, true)
     }
     swapDir(spark, s"$indexDir/postings_tmp", s"$indexDir/postings")
-    // compact assembles with the broadcast dictionary (doc-complete
-    // files), so the rebuilt base restores the colocated-serving layout
-    // even if the original build was range-partitioned
-    Manifests.write(indexDir, StageManifest("postings_layout", 1, 0, "layout", 0))
     // the base rewrite invalidates every older snapshot (pre-delete
     // snapshots now miss physically-dropped docs) — record the fold point
     Manifests.write(indexDir, StageManifest("compact_floor", committedGen(indexDir), 0, "floor", 0))
@@ -847,14 +842,6 @@ object IndexBuilder {
         graft.sources.TableIO.write(
           assemblePostings(spark, analyzed, parts, pkeys, cfg.dictRanges).toDF(),
           s"$indexDir/postings")
-        // Layout contract for the serving path: rows = dictRanges. 1 ⇒
-        // every postings file is DOC-complete (a doc's whole term set in
-        // one file), the precondition of the Searcher's zero-exchange
-        // colocated relational kernel; > 1 ⇒ a doc's terms span range
-        // files and those paths MUST serve through the grouped per-shard
-        // merge (the top-k shard job groups a shard's files by footer).
-        Manifests.write(indexDir,
-          StageManifest("postings_layout", cfg.dictRanges, 0, "layout", 0))
         graft.sources.TableIO.read(spark, s"$indexDir/postings").count()
       }
       stage(spark, indexDir, "df") { () =>

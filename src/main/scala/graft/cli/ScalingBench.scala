@@ -124,9 +124,8 @@ object ScalingBench {
     val dir1 = best1.d1
 
     // warm query latencies over the 4-executor-built index (local[32] JVM).
-    // openCostInBytes raised to 64MB: shard files under that bound are
-    // never split across read partitions, which keeps the zero-exchange
-    // colocated WAND path sound for this index size (Searcher.colocated).
+    // openCostInBytes raised to 64MB: Dataset reads of the index (topKBatch,
+    // the relational queries) pack small files into fewer read partitions.
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       // zstd shuffle/broadcast codec: measured 2.6x less shuffle byte
@@ -210,8 +209,8 @@ object ScalingBench {
     }
     sb.append("\n(stats/df/postings run concurrently — their walls overlap.)\n")
     sb.append(f"\n## Top-10 BM25 query latency (warm $n%d-turn index, local[32], block-max WAND, k1=1.2 b=0.75)\n\n")
-    sb.append("Measured on the current serving path (shuffle-free colocated WAND\n")
-    sb.append("kernel, inline doc lengths, memoized df slices, pushed-down\n")
+    sb.append("Measured on the current serving path (one shuffle-free shard job per\n")
+    sb.append("query: block-max WAND, inline doc lengths, memoized df slices, in-task\n")
     sb.append("`docId IN (...)` hit resolution); 3 warmup + 30 timed reps per query:\n\n")
     sb.append("| query | p50 (ms) | p95 (ms) |\n|---|---|---|\n")
     lats.foreach { case (q, p50, p95) => sb.append(f"| $q | $p50%.1f | $p95%.1f |\n") }

@@ -7,13 +7,12 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.RecordMaterializer
 import org.apache.parquet.schema.{GroupType, MessageType}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
@@ -23,7 +22,7 @@ import scala.jdk.CollectionConverters._
   * driver round-trip, nothing added on disk.
   *
   * The file list and each file's per-row-group docId ranges are read once
-  * on the driver (footers only). A task opens only the files with a row
+  * on the driver (footers only, through [[PointRead.ranges]]). A task opens only the files with a row
   * group whose docId statistics admit one of its hits, and parquet-mr's
   * `docId IN (...)` filter then skips the row groups and pages that cannot
   * hold one; only the docId, conv_id and turn_idx columns are decoded.
@@ -102,27 +101,13 @@ object HitLookup {
   val HitRank: Ordering[Hit] = Ordering.by((h: Hit) => (-h.score, h.docId))(Rank)
 
   /** Lookup over `files` (analyzed/ data files): reads their footers on
-    * the driver and broadcasts the session's Hadoop conf for the tasks. */
-  def apply(spark: SparkSession, files: Seq[String]): HitLookup = {
-    val conf = spark.sessionState.newHadoopConf()
-    val ranges = files.map(f => footerRanges(f, conf)).filter(_.lo.nonEmpty)
-    new HitLookup(ranges.toArray,
-      spark.sparkContext.broadcast(new SerializableConfiguration(conf)))
-  }
-
-  private def footerRanges(file: String, conf: Configuration): FileRanges = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
-    try {
-      val groups = reader.getFooter.getBlocks.asScala.filter(_.getRowCount > 0).map { b =>
-        b.getColumns.asScala.find(_.getPath.toDotString == "docId").map(_.getStatistics)
-          .filter(st => st != null && st.hasNonNullValue)
-          .map(st => (st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
-            st.genericGetMax.asInstanceOf[java.lang.Long].longValue))
-          .getOrElse((Long.MinValue, Long.MaxValue)) // no statistics: always open
-      }
-      FileRanges(file, groups.map(_._1).toArray, groups.map(_._2).toArray)
-    } finally reader.close()
-  }
+    * the driver with the caller's broadcast Hadoop conf, which the tasks
+    * then read with. A row group without statistics is always opened. */
+  def apply(files: Seq[String], conf: Broadcast[SerializableConfiguration]): HitLookup =
+    new HitLookup(files.map { f =>
+      val groups = PointRead.ranges(f, conf.value.value, "docId")
+      FileRanges(f, groups.map(_._1), groups.map(_._2))
+    }.filter(_.lo.nonEmpty).toArray, conf)
 
   /** Per-query hits of several tasks merged into the best k per query —
     * the driver side of the batch TakeOrdered, applied as results arrive. */

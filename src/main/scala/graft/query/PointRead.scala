@@ -18,9 +18,11 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** Parquet point reads without Spark: the records of one index file whose
-  * key column value is in a key set, with only the requested columns
-  * decoded. The shard task's postings read ([[ShardJob]]) and the
-  * driver's df slice ([[Searcher.dfSlice]]) share it.
+  * key column value is in a key set — exact keys, or [[prefixes]] of a
+  * string key (the facet lists `\u0001col\u0001…`) — with only the
+  * requested columns decoded. Every [[ShardJob]] task's read (postings,
+  * positions), the driver's df slice ([[Searcher.dfSlice]]) and the
+  * footers of [[HitLookup]] share it.
   *
   * The read is column-wise, straight off parquet-mr's column readers (no
   * record assembly): a row group whose key statistics admit no key is
@@ -55,12 +57,41 @@ object PointRead {
   /** Keys of a BINARY (string) key column. */
   def strings(keys: Iterable[String]): Set[Any] = keys.iterator.map(Binary.fromString).toSet
 
+  /** Keys of a BINARY key column matching every value that starts with
+    * one of `prefixes`. */
+  def prefixes(prefixes: Iterable[String]): Set[Any] =
+    prefixes.iterator.map(p => Prefix(Binary.fromString(p))).toSet
+
+  /** A prefix key: the values in [p, p's byte successor). */
+  private final case class Prefix(p: Binary) {
+    private val bytes = p.getBytes
+    def matches(v: Binary): Boolean = {
+      val b = v.toByteBuffer
+      b.remaining >= bytes.length && {
+        var i = 0
+        while (i < bytes.length && b.get(b.position + i) == bytes(i)) i += 1
+        i == bytes.length
+      }
+    }
+    /** Whether some value in [min, max] starts with p: p ≤ max, and min cut
+      * to p's length ≤ p. */
+    def admits(c: java.util.Comparator[Any], min: Any, max: Any): Boolean = {
+      val lo = min.asInstanceOf[Binary].getBytes
+      c.compare(p, max) <= 0 &&
+        c.compare(Binary.fromConstantByteArray(lo.take(bytes.length)), p) <= 0
+    }
+  }
+
   /** The records of `file` whose flat `key` column holds one of `keys`
-    * (boxed Long for INT64, Integer for INT32, [[strings]] for BINARY),
-    * with the values of `columns`, in file order. */
+    * (boxed Long for INT64, Integer for INT32, [[strings]] or [[prefixes]]
+    * for BINARY), with the values of `columns`, in file order. */
   def rows(file: String, conf: Configuration, key: String, keys: Set[Any],
            columns: Seq[String]): ArrayBuffer[Record] = {
     val out = ArrayBuffer.empty[Record]
+    val (pre, exact) = keys.partition(_.isInstanceOf[Prefix])
+    val prefixes = pre.toArray.map(_.asInstanceOf[Prefix])
+    def wanted(v: Any): Boolean =
+      exact.contains(v) || prefixes.exists(_.matches(v.asInstanceOf[Binary]))
     val reader = open(file, conf)
     try {
       val meta = reader.getFooter.getFileMetaData
@@ -78,7 +109,7 @@ object PointRead {
         val hit = ArrayBuffer.empty[Long]
         var r = 0L
         while (r < b.getRowCount) {
-          if (kc.getCurrentDefinitionLevel == maxDef && keys.contains(value(kc))) hit += r
+          if (kc.getCurrentDefinitionLevel == maxDef && wanted(value(kc))) hit += r
           kc.consume()
           r += 1
         }
@@ -106,7 +137,10 @@ object PointRead {
       .filter(st => st != null && st.hasNonNullValue)
       .forall { st =>
         val c = st.comparator.asInstanceOf[java.util.Comparator[Any]]
-        keys.exists(k => c.compare(st.genericGetMin, k) <= 0 && c.compare(k, st.genericGetMax) <= 0)
+        keys.exists {
+          case p: Prefix => p.admits(c, st.genericGetMin, st.genericGetMax)
+          case k => c.compare(st.genericGetMin, k) <= 0 && c.compare(k, st.genericGetMax) <= 0
+        }
       }
 
   private def value(cr: ColumnReader): Any = cr.getDescriptor.getPrimitiveType.getPrimitiveTypeName match {

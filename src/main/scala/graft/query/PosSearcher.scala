@@ -1,9 +1,9 @@
 package graft.query
 
-import graft.build.PositionIndex
+import graft.build.{IndexBuilder, PositionIndex}
 import graft.codec.PosPostings
 import graft.model.PosPosting
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
@@ -18,62 +18,29 @@ import scala.collection.mutable.ArrayBuffer
   * per-doc measure — the minimal ordered span (phrase: exact is slop 0) or
   * the minimal unordered window (span-near).
   *
-  * Plan shape mirrors [[Searcher]]'s relational kernel paths: the
-  * positions scan is pruned to the query's distinct raw tokens (predicate
-  * pushed to Parquet), then the per-shard kernel runs either COLOCATED (zero
-  * exchange — sound iff no positions file can split across read
-  * partitions, same rule as Searcher.colocated) or behind a narrow
-  * groupByKey(shard) of ≤ |distinct tokens|·shards rows. Kernel cost is
-  * linear in the pruned lists' total occurrences (decode) — for a phrase
+  * Plan shape is [[Searcher]]'s: the kernel runs on a [[ShardJob]] over
+  * the sidecar's files, whose tasks point-read only the query's distinct
+  * raw tokens' lists and see whole shards — no exchange, on any layout or
+  * split conf; the matches come back as the job's lazy frame. Kernel cost
+  * is linear in the read lists' total occurrences (decode) — for a phrase
   * containing a stopword that is the stopword's per-shard list, which is
   * exactly the data any positional engine must touch for that phrase;
   * shard sizing bounds it per task. */
 final class PosSearcher(spark: SparkSession, indexDir: String) {
   import spark.implicits._
 
-  private val posPath = PositionIndex.path(indexDir)
-  private val posDF = graft.sources.TableIO.read(spark, posPath)
-
-  /** Delete tombstones of the CURRENT committed generation: the positional
-    * sidecar is immutable like the postings, so a tombstoned doc's
-    * positions stay on disk until the sidecar is rebuilt — hide its
-    * matches with one broadcast anti-join on the (match-sized) output.
-    * None (zero plan impact — PlanSpec's shuffle-free pin holds) unless a
-    * delete actually committed; vacuum retires it again. */
-  private val tombstonePath: Option[String] =
-    graft.build.IndexBuilder.tombstonePathAsOf(indexDir,
-      graft.build.IndexBuilder.committedGen(indexDir))
-  private def tombstoneFree(df: DataFrame): DataFrame =
-    tombstonePath.fold(df)(p => df.join(
-      broadcast(graft.sources.TableIO.read(spark, p).select(col("docId"))),
-      Seq("docId"), "left_anti"))
-
-  /** Largest positions file, listed once at construction; -1 when listing
-    * failed, which forces the grouped fallback plan for every query
-    * (logged, never silent). */
-  private val maxFileLen: Long =
-    try {
-      val path = new org.apache.hadoop.fs.Path(posPath)
-      path.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(path).collect {
-        case f if f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith(".") => f.getLen
-      }.foldLeft(0L)(math.max)
-    } catch { case scala.util.control.NonFatal(e) =>
-      org.slf4j.LoggerFactory.getLogger(classOf[PosSearcher]).warn(
-        s"listing $posPath failed ($e): falling back to the grouped-shuffle plan " +
-          "(groupByKey(shard)) for every query")
-      -1L
-    }
-
-  /** Zero-exchange kernel soundness — evaluated against the CURRENT
-    * session conf per call, same rule as Searcher.colocated. */
-  def colocated: Boolean = Searcher.unsplit(spark, maxFileLen)
-
-  /** `kernel` per shard of the positions of `terms` ([[Searcher.perShard]]). */
-  private def perShard[T: Encoder](terms: Seq[String])(
-      kernel: Seq[PosPosting] => Iterator[T]): Dataset[T] =
-    Searcher.perShard(posDF.where(col("term").isin(terms: _*)).as[PosPosting],
-      (p: PosPosting) => p.shard, colocated)(kernel)
+  /** The sidecar's files, listed once through the storage seam, with the
+    * delete tombstones of the CURRENT committed generation: the sidecar is
+    * immutable like the postings, so a tombstoned doc's positions stay on
+    * disk until it is rebuilt — the kernel skips them through
+    * [[Wand.Excl]] like every other kernel. */
+  private val job: ShardJob[Seq[PosPosting]] = ShardJob(spark,
+    PointRead.files(graft.sources.TableIO.read(spark, PositionIndex.path(indexDir))),
+    spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf())),
+    ShardJob.tombstones(spark,
+      IndexBuilder.tombstonePathAsOf(indexDir, IndexBuilder.committedGen(indexDir))),
+    ShardJob.PositionRows)
 
   /** docIds of documents containing `rawToks` as a contiguous raw-token
     * run (the containsSlice relation of DocQueries.phraseTopK's verify):
@@ -116,8 +83,12 @@ final class PosSearcher(spark: SparkSession, indexDir: String) {
   /** (docId, span) per doc of [[PosSearcher.intersect]] over the positions
     * of `terms`, tombstoned docs hidden. */
   private def spans(terms: Array[String])(measure: Array[Array[Int]] => Int): DataFrame =
-    tombstoneFree(perShard(terms.toSeq)(g => PosSearcher.intersect(g, terms)(measure))
-      .toDF("docId", "span"))
+    job.frame(terms.toSeq) { shards =>
+      shards.flatMap { case (lists, tomb) =>
+        val ex = new Wand.Excl(tomb.toSeq)
+        PosSearcher.intersect(lists, terms)(measure).filterNot(m => ex.excluded(m._1))
+      }
+    }.toDF("docId", "span")
 }
 
 object PosSearcher {

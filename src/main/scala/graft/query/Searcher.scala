@@ -2,10 +2,9 @@ package graft.query
 
 import graft.analysis.{Analyzer, StopWords}
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** Query executor over a built index (SURVEY.md §3 entry points 1-2).
@@ -24,26 +23,23 @@ import scala.jdk.CollectionConverters._
   *    cursor everywhere. Doc lengths ride INLINE in the posting blobs, so
   *    no side table is touched.
   *
-  *    Single-query top-k modes build no Dataset and no Catalyst plan: a
-  *    call is ONE `runJob` over the Searcher's prepared [[ShardJob]] — its
-  *    postings files, grouped at construction from their footers so that
-  *    a shard never spans partitions, whatever the layout (doc-complete,
-  *    term-ranged, base + delta) or the session's split conf. Each task
-  *    point-reads only the query terms' rows of its files, runs the kernel
-  *    per shard and resolves its best k to (conv_id, turn_idx) in place
-  *    ([[HitLookup]]); the driver merges the task heaps and wraps the ≤ k
-  *    hits in a local frame, so collecting it launches nothing more.
+  *    Every kernel consumer runs on the Searcher's prepared [[ShardJob]]
+  *    — its postings files, grouped at construction from their footers so
+  *    that a shard never spans partitions, whatever the layout
+  *    (doc-complete, term-ranged, base + delta) or the session's split
+  *    conf. Each task point-reads only the call's terms' rows of its
+  *    files and runs the kernel per shard; nothing is exchanged.
+  *     * Single-query top-k modes, [[cfSlice]] and the facet panels are
+  *       ONE eager `runJob`: top-k tasks resolve their best k to
+  *       (conv_id, turn_idx) in place ([[HitLookup]]), the driver merges
+  *       the task results and wraps them in a local frame, so collecting
+  *       it launches nothing more.
+  *     * [[matchAllDocs]] and [[scoreMatches]] return the job's lazy
+  *       frame of every match, sized as the postings files for the
+  *       planner's join choices.
   *
-  *    [[topKBatch]] (always through the FALLBACK exchange) and the
-  *    relational kernel consumers ([[matchAllDocs]], [[scoreMatches]], the
-  *    facet panels, [[cfSlice]]) run over a term-pruned postings scan:
-  *     * COLOCATED (when sound): a mapPartitions over the scan sees whole
-  *       shards — ZERO exchange — iff files are doc-complete and Spark
-  *       never splits a postings file across read partitions (every file ≤
-  *       min(spark.sql.files.maxPartitionBytes, openCostInBytes), checked
-  *       against the session conf of each call).
-  *     * FALLBACK: groupByKey(shard) — one narrow exchange of ONLY the
-  *       pruned query-term posting rows, never the corpus.
+  *    [[topKBatch]] alone keeps a Dataset plan: a term-pruned postings
+  *    scan and one groupByKey(shard) exchange of the pruned rows.
   *
   *  - `topKExhaustive` / `scoreAll` — the relational twin: explode analyzed
   *    docs, broadcast-hash-join query terms, aggregate the codegen'd BM25
@@ -65,35 +61,15 @@ object Searcher {
       t -> (if (ps.lengthCompare(1) == 0) ps.head else graft.codec.Postings.merge(ps))
     }
 
-  /** Run `kernel` once per shard of a term-pruned index scan (postings or
-    * positions): zero-exchange mapPartitions when `colocated`, narrow
-    * groupByKey(shard) of the pruned rows otherwise. `kernel` must capture
-    * only method-local state (never a searcher). */
-  private[query] def perShard[R, T: Encoder](rows: Dataset[R], shard: R => Int, colocated: Boolean)(
-      kernel: Seq[R] => Iterator[T]): Dataset[T] =
-    if (colocated)
-      rows.mapPartitions { rs =>
-        val byShard = new java.util.HashMap[Integer, ArrayBuffer[R]]()
-        rs.foreach(r => byShard.computeIfAbsent(shard(r), _ => new ArrayBuffer[R]) += r)
-        byShard.values.iterator.asScala.flatMap(g => kernel(g.toSeq))
-      }
-    else rows.groupByKey(shard)(Encoders.scalaInt).flatMapGroups((_, rs) => kernel(rs.toSeq))
-
   /** Scores every matching term 1: a clause set under it matches exactly
     * the docs on ≥ 1 of its lists, whatever their statistics. */
   private[query] object Matched extends Wand.SimScorer {
     def score(tf: Int, dl: Int): Double = 1.0
   }
 
-  /** True when no file of at most `maxLen` bytes (-1 = unknown) can be
-    * split across read partitions under the CURRENT session conf — split
-    * sizes are mutable session state (IndexBuilder.build temporarily
-    * lowers maxPartitionBytes on the same session), and a stale answer
-    * would let a split file be scored as two half-shards. */
-  private[query] def unsplit(spark: SparkSession, maxLen: Long): Boolean = maxLen >= 0 && {
-    val conf = spark.sessionState.conf
-    maxLen <= math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
-  }
+  /** Spark's string order (unsigned UTF-8 bytes), as `asc` sorts. */
+  private val SparkStrings: Ordering[String] =
+    Ordering.by(org.apache.spark.unsafe.types.UTF8String.fromString)
 
   /** Columns of every single-query hit frame. */
   private val HitSchema = StructType.fromDDL(
@@ -151,7 +127,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
   /** The df files, listed once for [[dfSlice]]'s point reads. */
   private val dfFiles: Seq[String] = PointRead.files(dfDF)
   /** The session's Hadoop conf, broadcast once for the point reads of
-    * [[dfSlice]] and the shard job. */
+    * [[dfSlice]], the shard job and [[hitLookup]]. */
   private val hadoopConf = spark.sparkContext.broadcast(
     new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))
   /** Coverage-filtered doc-meta projection, the base of the relational
@@ -177,8 +153,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
   /** In-task (conv_id, turn_idx) resolution of kernel hits over this
     * index's analyzed/ files, listed and footer-read once at construction
     * through the storage seam (so catalog tables resolve too). */
-  private val hitLookup: HitLookup = HitLookup(spark,
-    PointRead.files(graft.sources.TableIO.read(spark, s"$indexDir/analyzed")))
+  private val hitLookup: HitLookup = HitLookup(
+    PointRead.files(graft.sources.TableIO.read(spark, s"$indexDir/analyzed")), hadoopConf)
 
   /** The (cached when cacheTables) base+segment postings table — exposed
     * for relational consumers that decode pruned posting slices themselves
@@ -205,29 +181,16 @@ final class Searcher(spark: SparkSession, indexDir: String,
         .lt(element_at(lit(cover), col("shard") + 1))
     }
   /** Delete tombstones as of this Searcher's generation
-    * ([[graft.build.IndexBuilder.delete]]): per-shard docId sets, encoded
-    * once at construction into the same VByte posting form the MUST_NOT
-    * path uses and broadcast — every kernel excludes them with a
-    * forward-only leapfrog cursor ([[Wand.Excl]]), never an anti-join of
-    * the corpus. Driver/broadcast residency is bounded by DELETED docs
-    * (VByte ≈ 1-2 bytes/doc after delta encoding); the growth path past
-    * ~10^9 accumulated deletes is per-shard tombstone sidecar files
-    * colocated with the postings shards — at that point [[compact]] (which
-    * folds tombstones away physically) is overdue anyway. Usually None. */
+    * ([[graft.build.IndexBuilder.delete]]): per-shard docId sets that every
+    * kernel excludes with a forward-only leapfrog cursor
+    * ([[ShardJob.tombstones]]), never an anti-join of the corpus. The
+    * growth path past ~10^9 accumulated deletes is per-shard tombstone
+    * sidecar files stored with the postings shards — at that point
+    * [[compact]] (which folds tombstones away physically) is overdue
+    * anyway. Usually None. */
   private val tombstonePath: Option[String] =
     graft.build.IndexBuilder.tombstonePathAsOf(indexDir, generation)
-  private val tombBc: org.apache.spark.broadcast.Broadcast[Map[Int, Posting]] = {
-    val m: Map[Int, Posting] = tombstonePath.fold(Map.empty[Int, Posting]) { path =>
-      graft.sources.TableIO.read(spark, path)
-        .select(col("shard"), col("docId")).as[(Int, Long)].collect()
-        .groupBy(_._1).map { case (s, arr) =>
-          val docs = arr.map(_._2).sorted
-          s -> graft.codec.Postings.encode(s, "\u0000tombstone", docs,
-            Array.fill(docs.length)(1), Array.fill(docs.length)(1))
-        }
-    }
-    spark.sparkContext.broadcast(m)
-  }
+  private val tombBc = ShardJob.tombstones(spark, tombstonePath)
 
   /** Hide tombstoned docs from a relational frame with one broadcast
     * anti-join against the (tiny) tombstone table. */
@@ -250,29 +213,11 @@ final class Searcher(spark: SparkSession, indexDir: String,
     if (statsRow.schema.fieldNames.contains("sumlen")) statsRow.getAs[Long]("sumlen")
     else math.round(statsRow.getAs[Long]("n") * statsRow.getAs[Double]("avgdl"))
 
-  /** The prepared single-query top-k job over this generation's postings
-    * files, listed once through the storage seam; an unreadable footer
-    * fails construction, naming the file. */
-  private val shardJob: ShardJob =
-    ShardJob(spark.sparkContext, PointRead.files(postingsDF), hadoopConf, tombBc)
-
-  /** Whether every postings file is DOC-complete (a doc's whole term set
-    * in one file) — true for broadcast-dictionary builds and all refresh
-    * segments; false for range-partitioned builds (Config.dictRanges > 1),
-    * whose files each hold one TERM range of a shard. The colocated
-    * relational kernel scores each read partition independently, which is
-    * only sound when a doc's full term set is visible in one partition.
-    * Legacy indexes (no layout manifest) predate the ranged path and are
-    * doc-complete. */
-  private val docCompleteFiles: Boolean =
-    graft.build.Manifests.read(indexDir, "postings_layout").forall(_.rows <= 1L)
-
-  /** True when the relational kernel consumers may run zero-exchange:
-    * files are doc-complete and no postings file can be split across read
-    * partitions (see class doc). Evaluated against the CURRENT session
-    * conf on every call ([[Searcher.unsplit]]). Single-query top-k never
-    * depends on it. */
-  def colocated: Boolean = docCompleteFiles && Searcher.unsplit(spark, shardJob.maxFileLen)
+  /** The prepared shard job over this generation's postings files,
+    * listed once through the storage seam; an unreadable footer fails
+    * construction, naming the file. */
+  private val shardJob = ShardJob(spark, PointRead.files(postingsDF), hadoopConf, tombBc,
+    ShardJob.PostingRows)
 
   def analyzeQuery(query: String): Map[String, Int] =
     Analyzer.termFreqs(Analyzer.tokenize(query, StopWords.forLang(language), normalizer))
@@ -290,24 +235,6 @@ final class Searcher(spark: SparkSession, indexDir: String,
       missing.foreach(t => dfCache.put(t, java.lang.Long.valueOf(found.getOrElse(t, 0L))))
     }
     terms.iterator.map(t => t -> dfCache.get(t).longValue).filter(_._2 > 0L).toMap
-  }
-
-  /** `kernel` per shard of a pruned postings scan ([[Searcher.perShard]]). */
-  private def perShard[T: Encoder](postings: Dataset[Posting], forceGrouped: Boolean = false)(
-      kernel: Seq[Posting] => Iterator[T]): Dataset[T] =
-    Searcher.perShard(postings, (p: Posting) => p.shard, colocated && !forceGrouped)(kernel)
-
-  /** Every query of `qs` run per shard over the postings of `terms` (the
-    * shard's tombstones hidden), each match emitted as `out(qid, match)`. */
-  private def shardRun[T: Encoder](terms: Seq[String], qs: Seq[(String, ShardQuery)],
-                                   forceGrouped: Boolean = false)(
-      out: (String, Wand.Scored) => T): Dataset[T] = {
-    val tb = tombBc
-    perShard(postingsDF.where(col("term").isin(terms: _*)).as[Posting], forceGrouped) { g =>
-      val lists = Searcher.termLists(g)
-      val tomb = tb.value.get(g.head.shard)
-      qs.iterator.flatMap { case (qid, q) => q.run(lists, tomb).map(out(qid, _)) }
-    }
   }
 
   /** The top k of one query over the postings of `terms` — score desc,
@@ -434,7 +361,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * ([[Federated]]): the caller sums df across member indexes and every
     * member kernel scores with the combined values (paired with the
     * `statsOverride` constructor arg for global n/avgdl). Terms absent
-    * from this member still prune its postings scan to nothing — a
+    * from this member still prune its postings read to nothing — a
     * member without the term simply contributes no candidates. */
   def topKWithDf(query: String, k: Int, dfm: Map[String, Long]): DataFrame = {
     val qtf = analyzeQuery(query)
@@ -462,24 +389,24 @@ final class Searcher(spark: SparkSession, indexDir: String,
   /** Per-term global COLLECTION frequency (total occurrences — the
     * language-model statistic df can't substitute for), memoized like
     * [[dfSlice]]. The index stores no cf table (BM25 never needs one), so
-    * first sight of a term costs one pass over that term's PRUNED posting
-    * rows — decode, skip tombstoned docs, sum tfs — aggregated per term;
-    * repeat queries hit the memo. Misses cached as 0. */
+    * first sight of a term costs one shard job over its posting lists —
+    * decode, skip tombstoned docs, sum tfs — summed on the driver; repeat
+    * queries hit the memo. Misses cached as 0. */
   private val cfCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   def cfSlice(terms: Seq[String]): Map[String, Long] = {
     val missing = terms.distinct.filterNot(cfCache.containsKey)
     if (missing.nonEmpty) {
-      val tb = tombBc
-      val found = postingsDF.where(col("term").isin(missing: _*)).as[Posting]
-        .map { po =>
-          val ex = new Wand.Excl(tb.value.get(po.shard).toSeq)
-          val c = new graft.codec.Postings.Cursor(po)
-          var s = 0L
-          while (c.next()) if (!ex.excluded(c.docId)) s += c.tf
-          (po.term, s)
-        }
-        .groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
-        .collect().toMap
+      val found = shardJob.run(missing) { shards =>
+        shards.flatMap { case (lists, tomb) =>
+          lists.iterator.map { case (t, po) =>
+            val ex = new Wand.Excl(tomb.toSeq)
+            val c = new graft.codec.Postings.Cursor(po)
+            var s = 0L
+            while (c.next()) if (!ex.excluded(c.docId)) s += c.tf
+            t -> s
+          }
+        }.toArray
+      }.flatten.groupMapReduce(_._1)(_._2)(_ + _)
       missing.foreach(t => cfCache.put(t, java.lang.Long.valueOf(found.getOrElse(t, 0L))))
     }
     terms.iterator.map(t => t -> cfCache.get(t).longValue).filter(_._2 > 0L).toMap
@@ -697,54 +624,51 @@ final class Searcher(spark: SparkSession, indexDir: String,
   /** Facet value counts over the documents matching ≥ 1 analyzed query term
     * (the OR-match set — identical to the score>0 set, since this engine's
     * idf variant is strictly positive): the aggregation panel of a faceted
-    * search. Returns (value, cnt), cnt desc / value asc, top `topN`. Scale
-    * shape as [[facetPanel]]. */
+    * search. Returns (value, cnt), cnt desc / value asc, top `topN`, as
+    * a local frame. Scale shape as [[facetPanel]]. */
   def facetCounts(query: String, facetCol: String, topN: Int): DataFrame =
-    facetPanel(query, Seq(facetCol)).select($"value", $"cnt")
-      .orderBy(desc("cnt"), asc("value")).limit(topN)
+    facetTop(query, Seq(facetCol), topN).map { case (_, v, c) => (v, c) }.toDF("value", "cnt")
 
   /** Multi-column facet panel: value counts for SEVERAL facet columns in
     * ONE kernel pass ([[facetPanel]]) — calling facetCounts per column would
     * rescan the query postings and rebuild the match bitmap |columns|
     * times. Returns (facet, value, cnt), the top `topN` values per facet,
-    * ordered (facet asc, cnt desc, value asc). */
-  def facetCountsMulti(query: String, facetCols: Seq[String], topN: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("facet").orderBy(desc("cnt"), asc("value"))
-    facetPanel(query, facetCols)
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" <= topN).drop("rn")
-      .orderBy(asc("facet"), desc("cnt"), asc("value"))
+    * ordered (facet asc, cnt desc, value asc), as a local frame. */
+  def facetCountsMulti(query: String, facetCols: Seq[String], topN: Int): DataFrame =
+    facetTop(query, facetCols, topN).toDF("facet", "value", "cnt")
+
+  /** The top `topN` values of each facet column of [[facetPanel]], ordered
+    * (facet asc, cnt desc, value asc) in Spark's string order. */
+  private def facetTop(query: String, facetCols: Seq[String], topN: Int): Seq[(String, String, Long)] = {
+    val byCount = Ordering.by((r: (String, String, Long)) => (-r._3, r._2))(
+      Ordering.Tuple2(Ordering.Long, Searcher.SparkStrings))
+    facetPanel(query, facetCols).groupBy(_._1).toSeq.sortBy(_._1)(Searcher.SparkStrings)
+      .flatMap(_._2.sorted(byCount).take(topN))
   }
 
   /** (facet, value, cnt) for every value of the columns `facetCols` over
-    * the query's OR-match set. One term+prefix-pruned postings scan (the
-    * facet lists found by a PREFIX-pushed filter — StringStartsWith reaches
-    * Parquet — never an explode/join of the corpus); per shard, the query
-    * clauses under a constant scorer stream their ascending-docId union
-    * ([[ShardQuery]] with the [[ShardQuery.All]] sink, tombstones excluded
-    * like every kernel) into [[Wand.facetCounts]]. Zero-exchange under the
-    * colocated layout; the only shuffle is the ≤ shards·|values| aggregate. */
-  private def facetPanel(query: String, facetCols: Seq[String]): DataFrame =
-    (if (facetCols.isEmpty) None else analyzed(query))
-      .fold(Seq.empty[(String, String, Long)].toDF("facet", "value", "cnt")) { case (_, dfm) =>
-        val qterms = dfm.keys.toSeq.sorted
-        val P = graft.model.Facets.Prefix
-        val q = ShardQuery(qterms.map(ShardQuery.clause(_, Searcher.Matched)), sink = ShardQuery.All)
-        val scanned = facetCols.distinct.sorted
-          .foldLeft(col("term").isin(qterms: _*))((c, f) => c || col("term").startsWith(P + f + P))
-        val tb = tombBc
-        perShard(postingsDF.where(scanned).as[Posting]) { g =>
-          val lists = Searcher.termLists(g)
-          Wand.facetCounts(q.run(lists, tb.value.get(g.head.shard)),
-              lists.collect { case (t, p) if t.startsWith(P) => p }.toSeq)
-            .map { case (t, c) =>
-              val sep = t.indexOf(P, 1)
-              (t.substring(1, sep), t.substring(sep + 1), c)
-            }
-        }.toDF("facet", "value", "cnt")
-          .groupBy($"facet", $"value").agg(sum($"cnt").as("cnt"))
-      }
+    * the query's OR-match set. One shard job reads the
+    * query terms' lists and every facet list of those columns (a prefix
+    * point read of `\u0001col\u0001`, never an explode/join of the
+    * corpus); per shard, the query clauses under a constant scorer stream
+    * their ascending-docId union ([[ShardQuery]] with the
+    * [[ShardQuery.All]] sink, tombstones excluded like every kernel) into
+    * [[Wand.facetCounts]]; the driver sums the ≤ shards·|values| counts. */
+  private def facetPanel(query: String, facetCols: Seq[String]): Seq[(String, String, Long)] = {
+    val P = graft.model.Facets.Prefix
+    (if (facetCols.isEmpty) None else analyzed(query)).fold(Seq.empty[(String, Long)]) { case (_, dfm) =>
+      val qterms = dfm.keys.toSeq.sorted
+      val q = ShardQuery(qterms.map(ShardQuery.clause(_, Searcher.Matched)), sink = ShardQuery.All)
+      shardJob.run(qterms, facetCols.distinct.sorted.map(f => P + f + P)) { shards =>
+        shards.flatMap { case (lists, tomb) =>
+          Wand.facetCounts(q.run(lists, tomb), lists.collect { case (t, p) if t.startsWith(P) => p }.toSeq)
+        }.toArray
+      }.flatten.groupMapReduce(_._1)(_._2)(_ + _).toSeq
+    }.map { case (t, c) =>
+      val sep = t.indexOf(P, 1)
+      (t.substring(1, sep), t.substring(sep + 1), c)
+    }
+  }
 
   /** Numeric-range facet panel: matching-doc counts per [lo, hi) bucket of
     * a NUMERIC facet column. `bounds` are the B+1 ascending bucket edges;
@@ -787,11 +711,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
         terms -> ShardQuery(bm25(qtf.toSeq, dfm), terms, sink = ShardQuery.All)
     })
 
-  /** Every match of a query over the postings of its terms, as (docId,
-    * score); no rows for None. */
+  /** Every match of a query over the postings of its terms, as the shard
+    * job's lazy (docId, score) frame; no rows for None. */
   private def matchFrame(q: Option[(Seq[String], ShardQuery)]): DataFrame =
     q.fold(Seq.empty[(Long, Double)].toDF("docId", "score")) { case (terms, sq) =>
-      shardRun(terms, Seq("q" -> sq))((_, s) => (s.docId, s.score)).toDF("docId", "score")
+      shardJob.frame(terms) { shards =>
+        shards.flatMap { case (lists, tomb) => sq.run(lists, tomb).map(s => (s.docId, s.score)) }
+      }.toDF("docId", "score")
     }
 
   /** Batched multi-query top-k: ONE pass over the index answers every
@@ -811,12 +737,16 @@ final class Searcher(spark: SparkSession, indexDir: String,
     val dfm = dfSlice(allTerms)
     val qs = qterms.map { case (qid, qtf) =>
       qid -> ShardQuery(bm25(qtf.toSeq, dfm), sink = ShardQuery.Top(k)) }
-    // Batch mode trades one narrow exchange (the pruned rows only) for
-    // shard-level parallelism of the kernel work — the colocated read may
-    // pack a small index into few partitions, which serializes a 100-query
-    // batch. Each task resolves its best k candidates per query in place.
-    val lookup = hitLookup
-    val perQid = shardRun(allTerms, qs, forceGrouped = true)((qid, s) => (qid, s.docId, s.score))
+    // One narrow exchange of the pruned rows buys shard-level parallelism
+    // of the kernel work. Each task resolves its best k candidates per
+    // query in place.
+    val (tb, lookup) = (tombBc, hitLookup)
+    val perQid = postingsDF.where(col("term").isin(allTerms: _*)).as[Posting]
+      .groupByKey(_.shard).flatMapGroups { (shard, rows) =>
+        val lists = Searcher.termLists(rows.toSeq)
+        qs.iterator.flatMap { case (qid, q) =>
+          q.run(lists, tb.value.get(shard)).map(s => (qid, s.docId, s.score)) }
+      }
       .mapPartitions(it => lookup.resolveTopK(it, k))
       .rdd.mapPartitions(hs => Iterator(hs.toSeq.groupBy(_.qid)))
       .fold(Map.empty[String, Seq[Hit]])(HitLookup.mergeTopK(_, _, k))
@@ -827,7 +757,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
 
   /** Every doc with ≥1 analyzed query term, as (docId, score) with the
     * OR-mode BM25 score — [[scoreAll]]'s positive-score set served from
-    * the INDEX: a pruned postings scan + the streaming [[Wand.union]]
+    * the INDEX: the shard job's frame of the streaming [[Wand.union]]
     * kernel, cost ∝ the union of the query terms' posting lists, never an
     * analyzed-table scan. The backbone of scoring aggregations
     * (function_score, top_hits, collapse, recency rerank): they need every

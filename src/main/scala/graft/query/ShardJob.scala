@@ -1,21 +1,36 @@
 package graft.query
 
-import graft.model.Posting
+import graft.model.{PosPosting, Posting}
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.functions.col
 import org.apache.spark.util.SerializableConfiguration
 import scala.reflect.ClassTag
 
-/** The prepared shard job of one [[Searcher]]: its postings files (base
-  * and every delta segment of its generation), grouped once at
-  * construction so that every file holding a shard lands in one
-  * partition, kept as an RDD of file lists. A call is ONE `runJob` over
-  * it: each task point-reads its files' rows of the call's terms
-  * ([[PointRead]]), groups them by shard and hands every shard's term
-  * lists and tombstones to the call's task body — no Dataset, no Catalyst
-  * plan, no exchange.
+/** The one way an index kernel reaches whole shards: the files of a
+  * shard-keyed index table (postings — base and every delta segment of a
+  * generation — or the positional sidecar), grouped once at construction
+  * so that every file holding a shard lands in one partition, kept as an
+  * RDD of file lists. Each task point-reads its files' rows of the call's
+  * terms ([[PointRead]]), groups them by shard, decodes each shard's rows
+  * into the kernel's input ([[ShardJob.Rows]]) and hands it, with the
+  * shard's delete tombstones, to the call's task body — no Catalyst scan,
+  * no exchange, the same plan whatever the layout or the session's split
+  * conf.
+  *
+  * Two entry points over the one RDD:
+  *  - [[run]]: ONE eager `runJob`, one result per partition, for answers
+  *    that are driver-sized (top-k heaps, cf sums, facet counts);
+  *  - [[frame]]: a lazy frame of the task's rows, for relational
+  *    consumers that join or aggregate every match. Its size estimate is
+  *    the total bytes of the files it reads, as a scan of them would
+  *    report — an RDD frame otherwise reads as
+  *    `spark.sql.defaultSizeInBytes`, and no join against it could
+  *    broadcast.
   *
   * Grouping reads each file's footer: the row groups' [min, max] `shard`
   * ranges are swept in ascending order and files with overlapping ranges
@@ -25,27 +40,67 @@ import scala.reflect.ClassTag
   * same rule. Groups are packed, largest first, into at most
   * `defaultParallelism` partitions. A footer that cannot be read fails
   * construction with the file named — there is no fallback plan. */
-final class ShardJob private (parts: Option[RDD[Array[String]]],
-                              conf: Broadcast[SerializableConfiguration],
-                              tombstones: Broadcast[Map[Int, Posting]],
-                              /** Largest postings file, in bytes. */
-                              val maxFileLen: Long) {
+final class ShardJob[G] private (spark: SparkSession,
+                                 name: String,
+                                 parts: Option[RDD[Array[String]]],
+                                 conf: Broadcast[SerializableConfiguration],
+                                 tombstones: Broadcast[Map[Int, Posting]],
+                                 rows: ShardJob.Rows[G],
+                                 bytes: Long) {
 
   /** `task` once per partition over the shards its files hold of `terms`
-    * — (term → merged list, tombstones) per shard with ≥ 1 row — one
-    * result per partition. No job when there is nothing to read. */
-  def run[R: ClassTag](terms: Seq[String])(
-      task: Iterator[(Map[String, Posting], Option[Posting])] => R): Array[R] =
-    parts.filter(_ => terms.nonEmpty).fold(Array.empty[R]) { rdd =>
-      val (c, tb, want) = (conf, tombstones, terms.distinct)
-      rdd.sparkContext.runJob(rdd, (files: Iterator[Array[String]]) =>
-        task(ShardJob.shards(files.flatten, c.value.value, want, tb.value)))
+    * and of the terms starting with one of `prefixes` — (decoded rows,
+    * tombstones) per shard with ≥ 1 row — one result per partition. No
+    * job when there is nothing to read. */
+  def run[R: ClassTag](terms: Seq[String], prefixes: Seq[String] = Nil)(
+      task: Iterator[(G, Option[Posting])] => R): Array[R] =
+    parts.filter(_ => terms.nonEmpty || prefixes.nonEmpty).fold(Array.empty[R]) { rdd =>
+      val read = reader(terms, prefixes)
+      rdd.sparkContext.runJob(rdd, (files: Iterator[Array[String]]) => task(read(files.flatten)))
     }
+
+  /** The rows `task` yields over the shards of `terms`, as a lazy frame
+    * (columns named by `T`'s encoder) that re-runs the read per action. */
+  def frame[T: Encoder](terms: Seq[String])(
+      task: Iterator[(G, Option[Posting])] => Iterator[T]): DataFrame = {
+    val (enc, read) = (encoderFor[T], reader(terms, Nil))
+    val out = parts.filter(_ => terms.nonEmpty).fold[RDD[InternalRow]](spark.sparkContext.emptyRDD) {
+      _.mapPartitions { files =>
+        val ser = enc.createSerializer()
+        task(read(files.flatten)).map(t => ser(t).copy())
+      }
+    }.setName(name)
+    org.apache.spark.sql.graftbridge.Bridge.frame(spark, enc.schema, out, bytes)
+  }
+
+  /** The task-side read of `terms` and `prefixes`: captures plain values,
+    * never this job. */
+  private def reader(terms: Seq[String], prefixes: Seq[String]): Iterator[String] => Iterator[(G, Option[Posting])] = {
+    val (c, tb, r, want, pre) = (conf, tombstones, rows, terms.distinct, prefixes.distinct)
+    files => ShardJob.shards(files, c.value.value, PointRead.strings(want) ++ PointRead.prefixes(pre), tb.value, r)
+  }
 }
 
 object ShardJob {
-  def apply(sc: SparkContext, files: Seq[String], conf: Broadcast[SerializableConfiguration],
-            tombstones: Broadcast[Map[Int, Posting]]): ShardJob = {
+  /** What a job reads of its files: the columns (`shard` and `term`
+    * first), and one shard's records decoded into its kernel's input. */
+  final case class Rows[G](columns: Seq[String], decode: Seq[PointRead.Record] => G)
+
+  /** Postings: one shard's lists by term, segments merged. */
+  val PostingRows: Rows[Map[String, Posting]] = Rows(
+    Seq("shard", "term", "count", "maxTf", "docsBlob", "tfsBlob", "lensBlob",
+      "blockLast", "blockMaxTf", "blockDocOff", "blockTfOff", "blockLenOff"),
+    rs => Searcher.termLists(rs.map(r => Posting(r.int(0), r.string(1), r.int(2), r.int(3),
+      r.bytes(4), r.bytes(5), r.bytes(6), r.longs(7), r.ints(8), r.ints(9), r.ints(10), r.ints(11)))))
+
+  /** The positional sidecar: one shard's position lists. */
+  val PositionRows: Rows[Seq[PosPosting]] = Rows(
+    Seq("shard", "term", "count", "docsBlob", "cntsBlob", "posBlob"),
+    _.map(r => PosPosting(r.int(0), r.string(1), r.int(2), r.bytes(3), r.bytes(4), r.bytes(5))))
+
+  def apply[G](spark: SparkSession, files: Seq[String], conf: Broadcast[SerializableConfiguration],
+               tombstones: Broadcast[Map[Int, Posting]], rows: Rows[G]): ShardJob[G] = {
+    val sc = spark.sparkContext
     val hconf = conf.value.value
     val sized = files.sorted.map { f =>
       (f, PointRead.ranges(f, hconf, "shard"),
@@ -59,9 +114,28 @@ object ShardJob {
       val i = bins.indices.minBy(bins(_)._1)
       bins(i) = (bins(i)._1 + g.map(_._3).sum, bins(i)._2 ++ g.map(_._1))
     }
-    new ShardJob(
+    val dirs = files.map(f => new org.apache.hadoop.fs.Path(f).getParent.toString).distinct.sorted
+    new ShardJob(spark, s"ShardJob ${dirs.mkString(", ")}",
       if (bins.isEmpty) None else Some(sc.parallelize(bins.map(_._2.toArray).toSeq, bins.length)),
-      conf, tombstones, sized.map(_._3).foldLeft(0L)(math.max))
+      conf, tombstones, rows, sized.map(_._3).sum)
+  }
+
+  /** Delete tombstones per shard, read from the tombstone table at `path`
+    * and encoded once into the VByte posting form every kernel excludes
+    * with a forward-only cursor ([[Wand.Excl]]), then broadcast; empty
+    * when there is none. Residency is bounded by DELETED docs (≈ 1-2
+    * bytes/doc after delta encoding). */
+  def tombstones(spark: SparkSession, path: Option[String]): Broadcast[Map[Int, Posting]] = {
+    import spark.implicits._
+    spark.sparkContext.broadcast(path.fold(Map.empty[Int, Posting]) { p =>
+      graft.sources.TableIO.read(spark, p)
+        .select(col("shard"), col("docId")).as[(Int, Long)].collect()
+        .groupBy(_._1).map { case (s, arr) =>
+          val docs = arr.map(_._2).sorted
+          s -> graft.codec.Postings.encode(s, "\u0000tombstone", docs,
+            Array.fill(docs.length)(1), Array.fill(docs.length)(1))
+        }
+    })
   }
 
   /** Indexes of the files in each group: files whose row-group ranges
@@ -78,18 +152,9 @@ object ShardJob {
     ranges.indices.filter(ranges(_).nonEmpty).groupBy(root).values.toSeq.map(_.sorted).sortBy(_.head)
   }
 
-  private val Columns = Seq("shard", "term", "count", "maxTf", "docsBlob", "tfsBlob", "lensBlob",
-    "blockLast", "blockMaxTf", "blockDocOff", "blockTfOff", "blockLenOff")
-
-  /** The rows of `terms` in `files`, as (term lists, tombstones) per shard. */
-  private def shards(files: Iterator[String], conf: Configuration, terms: Seq[String],
-                     tombs: Map[Int, Posting]): Iterator[(Map[String, Posting], Option[Posting])] = {
-    val keys = PointRead.strings(terms)
-    files.flatMap(f => PointRead.rows(f, conf, "term", keys, Columns).map(posting)).toSeq
-      .groupBy(_.shard).iterator.map { case (s, ps) => (Searcher.termLists(ps), tombs.get(s)) }
-  }
-
-  private def posting(r: PointRead.Record): Posting =
-    Posting(r.int(0), r.string(1), r.int(2), r.int(3), r.bytes(4), r.bytes(5), r.bytes(6),
-      r.longs(7), r.ints(8), r.ints(9), r.ints(10), r.ints(11))
+  /** The rows of `keys` in `files`, as (decoded rows, tombstones) per shard. */
+  private def shards[G](files: Iterator[String], conf: Configuration, keys: Set[Any],
+                        tombs: Map[Int, Posting], rows: Rows[G]): Iterator[(G, Option[Posting])] =
+    files.flatMap(f => PointRead.rows(f, conf, "term", keys, rows.columns)).toSeq
+      .groupBy(_.int(0)).iterator.map { case (s, rs) => (rows.decode(rs), tombs.get(s)) }
 }

@@ -69,7 +69,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("tombstone exclusion keeps the WAND plan shuffle-free") {
     // deletes must not change the serving shape: the tombstone set rides
-    // the existing broadcast into the colocated kernel — no Exchange, no
+    // the existing broadcast into the shard-job kernel — no Exchange, no
     // join of the corpus appears in the plan
     val d = TestSpark.tmpDir("plandel")
     IndexBuilder.build(spark, Transcripts.synth(spark, 3000, 7).toDF(), d,
@@ -84,9 +84,8 @@ class PlanSpec extends AnyFunSuite {
     assertOneJob("tombstoned topKAnd")(s.topKAnd("quick brown fox", 10))
   }
 
-  test("AND-mode, matchAll and boolean plans are shuffle-free too (colocated kernel)") {
+  test("AND-mode, matchAll and boolean plans are shuffle-free too (shard-job kernel)") {
     val s = new Searcher(spark, dir)
-    assert(s.colocated)
     val plan = s.matchAllDocs("quick brown fox").queryExecution.executedPlan.toString
     val shuffles = "(?m)^.*Exchange.*$".r.findAllIn(plan).toList
     assert(shuffles.isEmpty, s"unexpected Exchange(s): $shuffles\nin plan:\n${plan.take(4000)}")
@@ -118,15 +117,15 @@ class PlanSpec extends AnyFunSuite {
       "significant-terms must never sort-merge the corpus")
   }
 
-  test("positional phrase match: pushed term filter, shuffle-free when colocated") {
+  test("positional phrase match: no FileScan of positions/, no Exchange") {
+    // the kernel reads the query tokens' lists inside its shard job
+    // (ShardJobSpec pins what a task reads), not through a table scan
     graft.build.PositionIndex.build(spark, Transcripts.synth(spark, 3000, 7).toDF(), dir)
     val ps = new graft.query.PosSearcher(spark, dir)
-    assert(ps.colocated, "positions layout must satisfy the colocated precondition at test scale")
-    val plan = ps.matchDocs(Seq("the", "quick", "brown"))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") &&
-      (plan.contains("In(term") || plan.contains("EqualTo(term")),
-      s"no pushed term filter in:\n${plan.take(3000)}")
+    val executed = ps.matchDocs(Seq("the", "quick", "brown")).queryExecution.executedPlan
+    val scanned = PlanProbe.scannedPaths(executed)
+    assert(!scanned.exists(_.contains("/positions")), s"positions/ scanned: $scanned")
+    val plan = executed.toString
     val shuffles = "(?m)^.*Exchange.*$".r.findAllIn(plan).toList
     assert(shuffles.isEmpty, s"unexpected Exchange(s): $shuffles\nin plan:\n${plan.take(4000)}")
   }
@@ -137,25 +136,39 @@ class PlanSpec extends AnyFunSuite {
       s"terms column not pruned from doc-meta scan:\n${plan.take(3000)}")
   }
 
-  test("conf drift: shrinking split sizes mid-session flips colocated off; grouped fallback matches") {
-    val s = new Searcher(spark, dir)
-    assert(s.colocated)
-    val before = s.topK("quick brown fox tok0", 10)
-      .select("docId", "score").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+  test("conf drift: 1k splits change no answer of topK/matchAllDocs/scoreMatches/facetCounts and add no Exchange") {
+    // split sizes are mutable session state (IndexBuilder.build lowers
+    // maxPartitionBytes on the same session); a kernel that scored each
+    // read partition alone would score split shard fragments independently
+    val d = TestSpark.tmpDir("plandrift")
+    IndexBuilder.build(spark, Transcripts.synth(spark, 3000, 7).toDF(), d,
+      IndexBuilder.Config(shards = 8, facetCols = Seq("role", "tool")))
+    val s = new Searcher(spark, d)
+    val q = "quick brown fox tok0"
+    val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "topK" -> (() => s.topK(q, 10)),
+      "matchAllDocs" -> (() => s.matchAllDocs("quick brown")),
+      "scoreMatches" -> (() => s.scoreMatches(q)),
+      "facetCounts" -> (() => s.facetCounts(q, "role", 10)))
+    def answers(): Seq[Seq[String]] = calls.map(_._2().collect().map(_.toString).sorted.toSeq)
+    val before = answers()
     val prev = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
     try {
-      // the soundness check must track the LIVE conf — a stale snapshot
-      // would score split shard fragments independently (silent wrong top-k)
-      assert(!s.colocated)
-      val after = s.topK("quick brown fox tok0", 10)
-        .select("docId", "score").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(after == before, "grouped fallback must reproduce the colocated results")
+      assert(spark.read.parquet(s"$d/postings").rdd.getNumPartitions >
+        new java.io.File(s"$d/postings").listFiles().count(_.getName.endsWith(".parquet")),
+        "1k splits must split postings files across Dataset read partitions")
+      assert(answers() == before, "1k splits changed an answer")
+      for ((label, call) <- calls) {
+        val r = PlanProbe.ran(spark)(call().collect())
+        val exchanges = r.plans.flatMap(PlanProbe.allNodes).filter(_.nodeName.contains("Exchange"))
+        assert(r.shuffleBytes == 0L && exchanges.isEmpty,
+          s"$label under 1k splits shuffled ${r.shuffleBytes} bytes through $exchanges")
+      }
     } finally prev match {
       case Some(v) => spark.conf.set("spark.sql.files.maxPartitionBytes", v)
       case None => spark.conf.unset("spark.sql.files.maxPartitionBytes")
     }
-    assert(s.colocated, "restoring the conf restores the zero-exchange path")
   }
 
   test("topKBatch resolves hits in its shard tasks: at most 2 jobs") {
@@ -392,7 +405,7 @@ class PlanSpec extends AnyFunSuite {
   test("scoring aggregations read postings + docmeta only — never analyzed or the source table") {
     // the round-4 scale-killer: funcScore/topHits (and collapse/time)
     // exploded the ENTIRE analyzed table per query via Searcher.scoreAll;
-    // kernel-backed, their plans must touch only the pruned postings scan
+    // kernel-backed, their plans must touch only the postings shard job
     // and the doc-meta sidecar
     val sf = "/root/testdata/sf0.001"
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -418,8 +431,9 @@ class PlanSpec extends AnyFunSuite {
       assert(!cached.exists(_.output.exists(a =>
           a.name == "terms" || a.name == "tfs" || a.name == "text")),
         s"$name reads analyzed/source columns through a cached table")
-      assert(paths.exists(_.contains("/postings")),
-        s"$name must serve its match set from the postings scan: $paths")
+      val jobs = nodes.collect { case r: org.apache.spark.sql.execution.RDDScanExec => r.rdd.name }
+      assert(jobs.exists(n => n != null && n.startsWith("ShardJob") && n.contains("/postings")),
+        s"$name must serve its match set from the postings shard job: $jobs")
       assert(paths.exists(_.contains("/docmeta")),
         s"$name must resolve metadata from the docmeta sidecar: $paths")
     }

@@ -75,12 +75,15 @@ class RefreshSpec extends AnyFunSuite {
     }
     RefreshSpec.assertHitIdentities(spark, sInc, incDir, Queries)
 
-    // a term-range-partitioned build serves through the grouped path and
-    // resolves its hits there
+    // a term-range-partitioned build splits a shard's postings across
+    // files; the shard job reunites them and resolves its hits there
     val rangedDir = TestSpark.tmpDir("ranged")
     IndexBuilder.build(spark, all, rangedDir, IndexBuilder.Config(shards = 8, dictRanges = 2))
     val sRanged = new Searcher(spark, rangedDir)
-    assert(!sRanged.colocated, "a ranged build must serve through the grouped path")
+    assert(spark.read.parquet(s"$rangedDir/postings")
+      .select(col("shard"), input_file_name().as("file")).distinct()
+      .groupBy("shard").count().where(col("count") > 1).count() > 0,
+      "a ranged build must split some shard's postings across files")
     Queries.foreach(q => assertSameTopK(sFull, sRanged, q, 15))
     RefreshSpec.assertHitIdentities(spark, sRanged, rangedDir, Queries)
   }
@@ -129,10 +132,10 @@ class RefreshSpec extends AnyFunSuite {
       dir, IndexBuilder.Config(shards = 1))
     IndexBuilder.refresh(spark, dir)
     val s = new Searcher(spark, dir)
-    // single-query (colocated) path and the grouped batch path must both
+    // the single-query shard job and the grouped batch path must both
     // see the merged posting list — one hit from each segment
     val single = s.topK("zzmerge", 10).select("conv_id").as[String].collect().toSet
-    assert(single == Set("cBASE", "cDELTA"), s"colocated path saw $single")
+    assert(single == Set("cBASE", "cDELTA"), s"shard job saw $single")
     val batch = s.topKBatch(Map("q" -> "zzmerge"), 10)
       .select("conv_id").as[String].collect().toSet
     assert(batch == Set("cBASE", "cDELTA"), s"grouped path saw $batch")
