@@ -3,7 +3,7 @@ package graft.build
 import graft.analysis.{Analyzer, StopWords}
 import graft.codec.{Postings, VByte}
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 import scala.util.chaining._
@@ -122,11 +122,7 @@ object IndexBuilder {
     * documents become searchable after the next [[refresh]]. */
   def append(spark: SparkSession, input: DataFrame, indexDir: String,
              cfg: Config = Config()): Unit = leased(indexDir, spark) {
-    // never guess the shard count: routing rows with the wrong modulus
-    // would corrupt the shard layout (refresh silently drops out-of-range
-    // shards, HWM arrays overflow)
-    val shards = metaShards(indexDir).getOrElse(
-      throw new IllegalStateException(s"$indexDir has no index_meta manifest"))
+    val shards = builtShards(indexDir)
     val parts = partsFor(cfg, shards)
     val pkeys = ShardKeys.keys(shards, parts)
     val hwm = Hwm.read(spark, indexDir, shards)
@@ -239,8 +235,7 @@ object IndexBuilder {
   private def deleteCore(spark: SparkSession, indexDir: String,
                          doom: DataFrame => DataFrame): Long = leased(indexDir, spark) {
     import spark.implicits._
-    val shards = metaShards(indexDir).getOrElse(
-      throw new IllegalStateException(s"$indexDir has no index_meta manifest"))
+    val shards = builtShards(indexDir)
     val gen0 = committedGen(indexDir)
     val cover = readCoverAsOf(spark, indexDir, shards, gen0)
     val analyzed = graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
@@ -270,12 +265,8 @@ object IndexBuilder {
         s"$indexDir/tombstones_g$gen")
 
       val st = graft.sources.TableIO.read(spark, statsPathAsOf(indexDir, gen0)).head()
-      val oldN = st.getAs[Long]("n")
-      val oldSum =
-        if (st.schema.fieldNames.contains("sumlen")) st.getAs[Long]("sumlen")
-        else math.round(oldN * st.getAs[Double]("avgdl"))
-      val n2 = oldN - dn
-      val sum2 = oldSum - dsum
+      val n2 = st.getAs[Long]("n") - dn
+      val sum2 = sumlen(st) - dsum
       Seq((n2, if (n2 > 0) sum2.toDouble / n2 else 0.0, sum2))
         .toDF("n", "avgdl", "sumlen")
         .pipe(df => graft.sources.TableIO.write(df, s"$indexDir/stats_g$gen"))
@@ -324,8 +315,7 @@ object IndexBuilder {
     * updated in place. */
   def refresh(spark: SparkSession, indexDir: String): Unit = leased(indexDir, spark) {
     import spark.implicits._
-    val shards = metaShards(indexDir).getOrElse(
-      throw new IllegalStateException(s"$indexDir has no index_meta manifest"))
+    val shards = builtShards(indexDir)
     val parts = shards
     val pkeys = ShardKeys.keys(shards, parts)
     val cover = readCover(spark, indexDir, shards)
@@ -347,12 +337,8 @@ object IndexBuilder {
 
     // stats: exact incremental update via the persisted length sum
     val st = graft.sources.TableIO.read(spark, statsPath(indexDir)).head()
-    val oldN = st.getAs[Long]("n")
-    val oldSum =
-      if (st.schema.fieldNames.contains("sumlen")) st.getAs[Long]("sumlen")
-      else math.round(oldN * st.getAs[Double]("avgdl"))
-    val n2 = oldN + dn
-    val sum2 = oldSum + dsum
+    val n2 = st.getAs[Long]("n") + dn
+    val sum2 = sumlen(st) + dsum
     Seq((n2, sum2.toDouble / n2, sum2)).toDF("n", "avgdl", "sumlen")
       .pipe(df => graft.sources.TableIO.write(df, s"$indexDir/stats_g$gen"))
 
@@ -398,8 +384,7 @@ object IndexBuilder {
     * requires no concurrent refresh, and a crash during the base-table
     * swap is repaired by re-running compact. */
   def compact(spark: SparkSession, indexDir: String): Unit = leased(indexDir, spark) {
-    val shards = metaShards(indexDir).getOrElse(
-      throw new IllegalStateException(s"$indexDir has no index_meta manifest"))
+    val shards = builtShards(indexDir)
     val parts = shards
     val pkeys = ShardKeys.keys(shards, parts)
     val cover = readCover(spark, indexDir, shards)
@@ -411,10 +396,7 @@ object IndexBuilder {
     // rows (rewriting the corpus-sized analyzed table is a separate vacuum
     // cadence), and serving-side exclusion over already-absent docIds is
     // free (the exclusion cursors never match).
-    val analyzed = tombstonePathAsOf(indexDir, committedGen(indexDir)).fold(analyzed0)(p =>
-      analyzed0.join(
-        broadcast(graft.sources.TableIO.read(spark, p).select(col("docId"))),
-        Seq("docId"), "left_anti"))
+    val analyzed = withoutTombstones(analyzed0, tombstonePathAsOf(indexDir, committedGen(indexDir)))
     graft.sources.TableIO.write(
       assemblePostings(spark, analyzed, parts, pkeys).toDF(), s"$indexDir/postings_tmp")
     // Segments are deleted BEFORE the base swap: a crash in between leaves
@@ -453,11 +435,9 @@ object IndexBuilder {
     compact(spark, indexDir)
     val gen = committedGen(indexDir)
     tombstonePathAsOf(indexDir, gen).foreach { p =>
-      val tomb = broadcast(
-        graft.sources.TableIO.read(spark, p).select(col("docId")))
-      val analyzed = graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
       graft.sources.TableIO.write(
-        analyzed.join(tomb, Seq("docId"), "left_anti"), s"$indexDir/analyzed_tmp")
+        withoutTombstones(graft.sources.TableIO.read(spark, s"$indexDir/analyzed"), Some(p)),
+        s"$indexDir/analyzed_tmp")
       swapDir(spark, s"$indexDir/analyzed_tmp", s"$indexDir/analyzed")
       val dir = new org.apache.hadoop.fs.Path(indexDir)
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -497,13 +477,9 @@ object IndexBuilder {
     val pkeys = ShardKeys.keys(cfg.shards, parts)
     stage(spark, outDir, "analyzed") { () =>
       val survivors = srcDirs.map { src =>
-        val a0 = graft.sources.TableIO.read(spark, s"$src/analyzed")
-        val a = tombstonePathAsOf(src, committedGen(src)).fold(a0)(p =>
-          a0.join(
-            broadcast(graft.sources.TableIO.read(spark, p).select(col("docId"))),
-            Seq("docId"), "left_anti"))
-        a.select(col("conv_id"), col("turn_idx"), col("len"),
-          col("terms"), col("tfs"))
+        withoutTombstones(graft.sources.TableIO.read(spark, s"$src/analyzed"),
+          tombstonePathAsOf(src, committedGen(src)))
+          .select(col("conv_id"), col("turn_idx"), col("len"), col("terms"), col("tfs"))
       }.reduce(_ unionByName _)
       val rows = survivors
         .withColumn("shard", pmod(hash(col("conv_id")), lit(cfg.shards)).cast("int"))
@@ -660,6 +636,26 @@ object IndexBuilder {
   /** Shard count recorded at build time (index_meta manifest). */
   def metaShards(indexDir: String): Option[Int] =
     Manifests.read(indexDir, "index_meta").map(_.rows.toInt)
+
+  /** [[metaShards]] of an index a maintenance op mutates. Never guessed:
+    * routing rows with the wrong modulus would corrupt the shard layout
+    * (refresh silently drops out-of-range shards, HWM arrays overflow). */
+  private def builtShards(indexDir: String): Int = metaShards(indexDir).getOrElse(
+    throw new IllegalStateException(s"$indexDir has no index_meta manifest"))
+
+  /** Exact total token count of a stats row; legacy stats tables predate
+    * the `sumlen` column, whose value is then reconstructed as
+    * round(n·avgdl). */
+  private[graft] def sumlen(stats: Row): Long =
+    if (stats.schema.fieldNames.contains("sumlen")) stats.getAs[Long]("sumlen")
+    else math.round(stats.getAs[Long]("n") * stats.getAs[Double]("avgdl"))
+
+  /** `df` without the docs listed in the tombstone table at `tombstones`:
+    * one broadcast anti-join (the table is tiny); `df` itself for None. */
+  private[graft] def withoutTombstones(df: DataFrame, tombstones: Option[String]): DataFrame =
+    tombstones.fold(df)(p => df.join(
+      broadcast(graft.sources.TableIO.read(df.sparkSession, p).select(col("docId"))),
+      Seq("docId"), "left_anti"))
 
   // ---- analyzed-row production (build + append share this) -----------------
 

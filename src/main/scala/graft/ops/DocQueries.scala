@@ -1,8 +1,8 @@
 package graft.ops
 
-import graft.build.IndexBuilder
-import graft.codec.Postings
-import graft.model.Posting
+import graft.analysis.Analyzer
+import graft.build.{IndexBuilder, Manifests}
+import graft.model.StageManifest
 import graft.query.{Bm25, Cascade, LmStage, PosSearcher, Searcher, TwoPass}
 import graft.sources.Transcripts
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -15,6 +15,13 @@ import java.util.concurrent.ConcurrentHashMap
   *
   * Parity rules (see OracleSql): round(…,4) at the end, cuts keyed on
   * (round(score,4), doc_id).
+  *
+  * Index plumbing is two memos: every index a query reads is derived from
+  * the corpus by [[derived]] (one registry of index dirs, each committed
+  * by one done-sentinel), and every Searcher over them comes from one
+  * memo keyed by (index dir, snapshot generation) — the one place a bound
+  * on serving state goes. Beside them sit only the positional searchers,
+  * the federated readers and each corpus's max doc_id.
   */
 object DocQueries {
 
@@ -22,9 +29,34 @@ object DocQueries {
   val P: Bm25.Params = Bm25.RefDefaults
   val Shards = 8
 
-  private val indexes = new ConcurrentHashMap[String, String]()
-  private val searchers = new ConcurrentHashMap[String, Searcher]()
+  private val derivedDirs = new ConcurrentHashMap[String, String]()
+  private val searchers = new ConcurrentHashMap[(String, Long), Searcher]()
   private val maxDocIds = new ConcurrentHashMap[String, java.lang.Long]()
+
+  /** The index dir `tag` derives from sfDir's documents table, made by
+    * `make(docs, dir)` at most once per JVM. The dir is version-stamped
+    * under `java.io.tmpdir` (a format change never resumes a stale
+    * index). A finished `make` commits the dir's `derived` sentinel
+    * manifest; a dir without it is the leftover of a killed JVM, deleted
+    * and made again, and a dir with it is reused as is. */
+  private[graft] def derived(spark: SparkSession, sfDir: String, tag: String)(
+      make: (DataFrame, String) => Unit): String =
+    derivedDirs.computeIfAbsent(sys.props("java.io.tmpdir") +
+        s"/graft_${tag}_v${IndexBuilder.FormatVersion}_${Integer.toHexString(sfDir.hashCode)}", dir => {
+      if (!Manifests.isDone(dir, "derived")) {
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+        make(spark.read.parquet(s"$sfDir/documents.parquet"), dir)
+        Manifests.write(dir, StageManifest("derived", 1, 0, "done", 0))
+      }
+      dir
+    })
+
+  /** The cached Searcher over `dir` as of generation `asOfGen` (-1 =
+    * latest); `normalizer` must be the one the index was built with. */
+  private def searcherAt(spark: SparkSession, dir: String, asOfGen: Long = -1L,
+                         normalizer: Analyzer.Norm = Analyzer.Identity): Searcher =
+    searchers.computeIfAbsent((dir, asOfGen), _ =>
+      new Searcher(spark, dir, P, cacheTables = true, normalizer = normalizer, asOfGen = asOfGen))
 
   /** Analyzed length of the `source` metadata field under the default
     * analyzer — EXACTLY the `len` the source-field index computes for the
@@ -35,14 +67,10 @@ object DocQueries {
   private val lenSrcUdf = udf((s: String) =>
     graft.analysis.Analyzer.analyze(s, graft.analysis.StopWords.english)._1)
 
-  /** Build (or resume) the index over sfDir's documents table once per JVM. */
+  /** The main index over sfDir's documents table. */
   def indexDir(spark: SparkSession, sfDir: String): String =
-    indexes.computeIfAbsent(sfDir, _ => {
-      // version-stamped: a format change must not resume from a stale index
-      val dir = sys.props("java.io.tmpdir") +
-        s"/graft_docidx_v${IndexBuilder.FormatVersion}_${Integer.toHexString(sfDir.hashCode)}"
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .withColumn("len_src", lenSrcUdf(col("source")))
+    derived(spark, sfDir, "docidx") { (docs0, dir) =>
+      val docs = docs0.withColumn("len_src", lenSrcUdf(col("source")))
       // metaCols: the documents table's static per-doc features/group
       // columns, materialized into the index's docmeta sidecar so scoring
       // aggregations (function_score, top_hits, collapse, recency) never
@@ -52,12 +80,10 @@ object DocQueries {
         Transcripts.fromDocuments(docs, Seq("lang", "source", "n_chars", "len_src")), dir,
         IndexBuilder.Config(shards = Shards,
           metaCols = Seq("lang", "source", "n_chars", "len_src")))
-      dir
-    })
+    }
 
   def searcher(spark: SparkSession, sfDir: String): Searcher =
-    searchers.computeIfAbsent(sfDir,
-      _ => new Searcher(spark, indexDir(spark, sfDir), P, cacheTables = true))
+    searcherAt(spark, indexDir(spark, sfDir))
 
   /** The doc-meta sidecar of `s`, with an actionable failure when the
     * index was built without one (e.g. no Config.metaCols, or a merge()
@@ -74,18 +100,11 @@ object DocQueries {
   // driver records the weaker rows-only check; rank identity of the
   // stemmed path is pinned by StemmerSpec against the pure-Scala oracle
   // running the same Norm.
-  private val stemSearchers = new ConcurrentHashMap[String, Searcher]()
   private def stemSearcher(spark: SparkSession, sfDir: String): Searcher =
-    stemSearchers.computeIfAbsent(sfDir, _ => {
-      val dir = sys.props("java.io.tmpdir") +
-        s"/graft_docidx_stem_v${IndexBuilder.FormatVersion}_${Integer.toHexString(sfDir.hashCode)}"
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    searcherAt(spark, derived(spark, sfDir, "docidx_stem") { (docs, dir) =>
       IndexBuilder.build(spark, Transcripts.fromDocuments(docs), dir,
-        IndexBuilder.Config(shards = Shards,
-          normalizer = graft.analysis.Analyzer.EnglishStem))
-      new Searcher(spark, dir, P, cacheTables = true,
-        normalizer = graft.analysis.Analyzer.EnglishStem)
-    })
+        IndexBuilder.Config(shards = Shards, normalizer = Analyzer.EnglishStem))
+    }, normalizer = Analyzer.EnglishStem)
 
   /** Corpus last served by [[stemTopK]], recorded for the ORACLE-DUMP
     * path: the vocab-sized raw→stem mapping the DuckDB oracle inlines is
@@ -131,17 +150,11 @@ object DocQueries {
   // Lucene's CombinedFieldQuery / ES combined_fields computes; realizing
   // it at index time keeps the entire query path (WAND, tombstones, plan
   // shape) unchanged and the oracle expressible as a corpus-relation swap.
-  private val cfsSearchers = new ConcurrentHashMap[String, Searcher]()
   private def combinedSearcher(spark: SparkSession, sfDir: String, w: Int): Searcher =
-    cfsSearchers.computeIfAbsent(s"$sfDir#$w", _ => {
-      val dir = sys.props("java.io.tmpdir") +
-        s"/graft_docidx_cf${w}_v${IndexBuilder.FormatVersion}_${Integer.toHexString(sfDir.hashCode)}"
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .withColumn("text",
-          concat(col("text"), repeat(concat(lit(" "), col("source")), w)))
-      IndexBuilder.build(spark, Transcripts.fromDocuments(docs), dir,
+    searcherAt(spark, derived(spark, sfDir, s"docidx_cf$w") { (docs, dir) =>
+      IndexBuilder.build(spark, Transcripts.fromDocuments(docs.withColumn("text",
+          concat(col("text"), repeat(concat(lit(" "), col("source")), w)))), dir,
         IndexBuilder.Config(shards = Shards))
-      new Searcher(spark, dir, P, cacheTables = true)
     })
 
   /** Combined-fields top-k through the INDEX-TIME repetition path: the
@@ -159,21 +172,12 @@ object DocQueries {
   // form — the seam that makes combined-fields weights a QUERY-TIME knob.
   // Built WITH a docmeta sidecar so its docId → doc_id resolution is a
   // narrow cached sidecar read, like every other scoring aggregation.
-  private val srcIndexes = new ConcurrentHashMap[String, String]()
-  private def sourceIndexDir(spark: SparkSession, sfDir: String): String =
-    srcIndexes.computeIfAbsent(sfDir, _ => {
-      val dir = sys.props("java.io.tmpdir") +
-        s"/graft_docidx_src_v${IndexBuilder.FormatVersion}_${Integer.toHexString(sfDir.hashCode)}"
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .withColumn("text", col("source"))
-      IndexBuilder.build(spark, Transcripts.fromDocuments(docs, Seq("source")), dir,
-        IndexBuilder.Config(shards = Shards, metaCols = Seq("source")))
-      dir
-    })
-  private val srcSearchers = new ConcurrentHashMap[String, Searcher]()
   private def sourceSearcher(spark: SparkSession, sfDir: String): Searcher =
-    srcSearchers.computeIfAbsent(sfDir,
-      _ => new Searcher(spark, sourceIndexDir(spark, sfDir), P, cacheTables = true))
+    searcherAt(spark, derived(spark, sfDir, "docidx_src") { (docs, dir) =>
+      IndexBuilder.build(spark,
+        Transcripts.fromDocuments(docs.withColumn("text", col("source")), Seq("source")), dir,
+        IndexBuilder.Config(shards = Shards, metaCols = Seq("source")))
+    })
 
   /** Combined-fields top-k (Lucene CombinedFieldQuery / ES combined_fields,
     * BM25F-simple) with QUERY-TIME field weights: tf' = tf_text + w·tf_src,
@@ -184,11 +188,12 @@ object DocQueries {
     * changing w never rebuilds anything (the two paths are spec-pinned
     * row-identical).
     *
-    * Scale shape: both posting scans are PRUNED to the query terms (cost ∝
-    * their posting lists, never a corpus explode); per-index docId→doc_id/
-    * len resolution is the same pruned-column analyzed projection hit
-    * resolution uses; df'/query tables broadcast; one doc-keyed partial-agg
-    * shuffle sums the per-term parts; the cut is a bounded TakeOrdered. */
+    * Scale shape: each index's live postings of the query terms come from
+    * its Searcher's shard job (cost ∝ their posting lists, never a corpus
+    * explode; tombstoned docs excluded); per-index docId→doc_id/len
+    * resolution reads the cached doc-meta sidecar; df'/query tables
+    * broadcast; one doc-keyed partial-agg shuffle sums the per-term parts;
+    * the cut is a bounded TakeOrdered. */
   def combinedFieldsTopK(spark: SparkSession, sfDir: String, query: String,
                          w: Int, k: Int): DataFrame = {
     import spark.implicits._
@@ -201,21 +206,14 @@ object DocQueries {
       return Seq.empty[(Long, Double)].toDF("doc_id", "score")
     val terms = qtf.keys.toSeq.sorted
 
-    // pruned CACHED postings scans (each searcher's hot table), decoded to
-    // raw per-(term, doc) tfs — the weight is applied as arithmetic below,
-    // so each index's postings are decoded exactly ONCE (the old plan
-    // decoded the source postings twice: weight w for tf', weight 1 for df')
-    def decoded(s: Searcher): DataFrame =
-      s.postingsView.where(col("term").isin(terms: _*)).as[Posting]
-        .flatMap { po =>
-          val (docs, tfs, _) = Postings.decode(po)
-          docs.indices.iterator.map(i => (po.term, docs(i), tfs(i).toLong))
-        }.toDF("term", "docId", "tf")
-    // per-index docId → external doc_id through each index's CACHED docmeta
-    // sidecar (docvalues), never an analyzed-table scan
+    // each index's live postings give raw per-(term, doc) tfs — the weight
+    // is applied as arithmetic below, so each index's postings are decoded
+    // exactly ONCE (weight w for tf', presence for df'); per-index docId →
+    // external doc_id through each index's CACHED docmeta sidecar
+    // (docvalues), never an analyzed-table scan
     def ids(s: Searcher): DataFrame = sidecarOf(s)
       .select(col("docId"), col("conv_id").cast("long").as("doc_id"))
-    val textRows = decoded(st).join(ids(st), "docId")
+    val textRows = st.postingTfs(terms).join(ids(st), "docId")
       .select(col("term"), col("doc_id"), col("tf").as("tf_t"), lit(0L).as("tf_s"))
     // ONE union + ONE (doc, term)-keyed partial agg yields BOTH per-term
     // statistics: tf' = tf_t + w·tf_s, and df' = the per-term group count
@@ -224,7 +222,7 @@ object DocQueries {
     // the index-time repetition yardstick)
     val g0 =
       if (w == 0) textRows
-      else textRows.unionByName(decoded(ss).join(ids(ss), "docId")
+      else textRows.unionByName(ss.postingTfs(terms).join(ids(ss), "docId")
         .select(col("term"), col("doc_id"), lit(0L).as("tf_t"), col("tf").as("tf_s")))
     // pinned: g feeds BOTH tf' and df'; without the cut each consumer
     // re-runs the postings decode + union + agg (match-set-sized rows)
@@ -368,20 +366,14 @@ object DocQueries {
       .select(col("doc_id"), col("tt.terms").as("term"), col("tt.tfs").cast("long").as("tf"))
       .orderBy("doc_id", "term")
 
-  /** Codec proof: decode the compressed posting blobs back to
-    * (doc_id, term, tf) rows — must equal the DuckDB-computed TF table. */
-  def postingsRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val dir = indexDir(spark, sfDir)
-    val decoded = spark.read.parquet(s"$dir/postings").as[Posting]
-      .flatMap { p =>
-        val (docs, tfs, _) = Postings.decode(p)
-        docs.indices.map(i => (p.term, docs(i), tfs(i).toLong))
-      }.toDF("term", "docId", "tf")
-    decoded.join(docMap(spark, sfDir).select("doc_id", "docId"), "docId")
+  /** Codec proof: decode the compressed posting blobs of every term (the
+    * empty prefix) back to (doc_id, term, tf) rows — must equal the
+    * DuckDB-computed TF table. */
+  def postingsRoundtrip(spark: SparkSession, sfDir: String): DataFrame =
+    searcher(spark, sfDir).postingTfs(Nil, Seq(""))
+      .join(docMap(spark, sfDir).select("doc_id", "docId"), "docId")
       .select("doc_id", "term", "tf")
       .orderBy("doc_id", "term")
-  }
 
   // ---- O4-O7: BM25 scoring / ranking ----------------------------------------
   def scoreAll(spark: SparkSession, sfDir: String, query: String): DataFrame =
@@ -712,7 +704,6 @@ object DocQueries {
     * corpus never shuffles. */
   def expandTerms(spark: SparkSession, sfDir: String, query: String,
                   k: Int, nTerms: Int): DataFrame = {
-    import graft.analysis.Analyzer
     val dir = indexDir(spark, sfDir)
     // pool ids to the driver (≤ k rows, already computed by the kernel) so
     // the analyzed read becomes a PRUNED POINT READ: conv_id IN (...)
@@ -1305,51 +1296,29 @@ object DocQueries {
     * the remaining 20%, [[IndexBuilder.refresh]] a delta posting segment,
     * then query across base+segment — must equal the oracle's full-corpus
     * top-k (same SQL as q_bm25_topk with this query). */
-  private val refreshed = new ConcurrentHashMap[String, String]()
   private def refreshedIndexDir(spark: SparkSession, sfDir: String): String =
-    refreshed.computeIfAbsent(sfDir, _ => {
-      val dir = sys.props("java.io.tmpdir") +
-        s"/graft_refidx_v${IndexBuilder.FormatVersion}_${Integer.toHexString(sfDir.hashCode)}"
-      // append is not idempotent (unlike build's resume-by-manifest), so
-      // the three-step demo commits a sentinel; a dir without it is a
-      // partial leftover from a killed JVM — rebuild from scratch.
-      if (!graft.build.Manifests.isDone(dir, "refresh_demo")) {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        val base = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-        val late = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-        IndexBuilder.build(spark, Transcripts.fromDocuments(base), dir,
-          IndexBuilder.Config(shards = Shards))
-        IndexBuilder.append(spark, Transcripts.fromDocuments(late), dir,
-          IndexBuilder.Config(shards = Shards))
-        IndexBuilder.refresh(spark, dir)
-        graft.build.Manifests.write(dir,
-          graft.model.StageManifest("refresh_demo", 1, 0, "done", 0))
-      }
-      dir
-    })
+    derived(spark, sfDir, "refidx") { (docs, dir) =>
+      val base = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
+      val late = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
+      IndexBuilder.build(spark, Transcripts.fromDocuments(base), dir,
+        IndexBuilder.Config(shards = Shards))
+      IndexBuilder.append(spark, Transcripts.fromDocuments(late), dir,
+        IndexBuilder.Config(shards = Shards))
+      IndexBuilder.refresh(spark, dir)
+    }
 
   /** Index with lang/source indexed as facet posting lists (built once per
     * JVM, separate from the main index so the facet terms never appear in
     * the un-faceted oracle queries q_doc_tf / q_term_df / roundtrip). */
   val FacetCols = Seq("lang", "source", "n_chars")
-  private val facetIndexes = new ConcurrentHashMap[String, String]()
-  private def facetIndexDir(spark: SparkSession, sfDir: String): String =
-    facetIndexes.computeIfAbsent(sfDir, _ => {
-      // The cache key carries the facet column set: a dir built for an older
-      // FacetCols (e.g. before n_chars) must never be reused silently.
-      val facKey = Integer.toHexString(FacetCols.mkString(",").hashCode)
-      val dir = sys.props("java.io.tmpdir") +
-        s"/graft_facidx_v${IndexBuilder.FormatVersion}_${Integer.toHexString(sfDir.hashCode)}_$facKey"
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+  private def facetSearcher(spark: SparkSession, sfDir: String): Searcher =
+    // the tag carries the facet column set: a dir built for an older
+    // FacetCols (e.g. before n_chars) must never be reused silently
+    searcherAt(spark, derived(spark, sfDir,
+        s"facidx_${Integer.toHexString(FacetCols.mkString(",").hashCode)}") { (docs, dir) =>
       IndexBuilder.build(spark, Transcripts.fromDocuments(docs, FacetCols), dir,
         IndexBuilder.Config(shards = Shards, facetCols = FacetCols))
-      dir
     })
-  private val facetSearchers = new ConcurrentHashMap[String, Searcher]()
-  private def facetSearcher(spark: SparkSession, sfDir: String): Searcher =
-    facetSearchers.computeIfAbsent(sfDir,
-      _ => new Searcher(spark, facetIndexDir(spark, sfDir), P, cacheTables = true))
 
   /** Faceted top-k: BM25 over `query` restricted to docs matching every
     * (column -> value) filter, via facet posting lists (never a scan or
@@ -1382,47 +1351,21 @@ object DocQueries {
     * IndexBuilder.delete commits a new generation whose stats/df are
     * decremented exactly, so every surviving doc's BM25 score must equal a
     * from-scratch build over the 80% subset; the oracle computes exactly
-    * that (baseCtesFor with the complementary WHERE). Built once per JVM;
-    * the sentinel guards against a half-mutated dir from a killed JVM. */
-  private val deletedIdx = new ConcurrentHashMap[String, String]()
+    * that (baseCtesFor with the complementary WHERE). */
   private def deletedIndexDir(spark: SparkSession, sfDir: String): String =
-    deletedIdx.computeIfAbsent(sfDir, _ => {
-      val dir = sys.props("java.io.tmpdir") +
-        s"/graft_delidx_v${IndexBuilder.FormatVersion}_${Integer.toHexString(sfDir.hashCode)}"
-      if (!graft.build.Manifests.isDone(dir, "delete_demo")) {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        IndexBuilder.build(spark, Transcripts.fromDocuments(docs), dir,
-          IndexBuilder.Config(shards = Shards))
-        IndexBuilder.delete(spark, dir,
-          pmod(col("conv_id").cast("long"), lit(5)) === 2)
-        graft.build.Manifests.write(dir,
-          graft.model.StageManifest("delete_demo", 1, 0, "done", 0))
-      }
-      dir
-    })
-
-  /** Searcher cache for the maintenance-demo indexes (delete/update/
-    * refresh/snapshot/merge): construction is not free — it lists posting
-    * files, reads the stats row and collects+broadcasts tombstones — and
-    * each demo index is immutable once its sentinel is committed, so the
-    * serving tier's hot-searcher pattern (the `searchers` map above)
-    * applies verbatim. Keyed by (dir, generation) so a snapshot reader
-    * never collides with the latest-generation reader. */
-  private val auxSearchers = new ConcurrentHashMap[String, Searcher]()
-  private def auxSearcher(spark: SparkSession, dir: String,
-                          asOfGen: Long = -1L): Searcher =
-    auxSearchers.computeIfAbsent(s"$dir#$asOfGen", _ =>
-      new Searcher(spark, dir, P, cacheTables = true, asOfGen = asOfGen))
+    derived(spark, sfDir, "delidx") { (docs, dir) =>
+      IndexBuilder.build(spark, Transcripts.fromDocuments(docs), dir,
+        IndexBuilder.Config(shards = Shards))
+      IndexBuilder.delete(spark, dir,
+        pmod(col("conv_id").cast("long"), lit(5)) === 2)
+    }
 
   /** Top-k over the tombstone-deleted index: deleted docs never rank, and
     * survivors score exactly as a rebuild without them (WAND kernel
     * excludes tombstones via the forward-leapfrog cursor; stats/df came
     * from the delete's exact decrement). */
-  def deleteTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame = {
-    val s = auxSearcher(spark, deletedIndexDir(spark, sfDir))
-    topKCut(s.topK(query, k + 50), k)
-  }
+  def deleteTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame =
+    topKCut(searcherAt(spark, deletedIndexDir(spark, sfDir)).topK(query, k + 50), k)
 
   /** Corpus stats of the tombstone-deleted index — pins the delete's exact
     * (n, avgdl) decrement against an oracle over the surviving subset. */
@@ -1436,84 +1379,52 @@ object DocQueries {
     * the analyzed rows. The merged index must be indistinguishable from
     * the standing full build over the same corpus (same shard routing,
     * same docIds, same stats/df/postings), so its oracles are exactly the
-    * full-corpus ones. Built once per JVM; the sentinel guards against a
-    * half-merged dir from a killed JVM. */
-  private val mergedIdx = new ConcurrentHashMap[String, String]()
+    * full-corpus ones. */
   private def mergedIndexDir(spark: SparkSession, sfDir: String): String =
-    mergedIdx.computeIfAbsent(sfDir, _ => {
-      val dir = sys.props("java.io.tmpdir") +
-        s"/graft_mrgidx_v${IndexBuilder.FormatVersion}_${Integer.toHexString(sfDir.hashCode)}"
-      if (!graft.build.Manifests.isDone(dir, "merge_demo")) {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        val tmpA = java.nio.file.Files.createTempDirectory("graft_mrg_a").toString
-        val tmpB = java.nio.file.Files.createTempDirectory("graft_mrg_b").toString
+    derived(spark, sfDir, "mrgidx") { (docs, dir) =>
+      val halves = Seq(0, 1).map { h =>
+        val half = java.nio.file.Files.createTempDirectory(s"graft_mrg_$h").toString
         IndexBuilder.build(spark, Transcripts.fromDocuments(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 0)), tmpA,
+          docs.filter(pmod(col("doc_id"), lit(2)) === h)), half,
           IndexBuilder.Config(shards = Shards))
-        IndexBuilder.build(spark, Transcripts.fromDocuments(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 1)), tmpB,
-          IndexBuilder.Config(shards = Shards))
-        IndexBuilder.merge(spark, Seq(tmpA, tmpB), dir,
-          IndexBuilder.Config(shards = Shards))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmpA))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmpB))
-        graft.build.Manifests.write(dir,
-          graft.model.StageManifest("merge_demo", 1, 0, "done", 0))
+        half
       }
-      dir
-    })
+      IndexBuilder.merge(spark, halves, dir, IndexBuilder.Config(shards = Shards))
+      halves.foreach(h => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(h)))
+    }
 
-  /** Two PERSISTENT half-indexes (even/odd doc_id) for the federated
-    * query — built once per JVM, kept on disk (unlike the merge demo's
-    * halves, which fold into the merged index and are deleted). */
-  private val fedIdx = new ConcurrentHashMap[String, (String, String)]()
-  private def fedIndexDirs(spark: SparkSession, sfDir: String): (String, String) = {
-    fedIdx.computeIfAbsent(sfDir, _ => {
-      val base = sys.props("java.io.tmpdir") +
-        s"/graft_fedidx_v${IndexBuilder.FormatVersion}_${Integer.toHexString(sfDir.hashCode)}"
-      val (a, b) = (base + "_a", base + "_b")
-      if (!graft.build.Manifests.isDone(a, "fed_demo")) {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(a))
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(b))
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+  /** Two PERSISTENT half-indexes (even/odd doc_id), the subdirs `a` and
+    * `b` of one derived dir, for the federated query — kept on disk
+    * (unlike the merge demo's halves, which fold into the merged index and
+    * are deleted). */
+  private def fedIndexDirs(spark: SparkSession, sfDir: String): Seq[String] = {
+    val dir = derived(spark, sfDir, "fedidx") { (docs, dir) =>
+      Seq("a" -> 0, "b" -> 1).foreach { case (sub, h) =>
         IndexBuilder.build(spark, Transcripts.fromDocuments(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 0)), a,
+          docs.filter(pmod(col("doc_id"), lit(2)) === h)), s"$dir/$sub",
           IndexBuilder.Config(shards = Shards))
-        IndexBuilder.build(spark, Transcripts.fromDocuments(
-          docs.filter(pmod(col("doc_id"), lit(2)) === 1)), b,
-          IndexBuilder.Config(shards = Shards))
-        graft.build.Manifests.write(a,
-          graft.model.StageManifest("fed_demo", 1, 0, "done", 0))
       }
-      (a, b)
-    })
+    }
+    Seq(s"$dir/a", s"$dir/b")
   }
 
   /** Federated top-k over the two half-indexes (Lucene's MultiReader:
     * combined N/avgdl/df) — must match the full-corpus oracle exactly,
     * proving member scores are globally comparable without a physical
-    * merge. */
-  /** Federated-reader cache: a Federated's construction reads both
-    * members' stats rows and builds two Searchers (file listings,
-    * tombstone broadcasts) — serving state, built once per corpus like
-    * every other searcher here. */
+    * merge. The Federated reader (both members' stats rows and Searchers)
+    * is built once per corpus. */
   private val fedReaders = new ConcurrentHashMap[String, graft.query.Federated]()
   def federatedTopK(spark: SparkSession, sfDir: String, query: String,
                     k: Int): DataFrame = {
-    val fed = fedReaders.computeIfAbsent(sfDir, _ => {
-      val (a, b) = fedIndexDirs(spark, sfDir)
-      new graft.query.Federated(spark, Seq(a, b), P)
-    })
+    val fed = fedReaders.computeIfAbsent(sfDir, _ =>
+      new graft.query.Federated(spark, fedIndexDirs(spark, sfDir), P))
     topKCut(fed.topK(query, k + 50), k)
   }
 
   /** Top-k over the merged index — must match the full-corpus oracle
     * exactly (merge ≡ from-scratch build over the union). */
-  def mergeTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame = {
-    val s = auxSearcher(spark, mergedIndexDir(spark, sfDir))
-    topKCut(s.topK(query, k + 50), k)
-  }
+  def mergeTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame =
+    topKCut(searcherAt(spark, mergedIndexDir(spark, sfDir)).topK(query, k + 50), k)
 
   /** Corpus stats of the merged index — pins merge's stats rebuild against
     * the full-corpus oracle. */
@@ -1527,33 +1438,21 @@ object DocQueries {
     * text transformed in SQL, so the whole upsert chain — exact delete
     * decrement, re-analysis of the new text, stats/df re-increment — must
     * compose to a from-scratch build over the updated corpus. */
-  private val updatedIdx = new ConcurrentHashMap[String, String]()
   private def updatedIndexDir(spark: SparkSession, sfDir: String): String =
-    updatedIdx.computeIfAbsent(sfDir, _ => {
-      val dir = sys.props("java.io.tmpdir") +
-        s"/graft_updidx_v${IndexBuilder.FormatVersion}_${Integer.toHexString(sfDir.hashCode)}"
-      if (!graft.build.Manifests.isDone(dir, "update_demo")) {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        IndexBuilder.build(spark, Transcripts.fromDocuments(docs), dir,
-          IndexBuilder.Config(shards = Shards))
-        val upd = docs.filter(pmod(col("doc_id"), lit(5)) === 2)
-          .withColumn("text", concat(col("text"), lit(" zzupdated marker")))
-        IndexBuilder.update(spark, Transcripts.fromDocuments(upd), dir,
-          IndexBuilder.Config(shards = Shards))
-        graft.build.Manifests.write(dir,
-          graft.model.StageManifest("update_demo", 1, 0, "done", 0))
-      }
-      dir
-    })
+    derived(spark, sfDir, "updidx") { (docs, dir) =>
+      IndexBuilder.build(spark, Transcripts.fromDocuments(docs), dir,
+        IndexBuilder.Config(shards = Shards))
+      val upd = docs.filter(pmod(col("doc_id"), lit(5)) === 2)
+        .withColumn("text", concat(col("text"), lit(" zzupdated marker")))
+      IndexBuilder.update(spark, Transcripts.fromDocuments(upd), dir,
+        IndexBuilder.Config(shards = Shards))
+    }
 
   /** Top-k over the upserted index: the new text is searchable (the query
     * carries its marker token), the old versions never rank, and scores
     * use the post-update global stats exactly. */
-  def updateTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame = {
-    val s = auxSearcher(spark, updatedIndexDir(spark, sfDir))
-    topKCut(s.topK(query, k + 50), k)
-  }
+  def updateTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame =
+    topKCut(searcherAt(spark, updatedIndexDir(spark, sfDir)).topK(query, k + 50), k)
 
   /** Corpus stats of the upserted index — n is unchanged (replace, not
     * insert) while avgdl reflects the new text exactly. */
@@ -1562,20 +1461,16 @@ object DocQueries {
         IndexBuilder.committedGen(updatedIndexDir(spark, sfDir))))
       .select(col("n"), round(col("avgdl"), 4).as("avgdl"))
 
-  def refreshTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame = {
-    val s = auxSearcher(spark, refreshedIndexDir(spark, sfDir))
-    topKCut(s.topK(query, k + 50), k)
-  }
+  def refreshTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame =
+    topKCut(searcherAt(spark, refreshedIndexDir(spark, sfDir)).topK(query, k + 50), k)
 
   /** Snapshot (time-travel) proof over the SAME refresh-demo index: open it
     * as of generation 0 — before the 20% append+refresh — so every result
     * and the global stats must match an oracle over the base 80% subset
     * only. Exercises asOfGen path resolution, per-snapshot stats/df, and
     * the cover filter that hides later generations' analyzed rows. */
-  def snapshotTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame = {
-    val s = auxSearcher(spark, refreshedIndexDir(spark, sfDir), asOfGen = 0L)
-    topKCut(s.topK(query, k + 50), k)
-  }
+  def snapshotTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame =
+    topKCut(searcherAt(spark, refreshedIndexDir(spark, sfDir), asOfGen = 0L).topK(query, k + 50), k)
 
   def emptyQuery(spark: SparkSession, sfDir: String): DataFrame =
     searcher(spark, sfDir).scoreAll("", keepZeros = true)

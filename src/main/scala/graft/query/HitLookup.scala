@@ -1,32 +1,20 @@
 package graft.query
 
 import graft.model.Hit
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.api.RecordMaterializer
-import org.apache.parquet.schema.{GroupType, MessageType}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.SerializableConfiguration
-import scala.jdk.CollectionConverters._
 
 /** Kernel-hit resolution INSIDE the shard task: maps the ≤ k winning
-  * docIds of a task to (conv_id, turn_idx) with a filtered Parquet point
-  * read of the index's own analyzed/ files — no second Spark job, no
-  * driver round-trip, nothing added on disk.
+  * docIds of a task to (conv_id, turn_idx) with a [[PointRead]] of the
+  * index's own analyzed/ files — no second Spark job, no driver
+  * round-trip, nothing added on disk.
   *
   * The file list and each file's per-row-group docId ranges are read once
-  * on the driver (footers only, through [[PointRead.ranges]]). A task opens only the files with a row
-  * group whose docId statistics admit one of its hits, and parquet-mr's
-  * `docId IN (...)` filter then skips the row groups and pages that cannot
-  * hold one; only the docId, conv_id and turn_idx columns are decoded.
-  * analyzed/ rows are docId-sorted per shard, so the build's
+  * on the driver (footers only, through [[PointRead.ranges]]). A task opens
+  * only the files with a row group whose docId range admits one of its
+  * hits, and the point read keyed on `docId` skips every row group whose
+  * statistics admit none; only the docId, conv_id and turn_idx columns are
+  * decoded. analyzed/ rows are docId-sorted per shard, so the build's
   * one-shard-per-file layout makes the file choice exact.
   *
   * No coverage or tombstone filter is needed: kernel hits come from the
@@ -45,22 +33,10 @@ final class HitLookup private (files: Array[HitLookup.FileRanges],
     while (out.size < ids.length && fs.hasNext) {
       val f = fs.next()
       val want = ids.iterator.filter(d => f.admits(d) && !out.containsKey(d))
-        .map(java.lang.Long.valueOf).toSet.asJava
-      if (!want.isEmpty) {
-        val file = HadoopInputFile.fromPath(new Path(f.path), conf.value.value)
-        val reader = new ParquetReader.Builder[Group](file) {
-          override protected def getReadSupport: ReadSupport[Group] = new IdentityReadSupport
-        }.withFilter(FilterCompat.get(FilterApi.in(FilterApi.longColumn("docId"), want)))
-          .build()
-        try {
-          var g = reader.read()
-          while (g != null) {
-            val conv = if (g.getFieldRepetitionCount("conv_id") > 0) g.getString("conv_id", 0) else null
-            out.put(g.getLong("docId", 0), (conv, g.getInteger("turn_idx", 0)))
-            g = reader.read()
-          }
-        } finally reader.close()
-      }
+        .map(d => java.lang.Long.valueOf(d): Any).toSet
+      if (want.nonEmpty)
+        PointRead.rows(f.path, conf.value.value, "docId", want, Seq("docId", "conv_id", "turn_idx"))
+          .foreach(r => out.put(r.long(0), (r.string(1), r.int(2))))
     }
     if (out.size < ids.length) {
       val missing = ids.filterNot(d => out.containsKey(d))
@@ -115,17 +91,4 @@ object HitLookup {
     b.foldLeft(a) { case (acc, (q, hs)) =>
       acc.updated(q, (acc.getOrElse(q, Nil) ++ hs).sorted(HitRank).take(k))
     }
-
-  /** Reads only (docId, conv_id, turn_idx), whatever else the file holds. */
-  private final class IdentityReadSupport extends ReadSupport[Group] {
-    override def init(ctx: InitContext): ReadSupport.ReadContext = {
-      val fs: GroupType = ctx.getFileSchema
-      new ReadSupport.ReadContext(new MessageType(fs.getName,
-        fs.getType("docId"), fs.getType("conv_id"), fs.getType("turn_idx")))
-    }
-    override def prepareForRead(conf: Configuration, meta: java.util.Map[String, String],
-                                fileSchema: MessageType,
-                                ctx: ReadSupport.ReadContext): RecordMaterializer[Group] =
-      new GroupRecordConverter(ctx.getRequestedSchema)
-  }
 }

@@ -21,8 +21,9 @@ import scala.jdk.CollectionConverters._
   * key column value is in a key set — exact keys, or [[prefixes]] of a
   * string key (the facet lists `\u0001col\u0001…`) — with only the
   * requested columns decoded. Every [[ShardJob]] task's read (postings,
-  * positions), the driver's df slice ([[Searcher.dfSlice]]) and the
-  * footers of [[HitLookup]] share it.
+  * positions), the driver's df slice ([[Searcher.dfSlice]]) and
+  * [[HitLookup]]'s footers and in-task docId reads of analyzed/ share it:
+  * it is the engine's one Parquet reader outside Spark's scans.
   *
   * The read is column-wise, straight off parquet-mr's column readers (no
   * record assembly): a row group whose key statistics admit no key is

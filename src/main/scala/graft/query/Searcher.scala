@@ -34,12 +34,14 @@ import scala.jdk.CollectionConverters._
   *       (conv_id, turn_idx) in place ([[HitLookup]]), the driver merges
   *       the task results and wraps them in a local frame, so collecting
   *       it launches nothing more.
-  *     * [[matchAllDocs]] and [[scoreMatches]] return the job's lazy
-  *       frame of every match, sized as the postings files for the
+  *     * [[matchAllDocs]] and [[scoreMatches]] (every match) and
+  *       `postingTfs` (every live posting, for the combined-fields fold)
+  *       return the job's lazy frame, sized as the postings files for the
   *       planner's join choices.
   *
   *    [[topKBatch]] alone keeps a Dataset plan: a term-pruned postings
-  *    scan and one groupByKey(shard) exchange of the pruned rows.
+  *    scan and one groupByKey(shard) exchange of the pruned rows — the
+  *    only Dataset reader of the postings.
   *
   *  - `topKExhaustive` / `scoreAll` — the relational twin: explode analyzed
   *    docs, broadcast-hash-join query terms, aggregate the codegen'd BM25
@@ -59,6 +61,15 @@ object Searcher {
   private[query] def termLists(group: Seq[Posting]): Map[String, Posting] =
     group.groupBy(_.term).map { case (t, ps) =>
       t -> (if (ps.lengthCompare(1) == 0) ps.head else graft.codec.Postings.merge(ps))
+    }
+
+  /** Each (term, docId, tf) posting of one shard's `lists`, ascending
+    * docId per term, skipping the docs on the shard's tombstone list. */
+  private[query] def live(lists: Map[String, Posting], tomb: Option[Posting]): Iterator[(String, Long, Int)] =
+    lists.iterator.flatMap { case (t, po) =>
+      val (ex, c) = (new Wand.Excl(tomb.toSeq), new graft.codec.Postings.Cursor(po))
+      Iterator.continually(c.next()).takeWhile(identity)
+        .collect { case _ if !ex.excluded(c.docId) => (t, c.docId, c.tf) }
     }
 
   /** Scores every matching term 1: a clause set under it matches exactly
@@ -156,9 +167,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
   private val hitLookup: HitLookup = HitLookup(
     PointRead.files(graft.sources.TableIO.read(spark, s"$indexDir/analyzed")), hadoopConf)
 
-  /** The (cached when cacheTables) base+segment postings table — exposed
-    * for relational consumers that decode pruned posting slices themselves
-    * (combined-fields fold), so they share the searcher's hot frame. */
+  /** The (cached when cacheTables) base+segment postings table. No engine
+    * code reads it: only perfbench's traced layer metrics do (the
+    * kernel/codec replay and bytes per posting). */
   private[graft] def postingsView: DataFrame = postingsDF
 
   private val statsRow = graft.sources.TableIO.read(spark,
@@ -192,12 +203,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
     graft.build.IndexBuilder.tombstonePathAsOf(indexDir, generation)
   private val tombBc = ShardJob.tombstones(spark, tombstonePath)
 
-  /** Hide tombstoned docs from a relational frame with one broadcast
-    * anti-join against the (tiny) tombstone table. */
+  /** Hide tombstoned docs from a relational frame. */
   private def tombstoneFree(df: DataFrame): DataFrame =
-    tombstonePath.fold(df)(p => df.join(
-      broadcast(graft.sources.TableIO.read(spark, p).select(col("docId"))),
-      Seq("docId"), "left_anti"))
+    graft.build.IndexBuilder.withoutTombstones(df, tombstonePath)
 
   private def covered(df: DataFrame): DataFrame =
     tombstoneFree(coveredOnly.fold(df)(df.where))
@@ -206,12 +214,10 @@ final class Searcher(spark: SparkSession, indexDir: String,
   /** Exact total token count (stats `sumlen`) — the collection-model
     * denominator for [[topKDirichlet]]. Not overridable by `statsOverride`
     * (the federated surface is BM25-only; see [[Federated]]). Legacy
-    * stats tables predate the column — fall back to round(n·avgdl), the
-    * same reconstruction IndexBuilder's maintenance ops use, so opening
-    * an old index never fails (only Dirichlet sees the approximation). */
-  val sumlen: Long =
-    if (statsRow.schema.fieldNames.contains("sumlen")) statsRow.getAs[Long]("sumlen")
-    else math.round(statsRow.getAs[Long]("n") * statsRow.getAs[Double]("avgdl"))
+    * stats tables predate the column ([[graft.build.IndexBuilder.sumlen]]),
+    * so opening an old index never fails (only Dirichlet sees the
+    * approximation). */
+  val sumlen: Long = graft.build.IndexBuilder.sumlen(statsRow)
 
   /** The prepared shard job over this generation's postings files,
     * listed once through the storage seam; an unreadable footer fails
@@ -397,20 +403,22 @@ final class Searcher(spark: SparkSession, indexDir: String,
     val missing = terms.distinct.filterNot(cfCache.containsKey)
     if (missing.nonEmpty) {
       val found = shardJob.run(missing) { shards =>
-        shards.flatMap { case (lists, tomb) =>
-          lists.iterator.map { case (t, po) =>
-            val ex = new Wand.Excl(tomb.toSeq)
-            val c = new graft.codec.Postings.Cursor(po)
-            var s = 0L
-            while (c.next()) if (!ex.excluded(c.docId)) s += c.tf
-            t -> s
-          }
-        }.toArray
+        shards.flatMap { case (lists, tomb) => Searcher.live(lists, tomb) }
+          .foldLeft(Map.empty[String, Long]) { case (m, (t, _, tf)) => m.updated(t, m.getOrElse(t, 0L) + tf) }
       }.flatten.groupMapReduce(_._1)(_._2)(_ + _)
       missing.foreach(t => cfCache.put(t, java.lang.Long.valueOf(found.getOrElse(t, 0L))))
     }
     terms.iterator.map(t => t -> cfCache.get(t).longValue).filter(_._2 > 0L).toMap
   }
+
+  /** Every live posting of `terms`, and of the terms starting with one of
+    * `prefixes`, as the shard job's lazy (term, docId, tf) frame: segments
+    * merged and tombstoned docs skipped, the same per-shard decode that
+    * [[cfSlice]] sums. */
+  private[graft] def postingTfs(terms: Seq[String], prefixes: Seq[String] = Nil): DataFrame =
+    shardJob.frame(terms, prefixes) { shards =>
+      shards.flatMap { case (lists, tomb) => Searcher.live(lists, tomb).map { case (t, d, tf) => (t, d, tf.toLong) } }
+    }.toDF("term", "docId", "tf")
 
   /** Completion suggester (ES completion / Lucene prefix termsEnum over
     * the dictionary): dictionary terms starting with `prefix`, popularity-

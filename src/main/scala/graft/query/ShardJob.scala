@@ -59,12 +59,13 @@ final class ShardJob[G] private (spark: SparkSession,
       rdd.sparkContext.runJob(rdd, (files: Iterator[Array[String]]) => task(read(files.flatten)))
     }
 
-  /** The rows `task` yields over the shards of `terms`, as a lazy frame
-    * (columns named by `T`'s encoder) that re-runs the read per action. */
-  def frame[T: Encoder](terms: Seq[String])(
+  /** The rows `task` yields over the shards of `terms` and `prefixes`
+    * (as [[run]]), as a lazy frame (columns named by `T`'s encoder) that
+    * re-runs the read per action. */
+  def frame[T: Encoder](terms: Seq[String], prefixes: Seq[String] = Nil)(
       task: Iterator[(G, Option[Posting])] => Iterator[T]): DataFrame = {
-    val (enc, read) = (encoderFor[T], reader(terms, Nil))
-    val out = parts.filter(_ => terms.nonEmpty).fold[RDD[InternalRow]](spark.sparkContext.emptyRDD) {
+    val (enc, read) = (encoderFor[T], reader(terms, prefixes))
+    val out = parts.filter(_ => terms.nonEmpty || prefixes.nonEmpty).fold[RDD[InternalRow]](spark.sparkContext.emptyRDD) {
       _.mapPartitions { files =>
         val ser = enc.createSerializer()
         task(read(files.flatten)).map(t => ser(t).copy())

@@ -112,11 +112,16 @@ class DeleteSpec extends AnyFunSuite {
     assert(s.topKAfter("zzdel shared", 10, 100.0).count() == 1)
     assert(s.search("zzdel", "shared", "filler", 10).count() == 1)
     assert(s.scoreMatches("zzdel shared").count() == 1)
+    // the live (term, docId, tf) postings the combined-fields fold reads
+    val live = s.postingTfs(Seq("zzdel", "shared")).as[(String, Long, Long)].collect()
+    assert(live.map(_._1).sorted.toSeq == Seq("shared", "zzdel") &&
+      live.map(_._2).distinct.length == 1 && live.forall(_._3 == 1L))
 
     // the pre-delete snapshot still serves the doomed doc with gen-0 stats
     val snap = new Searcher(spark, dir, asOfGen = 0L)
     assert(snap.n == 3L)
     assert(snap.topK("zzdel shared", 10).count() == 2)
+    assert(snap.postingTfs(Seq("zzdel")).count() == 2)
   }
 
   test("positional sidecar hides tombstoned docs (phrase + span)") {

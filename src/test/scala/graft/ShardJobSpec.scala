@@ -229,7 +229,7 @@ class ShardJobSpec extends AnyFunSuite {
     val d = build("sjcached", IndexBuilder.Config(shards = 4))
     val first = new Searcher(spark, d, cacheTables = true)
     val want = rows(first.topK(Queries.head, K))
-    first.postingsView.count() // materialize the first searcher's cache
+    first.topKBatch(Map("q" -> Queries.head), K) // its postings scan materializes the cache
     val second = new Searcher(spark, d, cacheTables = true)
     try {
       assert(want.nonEmpty)
