@@ -1,8 +1,7 @@
 package graft.build
 
-import graft.model.{Ids, StageManifest}
+import graft.model.StageManifest
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Per-shard next-rank high-water marks over the analyzed table — the
   * docId-allocation state shared by the batch builder, batch `append`, and
@@ -24,15 +23,9 @@ object Hwm {
         hwm(s) = Manifests.read(indexDir, s"stream_hwm_$s").map(_.rows).getOrElse(0L)
       }
     } else {
-      val analyzedPath = new org.apache.hadoop.fs.Path(s"$indexDir/analyzed")
-      val fs = analyzedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(analyzedPath)) {
-        spark.read.parquet(s"$indexDir/analyzed")
-          .groupBy("shard")
-          .agg(max(expr(s"docId & ${Ids.RankMask}")).as("maxRank"))
-          .collect()
-          .foreach(r => hwm(r.getAs[Int]("shard")) = r.getAs[Long]("maxRank") + 1L)
-      }
+      val analyzed = s"$indexDir/analyzed"
+      if (IndexBuilder.fs(spark, analyzed).exists(new org.apache.hadoop.fs.Path(analyzed)))
+        ShardKeys.raise(spark.read.parquet(analyzed), hwm)
     }
     hwm
   }

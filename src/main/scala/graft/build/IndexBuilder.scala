@@ -58,6 +58,11 @@ final case class AnalyzedRow(
   *    describe the SAME document set. [[append]]/streaming add rows to
   *    analyzed/ only; [[refresh]] moves all three forward together over
   *    exactly the uncovered rows (tracked by per-shard cover manifests).
+  *
+  * docId placement (routing, rank order and allocation, rank marks) is
+  * owned by [[ShardKeys]]/[[Placement]] for every path that lands rows;
+  * every later generation ([[refresh]], [[delete]]) is published by
+  * [[commitGeneration]]'s `postings_gen` write, the one commit point.
   */
 object IndexBuilder {
 
@@ -108,9 +113,14 @@ object IndexBuilder {
       metaCols: Seq[String] = Nil)
 
   /** Every mutating op runs under the single-writer maintenance lease
-    * ([[Manifests.withMaintenanceLease]]) AND the shared build conf. */
+    * ([[Manifests.withMaintenanceLease]]) AND the shared build conf, after
+    * finishing any [[swapDir]] a crash interrupted. */
   private def leased[T](indexDir: String, spark: SparkSession)(body: => T): T =
-    Manifests.withMaintenanceLease(indexDir)(withBuildConf(spark)(body))
+    Manifests.withMaintenanceLease(indexDir)(withBuildConf(spark) {
+      Seq("postings", "analyzed").foreach(t =>
+        finishSwap(spark, s"$indexDir/${t}_tmp", s"$indexDir/$t"))
+      body
+    })
 
   def build(spark: SparkSession, input: DataFrame, indexDir: String,
             cfg: Config = Config()): Unit =
@@ -123,18 +133,17 @@ object IndexBuilder {
   def append(spark: SparkSession, input: DataFrame, indexDir: String,
              cfg: Config = Config()): Unit = leased(indexDir, spark) {
     val shards = builtShards(indexDir)
-    val parts = partsFor(cfg, shards)
-    val pkeys = ShardKeys.keys(shards, parts)
+    val place = placement(cfg, shards)
     val hwm = Hwm.read(spark, indexDir, shards)
-    val rows = analyzedRows(input, shards, parts, pkeys, cfg.language,
-      cfg.normalizer, hwm, cfg.facetCols)
+    val rows = analyzedRows(input, place, cfg.language, cfg.normalizer, hwm, cfg.facetCols)
     graft.sources.TableIO.write(rows, s"$indexDir/analyzed", mode = "append")
+    // the newly landed slice: the rows at or above the old HWMs
+    val landed = graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
+      .where(!ShardKeys.below(hwm))
     // Doc-meta sidecar upkeep: once a sidecar exists, every appended doc
     // must land in it too (serving joins it INNER — a stale sidecar would
     // silently drop appended docs from scoring aggregations), so the
-    // append input MUST carry the sidecar's columns. The newly landed
-    // slice is re-read with the same above-old-HWM predicate the advance
-    // below uses.
+    // append input MUST carry the sidecar's columns.
     val metaDir = s"$indexDir/docmeta"
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(metaDir))) {
       val mcols = graft.sources.TableIO.read(spark, metaDir).schema.fieldNames
@@ -144,20 +153,12 @@ object IndexBuilder {
         s"index $indexDir has a doc-meta sidecar with columns " +
           s"${mcols.mkString(",")}; append input lacks " +
           s"${missing.mkString(",")} — the sidecar would go stale")
-      val landed = graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
-        .where(expr(s"docId & ${Ids.RankMask}") >=
-          element_at(lit(hwm.clone()), col("shard") + 1))
-      writeDocMeta(spark, input, landed, indexDir, parts, pkeys, mcols,
-        mode = "append")
+      writeDocMeta(spark, input, landed, indexDir, place, mcols, mode = "append")
     }
     // Advance HWMs from the ranks that actually LANDED (pruned shard+docId
     // scan of the analyzed table above the old HWMs) — never by re-scanning
     // the input, which a non-deterministic source could replay differently.
-    graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
-      .where(expr(s"docId & ${Ids.RankMask}") >= element_at(lit(hwm.clone()), col("shard") + 1))
-      .groupBy("shard").agg(max(expr(s"docId & ${Ids.RankMask}")).as("maxRank"))
-      .collect()
-      .foreach(r => hwm(r.getAs[Int]("shard")) = r.getAs[Long]("maxRank") + 1L)
+    ShardKeys.raise(landed, hwm)
     Hwm.write(indexDir, hwm)
   }
 
@@ -176,13 +177,13 @@ object IndexBuilder {
     *
     * Only covered rows are deletable: an appended-but-unrefreshed doc is
     * not yet in stats/df/postings, so decrementing for it would corrupt
-    * the invariant — delete after its refresh instead. Generation staging
-    * and commit are identical to [[refresh]]: everything is written under
-    * gen-suffixed names (tombstones_g<g>, stats_g<g>, df_g<g>, copied-
-    * forward cover manifests) and the atomic `postings_gen` pointer write
-    * is the single commit point. Each tombstones_g<g> holds the FULL
-    * accumulated docId set (not a delta), so one pruned read serves any
-    * generation; the table is tiny (8 bytes/deleted doc in Parquet).
+    * the invariant — delete after its refresh instead. The generation is
+    * staged and committed by [[refresh]]'s [[commitGeneration]]: everything
+    * is written under gen-suffixed names (tombstones_g<g>, stats_g<g>,
+    * df_g<g>, copied-forward cover manifests) and the atomic `postings_gen`
+    * pointer write is the single commit point. Each tombstones_g<g> holds
+    * the FULL accumulated docId set (not a delta), so one pruned read
+    * serves any generation; the table is tiny (8 bytes/deleted doc).
     *
     * Returns the number of documents newly tombstoned; 0 ⇒ nothing
     * matched and NO generation was committed. */
@@ -238,61 +239,32 @@ object IndexBuilder {
     val shards = builtShards(indexDir)
     val gen0 = committedGen(indexDir)
     val cover = readCoverAsOf(spark, indexDir, shards, gen0)
-    val analyzed = graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
-    val rankCol = expr(s"docId & ${Ids.RankMask}")
-    val priorPath = tombstonePathAsOf(indexDir, gen0)
-    val prior = priorPath.map(p => graft.sources.TableIO.read(spark, p)
-      .select($"shard", $"docId"))
-    val doomed0 = doom(analyzed
-      .where(rankCol < element_at(lit(cover), col("shard") + 1)))
+    val prior = tombstonePathAsOf(indexDir, gen0).map(p =>
+      graft.sources.TableIO.read(spark, p).select($"shard", $"docId"))
+    val doomed0 = doom(graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
+      .where(ShardKeys.below(cover)))
       .select($"shard", $"docId", $"len", $"terms")
     val doomed = prior.fold(doomed0)(p =>
       doomed0.join(p.select($"docId"), Seq("docId"), "left_anti"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val agg = doomed.agg(count(lit(1)).as("dn"),
-        coalesce(sum($"len".cast("long")), lit(0L)).as("dsum")).head()
-      val dn = agg.getAs[Long]("dn")
-      val dsum = agg.getAs[Long]("dsum")
+      val (dn, dsum) = countAndLength(doomed)
       if (dn == 0L) 0L else {
-
-      // ---- staging (nothing visible until the pointer commit) -----------
-      val gen = gen0 + 1L
-      val tombs = doomed.select($"shard", $"docId")
-      graft.sources.TableIO.write(
-        prior.fold(tombs)(p => p.unionByName(tombs))
-          .repartition(1).sortWithinPartitions($"shard", $"docId"),
-        s"$indexDir/tombstones_g$gen")
-
-      val st = graft.sources.TableIO.read(spark, statsPathAsOf(indexDir, gen0)).head()
-      val n2 = st.getAs[Long]("n") - dn
-      val sum2 = sumlen(st) - dsum
-      Seq((n2, if (n2 > 0) sum2.toDouble / n2 else 0.0, sum2))
-        .toDF("n", "avgdl", "sumlen")
-        .pipe(df => graft.sources.TableIO.write(df, s"$indexDir/stats_g$gen"))
-
-      // df: decrement one per (doomed doc, distinct term) — vocabulary-
-      // sized union-merge, the exact mirror of refresh's increment
-      val deltaDf = doomed.select(explode($"terms").as("term"))
-        .groupBy($"term").agg((-count(lit(1))).cast("long").as("df"))
-      graft.sources.TableIO.read(spark, dfPathAsOf(indexDir, gen0))
-        .unionByName(deltaDf)
-        .groupBy($"term").agg(sum($"df").cast("long").as("df"))
-        .where($"df" > 0L)
-        .pipe(df => graft.sources.TableIO.write(df, s"$indexDir/df_g$gen"))
-
-      // coverage is unchanged by a delete — copy the manifests forward so
-      // readCoverAsOf(gen) resolves
-      cover.zipWithIndex.foreach { case (v, s) =>
-        Manifests.write(indexDir, StageManifest(s"postings_cover_g${gen}_$s", v, 0, "cover", 0))
-      }
-      // tombstone presence marker (part of the staged state; readers only
-      // look at generations ≤ the committed pointer)
-      Manifests.write(indexDir, StageManifest(s"tombstones_g$gen", dn, 0, "tombstones", 0))
-
-      // ---- commit (atomic manifest rename) ------------------------------
-      Manifests.write(indexDir, StageManifest("postings_gen", gen, 0, "gen", 0))
-      dn
+        val gen = gen0 + 1L
+        val tombs = doomed.select($"shard", $"docId")
+        graft.sources.TableIO.write(
+          prior.fold(tombs)(p => p.unionByName(tombs))
+            .repartition(1).sortWithinPartitions($"shard", $"docId"),
+          s"$indexDir/tombstones_g$gen")
+        // df: decrement one per (doomed doc, distinct term) — the exact
+        // mirror of refresh's increment. Coverage is unchanged by a delete;
+        // the tombstone presence marker is part of the staged state
+        // (readers only look at generations ≤ the committed pointer).
+        commitGeneration(spark, indexDir, gen, -dn, -dsum,
+          doomed.select(explode($"terms").as("term"))
+            .groupBy($"term").agg((-count(lit(1))).cast("long").as("df")),
+          cover, Seq(StageManifest(s"tombstones_g$gen", dn, 0, "tombstones", 0)))
+        dn
       }
     } finally doomed.unpersist()
   }
@@ -316,80 +288,94 @@ object IndexBuilder {
   def refresh(spark: SparkSession, indexDir: String): Unit = leased(indexDir, spark) {
     import spark.implicits._
     val shards = builtShards(indexDir)
-    val parts = shards
-    val pkeys = ShardKeys.keys(shards, parts)
-    val cover = readCover(spark, indexDir, shards)
-    val analyzed = graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
-    val rankCol = expr(s"docId & ${Ids.RankMask}")
-    val newRows = analyzed.where(rankCol >= element_at(lit(cover), col("shard") + 1))
-
-    val delta = newRows.agg(count(lit(1)).as("dn"),
-      coalesce(sum($"len"), lit(0L)).as("dsum")).head()
-    val dn = delta.getAs[Long]("dn")
+    val cover = readCoverAsOf(spark, indexDir, shards, committedGen(indexDir))
+    val newRows = graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
+      .where(!ShardKeys.below(cover))
+    val (dn, dsum) = countAndLength(newRows)
     if (dn == 0L) return
-    val dsum = delta.getAs[Long]("dsum")
 
     // ---- staging (all writes idempotent, none visible until the commit) --
     val gen = committedGen(indexDir) + 1L
     val segDir = s"$indexDir/postings_seg_$gen"
     graft.sources.TableIO.write(
-      assemblePostings(spark, newRows, parts, pkeys).toDF(), segDir)
-
-    // stats: exact incremental update via the persisted length sum
-    val st = graft.sources.TableIO.read(spark, statsPath(indexDir)).head()
-    val n2 = st.getAs[Long]("n") + dn
-    val sum2 = sumlen(st) + dsum
-    Seq((n2, sum2.toDouble / n2, sum2)).toDF("n", "avgdl", "sumlen")
-      .pipe(df => graft.sources.TableIO.write(df, s"$indexDir/stats_g$gen"))
-
-    // df: vocabulary-sized union-merge reading the CURRENT generation and
-    // writing the next — no in-place swap. The delta df comes from the
-    // delta segment just written (pruned (term, count) columns), not a
-    // re-aggregation of the rows.
-    val deltaDf = graft.sources.TableIO.read(spark, segDir)
-      .groupBy($"term").agg(sum($"count").cast("long").as("df"))
-    graft.sources.TableIO.read(spark, dfPath(indexDir))
-      .unionByName(deltaDf)
-      .groupBy($"term").agg(sum($"df").cast("long").as("df"))
-      .pipe(df => graft.sources.TableIO.write(df, s"$indexDir/df_g$gen"))
+      assemblePostings(spark, newRows, Placement(shards, shards)).toDF(), segDir)
 
     // coverage of generation g (part of the staged state: a retry after a
     // crash must re-derive newRows from the COMMITTED covers, never these)
-    newRows.groupBy($"shard").agg(max(rankCol).as("maxRank")).collect()
-      .foreach(r => cover(r.getAs[Int]("shard")) = r.getAs[Long]("maxRank") + 1L)
-    cover.zipWithIndex.foreach { case (v, s) =>
-      Manifests.write(indexDir, StageManifest(s"postings_cover_g${gen}_$s", v, 0, "cover", 0))
-    }
-
-    // ---- commit (atomic manifest rename) ---------------------------------
-    Manifests.write(indexDir, StageManifest("postings_gen", gen, 0, "gen", 0))
+    ShardKeys.raise(newRows, cover)
+    // The delta df comes from the delta segment just written (pruned
+    // (term, count) columns), not a re-aggregation of the rows.
+    commitGeneration(spark, indexDir, gen, dn, dsum,
+      graft.sources.TableIO.read(spark, segDir)
+        .groupBy($"term").agg(sum($"count").cast("long").as("df")),
+      cover)
 
     // retention: generations ≤ g-2 are unreachable by any new reader —
     // drop their stats/df copies (segments stay: they ARE the index until
     // compact folds them). Production would keep a time-based window for
     // long-lived reader snapshots.
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = fs(spark, indexDir)
     (1L to gen - 2).foreach { g =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/stats_g$g"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/df_g$g"), true)
+      f.delete(new org.apache.hadoop.fs.Path(s"$indexDir/stats_g$g"), true)
+      f.delete(new org.apache.hadoop.fs.Path(s"$indexDir/df_g$g"), true)
     }
   }
+
+  /** The one generation commit of [[refresh]] and [[delete]]. Stages
+    * stats_g<g> (the committed stats moved by the signed (dn, dsum)),
+    * df_g<g> (the committed df merged with the signed per-term `deltaDf`;
+    * terms that reach 0 are dropped), generation g's per-shard covers and
+    * the caller's `staged` manifests, then writes the `postings_gen`
+    * pointer — an atomic manifest rename and the single commit point. A
+    * crash before it leaves only unreachable staging, overwritten by the
+    * retry. */
+  private def commitGeneration(spark: SparkSession, indexDir: String, gen: Long,
+                               dn: Long, dsum: Long, deltaDf: DataFrame,
+                               cover: Array[Long],
+                               staged: Seq[StageManifest] = Nil): Unit = {
+    import spark.implicits._
+    val st = graft.sources.TableIO.read(spark, statsPathAsOf(indexDir, gen - 1)).head()
+    writeStats(spark, s"$indexDir/stats_g$gen", st.getAs[Long]("n") + dn, sumlen(st) + dsum)
+    graft.sources.TableIO.read(spark, dfPathAsOf(indexDir, gen - 1))
+      .unionByName(deltaDf)
+      .groupBy($"term").agg(sum($"df").cast("long").as("df"))
+      .where($"df" > 0L)
+      .pipe(df => graft.sources.TableIO.write(df, s"$indexDir/df_g$gen"))
+    writeCovers(indexDir, gen, cover)
+    staged.foreach(Manifests.write(indexDir, _))
+    Manifests.write(indexDir, StageManifest("postings_gen", gen, 0, "gen", 0))
+  }
+
+  /** (row count, Σ len) of analyzed rows — a generation's stats delta. */
+  private def countAndLength(rows: DataFrame): (Long, Long) = {
+    val r = rows.agg(count(lit(1)), coalesce(sum(col("len").cast("long")), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  private def writeStats(spark: SparkSession, path: String, n: Long, sumlen: Long): Unit = {
+    import spark.implicits._
+    graft.sources.TableIO.write(
+      Seq((n, if (n > 0) sumlen.toDouble / n else 0.0, sumlen)).toDF("n", "avgdl", "sumlen"),
+      path)
+  }
+
+  private def writeCovers(indexDir: String, gen: Long, cover: Array[Long]): Unit =
+    cover.zipWithIndex.foreach { case (v, s) =>
+      Manifests.write(indexDir, StageManifest(s"postings_cover_g${gen}_$s", v, 0, "cover", 0))
+    }
 
   /** Fold all delta segments back into the base postings table (one full
     * posting rebuild — run it on the compaction cadence, not per refresh).
     * Only COVERED rows are compacted: rows appended after the last refresh
     * stay out of the postings until their refresh, preserving the
     * stats/df/postings same-document-set invariant. Offline maintenance:
-    * requires no concurrent refresh, and a crash during the base-table
-    * swap is repaired by re-running compact. */
+    * requires no concurrent refresh; a crash during the base-table swap is
+    * finished by the next maintenance op ([[finishSwap]]). */
   def compact(spark: SparkSession, indexDir: String): Unit = leased(indexDir, spark) {
     val shards = builtShards(indexDir)
-    val parts = shards
-    val pkeys = ShardKeys.keys(shards, parts)
-    val cover = readCover(spark, indexDir, shards)
+    val cover = readCoverAsOf(spark, indexDir, shards, committedGen(indexDir))
     val analyzed0 = graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
-      .where(expr(s"docId & ${Ids.RankMask}") < element_at(lit(cover), col("shard") + 1))
+      .where(ShardKeys.below(cover))
     // space reclamation for deletes: tombstoned docs are dropped from the
     // rebuilt base (one broadcast anti-join — the tombstone table is tiny).
     // The tombstone table itself stays: analyzed/ still holds the doomed
@@ -398,17 +384,17 @@ object IndexBuilder {
     // free (the exclusion cursors never match).
     val analyzed = withoutTombstones(analyzed0, tombstonePathAsOf(indexDir, committedGen(indexDir)))
     graft.sources.TableIO.write(
-      assemblePostings(spark, analyzed, parts, pkeys).toDF(), s"$indexDir/postings_tmp")
+      assemblePostings(spark, analyzed, Placement(shards, shards)).toDF(),
+      s"$indexDir/postings_tmp")
     // Segments are deleted BEFORE the base swap: a crash in between leaves
     // queries temporarily missing the folded docs (visible staleness,
     // repaired by re-running compact) — the reverse order would leave the
     // same docIds in base AND segments, and the kernel's segment merge
     // would silently corrupt on the overlapping ranges. Covers are
     // untouched: the covered document set did not change, only its layout.
-    val dir = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(dir).foreach { f =>
-      if (f.getPath.getName.startsWith("postings_seg_")) fs.delete(f.getPath, true)
+    val f = fs(spark, indexDir)
+    f.listStatus(new org.apache.hadoop.fs.Path(indexDir)).foreach { st =>
+      if (st.getPath.getName.startsWith("postings_seg_")) f.delete(st.getPath, true)
     }
     swapDir(spark, s"$indexDir/postings_tmp", s"$indexDir/postings")
     // the base rewrite invalidates every older snapshot (pre-delete
@@ -435,15 +421,17 @@ object IndexBuilder {
     compact(spark, indexDir)
     val gen = committedGen(indexDir)
     tombstonePathAsOf(indexDir, gen).foreach { p =>
+      // pin the allocation HWMs first: re-derived from the survivors, they
+      // would drop below the covers wherever a shard's top ranks were
+      // deleted, and a later append would reuse covered docIds
+      Hwm.write(indexDir, Hwm.read(spark, indexDir, builtShards(indexDir)))
       graft.sources.TableIO.write(
         withoutTombstones(graft.sources.TableIO.read(spark, s"$indexDir/analyzed"), Some(p)),
         s"$indexDir/analyzed_tmp")
       swapDir(spark, s"$indexDir/analyzed_tmp", s"$indexDir/analyzed")
-      val dir = new org.apache.hadoop.fs.Path(indexDir)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       (1L to gen).foreach { g =>
         if (Manifests.read(indexDir, s"tombstones_g$g").isDefined) {
-          fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/tombstones_g$g"), true)
+          fs(spark, indexDir).delete(new org.apache.hadoop.fs.Path(s"$indexDir/tombstones_g$g"), true)
           Manifests.clear(indexDir, s"tombstones_g$g")
         }
       }
@@ -473,37 +461,24 @@ object IndexBuilder {
             cfg: Config = Config()): Unit = leased(outDir, spark) {
     import spark.implicits._
     require(srcDirs.nonEmpty, "merge needs at least one source index")
-    val parts = partsFor(cfg, cfg.shards)
-    val pkeys = ShardKeys.keys(cfg.shards, parts)
-    stage(spark, outDir, "analyzed") { () =>
+    analyzedStage(spark, outDir, cfg.shards) {
       val survivors = srcDirs.map { src =>
         withoutTombstones(graft.sources.TableIO.read(spark, s"$src/analyzed"),
           tombstonePathAsOf(src, committedGen(src)))
           .select(col("conv_id"), col("turn_idx"), col("len"), col("terms"), col("tfs"))
       }.reduce(_ unionByName _)
-      val rows = survivors
-        .withColumn("shard", pmod(hash(col("conv_id")), lit(cfg.shards)).cast("int"))
-        .withColumn("pkey", element_at(lit(pkeys), col("shard") + 1))
-        .repartition(parts, col("pkey"))
-        .sortWithinPartitions("shard", "conv_id", "turn_idx")
+      val shards = cfg.shards
+      placement(cfg, shards).route(survivors)
         .mapPartitions { it =>
-          var curShard = -1
-          var rank = 0L
+          val ranks = new ShardKeys.Ranks(new Array[Long](shards))
           it.map { r =>
             val shard = r.getAs[Int]("shard")
-            if (shard != curShard) { curShard = shard; rank = 0L }
-            val docId = Ids.docId(shard, rank)
-            rank += 1L
-            (shard, docId, r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"),
+            (shard, ranks.next(shard), r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"),
               r.getAs[Int]("len"), r.getAs[Seq[String]]("terms").toArray,
               r.getAs[Seq[Int]]("tfs").toArray)
           }
         }
         .toDF("shard", "docId", "conv_id", "turn_idx", "len", "terms", "tfs")
-      graft.sources.TableIO.write(rows, s"$outDir/analyzed")
-      Manifests.write(outDir,
-        StageManifest("index_meta", cfg.shards, FormatVersion, "meta", 0))
-      graft.sources.TableIO.read(spark, s"$outDir/analyzed").count()
     }
     buildDerived(spark, outDir, cfg)
   }
@@ -551,10 +526,9 @@ object IndexBuilder {
     * never read, so a crashed half-written segment is invisible). */
   def segmentPathsAsOf(spark: SparkSession, indexDir: String, gen: Long): Seq[String] = {
     if (gen == 0L) return Seq.empty
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = fs(spark, indexDir)
     (1L to gen).map(i => s"$indexDir/postings_seg_$i")
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+      .filter(p => f.exists(new org.apache.hadoop.fs.Path(p)))
   }
 
   /** Live posting segment dirs at the committed generation. */
@@ -583,9 +557,8 @@ object IndexBuilder {
     val floor = Manifests.read(indexDir, "compact_floor").map(_.rows).getOrElse(0L)
     require(gen >= floor,
       s"snapshot $gen expired: compact rewrote the base at generation $floor")
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
+    val f = fs(spark, indexDir)
+    def exists(p: String) = f.exists(new org.apache.hadoop.fs.Path(p))
     require(exists(statsPathAsOf(indexDir, gen)) && exists(dfPathAsOf(indexDir, gen)),
       s"snapshot $gen expired: stats/df retention keeps only generations ${committed - 1}..$committed")
     ((gen + 1) to committed).foreach { i =>
@@ -630,8 +603,13 @@ object IndexBuilder {
     }
   }
 
-  private def partsFor(cfg: Config, shards: Int): Int =
-    if (cfg.buildPartitions > 0) math.min(cfg.buildPartitions, shards) else shards
+  private def placement(cfg: Config, shards: Int): Placement =
+    Placement(shards,
+      if (cfg.buildPartitions > 0) math.min(cfg.buildPartitions, shards) else shards)
+
+  /** The Hadoop filesystem holding `path`. */
+  private[graft] def fs(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Shard count recorded at build time (index_meta manifest). */
   def metaShards(indexDir: String): Option[Int] =
@@ -640,7 +618,7 @@ object IndexBuilder {
   /** [[metaShards]] of an index a maintenance op mutates. Never guessed:
     * routing rows with the wrong modulus would corrupt the shard layout
     * (refresh silently drops out-of-range shards, HWM arrays overflow). */
-  private def builtShards(indexDir: String): Int = metaShards(indexDir).getOrElse(
+  private[build] def builtShards(indexDir: String): Int = metaShards(indexDir).getOrElse(
     throw new IllegalStateException(s"$indexDir has no index_meta manifest"))
 
   /** Exact total token count of a stats row; legacy stats tables predate
@@ -657,47 +635,36 @@ object IndexBuilder {
       broadcast(graft.sources.TableIO.read(df.sparkSession, p).select(col("docId"))),
       Seq("docId"), "left_anti"))
 
-  // ---- analyzed-row production (build + append share this) -----------------
+  // ---- analyzed-row production (build, append and streaming share this) -----
 
   /** Analyze raw turns into analyzed-table rows: ONE exchange (exact
-    * placement by shard) carrying RAW TEXT only — the analyzer runs AFTER
-    * the shuffle, fused into the same per-partition pass that assigns
-    * ranks, so the exchange never moves the (larger) term/tf arrays and the
-    * analyzed form is materialized exactly once, straight into the Parquet
-    * writer. shard = murmur3(conv_id) mod FIXED shard count: a pure
-    * function of the data, so docIds are identical at any parallelism.
-    * `base(shard)` is the first rank to allocate (0 on a fresh build; the
-    * HWM on append). */
-  private def analyzedRows(input: DataFrame, nShards: Int, parts: Int,
-                           pkeys: Array[Int], language: String,
-                           norm: Analyzer.Norm, base: Array[Long],
-                           facetCols: Seq[String] = Nil): DataFrame = {
+    * placement by shard, [[Placement.route]]) carrying RAW TEXT only — the
+    * analyzer runs AFTER the shuffle, fused into the same per-partition
+    * pass that assigns ranks, so the exchange never moves the (larger)
+    * term/tf arrays and the analyzed form is materialized exactly once,
+    * straight into the Parquet writer. `base(shard)` is the first rank to
+    * allocate (0 on a fresh build; the HWM on append and streaming
+    * ingest). */
+  private[graft] def analyzedRows(input: DataFrame, place: Placement, language: String,
+                                  norm: Analyzer.Norm, base: Array[Long],
+                                  facetCols: Seq[String] = Nil): DataFrame = {
     val spark = input.sparkSession
     import spark.implicits._
     val stop = language
     val fcols = facetCols.toArray
-    input
+    place.route(input
       .select(col("conv_id").cast("string") +: col("turn_idx").cast("int") +:
-        col("text") +: fcols.map(c => col(c).cast("string")): _*)
-      .withColumn("shard", pmod(hash(col("conv_id")), lit(nShards)).cast("int"))
-      .withColumn("pkey", element_at(lit(pkeys), col("shard") + 1))
-      .select(col("pkey") +: col("shard") +: col("conv_id") +: col("turn_idx") +:
-        col("text") +: fcols.map(col(_)): _*)
-      .repartition(parts, col("pkey"))
-      .sortWithinPartitions("shard", "conv_id", "turn_idx")
+        col("text") +: fcols.map(c => col(c).cast("string")): _*))
       .mapPartitions { rows =>
         // one interning analyzer per partition: steady-state per-token cost
         // is allocation-free (see PartitionAnalyzer — the 4N-core scaling
         // lever: allocation bandwidth is what saturates first)
         val pa = new graft.analysis.PartitionAnalyzer(StopWords.forLang(stop), norm)
-        var curShard = -1
-        var rank = 0L
+        val ranks = new ShardKeys.Ranks(base)
         rows.map { r =>
-          val shard = r.getInt(1)
-          if (shard != curShard) { curShard = shard; rank = base(shard) }
-          val docId = Ids.docId(shard, rank)
-          rank += 1L
-          val (len, terms0, tfs0) = pa.analyze(r.getString(4))
+          val shard = r.getInt(0)
+          val docId = ranks.next(shard)
+          val (len, terms0, tfs0) = pa.analyze(r.getString(3))
           // Facet terms PREPENDED (their Facets.Prefix sorts before every
           // analyzer token, keeping the per-doc terms array sorted), tf=1,
           // not counted in len. Null facet values index nothing.
@@ -706,7 +673,7 @@ object IndexBuilder {
             val ft = new ArrayBuffer[String](fcols.length)
             var fi = 0
             while (fi < fcols.length) {
-              if (!r.isNullAt(5 + fi)) ft += Facets.term(fcols(fi), r.getString(5 + fi))
+              if (!r.isNullAt(4 + fi)) ft += Facets.term(fcols(fi), r.getString(4 + fi))
               fi += 1
             }
             if (ft.nonEmpty) {
@@ -716,40 +683,38 @@ object IndexBuilder {
               tfs = Array.fill(fa.length)(1) ++ tfs0
             }
           }
-          (shard, docId, r.getString(2), r.getInt(3), len, terms, tfs)
+          (shard, docId, r.getString(1), r.getInt(2), len, terms, tfs)
         }
       }
       .toDF("shard", "docId", "conv_id", "turn_idx", "len", "terms", "tfs")
   }
 
-  private def buildStages(spark: SparkSession, input: DataFrame, indexDir: String,
-                          cfg: Config): Unit = {
-    import spark.implicits._
-    val parts = partsFor(cfg, cfg.shards)
-
-    // Exact shard→partition placement (see ShardKeys): shard s goes to
-    // partition s % parts, so every stage keyed by shard is perfectly
-    // balanced — no balls-in-bins stragglers.
-    val pkeys = ShardKeys.keys(cfg.shards, parts)
-
-    // ---- stage: analyzed -------------------------------------------------
+  /** The analyzed stage of [[build]] and [[merge]]: `rows` land as
+    * analyzed/, and the `index_meta` manifest records the shard count. */
+  private def analyzedStage(spark: SparkSession, indexDir: String, shards: Int)
+                           (rows: => DataFrame): Unit =
     stage(spark, indexDir, "analyzed") { () =>
-      analyzedRows(input, cfg.shards, parts, pkeys, cfg.language, cfg.normalizer,
-          new Array[Long](cfg.shards), cfg.facetCols)
-        .pipe(df => graft.sources.TableIO.write(df, s"$indexDir/analyzed"))
-      // docId-allocation HWMs are NOT computed here: the build path stays
-      // job-minimal, and Hwm.read derives them from analyzed/ on the first
-      // append/stream into this index (then persists manifests).
-      Manifests.write(indexDir,
-        StageManifest("index_meta", cfg.shards, FormatVersion, "meta", 0))
+      graft.sources.TableIO.write(rows, s"$indexDir/analyzed")
+      Manifests.write(indexDir, StageManifest("index_meta", shards, FormatVersion, "meta", 0))
       graft.sources.TableIO.read(spark, s"$indexDir/analyzed").count()
     }
+
+  private def buildStages(spark: SparkSession, input: DataFrame, indexDir: String,
+                          cfg: Config): Unit = {
+    val place = placement(cfg, cfg.shards)
+
+    // ---- stage: analyzed -------------------------------------------------
+    // docId-allocation HWMs are NOT computed here: the build path stays
+    // job-minimal, and Hwm.read derives them from analyzed/ on the first
+    // append/stream into this index (then persists manifests).
+    analyzedStage(spark, indexDir, cfg.shards)(analyzedRows(input, place, cfg.language,
+      cfg.normalizer, new Array[Long](cfg.shards), cfg.facetCols))
 
     // ---- stage: docmeta (docvalues sidecar) ------------------------------
     if (cfg.metaCols.nonEmpty) stage(spark, indexDir, "docmeta") { () =>
       writeDocMeta(spark, input,
         graft.sources.TableIO.read(spark, s"$indexDir/analyzed"),
-        indexDir, parts, pkeys, cfg.metaCols, mode = "overwrite")
+        indexDir, place, cfg.metaCols, mode = "overwrite")
       graft.sources.TableIO.read(spark, s"$indexDir/docmeta").count()
     }
 
@@ -764,8 +729,8 @@ object IndexBuilder {
     * source-table-free plan at query time. */
   private def writeDocMeta(spark: SparkSession, input: DataFrame,
                            analyzedSlice: DataFrame, indexDir: String,
-                           parts: Int, pkeys: Array[Int],
-                           metaCols: Seq[String], mode: String): Unit = {
+                           place: Placement, metaCols: Seq[String],
+                           mode: String): Unit = {
     // `len` (analyzed doc length) rides along from the analyzed slice: it
     // is THE per-doc scoring statistic (BM25 normalization, BM25F field
     // lengths), so the sidecar carries it natively — query paths that need
@@ -774,10 +739,7 @@ object IndexBuilder {
       col("shard"), col("docId"), col("conv_id"), col("turn_idx"), col("len"))
     val meta = input.select(col("conv_id").cast("string").as("conv_id") +:
       col("turn_idx").cast("int").as("turn_idx") +: metaCols.map(col): _*)
-    val rows = keys.join(meta, Seq("conv_id", "turn_idx"))
-      .withColumn("pkey", element_at(lit(pkeys), col("shard") + 1))
-      .repartition(parts, col("pkey"))
-      .sortWithinPartitions("shard", "docId")
+    val rows = place.exchange(keys.join(meta, Seq("conv_id", "turn_idx")), "shard", "docId")
       .select(Seq(col("shard"), col("docId"), col("conv_id"),
         col("turn_idx"), col("len")) ++ metaCols.map(col): _*)
     graft.sources.TableIO.write(rows, s"$indexDir/docmeta", mode = mode)
@@ -790,8 +752,6 @@ object IndexBuilder {
   private def buildDerived(spark: SparkSession, indexDir: String,
                            cfg: Config): Unit = {
     import spark.implicits._
-    val parts = partsFor(cfg, cfg.shards)
-    val pkeys = ShardKeys.keys(cfg.shards, parts)
     lazy val analyzed = graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
     // NOTE: there is no separate "docs" table — doc metadata reads go
     // through Parquet column pruning on analyzed/ (only the selected
@@ -814,21 +774,12 @@ object IndexBuilder {
     // only) doc above a shard's last posting is counted in stats, and a
     // blob-derived cover would let the first refresh count it AGAIN.
     Future(stage(spark, indexDir, "stats") { () =>
-      val per = analyzed.groupBy($"shard").agg(
-          count(lit(1)).as("cnt"),
-          coalesce(sum($"len"), lit(0L)).as("s"),
-          max(expr(s"docId & ${Ids.RankMask}")).as("maxRank"))
-        .collect()
-      val n = per.map(_.getAs[Long]("cnt")).sum
-      val sumlen = per.map(_.getAs[Long]("s")).sum
-      Seq((n, if (n == 0) 0.0 else sumlen.toDouble / n, sumlen))
-        .toDF("n", "avgdl", "sumlen")
-        .pipe(df => graft.sources.TableIO.write(df, s"$indexDir/stats"))
       val cover = new Array[Long](cfg.shards)
-      per.foreach(r => cover(r.getAs[Int]("shard")) = r.getAs[Long]("maxRank") + 1L)
-      cover.zipWithIndex.foreach { case (v, s) =>
-        Manifests.write(indexDir, StageManifest(s"postings_cover_g0_$s", v, 0, "cover", 0))
-      }
+      val per = ShardKeys.raise(analyzed, cover,
+        count(lit(1)).as("cnt"), coalesce(sum($"len"), lit(0L)).as("s"))
+      writeStats(spark, s"$indexDir/stats",
+        per.map(_.getAs[Long]("cnt")).sum, per.map(_.getAs[Long]("s")).sum)
+      writeCovers(indexDir, 0L, cover)
       1L
     }),
 
@@ -836,7 +787,7 @@ object IndexBuilder {
     Future {
       stage(spark, indexDir, "postings") { () =>
         graft.sources.TableIO.write(
-          assemblePostings(spark, analyzed, parts, pkeys, cfg.dictRanges).toDF(),
+          assemblePostings(spark, analyzed, placement(cfg, cfg.shards), cfg.dictRanges).toDF(),
           s"$indexDir/postings")
         graft.sources.TableIO.read(spark, s"$indexDir/postings").count()
       }
@@ -882,13 +833,13 @@ object IndexBuilder {
     * vocabulary — within executor budgets; past that, range-partition the
     * dictionary and assemble per range. */
   private def assemblePostings(spark: SparkSession, analyzed: DataFrame,
-                               parts: Int, pkeys: Array[Int],
+                               place: Placement,
                                dictRanges: Int = 1): Dataset[Posting] = {
     if (dictRanges <= 1) {
       val dict = termDict(spark, analyzed)
       val bcv = spark.sparkContext.broadcast(dict)
-      assembleWithDict(spark, analyzed, parts, pkeys, bcv, null, null)
-    } else assembleRanged(spark, analyzed, parts, pkeys, dictRanges)
+      assembleWithDict(spark, analyzed, place, bcv, null, null)
+    } else assembleRanged(spark, analyzed, place, dictRanges)
   }
 
   /** Range-partitioned assembly (Config.dictRanges > 1): the web-vocabulary
@@ -904,8 +855,7 @@ object IndexBuilder {
     * broadcast. Identical postings content to the broadcast path (pinned
     * by DictRangeSpec); only file layout differs (R file sets per shard). */
   private def assembleRanged(spark: SparkSession, analyzed: DataFrame,
-                             parts: Int, pkeys: Array[Int],
-                             nRanges: Int): Dataset[Posting] = {
+                             place: Placement, nRanges: Int): Dataset[Posting] = {
     import spark.implicits._
     val termsDs = analyzed.select(explode(col("terms")).as("term"))
       .distinct().as[String]
@@ -925,7 +875,7 @@ object IndexBuilder {
         }.collect() // one range's slice: ≈ vocab / R by construction
         java.util.Arrays.sort(slice.asInstanceOf[Array[AnyRef]])
         val bcv = spark.sparkContext.broadcast(slice)
-        assembleWithDict(spark, analyzed, parts, pkeys, bcv, lo, hi)
+        assembleWithDict(spark, analyzed, place, bcv, lo, hi)
       }.reduce(_ union _)
       // the union plan no longer references termsDs (slices are collected
       // eagerly above), so unpersisting in the finally is safe before the
@@ -937,17 +887,11 @@ object IndexBuilder {
     * vocabulary, or one range's slice with [lo, hi) bounds in Java string
     * order; null = unbounded). */
   private def assembleWithDict(spark: SparkSession, analyzed: DataFrame,
-                               parts: Int, pkeys: Array[Int],
+                               place: Placement,
                                bcv: org.apache.spark.broadcast.Broadcast[Array[String]],
                                lo: String, hi: String): Dataset[Posting] = {
     import spark.implicits._
-    val chunks = chunkRows(spark, analyzed, bcv, lo, hi)
-    chunks
-      .withColumn("pkey", element_at(lit(pkeys), col("shard") + 1))
-      .repartition(parts, $"pkey")
-      .select(col("shard"), col("tid"), col("firstDoc"), col("n"),
-        col("docs"), col("aux"))
-      .sortWithinPartitions("shard", "tid", "firstDoc")
+    place.exchange(chunkRows(spark, analyzed, bcv, lo, hi), "shard", "tid", "firstDoc")
       .mapPartitions { rows =>
         val vocab = bcv.value
         new Iterator[Posting] {
@@ -1232,16 +1176,12 @@ object IndexBuilder {
 
   // ---- segment coverage ------------------------------------------------------
 
-  /** Per-shard first rank NOT covered by any committed posting segment:
-    * every generation (the base build's stats stage writes g = 0) commits
-    * per-shard cover manifests; missing covers mean a foreign/corrupt
-    * index — fail fast rather than silently re-index or skip rows. */
-  private[graft] def readCover(spark: SparkSession, indexDir: String,
-                               shards: Int): Array[Long] =
-    readCoverAsOf(spark, indexDir, shards, committedGen(indexDir))
-
-  /** Per-shard coverage as of generation `g` (cover manifests are tiny and
-    * never reclaimed, so any generation's coverage stays resolvable). */
+  /** Per-shard first rank NOT covered by generation `g`'s posting
+    * segments: every generation (the base build's stats stage writes
+    * g = 0) commits per-shard cover manifests; missing covers mean a
+    * foreign/corrupt index — fail fast rather than silently re-index or
+    * skip rows. Cover manifests are tiny and never reclaimed, so any
+    * generation's coverage stays resolvable. */
   private[graft] def readCoverAsOf(spark: SparkSession, indexDir: String,
                                    shards: Int, g: Long): Array[Long] = {
     val cover = new Array[Long](shards)
@@ -1254,14 +1194,31 @@ object IndexBuilder {
     cover
   }
 
+  /** Replace table `dest` by the complete table `tmp`: `dest` is renamed
+    * aside to `<dest>_old`, `tmp` into place, then the aside copy is
+    * deleted. A crash between any two steps leaves a state that
+    * [[finishSwap]] completes — never one without the complete table. */
   private def swapDir(spark: SparkSession, tmp: String, dest: String): Unit = {
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = tmpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(destPath, true)
-    if (!fs.rename(tmpPath, destPath))
-      throw new java.io.IOException(s"rename $tmp -> $dest failed")
+    val f = fs(spark, dest)
+    if (f.exists(new org.apache.hadoop.fs.Path(dest))) rename(f, dest, s"${dest}_old")
+    rename(f, tmp, dest)
+    f.delete(new org.apache.hadoop.fs.Path(s"${dest}_old"), true)
   }
+
+  /** Finish a [[swapDir]] a crash interrupted: promote `tmp` when `dest`
+    * is missing, then drop the `<dest>_old` aside copy. `tmp` is NEVER
+    * promoted while `dest` exists — that `tmp` may be half-written (its
+    * op then rewrites it). */
+  private def finishSwap(spark: SparkSession, tmp: String, dest: String): Unit = {
+    val f = fs(spark, dest)
+    val d = new org.apache.hadoop.fs.Path(dest)
+    if (!f.exists(d) && f.exists(new org.apache.hadoop.fs.Path(tmp))) rename(f, tmp, dest)
+    if (f.exists(d)) f.delete(new org.apache.hadoop.fs.Path(s"${dest}_old"), true)
+  }
+
+  private def rename(f: org.apache.hadoop.fs.FileSystem, from: String, to: String): Unit =
+    if (!f.rename(new org.apache.hadoop.fs.Path(from), new org.apache.hadoop.fs.Path(to)))
+      throw new java.io.IOException(s"rename $from -> $to failed")
 
   /** Run one stage unless its manifest says done; record rows/bytes/time. */
   private def stage(spark: SparkSession, indexDir: String, name: String)

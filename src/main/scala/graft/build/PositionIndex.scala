@@ -2,7 +2,7 @@ package graft.build
 
 import graft.analysis.Analyzer
 import graft.codec.{PosPostings, VByte}
-import graft.model.{Ids, PosPosting, StageManifest}
+import graft.model.{PosPosting, StageManifest}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
@@ -27,10 +27,10 @@ import scala.collection.mutable.ArrayBuffer
   * reusable, and a dedicated vocab pass would cost a second corpus scan,
   * the wrong trade for an opt-in stage.
   *
-  * docIds are RECOMPUTED, not joined: the same pure shard hash, the same
-  * exact partition placement, and the same (shard, conv_id, turn_idx)
-  * intra-partition sort replay the build's deterministic rank assignment —
-  * zero extra shuffles vs a corpus-sized join against analyzed/. That
+  * docIds are RECOMPUTED, not joined: the build's own placement
+  * ([[Placement.route]] + [[ShardKeys.Ranks]]) replays its deterministic
+  * rank assignment — zero extra shuffles vs a corpus-sized join against
+  * analyzed/. That
   * replay is only valid against a base build, so [[build]] refuses an
   * index that has seen appends/streaming (rebuild after compaction
   * instead — the same policy a segment-merging engine applies to its own
@@ -55,17 +55,14 @@ object PositionIndex {
   def build(spark: SparkSession, input: DataFrame, indexDir: String,
             flushPositions: Int = DefaultFlushPositions): Unit = {
     if (exists(indexDir)) return
-    val shards = IndexBuilder.metaShards(indexDir).getOrElse(
-      throw new IllegalStateException(s"$indexDir has no index_meta manifest"))
+    val shards = IndexBuilder.builtShards(indexDir)
     require(Manifests.read(indexDir, "stream_hwm_max").isEmpty,
       s"$indexDir has appended/streamed documents: the positional sidecar " +
         "replays the BASE build's docId assignment — compact first, then rebuild")
     IndexBuilder.withBuildConf(spark) {
       val t0 = System.nanoTime()
-      val parts = shards
-      val pkeys = ShardKeys.keys(shards, parts)
       graft.sources.TableIO.write(
-        assemble(spark, input, shards, parts, pkeys, flushPositions), path(indexDir))
+        assemble(spark, input, Placement(shards, shards), flushPositions), path(indexDir))
       val rows = graft.sources.TableIO.read(spark, path(indexDir)).count()
       Manifests.write(indexDir, StageManifest(Stage, rows,
         Manifests.dirBytes(path(indexDir)), "done",
@@ -93,22 +90,16 @@ object PositionIndex {
   private type ChunkRow =
     (Int, String, Long, Long, Int, Array[Byte], Array[Byte], Array[Byte])
 
-  private def assemble(spark: SparkSession, input: DataFrame, shards: Int,
-                       parts: Int, pkeys: Array[Int],
+  private def assemble(spark: SparkSession, input: DataFrame, place: Placement,
                        flushPositions: Int): DataFrame = {
     import spark.implicits._
-    val chunks = input
-      .select(col("conv_id").cast("string"), col("turn_idx").cast("int"), col("text"))
-      .withColumn("shard", pmod(hash(col("conv_id")), lit(shards)).cast("int"))
-      .withColumn("pkey", element_at(lit(pkeys), col("shard") + 1))
-      .select(col("pkey"), col("shard"), col("conv_id"), col("turn_idx"), col("text"))
-      .repartition(parts, col("pkey"))
-      .sortWithinPartitions("shard", "conv_id", "turn_idx")
+    val chunks = place.route(input
+      .select(col("conv_id").cast("string"), col("turn_idx").cast("int"), col("text")))
       .mapPartitions { rows =>
         new Iterator[ChunkRow] {
           private val m = new java.util.HashMap[String, Chunk]()
           private var entries = 0 // positions accumulated since last flush
-          private var rank = 0L
+          private val ranks = new ShardKeys.Ranks(new Array[Long](place.shards))
           private var curShard = Int.MinValue
           private var carried: Row = null // boundary row seen but not yet processed
           private var pending: Iterator[ChunkRow] = Iterator.empty
@@ -129,9 +120,8 @@ object PositionIndex {
           }
 
           private def processDoc(r: Row): Unit = {
-            val docId = Ids.docId(curShard, rank)
-            rank += 1L
-            val toks = Analyzer.tokenizeRaw(r.getString(4))
+            val docId = ranks.next(curShard)
+            val toks = Analyzer.tokenizeRaw(r.getString(3))
             // per-term ascending positions, one pass over the token stream
             val posByTerm = new java.util.HashMap[String, ArrayBuffer[Int]]()
             var i = 0
@@ -164,7 +154,7 @@ object PositionIndex {
             while (!pending.hasNext && (carried != null || rows.hasNext)) {
               val r = if (carried != null) { val c = carried; carried = null; c }
                       else rows.next()
-              val shard = r.getInt(1)
+              val shard = r.getInt(0)
               if (shard != curShard) {
                 if (!m.isEmpty) {
                   // shard boundary: flush so no chunk spans shards; the row
@@ -174,7 +164,6 @@ object PositionIndex {
                   return
                 }
                 curShard = shard
-                rank = 0L
               }
               processDoc(r)
               if (entries >= flushPositions) { drain(curShard); return }
@@ -194,11 +183,7 @@ object PositionIndex {
       }
       .toDF("shard", "term", "firstDoc", "lastDoc", "n", "docs", "cnts", "pos")
 
-    chunks
-      .withColumn("pkey", element_at(lit(pkeys), col("shard") + 1))
-      .repartition(parts, $"pkey")
-      .select($"shard", $"term", $"firstDoc", $"lastDoc", $"n", $"docs", $"cnts", $"pos")
-      .sortWithinPartitions("shard", "term", "firstDoc")
+    place.exchange(chunks, "shard", "term", "firstDoc")
       .mapPartitions { rows =>
         // Chunks of one (shard, term) arrive sorted by firstDoc with
         // disjoint ascending ranges (one shard = one source partition and

@@ -187,9 +187,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     else graft.build.IndexBuilder.metaShards(indexDir).map { shards =>
       // a snapshot read ALWAYS filters to its generation's coverage —
       // analyzed/ holds every later generation's rows too
-      val cover = graft.build.IndexBuilder.readCoverAsOf(spark, indexDir, shards, generation)
-      expr(s"docId & ${graft.model.Ids.RankMask}")
-        .lt(element_at(lit(cover), col("shard") + 1))
+      graft.build.ShardKeys.below(
+        graft.build.IndexBuilder.readCoverAsOf(spark, indexDir, shards, generation))
     }
   /** Delete tombstones as of this Searcher's generation
     * ([[graft.build.IndexBuilder.delete]]): per-shard docId sets that every

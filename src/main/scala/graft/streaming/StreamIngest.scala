@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.analysis.{Analyzer, StopWords}
-import graft.build.{Hwm, Manifests, ShardKeys}
-import graft.model.{Ids, StageManifest}
+import graft.analysis.Analyzer
+import graft.build.{Hwm, IndexBuilder, Manifests, Placement, ShardKeys}
+import graft.model.StageManifest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * The batch builder assigns docIds by global (conv_id, turn_idx) rank;
   * a stream cannot know future ranks, so the streaming path assigns them
-  * per shard above a persisted high-water mark, in arrival order — docIds
+  * per shard above a persisted high-water mark, batch by batch — docIds
   * remain unique and strictly ascending per shard (the postings rebuild
   * only needs ascending, not dense: doc lengths ride inline in the posting
   * blobs). Downstream stages (stats/df/postings) are refreshed by running
@@ -33,18 +33,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamIngest {
 
-  // Per-shard next-rank HWMs are shared with the batch builder/append —
-  // see graft.build.Hwm.
-  private def readHwm(spark: SparkSession, indexDir: String, shards: Int): Array[Long] =
-    Hwm.read(spark, indexDir, shards)
-
-  private def writeHwm(indexDir: String, hwm: Array[Long]): Unit =
-    Hwm.write(indexDir, hwm)
-
   /** Start ingesting a streaming DataFrame of turns into
     * `<indexDir>/analyzed`. Returns the StreamingQuery (caller awaits /
-    * stops). Micro-batches are processed with the same shard routing and
-    * analyzer as the batch build. */
+    * stops). Each micro-batch goes through the batch build's own
+    * analyzed-row path ([[IndexBuilder.analyzedRows]]): same shard
+    * routing, placement and analyzer, ranks above the per-shard HWMs. */
   def start(spark: SparkSession, stream: DataFrame, indexDir: String,
             shards: Int, language: String = "en",
             checkpoint: String = null,
@@ -52,52 +45,28 @@ object StreamIngest {
               * built with — streamed docs must normalize identically or
               * their terms never match normalized query terms. */
             normalizer: Analyzer.Norm = Analyzer.Identity): StreamingQuery = {
-    val lang = language
-    val norm = normalizer
-    val analyzeUdf = udf((text: String) => Analyzer.analyze(text, StopWords.forLang(lang), norm))
-    val pkeys = ShardKeys.keys(shards, shards)
+    val place = Placement(shards, shards)
     val cp = Option(checkpoint).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_stream_cp").toString)
 
     stream
-      .select(col("conv_id").cast("string"), col("turn_idx").cast("int"), col("text"))
       .writeStream
       .option("checkpointLocation", cp)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!Manifests.isDone(indexDir, s"stream_batch_$batchId")) {
           val ss = batch.sparkSession
-          val hwm = readHwm(ss, indexDir, shards)
-          val bhwm = ss.sparkContext.broadcast(hwm)
-          val analyzed = batch
-            .withColumn("shard", pmod(hash(col("conv_id")), lit(shards)).cast("int"))
-            .withColumn("pkey", element_at(lit(pkeys), col("shard") + 1))
-            .withColumn("tok", analyzeUdf(col("text")))
-            .select(col("pkey"), col("shard"), col("conv_id"), col("turn_idx"),
-              col("tok._1").as("len"), col("tok._2").as("terms"), col("tok._3").as("tfs"))
-            .repartition(shards, col("pkey"))
-            .sortWithinPartitions("shard", "conv_id", "turn_idx")
-            .mapPartitions { rows =>
-              var curShard = -1
-              var rank = 0L
-              rows.map { r =>
-                val shard = r.getInt(1)
-                if (shard != curShard) { curShard = shard; rank = bhwm.value(shard) }
-                val docId = Ids.docId(shard, rank)
-                rank += 1L
-                (shard, docId, r.getString(2), r.getInt(3), r.getInt(4),
-                  r.getSeq[String](5), r.getSeq[Int](6))
-              }
-            }(org.apache.spark.sql.Encoders.product)
-            .toDF("shard", "docId", "conv_id", "turn_idx", "len", "terms", "tfs")
+          val hwm = Hwm.read(ss, indexDir, shards)
 
           // (1) stage the batch (idempotent overwrite)
           val staging = s"$indexDir/_staging/batch_$batchId"
-          analyzed.write.mode("overwrite").parquet(staging)
+          IndexBuilder.analyzedRows(batch, place, language, normalizer, hwm)
+            .write.mode("overwrite").parquet(staging)
+          // HWM advance from the staged rows' own ranks
+          val landed = ShardKeys.raise(ss.read.parquet(staging), hwm, count(lit(1)).as("n"))
           // (2) commit: rename to deterministic names — replays overwrite
-          val hconf = ss.sparkContext.hadoopConfiguration
           val stagingPath = new org.apache.hadoop.fs.Path(staging)
           val destDir = new org.apache.hadoop.fs.Path(s"$indexDir/analyzed")
-          val fs = stagingPath.getFileSystem(hconf)
+          val fs = IndexBuilder.fs(ss, staging)
           fs.mkdirs(destDir)
           val parts = fs.listStatus(stagingPath)
             .filter(_.getPath.getName.startsWith("part-"))
@@ -108,14 +77,10 @@ object StreamIngest {
             fs.rename(f.getPath, dst)
           }
           fs.delete(stagingPath, true)
-          // (3) advance HWMs from what actually landed, then seal the batch
-          val counts = batch
-            .withColumn("shard", pmod(hash(col("conv_id")), lit(shards)).cast("int"))
-            .groupBy("shard").count().collect()
-          counts.foreach(r => hwm(r.getAs[Int]("shard")) += r.getAs[Long]("count"))
-          writeHwm(indexDir, hwm)
+          // (3) record the advanced HWMs, then seal the batch
+          Hwm.write(indexDir, hwm)
           Manifests.write(indexDir,
-            StageManifest(s"stream_batch_$batchId", counts.map(_.getAs[Long]("count")).sum, 0, "done", 0))
+            StageManifest(s"stream_batch_$batchId", landed.map(_.getAs[Long]("n")).sum, 0, "done", 0))
         }
         ()
       }

@@ -251,6 +251,38 @@ class DeleteSpec extends AnyFunSuite {
     assert(s2.topK("vacuum", 5).select("conv_id").as[String].collect().contains("cPOSTVAC"))
   }
 
+  test("vacuum that crashed between its swap's two renames completes on re-run") {
+    val all = Transcripts.synth(spark, 1500, turnsPerConv = 5).toDF()
+    val doomedPred = pmod(hash($"conv_id"), lit(4)) === 2
+    val refDir = TestSpark.tmpDir("delswap_ref")
+    IndexBuilder.build(spark, all.filter(!doomedPred), refDir, IndexBuilder.Config(shards = 4))
+    val dir = TestSpark.tmpDir("delswap")
+    IndexBuilder.build(spark, all, dir, IndexBuilder.Config(shards = 4))
+    assert(IndexBuilder.delete(spark, dir, doomedPred) > 0)
+    // the state a crash leaves after vacuum pinned the HWMs, wrote
+    // analyzed_tmp/ and moved analyzed/ out of the way: a complete
+    // analyzed_tmp/, no analyzed/
+    IndexBuilder.compact(spark, dir)
+    graft.build.Hwm.write(dir, graft.build.Hwm.read(spark, dir, 4))
+    graft.sources.TableIO.write(IndexBuilder.withoutTombstones(
+        spark.read.parquet(s"$dir/analyzed"),
+        IndexBuilder.tombstonePathAsOf(dir, IndexBuilder.committedGen(dir))),
+      s"$dir/analyzed_tmp")
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.rename(new org.apache.hadoop.fs.Path(s"$dir/analyzed"),
+      new org.apache.hadoop.fs.Path(s"$dir/analyzed_old"))
+
+    IndexBuilder.vacuum(spark, dir)
+    Seq("analyzed_tmp", "analyzed_old", "postings_tmp", "postings_old").foreach(d =>
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$d")), s"$d left behind"))
+    val bad = graft.build.Fsck.run(spark, dir).filterNot(_.ok)
+    assert(bad.isEmpty, bad.mkString("; "))
+    val sRef = new Searcher(spark, refDir)
+    val sVac = new Searcher(spark, dir)
+    assert(sVac.n == sRef.n)
+    Queries.foreach(q => assertSameTopK(sRef, sVac, q, 15))
+  }
+
   test("delete interoperates with append + refresh") {
     val all = Transcripts.synth(spark, 1200, turnsPerConv = 4).toDF()
     val doomedPred = pmod(hash($"conv_id"), lit(3)) === 0

@@ -103,6 +103,34 @@ class StreamIngestSpec extends AnyFunSuite {
     assert(analyzed.select("docId").distinct().count() == 300)
   }
 
+  test("a stream micro-batch lands the same analyzed rows as a batch append") {
+    val turns = Transcripts.synth(spark, 600, turnsPerConv = 5).toDF()
+    val base = turns.filter($"conv_id" < "conv-000000080")
+    val batchB = turns.filter($"conv_id" >= "conv-000000080")
+    val cfg = graft.build.IndexBuilder.Config(shards = 4)
+    val appendDir = TestSpark.tmpDir("parity_append")
+    val streamDir = TestSpark.tmpDir("parity_stream")
+    Seq(appendDir, streamDir).foreach(graft.build.IndexBuilder.build(spark, base, _, cfg))
+
+    graft.build.IndexBuilder.append(spark, batchB, appendDir, cfg)
+    val srcDir = TestSpark.tmpDir("parity_src")
+    batchB.write.mode("append").parquet(srcDir)
+    val q = StreamIngest.start(spark,
+      spark.readStream.schema(batchB.schema).parquet(srcDir), streamDir, shards = 4)
+    q.processAllAvailable()
+    q.stop()
+    assert(graft.build.Manifests.isDone(streamDir, "stream_batch_0"))
+    assert(graft.build.Manifests.read(streamDir, "stream_batch_1").isEmpty,
+      "batch B must land as ONE micro-batch")
+
+    def analyzed(dir: String) = spark.read.parquet(s"$dir/analyzed")
+      .select("shard", "docId", "conv_id", "turn_idx", "len", "terms", "tfs")
+    val (a, st) = (analyzed(appendDir), analyzed(streamDir))
+    assert(a.count() == 600)
+    assert(a.exceptAll(st).count() == 0 && st.exceptAll(a).count() == 0,
+      "append and streaming ingest placed batch B differently")
+  }
+
   test("stream → refresh → searchable: end-to-end freshness without a rebuild") {
     val srcDir = TestSpark.tmpDir("stream_src4")
     val idxDir = TestSpark.tmpDir("stream_idx4")
