@@ -10,23 +10,21 @@ import org.apache.spark.sql.SparkSession
   * document).
   *
   * Persisted as one manifest per shard (`stream_hwm_<s>`, rows = next free
-  * rank) plus a `stream_hwm_max` presence marker. When no manifests exist
-  * but analyzed/ does (an index built before HWMs were recorded), the HWM
-  * is seeded from max(rank)+1 of the existing table — appending into a
-  * batch-built index must never reuse its docIds. */
+  * rank) plus a `stream_hwm_max` presence marker. [[read]] raises the
+  * manifest marks (0 where none exist) by the analyzed rows at or above
+  * them: rows an index built before HWMs were recorded already holds, and
+  * rows an `append` or stream batch landed before a crash stopped it
+  * short of [[write]] — allocation must never reuse a landed docId. The
+  * scan is per-shard docId ranges ([[ShardKeys.atOrAbove]]), so when the
+  * marks are current the row-group statistics prune every file. */
 object Hwm {
 
   def read(spark: SparkSession, indexDir: String, shards: Int): Array[Long] = {
-    val hwm = new Array[Long](shards)
-    if (Manifests.read(indexDir, "stream_hwm_max").isDefined) {
-      (0 until shards).foreach { s =>
-        hwm(s) = Manifests.read(indexDir, s"stream_hwm_$s").map(_.rows).getOrElse(0L)
-      }
-    } else {
-      val analyzed = s"$indexDir/analyzed"
-      if (IndexBuilder.fs(spark, analyzed).exists(new org.apache.hadoop.fs.Path(analyzed)))
-        ShardKeys.raise(spark.read.parquet(analyzed), hwm)
-    }
+    val hwm = Array.tabulate(shards)(s =>
+      Manifests.read(indexDir, s"stream_hwm_$s").map(_.rows).getOrElse(0L))
+    val analyzed = s"$indexDir/analyzed"
+    if (IndexBuilder.fs(spark, analyzed).exists(new org.apache.hadoop.fs.Path(analyzed)))
+      ShardKeys.raise(spark.read.parquet(analyzed).where(ShardKeys.atOrAbove(hwm)), hwm)
     hwm
   }
 

@@ -251,6 +251,7 @@ object IndexBuilder {
       val (dn, dsum) = countAndLength(doomed)
       if (dn == 0L) 0L else {
         val gen = gen0 + 1L
+        dropStaging(spark, indexDir, gen)
         val tombs = doomed.select($"shard", $"docId")
         graft.sources.TableIO.write(
           prior.fold(tombs)(p => p.unionByName(tombs))
@@ -282,9 +283,9 @@ object IndexBuilder {
     * per-shard postings_cover_g<g>_<s> manifests — and readers resolve
     * paths through the `postings_gen` pointer manifest, whose atomic write
     * is the single commit point. A crash anywhere before the pointer write
-    * leaves only unreachable staging (overwritten by the retried refresh);
-    * a crash after it leaves a fully consistent index. Nothing is ever
-    * updated in place. */
+    * leaves only unreachable staging, dropped by the next refresh or
+    * delete ([[dropStaging]]); a crash after it leaves a fully consistent
+    * index. Nothing is ever updated in place. */
   def refresh(spark: SparkSession, indexDir: String): Unit = leased(indexDir, spark) {
     import spark.implicits._
     val shards = builtShards(indexDir)
@@ -296,6 +297,7 @@ object IndexBuilder {
 
     // ---- staging (all writes idempotent, none visible until the commit) --
     val gen = committedGen(indexDir) + 1L
+    dropStaging(spark, indexDir, gen)
     val segDir = s"$indexDir/postings_seg_$gen"
     graft.sources.TableIO.write(
       assemblePostings(spark, newRows, Placement(shards, shards)).toDF(), segDir)
@@ -327,8 +329,8 @@ object IndexBuilder {
     * terms that reach 0 are dropped), generation g's per-shard covers and
     * the caller's `staged` manifests, then writes the `postings_gen`
     * pointer — an atomic manifest rename and the single commit point. A
-    * crash before it leaves only unreachable staging, overwritten by the
-    * retry. */
+    * crash before it leaves only unreachable staging, dropped or
+    * overwritten by the next commit. */
   private def commitGeneration(spark: SparkSession, indexDir: String, gen: Long,
                                dn: Long, dsum: Long, deltaDf: DataFrame,
                                cover: Array[Long],
@@ -344,6 +346,19 @@ object IndexBuilder {
     writeCovers(indexDir, gen, cover)
     staged.foreach(Manifests.write(indexDir, _))
     Manifests.write(indexDir, StageManifest("postings_gen", gen, 0, "gen", 0))
+  }
+
+  /** Drop what a crashed refresh or delete left staged for generation
+    * `gen`, before staging it anew. Its other staged names are overwritten
+    * by the commit, but these are found by existence: a leftover
+    * `postings_seg_<g>` would be served (its docs uncovered, so indexed a
+    * second time by the next refresh), and a leftover `tombstones_g<g>`
+    * marker would hide its docs without their stats/df decrement. The
+    * marker goes first, so no crash leaves it naming a missing table. */
+  private def dropStaging(spark: SparkSession, indexDir: String, gen: Long): Unit = {
+    Manifests.clear(indexDir, s"tombstones_g$gen")
+    Seq(s"tombstones_g$gen", s"postings_seg_$gen").foreach(t =>
+      fs(spark, indexDir).delete(new org.apache.hadoop.fs.Path(s"$indexDir/$t"), true))
   }
 
   /** (row count, Σ len) of analyzed rows — a generation's stats delta. */

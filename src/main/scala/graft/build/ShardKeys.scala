@@ -58,6 +58,14 @@ object ShardKeys {
   def below(marks: Array[Long]): Column =
     rank < element_at(lit(marks.clone()), col("shard") + 1)
 
+  /** `!below(marks)` as per-shard docId ranges [docId(s, marks(s)),
+    * docId(s + 1, 0)), which Parquet row-group min/max statistics prune:
+    * on a table with one shard per row group only the row groups holding
+    * rows at or above the marks are read. */
+  def atOrAbove(marks: Array[Long]): Column =
+    marks.indices.map(s => col("docId") >= Ids.docId(s, marks(s)) &&
+      col("docId") < Ids.docId(s + 1, 0L)).reduce(_ || _)
+
   /** Raise `marks(s)` to max(rank)+1 over the shard-s rows of `rows` (one
     * pruned per-shard aggregation); `aggs` ride the same aggregation and
     * its per-shard rows are returned. */

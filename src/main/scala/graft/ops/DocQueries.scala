@@ -18,10 +18,11 @@ import java.util.concurrent.ConcurrentHashMap
   *
   * Index plumbing is two memos: every index a query reads is derived from
   * the corpus by [[derived]] (one registry of index dirs, each committed
-  * by one done-sentinel), and every Searcher over them comes from one
-  * memo keyed by (index dir, snapshot generation) — the one place a bound
-  * on serving state goes. Beside them sit only the positional searchers,
-  * the federated readers and each corpus's max doc_id.
+  * by one done-sentinel — VectorOps' IVF and PQ dirs included), and every
+  * Searcher over them comes from one memo keyed by (index dir, snapshot
+  * generation) — the one place a bound on serving state goes. Beside them
+  * sit only the positional searchers, the federated readers and each
+  * corpus's max doc_id.
   */
 object DocQueries {
 

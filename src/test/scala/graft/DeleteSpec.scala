@@ -311,6 +311,35 @@ class DeleteSpec extends AnyFunSuite {
       .collect().contains("cLATE"))
   }
 
+  test("a crashed refresh's staged segment is dropped by the next delete") {
+    val all = Transcripts.synth(spark, 600, turnsPerConv = 4).toDF()
+    val doomedPred = pmod(hash($"conv_id"), lit(3)) === 0
+    val late = Transcripts.fixture(spark, "cLATE", Seq("qqlate tok0 appended doc")).toDF()
+    val refDir = TestSpark.tmpDir("crashref_ref")
+    IndexBuilder.build(spark, all.filter(!doomedPred).unionByName(late), refDir,
+      IndexBuilder.Config(shards = 4))
+
+    val dir = TestSpark.tmpDir("crashref")
+    IndexBuilder.build(spark, all, dir, IndexBuilder.Config(shards = 4))
+    IndexBuilder.append(spark, late, dir, IndexBuilder.Config(shards = 4))
+    // the state a refresh leaves when it dies just before its pointer
+    // write: postings_seg_1, stats_g1, df_g1 and covers staged
+    IndexBuilder.refresh(spark, dir)
+    Manifests.clear(dir, "postings_gen")
+    assert(IndexBuilder.delete(spark, dir, doomedPred) > 0) // commits gen 1
+    IndexBuilder.refresh(spark, dir) // gen 2 covers the late doc once
+
+    val bad = graft.build.Fsck.run(spark, dir).filterNot(_.ok)
+    assert(bad.isEmpty, bad.mkString("; "))
+    val (sRef, s) = (new Searcher(spark, refDir), new Searcher(spark, dir))
+    assert(s.n == sRef.n)
+    assert(s.topK("qqlate", 5).count() == 1, "the appended doc is served twice")
+    (Queries.take(2) :+ "qqlate").foreach { q =>
+      assertSameScores(sRef, s, q)
+      assertSameTopK(sRef, s, q, 10)
+    }
+  }
+
   test("deleting every document leaves an empty, queryable index") {
     val dir = TestSpark.tmpDir("delall")
     IndexBuilder.build(spark,

@@ -70,6 +70,29 @@ class PqSpec extends AnyFunSuite {
     assert(b.count() == 0)
   }
 
+  test("every trained-vector path shares one persisted quantized corpus") {
+    // a fresh corpus dir: nothing of it is cached or built yet (the
+    // registry derives its dirs beside the documents table)
+    val fresh = TestSpark.tmpDir("vecsf")
+    Seq("embeddings.parquet", "documents.parquet").foreach(f =>
+      spark.read.parquet(s"$sf/$f").write.parquet(s"$fresh/$f"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    try {
+      VectorOps.annIvf(spark, fresh, 0L, 10, 2).collect()
+      VectorOps.annIvfIndexed(spark, fresh, 0L, 10, 2).collect()
+      VectorOps.annPq(spark, fresh, 0L, 10).collect()
+      VectorOps.annIvfPq(spark, fresh, 0L, 10, 2).collect()
+      VectorOps.embedCluster(spark, fresh).collect()
+      val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      assert(added.size == 1, s"persisted ${added.size} frames, expected the quantized corpus only")
+    } finally {
+      val hash = Integer.toHexString(fresh.hashCode)
+      Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles()).getOrElse(Array.empty)
+        .filter(d => d.getName.startsWith("graft_") && d.getName.endsWith(s"_$hash"))
+        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    }
+  }
+
   test("non-default PQ geometry trains and serves (pqM=16, pqK=8)") {
     val alt = cfg.copy(pqM = 16, pqK = 8, pqRefine = 30)
     val got = VectorOps.annPq(spark, sf, 0L, 5, alt).collect()

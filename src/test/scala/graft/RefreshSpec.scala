@@ -1,6 +1,6 @@
 package graft
 
-import graft.build.{IndexBuilder, Manifests}
+import graft.build.{Fsck, Hwm, IndexBuilder, Manifests, Placement}
 import graft.query.Searcher
 import graft.sources.Transcripts
 import org.apache.spark.sql.functions._
@@ -185,6 +185,57 @@ class RefreshSpec extends AnyFunSuite {
     assert(Manifests.read(dir, "postings_gen").map(_.rows).contains(1L))
     val s1 = new Searcher(spark, dir)
     assert(s1.topK("qqcrash", 5).select("conv_id").as[String].collect().contains("cLATE"))
+  }
+
+  test("a crashed delete's staged tombstones are dropped by the next refresh") {
+    val all = Transcripts.synth(spark, 600, turnsPerConv = 5).toDF()
+    val late = Transcripts.fixture(spark, "cLATE", Seq("qqlate tok0 appended doc")).toDF()
+    val refDir = TestSpark.tmpDir("crashdel_ref")
+    IndexBuilder.build(spark, all.unionByName(late), refDir, IndexBuilder.Config(shards = 4))
+
+    val dir = TestSpark.tmpDir("crashdel")
+    IndexBuilder.build(spark, all, dir, IndexBuilder.Config(shards = 4))
+    // the state a delete leaves when it dies just before its pointer write:
+    // tombstones_g1 (table + marker), stats_g1, df_g1 and covers staged
+    assert(IndexBuilder.delete(spark, dir, $"turn_idx" === 0) > 0)
+    Manifests.clear(dir, "postings_gen")
+    IndexBuilder.append(spark, late, dir, IndexBuilder.Config(shards = 4))
+    IndexBuilder.refresh(spark, dir)
+    assert(IndexBuilder.committedGen(dir) == 1L)
+
+    val bad = Fsck.run(spark, dir).filterNot(_.ok)
+    assert(bad.isEmpty, bad.mkString("; "))
+    val (sRef, s) = (new Searcher(spark, refDir), new Searcher(spark, dir))
+    assert(s.n == sRef.n)
+    (Queries :+ "qqlate").foreach { q =>
+      assertSameScores(sRef, s, q)
+      assertSameTopK(sRef, s, q, 10)
+    }
+  }
+
+  test("an append that crashed before its HWM write never reuses landed docIds") {
+    val cfg = IndexBuilder.Config(shards = 4)
+    val dir = TestSpark.tmpDir("crashhwm")
+    IndexBuilder.build(spark, Transcripts.synth(spark, 400, turnsPerConv = 4).toDF(), dir, cfg)
+    IndexBuilder.append(spark, Transcripts.synth(spark, 40, turnsPerConv = 4).toDF()
+      .withColumn("conv_id", concat(lit("a_"), $"conv_id")), dir, cfg) // HWM manifests now exist
+    // batch B lands in analyzed/ and the append dies before Hwm.write
+    val b = Transcripts.synth(spark, 40, turnsPerConv = 4).toDF()
+      .withColumn("conv_id", concat(lit("b_"), $"conv_id"))
+    graft.sources.TableIO.write(
+      IndexBuilder.analyzedRows(b, Placement(4, 4), cfg.language, cfg.normalizer,
+        Hwm.read(spark, dir, 4)),
+      s"$dir/analyzed", mode = "append")
+    IndexBuilder.append(spark, Transcripts.synth(spark, 40, turnsPerConv = 4).toDF()
+      .withColumn("conv_id", concat(lit("c_"), $"conv_id")), dir, cfg)
+    IndexBuilder.refresh(spark, dir)
+
+    val analyzed = spark.read.parquet(s"$dir/analyzed")
+    assert(analyzed.groupBy("shard", "docId").count().where($"count" > 1).count() == 0,
+      "a docId landed twice")
+    assert(analyzed.where($"conv_id".startsWith("b_")).count() > 0)
+    val bad = Fsck.run(spark, dir).filterNot(_.ok)
+    assert(bad.isEmpty, bad.mkString("; "))
   }
 
   test("snapshot reads: asOfGen time-travels; expired snapshots fail fast") {
