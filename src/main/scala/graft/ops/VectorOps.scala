@@ -2,7 +2,12 @@ package graft.ops
 
 import graft.functions.VectorFunctions.cosineSim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Embedding-similarity operators over the embeddings table
   * (vec_id, embedding: array<float>).
@@ -19,9 +24,8 @@ import org.apache.spark.sql.functions._
   * are associative, so Spark and the DuckDB oracle make bit-identical
   * decisions regardless of aggregation order — doubles appear only in the
   * final exact-cosine step, rounded to 4dp on both sides. Every
-  * nearest-centroid / nearest-code decision is the integer-L2 loop
-  * [[nearest]], except per-row centroid assignment at K ≤ 32, which is
-  * the same math as an expression tree ([[assignK]], measured faster).
+  * nearest-centroid / nearest-code decision, on the driver or per row, is
+  * the one integer-L2 loop [[nearest]].
   *
   *  - cosTopK: brute-force top-k — the exact baseline.
   *  - annIvf / annIvfIndexed: IVF ANN with k-means-trained centroids.
@@ -46,12 +50,12 @@ object VectorOps {
 
   val Dim = 64
 
-  /** The raw vectors (vec_id, e: array<float>, …): [[CosineSim]] widens
-    * each float to double in its codegen loop (exact IEEE widening), so
-    * the per-query corpus scans never run an interpreted decode
-    * projection; only the persisted corpus decodes, once. */
+  /** The raw vectors (vec_id, embedding: array<float>, …): [[CosineSim]]
+    * widens each float to double in its codegen loop (exact IEEE
+    * widening), so the per-query corpus scans never run an interpreted
+    * decode projection; only the persisted corpus decodes, once. */
   private def raw(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/embeddings.parquet").withColumnRenamed("embedding", "e")
+    spark.read.parquet(s"$sfDir/embeddings.parquet")
 
   // ---- random-hyperplane LSH ------------------------------------------------
 
@@ -138,23 +142,23 @@ object VectorOps {
       .orderBy(desc("cos"), asc("vec_id"))
       .limit(k)
 
-  /** Exact cosine top-k of `cands` against the vector vec_id = targetId
-    * of `v`, broadcast as a one-row side — an unknown target makes the
-    * cross join, and so the result, empty. */
+  /** Exact cosine top-k of raw `cands` against the raw vector vec_id =
+    * targetId of `v`, broadcast as a one-row side — an unknown target
+    * makes the cross join, and so the result, empty. Renamed after the
+    * join, so the rename folds into the cosine projection. */
   private def exactTop(v: DataFrame, cands: DataFrame, targetId: Long, k: Int): DataFrame =
     cosTop(cands.crossJoin(broadcast(v.filter(col("vec_id") === targetId)
-      .select(col("e").as("qe")))), col("qe"), k)
+      .select(col("embedding").as("qe")))).withColumnRenamed("embedding", "e"), col("qe"), k)
 
   /** The one target lookup of the ANN paths: `search(te, tq)` over the
-    * vector `te` of vec_id = targetId in `vecs` (vec_id, e: array<float>
-    * or array<double>), widened to double, and its quantization `tq`; an
-    * unknown target gives the empty (vec_id, cos) frame, the shape the
-    * brute-force path gives. */
+    * vector `te` of vec_id = targetId in `vecs` (vec_id, e: array<double>)
+    * and its quantization `tq`; an unknown target gives the empty
+    * (vec_id, cos) frame, the shape the brute-force path gives. */
   private def withTarget(vecs: DataFrame, targetId: Long)(
       search: (Array[Double], Array[Long]) => DataFrame): DataFrame =
     vecs.filter(col("vec_id") === targetId).select("e").collect().headOption match {
       case Some(r) =>
-        val te = r.getSeq[Number](0).map(_.doubleValue).toArray
+        val te = r.getSeq[Double](0).toArray
         search(te, te.map(quantizeMilli))
       case None =>
         val spark = vecs.sparkSession
@@ -163,7 +167,7 @@ object VectorOps {
     }
 
   /** Integer L2 between `v`'s dims [off, off + c.length) and `c`. */
-  private def d2(v: collection.Seq[Long], off: Int, c: Array[Long]): Long = {
+  private def d2(v: Array[Long], off: Int, c: Array[Long]): Long = {
     var d = 0L
     var j = 0
     while (j < c.length) { val g = v(off + j) - c(j); d += g * g; j += 1 }
@@ -171,12 +175,9 @@ object VectorOps {
   }
 
   /** The one assignment kernel: (index of the candidate nearest to `v`'s
-    * dims from `off` by integer L2, ties → smaller index; its d²). One
-    * tight loop over the broadcast candidate matrix whose plan is one node
-    * at any K — an expression tree of K struct comparisons grows the plan
-    * linearly with K (the same trade as [[bandKeysUdf]]). */
-  private def nearest(v: collection.Seq[Long], off: Int,
-                      cands: Array[Array[Long]]): (Int, Long) = {
+    * dims from `off` by integer L2, ties → smaller index; its d²). The
+    * driver calls it directly, and every row runs it through [[RowKernel]]. */
+  private def nearest(v: Array[Long], off: Int, cands: Array[Array[Long]]): (Int, Long) = {
     var best = Long.MaxValue
     var bi = 0
     var c = 0
@@ -188,25 +189,30 @@ object VectorOps {
     (bi, best)
   }
 
-  private def minD2Udf(cands: Array[Array[Long]]) =
-    udf((qv: Seq[Long]) => nearest(qv, 0, cands)._2)
+  /** `f` over each row's quantized vector, handed over as a primitive
+    * long[]: one generated call per row at any candidate count. A Scala
+    * UDF over Seq[Long] boxes every element, and a zip_with/aggregate tree
+    * per candidate runs interpreted (higher-order functions fall back from
+    * whole-stage codegen) in a plan that grows with the candidate count. */
+  private case class RowKernel(child: Expression, f: Array[Long] => Any, dataType: DataType)
+      extends UnaryExpression {
+    override protected def nullSafeEval(v: Any): Any = f(v.asInstanceOf[ArrayData].toLongArray())
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val fn = ctx.addReferenceObj("kernel", f, classOf[Function1[_, _]].getName)
+      defineCodeGen(ctx, ev, v => s"(${CodeGenerator.boxedType(dataType)}) $fn.apply($v.toLongArray())")
+    }
+    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  }
+  private def rowKernel(out: DataType)(f: Array[Long] => Any)(qv: Column): Column =
+    Bridge.column(RowKernel(Bridge.expression(qv), f, out))
 
-  private def nearestIdxUdf(cands: Array[Array[Long]]) =
-    udf((qv: Seq[Long]) => nearest(qv, 0, cands)._1)
-
-  /** Nearest-centroid id of every row, the same integer L2 and tie-break
-    * as [[nearest]]. Up to K = 32 it is a codegen'd expression tree —
-    * array_min over (d², k) structs, Spark's lexicographic struct order —
-    * which stays in one whole-stage span: at K = 8 (sf0.1, 4 cores,
-    * BenchExtra) `q_embed_cluster` ran 6–26% slower on the kernel UDF.
-    * The tree's plan grows linearly with K, so above 32 the kernel takes
-    * over; both make identical decisions. */
+  /** Nearest-centroid id of each quantized row. */
   private def assignK(qv: Column, cents: Array[Array[Long]]): Column =
-    if (cents.length > 32) nearestIdxUdf(cents)(qv)
-    else array_min(array(cents.zipWithIndex.map { case (c, k) =>
-      struct(aggregate(zip_with(qv, lit(c), (a, b) => (a - b) * (a - b)), lit(0L), _ + _).as("d"),
-        lit(k).as("k"))
-    }: _*)).getField("k")
+    rowKernel(IntegerType)(nearest(_, 0, cents)._1)(qv)
+
+  /** d² of each quantized row to its nearest candidate. */
+  private def minD2(qv: Column, cands: Array[Array[Long]]): Column =
+    rowKernel(LongType)(nearest(_, 0, cands)._2)(qv)
 
   /** The `nprobe` centroids nearest the quantized target (ties → smaller k). */
   private def probe(cents: Array[Array[Long]], tq: Array[Long], nprobe: Int): Seq[Int] =
@@ -256,7 +262,7 @@ object VectorOps {
       .select("qv").collect().map(_.getSeq[Long](0).toArray)
     if (cands.isEmpty) return cands // empty corpus: nothing to seed
     for (r <- 1 to cfg.kmeansParRounds) {
-      val d2s = vq.withColumn("d2", minD2Udf(cands)(col("qv")))
+      val d2s = vq.withColumn("d2", minD2(col("qv"), cands))
       val phi = Option(d2s.agg(sum("d2")).head().get(0)).map(_.toString.toDouble).getOrElse(0.0)
       if (phi > 0) {
         // uniform [0,1) from the top 53 bits of a 64-bit hash
@@ -270,7 +276,7 @@ object VectorOps {
     }
     // weight candidates by the size of their nearest-neighbor cells
     val w = new Array[Long](cands.length)
-    vq.withColumn("c", nearestIdxUdf(cands)(col("qv")))
+    vq.withColumn("c", assignK(col("qv"), cands))
       .groupBy("c").count().collect()
       .foreach(row => w(row.getAs[Int]("c")) = row.getAs[Long]("count"))
 
@@ -335,14 +341,14 @@ object VectorOps {
   }
 
   /** The one persisted quantized corpus per corpus dir, (vec_id, e:
-    * array<double>, qv): what training, the dir builds and the in-memory
-    * twins read. A frame bound to a stopped session (tests and services
-    * recreate sessions) is replaced. */
+    * array<double>, qv): what training, the dir builds, the in-memory
+    * twins and [[annPq]]'s refine read. A frame bound to a stopped
+    * session (tests and services recreate sessions) is replaced. */
   private val corpora = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def corpus(spark: SparkSession, sfDir: String): DataFrame = {
     corpora.computeIfPresent(sfDir, (_, q) => if (q.sparkSession.sparkContext.isStopped) null else q)
     corpora.computeIfAbsent(sfDir, _ => raw(spark, sfDir)
-      .select(col("vec_id"), transform(col("e"), _.cast("double")).as("e"))
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
       .withColumn("qv", quantize(col("e")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
@@ -361,6 +367,14 @@ object VectorOps {
     })
   private def centroids(spark: SparkSession, ivf: String): Array[Array[Long]] =
     book(spark, s"$ivf/centroids").headOption.getOrElse(Array.empty)
+
+  /** The committed `vectors/` (vec_id, e, k) and `codes/` (vec_id, codes,
+    * kc) tables, read with the schema their [[Layout]] fixes: inferring
+    * it would cost every query one more job. */
+  private def vectorsOf(spark: SparkSession, ivf: String): DataFrame =
+    spark.read.schema("vec_id BIGINT, e ARRAY<DOUBLE>, k INT").parquet(s"$ivf/vectors")
+  private def codesOf(spark: SparkSession, pq: String): DataFrame =
+    spark.read.schema("vec_id BIGINT, codes ARRAY<INT>, kc INT").parquet(s"$pq/codes")
 
   /** Layout version of the vector dirs: bump it whenever [[buildIvf]] or
     * [[buildPq]] output changes, so no later JVM reuses an older dir. */
@@ -450,7 +464,7 @@ object VectorOps {
                     nprobe: Int,
                     cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame = {
     val dir = ivfDir(spark, sfDir, cfg)
-    ivfTop(spark.read.parquet(s"$dir/vectors"), centroids(spark, dir), targetId, k, nprobe)
+    ivfTop(vectorsOf(spark, dir), centroids(spark, dir), targetId, k, nprobe)
   }
 
   /** A band bucket larger than SimilarityConfig.bucketCap means the band
@@ -480,8 +494,7 @@ object VectorOps {
     * old decode-first plan. */
   def similarPairs(spark: SparkSession, sfDir: String, n: Int,
                    cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame = {
-    val v = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val buckets = v
+    val buckets = raw(spark, sfDir)
       .select(col("vec_id"), col("embedding").as("e"),
         posexplode(bandKeysUdf(cfg)(col("embedding"))).as(Seq("band", "key")))
       .groupBy("band", "key")
@@ -517,8 +530,8 @@ object VectorOps {
   // re-ranks just those with exact cosine against the full vectors.
   //
   // At 100 TB: the corpus-sized scan touches only the codes table, the
-  // LUT is pqM·pqK longs broadcast with the job, and the exact-refine
-  // step reads pqRefine full vectors by key — never the corpus.
+  // LUT is pqM·pqK longs broadcast with the job, and the exact refine
+  // joins just the pqRefine candidates back to their full vectors.
   // [[annIvfPq]] additionally coarse-partitions the codes by the IVF
   // centroids so a query scans only the probed clusters' codes
   // (materialized twin [[annIvfPqIndexed]] makes that partition pruning
@@ -540,9 +553,8 @@ object VectorOps {
     }
     if (cb.exists(_.isEmpty)) return cb // empty corpus: nothing to train
     for (_ <- 1 to cfg.pqIters) {
-      val codes = pqCodesUdf(cb, cfg)
       val updated = vq
-        .select(codes(col("qv")).as("codes"), posexplode(col("qv")).as(Seq("j0", "x")))
+        .select(subCodes(col("qv"), cb, cfg).as("codes"), posexplode(col("qv")).as(Seq("j0", "x")))
         .select(floor(col("j0") / lit(sub)).cast("int").as("m"),
           col("j0"), col("x"), col("codes"))
         .select(col("m"), element_at(col("codes"), col("m") + 1).as("k"),
@@ -557,10 +569,11 @@ object VectorOps {
     cb
   }
 
-  /** PQ sub-codes: per subspace, the nearest codebook entry by integer L2
-    * (ties → smaller code) — the [[nearest]] kernel over each subspace. */
-  private def pqCodesUdf(cb: Array[Array[Array[Long]]], cfg: SimilarityConfig) =
-    udf((qv: Seq[Long]) => Array.tabulate(cb.length)(m => nearest(qv, m * cfg.pqSub, cb(m))._1))
+  /** PQ sub-codes of each quantized row: per subspace, the nearest
+    * codebook entry by integer L2 (ties → smaller code). */
+  private def subCodes(qv: Column, cb: Array[Array[Array[Long]]], cfg: SimilarityConfig): Column =
+    rowKernel(ArrayType(IntegerType, containsNull = false))(v => UnsafeArrayData.fromPrimitiveArray(
+      Array.tabulate(cb.length)(m => nearest(v, m * cfg.pqSub, cb(m))._1)))(qv)
 
   /** ADC score kernel: approx d² = Σ_m lut(m)(code_m) over the broadcast
     * pqM × pqK lookup table. */
@@ -574,7 +587,7 @@ object VectorOps {
   /** (vec_id, codes, kc): every corpus vector's PQ codes and coarse cluster. */
   private def pqCodes(vq: DataFrame, cents: Array[Array[Long]],
                       cb: Array[Array[Array[Long]]], cfg: SimilarityConfig): DataFrame =
-    vq.select(col("vec_id"), pqCodesUdf(cb, cfg)(col("qv")).as("codes"),
+    vq.select(col("vec_id"), subCodes(col("qv"), cb, cfg).as("codes"),
       assignK(col("qv"), cents).as("kc"))
 
   /** The one probe-and-refine step: ADC scan of `codes` (vec_id, codes)
@@ -606,15 +619,16 @@ object VectorOps {
     }
 
   /** Flat PQ ANN: ADC scan over the committed codes table → pqRefine best
-    * candidates → exact-cosine re-rank of just those against the raw
-    * vectors. Output shape matches [[cosTopK]]; recall@k is tuned by
-    * cfg.pqRefine. */
+    * candidates → exact-cosine re-rank of just those. The target and the
+    * candidates' full vectors come from the persisted corpus, so no query
+    * reads the embeddings table. Output shape matches [[cosTopK]];
+    * recall@k is tuned by cfg.pqRefine. */
   def annPq(spark: SparkSession, sfDir: String, targetId: Long, k: Int,
             cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame = {
     val dir = pqDir(spark, sfDir, cfg)
-    val v = raw(spark, sfDir)
-    withTarget(v, targetId) { (te, tq) =>
-      adcRefine(spark.read.parquet(s"$dir/codes"), v, te, tq, book(spark, s"$dir/codebooks"), k, cfg)
+    val vq = corpus(spark, sfDir)
+    withTarget(vq, targetId) { (te, tq) =>
+      adcRefine(codesOf(spark, dir), vq, te, tq, book(spark, s"$dir/codebooks"), k, cfg)
     }
   }
 
@@ -673,7 +687,7 @@ object VectorOps {
                       cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame = {
     val cdir = pqDir(spark, sfDir, cfg)
     val vdir = ivfDir(spark, sfDir, cfg)
-    ivfPqTop(spark.read.parquet(s"$vdir/vectors"), spark.read.parquet(s"$cdir/codes"),
+    ivfPqTop(vectorsOf(spark, vdir), codesOf(spark, cdir),
       centroids(spark, vdir), book(spark, s"$cdir/codebooks"), targetId, k, nprobe, cfg)
   }
 }

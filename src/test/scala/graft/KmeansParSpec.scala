@@ -76,9 +76,9 @@ class KmeansParSpec extends AnyFunSuite {
   }
 
   test("kernel assignment (K > 32) matches the expression tree's tie-breaks") {
-    // 40 centroids forces the UDF kernel path in assignK; embedCluster over
-    // a config-built corpus isn't needed — assignment semantics are pinned
-    // by training the same data at K=40 twice through trainCentroids (which
+    // 40 centroids, past the K = 8 the oracle pins; embedCluster over a
+    // config-built corpus isn't needed — assignment semantics are pinned by
+    // training the same data at K=40 twice through trainCentroids (which
     // routes through assignK) and checking determinism + coverage.
     val cfg40 = SimilarityConfig(kmeansK = 40, kmeansIters = 2, kmeansParSeeding = true)
     val cents = VectorOps.trainCentroids(vq, cfg40)
