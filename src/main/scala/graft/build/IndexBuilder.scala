@@ -134,27 +134,15 @@ object IndexBuilder {
              cfg: Config = Config()): Unit = leased(indexDir, spark) {
     val shards = builtShards(indexDir)
     val place = placement(cfg, shards)
+    val metaCols = sidecarCols(spark, indexDir, input.columns)
     val hwm = Hwm.read(spark, indexDir, shards)
     val rows = analyzedRows(input, place, cfg.language, cfg.normalizer, hwm, cfg.facetCols)
     graft.sources.TableIO.write(rows, s"$indexDir/analyzed", mode = "append")
     // the newly landed slice: the rows at or above the old HWMs
     val landed = graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
       .where(!ShardKeys.below(hwm))
-    // Doc-meta sidecar upkeep: once a sidecar exists, every appended doc
-    // must land in it too (serving joins it INNER — a stale sidecar would
-    // silently drop appended docs from scoring aggregations), so the
-    // append input MUST carry the sidecar's columns.
-    val metaDir = s"$indexDir/docmeta"
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(metaDir))) {
-      val mcols = graft.sources.TableIO.read(spark, metaDir).schema.fieldNames
-        .filterNot(Set("shard", "docId", "conv_id", "turn_idx", "len")).toSeq
-      val missing = mcols.filterNot(input.columns.contains)
-      require(missing.isEmpty,
-        s"index $indexDir has a doc-meta sidecar with columns " +
-          s"${mcols.mkString(",")}; append input lacks " +
-          s"${missing.mkString(",")} — the sidecar would go stale")
-      writeDocMeta(spark, input, landed, indexDir, place, mcols, mode = "append")
-    }
+    metaCols.foreach(mcols => graft.sources.TableIO.write(
+      docMetaRows(input, landed, place, mcols), s"$indexDir/docmeta", mode = "append"))
     // Advance HWMs from the ranks that actually LANDED (pruned shard+docId
     // scan of the analyzed table above the old HWMs) — never by re-scanning
     // the input, which a non-deterministic source could replay differently.
@@ -727,25 +715,45 @@ object IndexBuilder {
 
     // ---- stage: docmeta (docvalues sidecar) ------------------------------
     if (cfg.metaCols.nonEmpty) stage(spark, indexDir, "docmeta") { () =>
-      writeDocMeta(spark, input,
-        graft.sources.TableIO.read(spark, s"$indexDir/analyzed"),
-        indexDir, place, cfg.metaCols, mode = "overwrite")
+      graft.sources.TableIO.write(docMetaRows(input,
+        graft.sources.TableIO.read(spark, s"$indexDir/analyzed"), place, cfg.metaCols),
+        s"$indexDir/docmeta")
       graft.sources.TableIO.read(spark, s"$indexDir/docmeta").count()
     }
 
     buildDerived(spark, indexDir, cfg)
   }
 
-  /** Materialize doc-meta sidecar rows for `analyzedSlice`: its (conv_id,
-    * turn_idx) keys joined back to `input`'s metaCols, landed shard-
-    * placed and docId-sorted like every other index table. ONE narrow
-    * co-shuffle of two pruned projections at BUILD time — the docvalues
+  /** The meta columns of `indexDir`'s doc-meta sidecar; None without one.
+    * Once a sidecar exists, every doc that lands in analyzed/ must land in
+    * it too (serving joins it INNER — a stale sidecar would silently drop
+    * those docs from scoring aggregations), so an append or stream input
+    * MUST carry these columns: fails, before anything lands, naming the
+    * ones `columns` lacks. */
+  private[graft] def sidecarCols(spark: SparkSession, indexDir: String,
+                                 columns: Array[String]): Option[Seq[String]] = {
+    val metaDir = s"$indexDir/docmeta"
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(metaDir))) None
+    else {
+      val mcols = graft.sources.TableIO.read(spark, metaDir).schema.fieldNames
+        .filterNot(Set("shard", "docId", "conv_id", "turn_idx", "len")).toSeq
+      val missing = mcols.filterNot(columns.contains)
+      require(missing.isEmpty,
+        s"index $indexDir has a doc-meta sidecar with columns " +
+          s"${mcols.mkString(",")}; the input lacks " +
+          s"${missing.mkString(",")} — the sidecar would go stale")
+      Some(mcols)
+    }
+  }
+
+  /** Doc-meta sidecar rows for `analyzedSlice`: its (conv_id, turn_idx)
+    * keys joined back to `input`'s metaCols, shard-placed and
+    * docId-sorted like every other index table. ONE narrow co-shuffle of
+    * two pruned projections at BUILD time — the docvalues
     * materialization cost that buys every scoring aggregation a
     * source-table-free plan at query time. */
-  private def writeDocMeta(spark: SparkSession, input: DataFrame,
-                           analyzedSlice: DataFrame, indexDir: String,
-                           place: Placement, metaCols: Seq[String],
-                           mode: String): Unit = {
+  private[graft] def docMetaRows(input: DataFrame, analyzedSlice: DataFrame,
+                                 place: Placement, metaCols: Seq[String]): DataFrame = {
     // `len` (analyzed doc length) rides along from the analyzed slice: it
     // is THE per-doc scoring statistic (BM25 normalization, BM25F field
     // lengths), so the sidecar carries it natively — query paths that need
@@ -754,10 +762,9 @@ object IndexBuilder {
       col("shard"), col("docId"), col("conv_id"), col("turn_idx"), col("len"))
     val meta = input.select(col("conv_id").cast("string").as("conv_id") +:
       col("turn_idx").cast("int").as("turn_idx") +: metaCols.map(col): _*)
-    val rows = place.exchange(keys.join(meta, Seq("conv_id", "turn_idx")), "shard", "docId")
+    place.exchange(keys.join(meta, Seq("conv_id", "turn_idx")), "shard", "docId")
       .select(Seq(col("shard"), col("docId"), col("conv_id"),
         col("turn_idx"), col("len")) ++ metaCols.map(col): _*)
-    graft.sources.TableIO.write(rows, s"$indexDir/docmeta", mode = mode)
   }
 
   /** The derived tables of a standing analyzed/ table — stats (+ gen-0

@@ -59,7 +59,7 @@ object BpeOps {
     * greedy left-to-right. */
   def bpeTrain(spark: SparkSession, sfDir: String,
                numMerges: Int = 30, minCount: Long = 2L): DataFrame =
-    bpeTrainOver(spark.read.parquet(s"$sfDir/documents.parquet"), numMerges, minCount)
+    bpeTrainOver(graft.sources.Corpus.documents(spark, sfDir), numMerges, minCount)
 
   /** UTF-8 byte-order comparison — the tie-break order the SQL form's
     * `orderBy(l, r)` used (Spark compares strings as UTF-8 bytes). */
@@ -225,7 +225,7 @@ object BpeOps {
       }
     }
     val nUdf = udf(pieceCount)
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    graft.sources.Corpus.documents(spark, sfDir)
       .select(col("doc_id"), nUdf(col("text")).as("n_bpe"))
       .orderBy("doc_id")
   }

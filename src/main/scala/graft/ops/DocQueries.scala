@@ -4,8 +4,8 @@ import graft.analysis.Analyzer
 import graft.build.{IndexBuilder, Manifests}
 import graft.model.StageManifest
 import graft.query.{Bm25, Cascade, LmStage, PosSearcher, Searcher, TwoPass}
-import graft.sources.Transcripts
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.{Corpus, Transcripts}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.util.concurrent.ConcurrentHashMap
 
@@ -16,13 +16,16 @@ import java.util.concurrent.ConcurrentHashMap
   * Parity rules (see OracleSql): round(…,4) at the end, cuts keyed on
   * (round(score,4), doc_id).
   *
-  * Index plumbing is two memos: every index a query reads is derived from
-  * the corpus by [[derived]] (one registry of index dirs, each committed
-  * by one done-sentinel — VectorOps' IVF and PQ dirs included), and every
-  * Searcher over them comes from one memo keyed by (index dir, snapshot
-  * generation) — the one place a bound on serving state goes. Beside them
-  * sit only the positional searchers, the federated readers and each
-  * corpus's max doc_id.
+  * One owner per table. Corpus tables are read through
+  * [[graft.sources.Corpus]]. Every index a query reads is derived from the
+  * corpus by [[derived]] (one registry of index dirs, each committed by
+  * one done-sentinel — VectorOps' IVF and PQ dirs included), and its
+  * tables are read only through the Searcher that serves it: its df frame,
+  * its (n, avgdl), its analyzed [[Searcher.termRows]] and its doc-meta
+  * sidecar, the one docId → doc_id map. Searchers come from one memo keyed
+  * by (index dir, snapshot generation) — the one place a bound on serving
+  * state goes. Beside the registry and that memo sit only the positional
+  * searchers, the federated readers and each corpus's max doc_id.
   */
 object DocQueries {
 
@@ -34,19 +37,22 @@ object DocQueries {
   private val searchers = new ConcurrentHashMap[(String, Long), Searcher]()
   private val maxDocIds = new ConcurrentHashMap[String, java.lang.Long]()
 
-  /** The index dir `tag` derives from sfDir's documents table, made by
-    * `make(docs, dir)` at most once per JVM. The dir is version-stamped
-    * under `java.io.tmpdir` (a format change never resumes a stale
-    * index). A finished `make` commits the dir's `derived` sentinel
-    * manifest; a dir without it is the leftover of a killed JVM, deleted
-    * and made again, and a dir with it is reused as is. */
+  /** The index dir `tag` derives from sfDir's corpus, made by
+    * `make(docs, dir)` at most once per JVM; `docs`, the documents table,
+    * is read only if `make` uses it (an embeddings-only corpus dir serves
+    * VectorOps' dirs). The dir is version-stamped under `java.io.tmpdir`
+    * (a format change never resumes a stale index). A finished `make`
+    * commits the dir's `derived` sentinel manifest; a dir without it is
+    * the leftover of a killed JVM, deleted and made again, and a dir with
+    * it is reused as is. */
   private[graft] def derived(spark: SparkSession, sfDir: String, tag: String)(
-      make: (DataFrame, String) => Unit): String =
+      make: (=> DataFrame, String) => Unit): String =
     derivedDirs.computeIfAbsent(sys.props("java.io.tmpdir") +
         s"/graft_${tag}_v${IndexBuilder.FormatVersion}_${Integer.toHexString(sfDir.hashCode)}", dir => {
       if (!Manifests.isDone(dir, "derived")) {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-        make(spark.read.parquet(s"$sfDir/documents.parquet"), dir)
+        lazy val docs = Corpus.documents(spark, sfDir)
+        make(docs, dir)
         Manifests.write(dir, StageManifest("derived", 1, 0, "done", 0))
       }
       dir
@@ -86,14 +92,36 @@ object DocQueries {
   def searcher(spark: SparkSession, sfDir: String): Searcher =
     searcherAt(spark, indexDir(spark, sfDir))
 
-  /** The doc-meta sidecar of `s`, with an actionable failure when the
-    * index was built without one (e.g. no Config.metaCols, or a merge()
-    * output — merge does not carry sidecars) instead of a bare
-    * NoSuchElementException from `.get`. */
-  private def sidecarOf(s: Searcher): DataFrame =
+  /** (docId, doc_id, `cols`…) of `s`'s doc-meta sidecar: the one map from
+    * kernel docIds to the corpus's numeric doc ids (conv_id is the
+    * doc_id's canonical string, Transcripts.fromDocuments). Fails with an
+    * actionable message when the index was built without a sidecar (no
+    * Config.metaCols, or a merge() output — merge does not carry
+    * sidecars). */
+  private def docIds(s: Searcher, cols: Column*): DataFrame =
     s.docMetaSidecar.getOrElse(throw new IllegalStateException(
       "index has no doc-meta sidecar — rebuild with Config.metaCols set " +
         "(merge() outputs drop sidecars)"))
+      .select(col("docId") +: col("conv_id").cast("long").as("doc_id") +: cols: _*)
+
+  /** The (round4 score desc, doc_id asc) top-k cut of a (doc_id, score, …)
+    * frame, its score rounded to 4 places. */
+  private def cut(df: DataFrame, k: Int): DataFrame =
+    df.orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
+      .withColumn("score", round(col("score"), 4))
+
+  /** The (n, round-4 avgdl) row of the index generation `s` serves. */
+  private def statsOf(spark: SparkSession, s: Searcher): DataFrame = {
+    import spark.implicits._
+    Seq((s.n, s.avgdl)).toDF("n", "avgdl").select(col("n"), round(col("avgdl"), 4).as("avgdl"))
+  }
+
+  /** `tf`'s (…, term, tf) rows joined to `s`'s df with their round-4
+    * tf·idf weight (the reference's D7 idf). The small tf slice is
+    * broadcast, so the vocabulary-sized df side never shuffles. */
+  private def tfIdf(s: Searcher, tf: DataFrame): DataFrame =
+    s.dfDF.join(broadcast(tf), "term").withColumn("tfidf", round(col("tf") *
+      log(lit(1.0) + (lit(s.n) - col("df") + 0.5) / (col("df") + 0.5)), 4))
 
   // stemmed variant of the index + searcher: the lemmatizer seam
   // (Analyzer.Norm) exercised end-to-end on the driver surface. No DuckDB
@@ -128,7 +156,7 @@ object DocQueries {
   def stemOraclePairs(spark: SparkSession): Option[Seq[(String, String)]] =
     stemCorpusDir.map { sfDir =>
       import spark.implicits._
-      val raws = spark.read.parquet(s"$sfDir/documents.parquet")
+      val raws = Corpus.documents(spark, sfDir)
         .select(col("text")).as[String]
         .flatMap(t => graft.analysis.Analyzer.tokenizeRaw(t).toSeq)
         .distinct().collect()
@@ -212,9 +240,7 @@ object DocQueries {
     // exactly ONCE (weight w for tf', presence for df'); per-index docId →
     // external doc_id through each index's CACHED docmeta sidecar
     // (docvalues), never an analyzed-table scan
-    def ids(s: Searcher): DataFrame = sidecarOf(s)
-      .select(col("docId"), col("conv_id").cast("long").as("doc_id"))
-    val textRows = st.postingTfs(terms).join(ids(st), "docId")
+    val textRows = st.postingTfs(terms).join(docIds(st), "docId")
       .select(col("term"), col("doc_id"), col("tf").as("tf_t"), lit(0L).as("tf_s"))
     // ONE union + ONE (doc, term)-keyed partial agg yields BOTH per-term
     // statistics: tf' = tf_t + w·tf_s, and df' = the per-term group count
@@ -223,7 +249,7 @@ object DocQueries {
     // the index-time repetition yardstick)
     val g0 =
       if (w == 0) textRows
-      else textRows.unionByName(ss.postingTfs(terms).join(ids(ss), "docId")
+      else textRows.unionByName(ss.postingTfs(terms).join(docIds(ss), "docId")
         .select(col("term"), col("doc_id"), lit(0L).as("tf_t"), col("tf").as("tf_s")))
     // pinned: g feeds BOTH tf' and df'; without the cut each consumer
     // re-runs the postings decode + union + agg (match-set-sized rows)
@@ -243,19 +269,17 @@ object DocQueries {
     // a metaCol computed by the same analyzer), so the length fold is a
     // scalar expression over the cached sidecar — the runtime two-
     // projection join cache this replaced is gone
-    val dlp = sidecarOf(st).select(col("conv_id").cast("long").as("doc_id"),
-      (col("len").cast("long") + lit(w.toLong) * col("len_src").cast("long")).as("dlp"))
+    val dlp = docIds(st, (col("len").cast("long") + lit(w.toLong) * col("len_src").cast("long")).as("dlp"))
+      .select("doc_id", "dlp")
     val qdf = qtf.toSeq.toDF("term", "qtf")
 
-    tfp.join(broadcast(qdf), "term")
+    cut(tfp.join(broadcast(qdf), "term")
       .join(broadcast(dfp), "term")
       .join(dlp, "doc_id")
       .withColumn("part",
         graft.query.Bm25.scoreCol(col("tfp"), col("qtf"), col("dfp"),
           col("dlp"), lit(n), lit(avgdlP), P))
-      .groupBy(col("doc_id")).agg(sum(col("part")).as("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+      .groupBy(col("doc_id")).agg(sum(col("part")).as("score")), k)
   }
 
   /** match_phrase_prefix: the phrase's LAST token is a prefix; a doc
@@ -279,52 +303,45 @@ object DocQueries {
         win.init == head && win.last.startsWith(pfx))
     })
     val cands = s.matchAllDocs(head.mkString(" "))
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
-    cands
-      .join(docMap(spark, sfDir).select("doc_id", "docId"), "docId")
-      .join(docs, "doc_id") // candidate-pruned: broadcasts the small side
+    cut(cands.join(docIds(s), "docId")
+      .join(textOf(spark, sfDir), "doc_id") // candidate-pruned: broadcasts the small side
       .filter(verify(col("text")))
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
+      .select(col("doc_id"), col("score")), k)
   }
 
-  /** doc-metadata view of the index with numeric doc_id restored — served
-    * from the main searcher's CACHED doc-meta frame (one in-memory
-    * column-pruned table instead of a fresh analyzed/ parquet scan per
-    * query; same rows — the main index has no unrefreshed appends). */
-  private def docMap(spark: SparkSession, sfDir: String): DataFrame =
-    searcher(spark, sfDir).hitMeta
-      .select(col("conv_id").cast("long").as("doc_id"), col("len").cast("long").as("len"),
-        col("docId"))
+  /** (doc_id, text) of the documents table: joined only against
+    * candidate- or hit-sized frames, so it broadcasts the small side. */
+  private def textOf(spark: SparkSession, sfDir: String): DataFrame =
+    Corpus.documents(spark, sfDir).select("doc_id", "text")
+
+  /** (doc_id, len) of every doc of the main index, from its sidecar. */
+  private def docLensOf(spark: SparkSession, sfDir: String): DataFrame =
+    docIds(searcher(spark, sfDir), col("len").cast("long").as("len")).select("doc_id", "len")
 
   // ---- O3: corpus statistics ------------------------------------------------
   def corpusStats(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(IndexBuilder.statsPath(indexDir(spark, sfDir)))
-      .select(col("n"), round(col("avgdl"), 4).as("avgdl"))
+    statsOf(spark, searcher(spark, sfDir))
 
   def termDf(spark: SparkSession, sfDir: String, limit: Int): DataFrame =
-    spark.read.parquet(IndexBuilder.dfPath(indexDir(spark, sfDir)))
-      .orderBy(desc("df"), asc("term")).limit(limit)
+    searcher(spark, sfDir).dfDF.orderBy(desc("df"), asc("term")).limit(limit)
 
   def docLens(spark: SparkSession, sfDir: String): DataFrame =
-    docMap(spark, sfDir).select("doc_id", "len").orderBy("doc_id")
+    docLensOf(spark, sfDir).orderBy("doc_id")
 
   /** Zipf head profile: the `limit` most frequent ANALYZED terms by
     * collection frequency with each rank's cumulative share of all term
     * instances — the corpus-skew diagnostic that sizes head-term salting
     * and stopword policies. Output (term, ctf, cum_share).
     *
-    * Scale shape: ctf is one partial-agg hash aggregate over the analyzed
-    * table; the top-`limit` cut is a distributed TakeOrdered (never a
-    * global sort), and the running sum windows over only those `limit`
-    * rows — cumulative shares of ranks 1..limit don't depend on the tail,
-    * so nothing vocabulary-sized is single-tasked. The share rounds via
+    * Scale shape: ctf is one partial-agg hash aggregate over the main
+    * Searcher's [[Searcher.termRows]]; the top-`limit` cut is a
+    * distributed TakeOrdered (never a global sort), and the running sum
+    * windows over only those `limit` rows — cumulative shares of ranks
+    * 1..limit don't depend on the tail, so nothing vocabulary-sized is
+    * single-tasked. The share rounds via
     * the tie-free integer formula (TextOps.r4's SQL twin). */
   def zipfCoverage(spark: SparkSession, sfDir: String, limit: Int): DataFrame = {
-    val tf = spark.read.parquet(s"${indexDir(spark, sfDir)}/analyzed")
-      .select(explode(arrays_zip(col("terms"), col("tfs"))).as("tt"))
-      .select(col("tt.terms").as("term"), col("tt.tfs").cast("long").as("tf"))
-    val ctf = tf.groupBy("term").agg(sum("tf").as("ctf"))
+    val ctf = searcher(spark, sfDir).termRows().groupBy("term").agg(sum("tf").as("ctf"))
     // top-limit via distributed TakeOrdered; the `limit`-row head and its
     // running sum are driver-side (like any query's result set) — an
     // unpartitioned window would plan a one-task WindowExec instead.
@@ -353,7 +370,7 @@ object DocQueries {
     * rows regardless of corpus size. */
   def lenHist(spark: SparkSession, sfDir: String, width: Int): DataFrame = {
     require(width >= 1)
-    docMap(spark, sfDir)
+    docLensOf(spark, sfDir)
       .select(expr(s"(len div $width) * $width").as("bucket_lo"))
       .groupBy("bucket_lo").agg(count(lit(1)).as("n_docs"))
       .orderBy("bucket_lo")
@@ -361,20 +378,20 @@ object DocQueries {
 
   // ---- O2: per-doc term frequencies (from the analyzed stage) ---------------
   def docTf(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"${indexDir(spark, sfDir)}/analyzed")
-      .select(col("conv_id").cast("long").as("doc_id"),
-        explode(arrays_zip(col("terms"), col("tfs"))).as("tt"))
-      .select(col("doc_id"), col("tt.terms").as("term"), col("tt.tfs").cast("long").as("tf"))
+    searcher(spark, sfDir).termRows()
+      .select(col("conv_id").cast("long").as("doc_id"), col("term"), col("tf"))
       .orderBy("doc_id", "term")
 
   /** Codec proof: decode the compressed posting blobs of every term (the
     * empty prefix) back to (doc_id, term, tf) rows — must equal the
     * DuckDB-computed TF table. */
-  def postingsRoundtrip(spark: SparkSession, sfDir: String): DataFrame =
-    searcher(spark, sfDir).postingTfs(Nil, Seq(""))
-      .join(docMap(spark, sfDir).select("doc_id", "docId"), "docId")
+  def postingsRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
+    val s = searcher(spark, sfDir)
+    s.postingTfs(Nil, Seq(""))
+      .join(docIds(s), "docId")
       .select("doc_id", "term", "tf")
       .orderBy("doc_id", "term")
+  }
 
   // ---- O4-O7: BM25 scoring / ranking ----------------------------------------
   def scoreAll(spark: SparkSession, sfDir: String, query: String): DataFrame =
@@ -382,12 +399,10 @@ object DocQueries {
       .select(col("conv_id").cast("long").as("doc_id"), round(col("score"), 4).as("score"))
       .orderBy("doc_id")
 
-  /** The (round4 score desc, doc_id asc) top-k cut of a Searcher hit frame
-    * fetched with slack, conv_id restored to the numeric doc_id. */
+  /** [[cut]] of a Searcher hit frame fetched with slack, conv_id restored
+    * to the numeric doc_id. */
   private def topKCut(hits: DataFrame, k: Int): DataFrame =
-    hits.select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    cut(hits.select(col("conv_id").cast("long").as("doc_id"), col("score")), k)
 
   /** Deterministic top-k through either kernel; slack absorbs rounding-ties
     * at the k boundary before the (round4, doc_id) cut. */
@@ -409,13 +424,10 @@ object DocQueries {
   def groupTopK(spark: SparkSession, sfDir: String, query: String,
                 groupCol: String, k: Int): DataFrame = {
     val s = searcher(spark, sfDir)
-    val meta = sidecarOf(s)
-      .select(col("docId"), col("conv_id").cast("long").as("doc_id"),
-        col(groupCol).as("grp"))
     s.scoreMatches(query)
       .select(col("docId"),
         round(round(col("score"), 4) * 10000).cast("long").as("micros"))
-      .join(meta, "docId")
+      .join(docIds(s, col(groupCol).as("grp")), "docId")
       .groupBy("grp")
       .agg(sum("micros").as("m"), count(lit(1)).as("n_hits"))
       .orderBy(col("m").desc, col("grp").asc).limit(k)
@@ -445,8 +457,7 @@ object DocQueries {
                t: Int, k: Int): DataFrame = {
     val s = searcher(spark, sfDir)
     val hits = s.scoreMatches(query)
-      .join(sidecarOf(s)
-        .select(col("docId"), col("conv_id").cast("long").as("doc_id")), "docId")
+      .join(docIds(s), "docId")
       .select(col("doc_id"),
         round(round(col("score"), 4) * 10000).cast("long").as("micros"))
       .withColumn("conv_id", expr(s"doc_id div $TurnsPerConv"))
@@ -475,11 +486,10 @@ object DocQueries {
     val s = searcher(spark, sfDir)
     def convs(clause: String) =
       s.matchAllDocs(clause)
-        .join(docMap(spark, sfDir).select("doc_id", "docId"), "docId")
+        .join(docIds(s), "docId")
         .select(expr(s"doc_id div $TurnsPerConv").as("conv_id")).distinct()
     s.scoreMatches(clauseA + " " + clauseB)
-      .join(sidecarOf(s)
-        .select(col("docId"), col("conv_id").cast("long").as("doc_id")), "docId")
+      .join(docIds(s), "docId")
       .select(col("doc_id"),
         round(round(col("score"), 4) * 10000).cast("long").as("micros"))
       .withColumn("conv_id", expr(s"doc_id div $TurnsPerConv"))
@@ -503,15 +513,12 @@ object DocQueries {
   def turnContext(spark: SparkSession, sfDir: String, query: String,
                   k: Int): DataFrame = {
     import spark.implicits._
-    val hits = searcher(spark, sfDir).topK(query, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"),
-        round(col("score"), 4).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
+    val hits = topKCut(searcher(spark, sfDir).topK(query, k + 50), k)
       .as[(Long, Double)].collect()
     // corpus-static bound, memoized per corpus (footer-only min/max scan on
     // first sight — the same class of index metadata as the stats row)
     val maxId: Long = maxDocIds.computeIfAbsent(sfDir, _ =>
-      java.lang.Long.valueOf(spark.read.parquet(s"$sfDir/documents.parquet")
+      java.lang.Long.valueOf(Corpus.documents(spark, sfDir)
         .agg(max("doc_id")).head().getLong(0))).longValue
     def prevId(d: Long): Long = if (d % TurnsPerConv == 0) -1L else d - 1
     def nextId(d: Long): Long =
@@ -520,7 +527,7 @@ object DocQueries {
       .filter(_ >= 0).distinct
     val chars: Map[Long, Long] =
       if (wanted.isEmpty) Map.empty
-      else spark.read.parquet(s"$sfDir/documents.parquet")
+      else Corpus.documents(spark, sfDir)
         .where(col("doc_id").isin(wanted: _*)) // pushed-down point read
         .select(col("doc_id"), col("n_chars").cast("long"))
         .as[(Long, Long)].collect().toMap
@@ -543,17 +550,15 @@ object DocQueries {
     * Scale shape: the match set streams from the OR-mode postings kernel
     * (never an analyzed-table scan), doc ids resolve against the doc-meta
     * sidecar, then one scalar expression + a distributed TakeOrdered; n
-    * comes from the index stats table (1 row), never a corpus count at
-    * query time. */
+    * is the Searcher's, broadcast as a 1-row frame — never a corpus count
+    * at query time. */
   def timeTopK(spark: SparkSession, sfDir: String, query: String,
                k: Int): DataFrame = {
+    import spark.implicits._
     val s = searcher(spark, sfDir)
-    val n0 = spark.read.parquet(IndexBuilder.statsPath(indexDir(spark, sfDir)))
-      .select(col("n"))
-    val meta = sidecarOf(s)
-      .select(col("docId"), col("conv_id").cast("long").as("doc_id"))
+    val n0 = Seq(s.n).toDF("n")
     s.scoreMatches(query)
-      .join(meta, "docId")
+      .join(docIds(s), "docId")
       .select(col("doc_id"),
         round(round(col("score"), 4) * 10000).cast("long").as("micros"))
       .crossJoin(broadcast(n0))
@@ -563,34 +568,16 @@ object DocQueries {
   }
 
   /** Per-doc TF-IDF keyword extraction over the index tables: top-`n`
-    * terms per doc (doc_id < maxDocId) by tf·idf with the reference's D7
-    * idf. The doc-bounded tf slice broadcasts against the big df table so
-    * the postings side never shuffles; the all-docs variant is the same
-    * plan minus the broadcast (term-keyed shuffle join). Ranking and the
-    * final order key on (round-4 weight desc, term asc) in both engines. */
+    * terms per doc (doc_id < maxDocId) by [[tfIdf]]. The doc-bounded tf
+    * slice broadcasts against the df frame. Ranking and the final order
+    * key on (round-4 weight desc, term asc) in both engines. */
   def keywords(spark: SparkSession, sfDir: String, maxDocId: Long, n: Int): DataFrame = {
-    val dir = indexDir(spark, sfDir)
-    // doc_id < maxDocId expressed as conv_id IN (canonical strings): the
-    // doc-bounded slice prunes at the Parquet scan (StringIn row-group
-    // pruning) instead of after a corpus-sized explode — the filter on a
-    // CAST column could not push down
-    val analyzed = spark.read.parquet(s"$dir/analyzed")
-    val bounded = // IN-list only while it stays point-read-sized
-      if (maxDocId <= MaxExpandedTerms)
-        analyzed.where(col("conv_id").isin((0L until maxDocId).map(_.toString): _*))
-      else analyzed.where(col("conv_id").cast("long") < maxDocId)
-    val tf = bounded
-      .select(col("conv_id").cast("long").as("doc_id"),
-        explode(arrays_zip(col("terms"), col("tfs"))).as("tt"))
-      .select(col("doc_id"), col("tt.terms").as("term"), col("tt.tfs").cast("long").as("tf"))
-    val dfT = spark.read.parquet(IndexBuilder.dfPath(dir))
-    val n0 = spark.read.parquet(IndexBuilder.statsPath(dir)).select(col("n"))
+    val s = searcher(spark, sfDir)
+    val tf = s.termRows(col("conv_id").cast("long") < maxDocId)
+      .select(col("conv_id").cast("long").as("doc_id"), col("term"), col("tf"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy(col("tfidf").desc, col("term").asc)
-    dfT.join(broadcast(tf), "term")
-      .crossJoin(broadcast(n0))
-      .withColumn("tfidf",
-        round(col("tf") * log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)), 4))
+    tfIdf(s, tf)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= n)
       .select(col("doc_id"), col("term"), col("tfidf"))
@@ -603,34 +590,24 @@ object DocQueries {
     * normal top-k kernel, excluding the target itself. The classic
     * related-items / find-similar feature of a fulltext engine.
     *
-    * Scale shape: the term selection reads ONE doc's analyzed row (point
-    * read pushed to Parquet) joined against the df table, and only
+    * Scale shape: the term selection reads ONE doc's [[Searcher.termRows]]
+    * (point read pushed to Parquet) joined against the df frame, and only
     * `nTerms` strings reach the driver (they become the query, exactly
     * like any user-supplied query string); the retrieval itself is the
     * standard shuffle-free WAND top-k. */
   def moreLikeThis(spark: SparkSession, sfDir: String, targetId: Long,
                    nTerms: Int, k: Int): DataFrame = {
-    val dir = indexDir(spark, sfDir)
+    val s = searcher(spark, sfDir)
     // conv_id is the doc_id's canonical string (Transcripts.fromDocuments):
     // comparing strings keeps the EqualTo pushable into the Parquet scan
     // (a cast on the column would disable row-group pruning)
-    val tf = spark.read.parquet(s"$dir/analyzed")
-      .filter(col("conv_id") === targetId.toString)
-      .select(explode(arrays_zip(col("terms"), col("tfs"))).as("tt"))
-      .select(col("tt.terms").as("term"), col("tt.tfs").cast("long").as("tf"))
-    val dfT = spark.read.parquet(IndexBuilder.dfPath(dir))
-    val n0 = spark.read.parquet(IndexBuilder.statsPath(dir)).select(col("n"))
-    val terms = dfT.join(broadcast(tf), "term")
-      .crossJoin(broadcast(n0))
-      .withColumn("tfidf",
-        round(col("tf") * log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)), 4))
+    val tf = s.termRows(col("conv_id") === targetId.toString).select(col("term"), col("tf"))
+    val terms = tfIdf(s, tf)
       .orderBy(col("tfidf").desc, col("term").asc).limit(nTerms)
       .select("term").collect().map(_.getString(0))
-    val hits = searcher(spark, sfDir).topK(terms.mkString(" "), k + 51)
-    hits.select(col("conv_id").cast("long").as("doc_id"), col("score"))
-      .filter(col("doc_id") =!= targetId)
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
+    cut(s.topK(terms.mkString(" "), k + 51)
+      .select(col("conv_id").cast("long").as("doc_id"), col("score"))
+      .filter(col("doc_id") =!= targetId), k)
   }
 
   /** Hybrid sparse+dense retrieval via reciprocal-rank fusion (RRF): the
@@ -675,17 +652,16 @@ object DocQueries {
   val MaxExpandedTerms = 1024
 
   /** Prefix (wildcard) top-k: expand `prefix` against the index's term
-    * dictionary — a pushed-down range scan of the df table, never the
-    * corpus — then score the expanded OR-of-terms query (qtf = 1 per
+    * dictionary — a StartsWith filter over the Searcher's df frame, never
+    * the corpus — then score the expanded OR-of-terms query (qtf = 1 per
     * term) through the normal top-k path. The expanded term list is
     * dictionary-bounded and capped, so the collect is ≤ MaxExpandedTerms
     * strings. */
   def prefixTopK(spark: SparkSession, sfDir: String, prefix: String, k: Int): DataFrame = {
     require(prefix.nonEmpty && prefix.forall(_.isLetterOrDigit),
       s"prefix must be a bare term prefix (got '$prefix')")
-    val dir = indexDir(spark, sfDir)
     import spark.implicits._
-    val terms = spark.read.parquet(IndexBuilder.dfPath(dir))
+    val terms = searcher(spark, sfDir).dfDF
       .filter(col("term").startsWith(prefix))
       .select("term").as[String].collect().sorted
     require(terms.nonEmpty, s"prefix '$prefix' matches no dictionary term")
@@ -701,11 +677,10 @@ object DocQueries {
     * term by Σ tf·idf over the pool — the classic feedback-term selector.
     * Per-(term,doc) round-4 weights are summed as exact integer 1e-4
     * units (order-independent); only the ≤ k·avgdl pooled tf rows are
-    * touched (pool ids broadcast into the analyzed-table join), so the
-    * corpus never shuffles. */
+    * touched (a conv_id point read of [[Searcher.termRows]], broadcast
+    * into the df join), so the corpus never shuffles. */
   def expandTerms(spark: SparkSession, sfDir: String, query: String,
                   k: Int, nTerms: Int): DataFrame = {
-    val dir = indexDir(spark, sfDir)
     // pool ids to the driver (≤ k rows, already computed by the kernel) so
     // the analyzed read becomes a PRUNED POINT READ: conv_id IN (...)
     // pushed to the Parquet scan — the corpus-sized explode the old
@@ -714,19 +689,12 @@ object DocQueries {
     val poolIds = topK(spark, sfDir, query, k, relational = false)
       .select("doc_id").collect().map(_.getLong(0))
     val qTerms = Analyzer.termFreqs(Analyzer.tokenizeEn(query)).keys.toSeq
-    val tf = spark.read.parquet(s"$dir/analyzed")
-      .where(col("conv_id").isin(poolIds.map(_.toString): _*))
-      .select(col("conv_id").cast("long").as("doc_id"),
-        explode(arrays_zip(col("terms"), col("tfs"))).as("tt"))
-      .select(col("doc_id"), col("tt.terms").as("term"), col("tt.tfs").cast("long").as("tf"))
+    val s = searcher(spark, sfDir)
+    val tf = s.termRows(col("conv_id").isin(poolIds.map(_.toString): _*))
+      .select(col("term"), col("tf"))
       .filter(!col("term").isin(qTerms: _*))
-    val dfT = spark.read.parquet(IndexBuilder.dfPath(dir))
-    val n0 = spark.read.parquet(IndexBuilder.statsPath(dir)).select(col("n"))
-    dfT.join(broadcast(tf), "term")
-      .crossJoin(broadcast(n0))
-      .withColumn("w4",
-        round(col("tf") * log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)), 4))
-      .withColumn("micros", round(col("w4") * 10000).cast("long"))
+    tfIdf(s, tf)
+      .withColumn("micros", round(col("tfidf") * 10000).cast("long"))
       .groupBy("term").agg(sum("micros").as("m"))
       .orderBy(col("m").desc, col("term").asc).limit(nTerms)
       .select(col("term"), (col("m").cast("double") / 10000).as("weight"))
@@ -754,7 +722,7 @@ object DocQueries {
     // so the conjunctive kernel runs ONCE — the count() materializes the
     // lazy checkpoint, the semi-join reads the pinned label-sized rows
     val rel = s.matchAllDocs(labelQuery)
-      .join(docMap(spark, sfDir), "docId").select("doc_id")
+      .join(docIds(s), "docId").select("doc_id")
       .localCheckpoint(false)
     val nRel = rel.count()
     val relRanks = ranked.join(rel, Seq("doc_id"), "left_semi")
@@ -795,27 +763,20 @@ object DocQueries {
   def searchAfter(spark: SparkSession, sfDir: String, query: String,
                   k: Int): DataFrame = {
     val s = searcher(spark, sfDir)
-    val page1 = s.topK(query, k + 50)
-      .select(col("conv_id").cast("long").as("doc_id"),
-        round(col("score"), 4).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc).limit(k)
-      .collect()
+    val page1 = topKCut(s.topK(query, k + 50), k).collect()
     if (page1.length < k)
       return spark.emptyDataFrame
         .select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
     val cScore = page1.last.getDouble(1) // cursor = page 1's k-th row
     val cDocId = page1.last.getLong(0)
-    s.topKAfter(query, k + 50, cScore)
-      .select(col("conv_id").cast("long").as("doc_id"),
-        round(col("score"), 4).as("s4"))
-      .where(col("s4") < cScore || (col("s4") === cScore && col("doc_id") > cDocId))
-      .orderBy(col("s4").desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"), col("s4").as("score"))
+    cut(s.topKAfter(query, k + 50, cScore)
+      .select(col("conv_id").cast("long").as("doc_id"), round(col("score"), 4).as("score"))
+      .where(col("score") < cScore || (col("score") === cScore && col("doc_id") > cDocId)), k)
   }
 
   /** Did-you-mean term suggestion: dictionary terms within `maxDist` edits
-    * of `term`, most-frequent first (df desc, term asc). One column-pruned
-    * scan of the vocabulary-sized df table with the THRESHOLDED
+    * of `term`, most-frequent first (df desc, term asc). One scan of the
+    * Searcher's vocabulary-sized df frame with the THRESHOLDED
     * levenshtein pushed into it (Spark's 3-arg levenshtein bails out at
     * maxDist+1, so cost per term is O(maxDist·len), not O(len²)); never
     * touches postings or the corpus. At a 10^8-term vocabulary the same
@@ -824,7 +785,7 @@ object DocQueries {
     * sidecar would be measured against. */
   def suggest(spark: SparkSession, sfDir: String, term: String,
               maxDist: Int, n: Int): DataFrame =
-    spark.read.parquet(IndexBuilder.dfPath(indexDir(spark, sfDir)))
+    searcher(spark, sfDir).dfDF
       .filter(levenshtein(col("term"), lit(term), maxDist) >= 0)
       .orderBy(col("df").desc, col("term").asc).limit(n)
       .select(col("term"), col("df"))
@@ -834,7 +795,7 @@ object DocQueries {
     * `perTerm` kept — the typed term itself is a distance-0 candidate);
     * candidate PHRASES are the cross product, ranked by the PRODUCT of
     * member dfs — the unigram language model that needs no side model.
-    * ALL positions' candidates come from ONE df-table scan (the positions
+    * ALL positions' candidates come from ONE df-frame scan (the positions
     * broadcast against the vocabulary with the thresholded levenshtein in
     * the join condition, ranked per position by a window) — never a scan
     * per query position; ≤ |positions|·perTerm rows reach the driver. The
@@ -854,7 +815,7 @@ object DocQueries {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("pos").orderBy(col("df").desc, col("term").asc)
     val cands: Map[Int, Seq[(String, Long)]] =
-      spark.read.parquet(IndexBuilder.dfPath(indexDir(spark, sfDir)))
+      searcher(spark, sfDir).dfDF
         .join(broadcast(pos), levenshtein(col("term"), col("tok"), maxDist) >= 0)
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= perTerm)
@@ -888,12 +849,9 @@ object DocQueries {
   def collapseTopK(spark: SparkSession, sfDir: String, query: String,
                    groupCol: String, k: Int): DataFrame = {
     val s = searcher(spark, sfDir)
-    val hits = s.scoreMatches(query)
+    s.scoreMatches(query)
       .withColumn("s4", round(col("score"), 4))
-    val meta = sidecarOf(s)
-      .select(col("docId"), col("conv_id").cast("long").as("doc_id"),
-        col(groupCol).as("grp"))
-    hits.join(meta, "docId")
+      .join(docIds(s, col(groupCol).as("grp")), "docId")
       .groupBy("grp")
       .agg(max(struct(col("s4"), (-col("doc_id")).as("nid"))).as("best"))
       .select(col("grp").as(groupCol), (-col("best.nid")).as("doc_id"),
@@ -906,8 +864,7 @@ object DocQueries {
     * (standing query, matching doc) pair, ordered. */
   def percolate(spark: SparkSession, sfDir: String,
                 queries: Seq[graft.streaming.Percolator.Query]): DataFrame =
-    graft.streaming.Percolator.percolate(spark,
-        spark.read.parquet(s"$sfDir/documents.parquet"), queries)
+    graft.streaming.Percolator.percolate(spark, Corpus.documents(spark, sfDir), queries)
       .orderBy(col("qid"), col("doc_id"))
 
   /** Synonym-aware top-k (Lucene SynonymQuery: group tf = Σ member tfs,
@@ -964,14 +921,9 @@ object DocQueries {
   def funcScoreTopK(spark: SparkSession, sfDir: String, query: String,
                     k: Int): DataFrame = {
     val s = searcher(spark, sfDir)
-    val meta = sidecarOf(s)
-      .select(col("docId"), col("conv_id").cast("long").as("doc_id"),
-        col("n_chars"))
-    s.scoreMatches(query)
-      .join(meta, "docId")
-      .withColumn("score2", col("score") * log(lit(1.0) + col("n_chars") / 100.0))
-      .select(col("doc_id"), round(col("score2"), 4).as("score"))
-      .orderBy(round(col("score2"), 4).desc, col("doc_id").asc).limit(k)
+    cut(s.scoreMatches(query)
+      .join(docIds(s, col("n_chars")), "docId")
+      .select(col("doc_id"), (col("score") * log(lit(1.0) + col("n_chars") / 100.0)).as("score")), k)
   }
 
   /** Classic TF-IDF top-k (Searcher.topKTfIdf), (round4, doc_id) cut. */
@@ -991,16 +943,13 @@ object DocQueries {
     val phraseToks = graft.analysis.Analyzer.tokenizeRaw(phrase).toSeq
     val verify = udf((t: String) =>
       graft.analysis.Analyzer.tokenizeRaw(t).toSeq.containsSlice(phraseToks))
+    // the pool keeps raw scores: the phrase bonus adds before rounding
     val pool = s.topK(query, poolN + 50)
       .select(col("conv_id").cast("long").as("doc_id"), col("score"))
       .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(poolN)
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select("doc_id", "text")
-    pool.join(docs, "doc_id") // pool-sized: broadcasts the small side
-      .withColumn("score2",
-        col("score") + when(verify(col("text")), lit(w)).otherwise(lit(0.0)))
-      .select(col("doc_id"), round(col("score2"), 4).as("score"))
-      .orderBy(round(col("score2"), 4).desc, col("doc_id").asc).limit(k)
+    cut(pool.join(textOf(spark, sfDir), "doc_id") // pool-sized: broadcasts the small side
+      .select(col("doc_id"),
+        (col("score") + when(verify(col("text")), lit(w)).otherwise(lit(0.0))).as("score")), k)
   }
 
   /** Per-group top hits (ES terms agg + top_hits): among docs matching
@@ -1013,13 +962,10 @@ object DocQueries {
   def topHitsByGroup(spark: SparkSession, sfDir: String, query: String,
                      groupCol: String, perGroup: Int, kGroups: Int): DataFrame = {
     val s = searcher(spark, sfDir)
-    val meta = sidecarOf(s)
-      .select(col("docId"), col("conv_id").cast("long").as("doc_id"),
-        col(groupCol).as("grp"))
     val hits = s.scoreMatches(query)
       .withColumn("s4", round(col("score"), 4))
       .where(col("s4") > 0.0)
-      .join(meta, "docId")
+      .join(docIds(s, col(groupCol).as("grp")), "docId")
       .select(col("doc_id"), col("s4"), col("grp"))
     val wRank = org.apache.spark.sql.expressions.Window
       .partitionBy(col("grp")).orderBy(col("s4").desc, col("doc_id").asc)
@@ -1051,10 +997,8 @@ object DocQueries {
     * read. */
   def explainTopHit(spark: SparkSession, sfDir: String, query: String): DataFrame = {
     val s = searcher(spark, sfDir)
-    val top = s.topK(query, 50)
-      .select(col("docId"), col("conv_id").cast("long").as("doc_id"), col("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc)
-      .limit(1).collect()
+    val top = cut(s.topK(query, 50)
+      .select(col("docId"), col("conv_id").cast("long").as("doc_id"), col("score")), 1).collect()
     val target = if (top.isEmpty) -1L else top.head.getAs[Long]("docId")
     s.explain(query, target)
       .select(col("term"), col("tf"), col("df"), round(col("contrib"), 4).as("contrib"))
@@ -1081,13 +1025,10 @@ object DocQueries {
     val verify = udf((t: String) =>
       graft.analysis.Analyzer.tokenizeRaw(t).toSeq.containsSlice(phraseToks))
     val cands = s.matchAllDocs(phrase) // (docId, score), candidate-bounded
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
-    cands
-      .join(docMap(spark, sfDir).select("doc_id", "docId"), "docId")
-      .join(docs, "doc_id") // candidate-pruned: broadcasts the small side
+    cut(cands.join(docIds(s), "docId")
+      .join(textOf(spark, sfDir), "doc_id") // candidate-pruned: broadcasts the small side
       .filter(verify(col("text")))
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
+      .select(col("doc_id"), col("score")), k)
   }
 
   private val posSearchers = new ConcurrentHashMap[String, PosSearcher]()
@@ -1098,8 +1039,8 @@ object DocQueries {
   def posSearcher(spark: SparkSession, sfDir: String): PosSearcher =
     posSearchers.computeIfAbsent(sfDir, _ => {
       val dir = indexDir(spark, sfDir)
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      graft.build.PositionIndex.build(spark, Transcripts.fromDocuments(docs), dir)
+      graft.build.PositionIndex.build(spark,
+        Transcripts.fromDocuments(Corpus.documents(spark, sfDir)), dir)
       new PosSearcher(spark, dir)
     })
 
@@ -1127,8 +1068,9 @@ object DocQueries {
                      slop: Int, k: Int): DataFrame = {
     val rawToks = graft.analysis.Analyzer.tokenizeRaw(phrase).toSeq
     val matches = posSearcher(spark, sfDir).phraseSlopDocs(rawToks, slop)
-    if (searcher(spark, sfDir).analyzeQuery(phrase).isEmpty)
-      matches.join(docMap(spark, sfDir).select("doc_id", "docId"), "docId")
+    val s = searcher(spark, sfDir)
+    if (s.analyzeQuery(phrase).isEmpty)
+      matches.join(docIds(s), "docId")
         .select(col("doc_id"), lit(0.0).as("score"), col("span"))
         .orderBy(asc("doc_id")).limit(k)
     else positionalTopK(spark, sfDir, phrase, matches, k)
@@ -1138,12 +1080,13 @@ object DocQueries {
     * scores of `query` (matches ⊆ conjunctive candidates for stopword-free
     * queries) and cut on (round4, doc_id): (doc_id, score, span). */
   private def positionalTopK(spark: SparkSession, sfDir: String, query: String,
-                             matches: DataFrame, k: Int): DataFrame =
-    searcher(spark, sfDir).matchAllDocs(query)
+                             matches: DataFrame, k: Int): DataFrame = {
+    val s = searcher(spark, sfDir)
+    cut(s.matchAllDocs(query)
       .join(broadcast(matches), "docId")
-      .join(docMap(spark, sfDir).select("doc_id", "docId"), "docId")
-      .select(col("doc_id"), round(col("score"), 4).as("score"), col("span"))
-      .orderBy(round(col("score"), 4).desc, col("doc_id").asc).limit(k)
+      .join(docIds(s), "docId")
+      .select(col("doc_id"), col("score"), col("span")), k)
+  }
 
   /** MMR-diversified rerank: greedy maximal-marginal-relevance over the
     * BM25 top-`m` pool — pick argmax of λ·score − (1−λ)·max-cosine-to-
@@ -1165,7 +1108,7 @@ object DocQueries {
     val pool = topK(spark, sfDir, query, m, relational = false)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     val ids = pool.map(_._1)
-    val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val embs = Corpus.embeddings(spark, sfDir)
       .filter(col("vec_id").isin(ids: _*))
       .select(col("vec_id"), col("embedding"))
       .collect()
@@ -1196,32 +1139,31 @@ object DocQueries {
 
   /** Fuzzy retrieval (Lucene FuzzyQuery re-expressed): expand a query term
     * to every dictionary term within edit distance ≤ `maxDist` (banded-
-    * threshold Levenshtein over the df table — a dictionary-sized map-side
-    * scan, never the corpus), capped at the first `maxExpansions` by term
+    * threshold Levenshtein over the Searcher's df frame — a dictionary-
+    * sized map-side scan, never the corpus), capped at the first `maxExpansions` by term
     * order (the Lucene max-clause discipline [[prefixTopK]] also follows),
     * then BM25 top-k with the variants as a qtf=1 query through the
     * normal WAND kernel. Output (doc_id, score). */
   def fuzzyTopK(spark: SparkSession, sfDir: String, term: String,
                 maxDist: Int, maxExpansions: Int, k: Int): DataFrame = {
-    val dfT = spark.read.parquet(IndexBuilder.dfPath(indexDir(spark, sfDir)))
-    val variants = dfT
+    val s = searcher(spark, sfDir)
+    val variants = s.dfDF
       .filter(levenshtein(col("term"), lit(term), maxDist) >= 0)
       .orderBy("term").limit(maxExpansions)
       .select("term").collect().map(_.getString(0))
     if (variants.isEmpty) // nothing in the dictionary within maxDist
       return spark.emptyDataFrame
         .select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
-    topKCut(searcher(spark, sfDir).topK(variants.mkString(" "), k + 50), k)
+    topKCut(s.topK(variants.mkString(" "), k + 50), k)
   }
 
   /** Wildcard retrieval (Lucene's WildcardQuery): dictionary terms
     * matching the glob (`*` = any run, `?` = one char) become a qtf=1
     * OR query, expansion capped at `maxExpansions` in term order (the
-    * same deterministic cap as [[fuzzyTopK]]). The expansion is one
-    * column-pruned scan of the vocabulary-sized df table; a leading
-    * literal prefix additionally pushes a StartsWith prefilter into the
-    * Parquet scan, so anchored patterns prune at the row-group level —
-    * the same reason Lucene walks a prefix-bounded FST range. */
+    * same deterministic cap as [[fuzzyTopK]]). The expansion is one scan
+    * of the Searcher's vocabulary-sized df frame; a leading literal
+    * prefix adds a StartsWith prefilter ahead of the regex — the same
+    * reason Lucene walks a prefix-bounded FST range. */
   def wildcardTopK(spark: SparkSession, sfDir: String, pattern: String,
                    maxExpansions: Int, k: Int): DataFrame = {
     val rx = "^" + pattern.flatMap {
@@ -1231,15 +1173,15 @@ object DocQueries {
       case c => c.toString
     } + "$"
     val prefix = pattern.takeWhile(c => c != '*' && c != '?')
-    val dict0 = spark.read.parquet(IndexBuilder.dfPath(indexDir(spark, sfDir)))
-    val dict = if (prefix.isEmpty) dict0 else dict0.filter(col("term").startsWith(prefix))
+    val s = searcher(spark, sfDir)
+    val dict = if (prefix.isEmpty) s.dfDF else s.dfDF.filter(col("term").startsWith(prefix))
     val variants = dict.filter(col("term").rlike(rx))
       .orderBy("term").limit(maxExpansions)
       .select("term").collect().map(_.getString(0))
     if (variants.isEmpty)
       return spark.emptyDataFrame
         .select(lit(0L).as("doc_id"), lit(0.0).as("score")).limit(0)
-    topKCut(searcher(spark, sfDir).topK(variants.mkString(" "), k + 50), k)
+    topKCut(s.topK(variants.mkString(" "), k + 50), k)
   }
 
   /** Proximity (unordered span-near) top-k: documents containing every
@@ -1286,9 +1228,8 @@ object DocQueries {
       if (i < 0) "" // cannot happen for a scored hit; total function anyway
       else toks.slice(math.max(0, i - w), i + w + 1).mkString(" ")
     }
-    val hits = topK(spark, sfDir, query, k, relational = false)
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
-    hits.join(docs, "doc_id") // ≤ k rows broadcast against the pruned scan
+    topK(spark, sfDir, query, k, relational = false)
+      .join(textOf(spark, sfDir), "doc_id") // ≤ k rows broadcast against the pruned scan
       .select(col("doc_id"), col("score"), snip(col("text")).as("snippet"))
       .orderBy(round(col("score"), 4).desc, col("doc_id").asc)
   }
@@ -1371,9 +1312,7 @@ object DocQueries {
   /** Corpus stats of the tombstone-deleted index — pins the delete's exact
     * (n, avgdl) decrement against an oracle over the surviving subset. */
   def deleteStats(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(IndexBuilder.statsPathAsOf(deletedIndexDir(spark, sfDir),
-        IndexBuilder.committedGen(deletedIndexDir(spark, sfDir))))
-      .select(col("n"), round(col("avgdl"), 4).as("avgdl"))
+    statsOf(spark, searcherAt(spark, deletedIndexDir(spark, sfDir)))
 
   /** Index built by MERGING two independently-built half-indexes (even /
     * odd doc_id) via IndexBuilder.merge — no re-analysis, one exchange of
@@ -1430,8 +1369,7 @@ object DocQueries {
   /** Corpus stats of the merged index — pins merge's stats rebuild against
     * the full-corpus oracle. */
   def mergeStats(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(IndexBuilder.statsPath(mergedIndexDir(spark, sfDir)))
-      .select(col("n"), round(col("avgdl"), 4).as("avgdl"))
+    statsOf(spark, searcherAt(spark, mergedIndexDir(spark, sfDir)))
 
   /** Index where 20% of the corpus (doc_id ≡ 2 mod 5) had its text
     * REPLACED via IndexBuilder.update (tombstone → append → refresh): the
@@ -1458,9 +1396,7 @@ object DocQueries {
   /** Corpus stats of the upserted index — n is unchanged (replace, not
     * insert) while avgdl reflects the new text exactly. */
   def updateStats(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(IndexBuilder.statsPathAsOf(updatedIndexDir(spark, sfDir),
-        IndexBuilder.committedGen(updatedIndexDir(spark, sfDir))))
-      .select(col("n"), round(col("avgdl"), 4).as("avgdl"))
+    statsOf(spark, searcherAt(spark, updatedIndexDir(spark, sfDir)))
 
   def refreshTopK(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame =
     topKCut(searcherAt(spark, refreshedIndexDir(spark, sfDir)).topK(query, k + 50), k)
@@ -1480,31 +1416,27 @@ object DocQueries {
 
   // ---- O6/O8: two-pass scoring, no prebuilt index, caller-named columns -----
   def scoreTwoPass(spark: SparkSession, sfDir: String, query: String): DataFrame =
-    TwoPass.scoreTwoPass(spark,
-        spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id", "text", query, P)
+    TwoPass.scoreTwoPass(spark, Corpus.documents(spark, sfDir), "doc_id", "text", query, P)
       .select(col("doc_id"), round(col("score"), 4).as("score"))
       .orderBy("doc_id")
 
   // ---- O15/O16: model-judged relevance stage (mock scorer) ------------------
-  def lmScore(spark: SparkSession, sfDir: String, query: String): DataFrame =
-    LmStage.score(spark.read.parquet(s"$sfDir/documents.parquet"),
-        "doc_id", "text", query, LmStage.mockScorer())
+  private def lmScores(spark: SparkSession, sfDir: String, query: String): DataFrame =
+    LmStage.score(Corpus.documents(spark, sfDir), "doc_id", "text", query, LmStage.mockScorer())
       .select(col("doc_id"), round(col("score"), 4).as("lm_score"))
-      .orderBy("doc_id")
+
+  def lmScore(spark: SparkSession, sfDir: String, query: String): DataFrame =
+    lmScores(spark, sfDir, query).orderBy("doc_id")
 
   def lmRank(spark: SparkSession, sfDir: String, query: String, k: Int): DataFrame =
-    LmStage.score(spark.read.parquet(s"$sfDir/documents.parquet"),
-        "doc_id", "text", query, LmStage.mockScorer())
-      .select(col("doc_id"), round(col("score"), 4).as("lm_score"))
-      .orderBy(col("lm_score").desc, col("doc_id").asc)
-      .limit(k)
+    lmScores(spark, sfDir, query).orderBy(col("lm_score").desc, col("doc_id").asc).limit(k)
 
   // ---- O13: cascade with per-stage lineage metrics ---------------------------
   def cascadeMetrics(spark: SparkSession, sfDir: String, query: String,
                      threshold: Double, topK: Int, topM: Int): DataFrame = {
     import spark.implicits._
     val (_, metrics) = Cascade.runWithMetrics(
-      docMap(spark, sfDir).select("doc_id", "len"),
+      docLensOf(spark, sfDir),
       cascadeStages(spark, sfDir, query),
       Cascade.Config(topK = topK, topM = topM, threshold = threshold), "doc_id")
     metrics.map(m => (m.stage.toLong, m.nIn, m.nThreshold, m.nOut))
@@ -1517,8 +1449,7 @@ object DocQueries {
     val s = searcher(spark, sfDir)
     val stage1: DataFrame => DataFrame = cands =>
       s.scoreMatches(query)
-        .join(sidecarOf(s)
-          .select(col("docId"), col("conv_id").cast("long").as("doc_id")), "docId")
+        .join(docIds(s), "docId")
         .select(col("doc_id"), col("score"))
         .join(cands.select("doc_id", "len"), "doc_id")
     val stage2: DataFrame => DataFrame = prev =>
@@ -1530,7 +1461,7 @@ object DocQueries {
   def cascade(spark: SparkSession, sfDir: String, query: String,
               threshold: Double, topK: Int, topM: Int): DataFrame = {
     // stage 2 is the reference pipeline tests' mock ranker: score*0.5 + len/100
-    Cascade.run(docMap(spark, sfDir).select("doc_id", "len"),
+    Cascade.run(docLensOf(spark, sfDir),
         cascadeStages(spark, sfDir, query),
         Cascade.Config(topK = topK, topM = topM, threshold = threshold), "doc_id")
       .select(col("doc_id"), round(col("score"), 4).as("score"))

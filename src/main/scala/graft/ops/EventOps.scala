@@ -33,7 +33,7 @@ object EventOps {
     * the output is one row per user regardless of event volume. */
   def sessionize(spark: SparkSession, sfDir: String, gapMinutes: Int): DataFrame =
     sessionizeOver(
-      spark.read.parquet(s"$sfDir/events.parquet")
+      graft.sources.Corpus.events(spark, sfDir)
         .select(col("user_id"),
           // the parquet column is TIMESTAMP_NTZ; the cast reinterprets it in
           // the session zone (Verify/Bench pin UTC), shifting all values by
@@ -79,7 +79,7 @@ object EventOps {
     * as floor(value·10⁴) integer units — everything engine-exact. */
   def asOf(spark: SparkSession, sfDir: String, rightType: String): DataFrame =
     asOfOver(
-      spark.read.parquet(s"$sfDir/events.parquet")
+      graft.sources.Corpus.events(spark, sfDir)
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts").cast("timestamp")).as("us"),
           col("event_type"),
@@ -136,7 +136,7 @@ object EventOps {
     // event array), then one k-row aggregate; the old form paid k
     // filtered scans, k user-keyed joins and k count actions (O(k) jobs,
     // measured ~0.5 s of pure scheduling at sf0.1).
-    val reached = spark.read.parquet(s"$sfDir/events.parquet")
+    val reached = graft.sources.Corpus.events(spark, sfDir)
       .select(col("user_id"), unix_micros(col("ts").cast("timestamp")).as("us"),
         col("event_type"))
       .filter(col("event_type").isin(steps.distinct: _*))
@@ -211,7 +211,7 @@ object EventOps {
       "eventWindows needs spark.sql.session.timeZone=UTC: absolute " +
         s"tumbling-window boundaries are zone-dependent (session zone '$tz')")
     val wUs = windowMinutes * 60000000L
-    spark.read.parquet(s"$sfDir/events.parquet")
+    graft.sources.Corpus.events(spark, sfDir)
       .select(unix_micros(col("ts").cast("timestamp")).as("us"),
         col("event_type"),
         floor(col("value") * 10000).cast("long").as("mv"))

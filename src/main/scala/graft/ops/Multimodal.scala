@@ -227,7 +227,7 @@ object Multimodal {
     * reads (id, bytes) from Parquet/Iceberg exactly like this). */
   def mediaTable(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    graft.sources.Corpus.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .map { case (id, text) =>

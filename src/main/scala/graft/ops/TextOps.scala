@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.analysis.{Analyzer, StopWords, TextHash}
+import graft.sources.Corpus
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,13 +32,9 @@ object TextOps {
   private[graft] def r4(num: Long, den: Long): Double =
     if (den == 0L) 0.0 else ((num * 20000L + den) / (2L * den)).toDouble / 10000.0
 
-  private def docs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
-
-
   /** (doc_id, n_tokens) raw token counts. */
   def tokenCount(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
+    Corpus.documents(spark, sfDir)
       .select(col("doc_id"), size(rawToksUdf(col("text"))).cast("long").as("n_tokens"))
       .orderBy("doc_id")
 
@@ -62,7 +59,7 @@ object TextOps {
   /** (doc_id, n_ws, n_pieces): whitespace-field count + BPE-ish piece
     * count over lower(text). */
   def tokenPieces(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
+    Corpus.documents(spark, sfDir)
       .select(col("doc_id"), wsCountUdf(col("text")).as("n_ws"),
         bpeCountUdf(lower(col("text"))).as("n_pieces"))
       .orderBy("doc_id")
@@ -87,7 +84,7 @@ object TextOps {
 
   def langId(spark: SparkSession, sfDir: String): DataFrame = {
     val pred = udf(predictLang _)
-    docs(spark, sfDir).select(col("doc_id"), pred(col("text")).as("pred_lang"))
+    Corpus.documents(spark, sfDir).select(col("doc_id"), pred(col("text")).as("pred_lang"))
       .orderBy("doc_id")
   }
 
@@ -107,7 +104,7 @@ object TextOps {
         (n, r4(stop, n), r4(dn * (n - stop), n * n))
       }
     }
-    docs(spark, sfDir)
+    Corpus.documents(spark, sfDir)
       .select(col("doc_id"), f(col("text")).as("q"))
       .select(col("doc_id"), col("q._1").as("n_tokens"),
         col("q._2").as("stop_ratio"), col("q._3").as("quality"))
@@ -119,7 +116,7 @@ object TextOps {
     * dup_frac = 1 − distinct/total bigrams, top_frac = share of the single
     * most frequent bigram. Pure per-row map — no shuffle at any scale. */
   def repetition(spark: SparkSession, sfDir: String): DataFrame =
-    repetitionOver(docs(spark, sfDir))
+    repetitionOver(Corpus.documents(spark, sfDir))
 
   private[graft] def repetitionOver(source: DataFrame): DataFrame = {
     val f = udf { (t: String) =>
@@ -159,7 +156,7 @@ object TextOps {
     * the matching (doc, shingle) hits shuffle into the per-doc count. */
   def decontaminate(spark: SparkSession, sfDir: String,
                     evalMod: Long = 13L, evalRem: Long = 7L): DataFrame =
-    decontaminateOver(docs(spark, sfDir), evalMod, evalRem)
+    decontaminateOver(Corpus.documents(spark, sfDir), evalMod, evalRem)
 
   private[graft] def decontaminateOver(source: DataFrame, evalMod: Long,
                                        evalRem: Long): DataFrame = {
@@ -186,7 +183,7 @@ object TextOps {
       lit(math.round(defaultRate * 10000).toInt)) { case (acc, (src, r)) =>
       when(col("source") === lit(src), lit(math.round(r * 10000).toInt)).otherwise(acc)
     }
-    docs(spark, sfDir)
+    Corpus.documents(spark, sfDir)
       .select(col("doc_id"), col("source"),
         polyHashUdf(concat(lit("smpl:"), col("doc_id").cast("string"))).as("h"))
       .filter(col("h") % 10000 < thrCol)
@@ -236,7 +233,7 @@ object TextOps {
     val langKeep =
       if (keepLangs.isEmpty) lit(false)
       else col("pred_lang").isin(keepLangs.toSeq: _*)
-    docs(spark, sfDir)
+    Corpus.documents(spark, sfDir)
       .select(col("doc_id"), f(col("text")).as("r"))
       .select(col("doc_id"), col("r._1").as("pred_lang"),
         col("r._2").as("n_tokens"),
@@ -251,7 +248,7 @@ object TextOps {
 
   /** (doc_id, fp) — polynomial rolling-hash fingerprint of lower(text). */
   def fingerprint(spark: SparkSession, sfDir: String): DataFrame =
-    docs(spark, sfDir)
+    Corpus.documents(spark, sfDir)
       .select(col("doc_id"), polyHashUdf(lower(col("text"))).as("fp"))
       .orderBy("doc_id")
 
@@ -280,7 +277,7 @@ object TextOps {
   def dedupExact(spark: SparkSession, sfDir: String): DataFrame = {
     val sigUdf = udf((t: String) =>
       Analyzer.tokenizeRaw(t).distinct.sortWith(utf8Less).mkString(" "))
-    docs(spark, sfDir)
+    Corpus.documents(spark, sfDir)
       .select(col("doc_id"), sigUdf(col("text")).as("rawsig"))
       .filter(col("rawsig") =!= "")
       .select(col("doc_id"), md5(encode(col("rawsig"), "UTF-8")).as("sig"))
@@ -293,7 +290,7 @@ object TextOps {
   /** (doc_id, simhash) — 63-bit SimHash over raw-token TFs. */
   def simHash(spark: SparkSession, sfDir: String): DataFrame = {
     val sh = udf((t: String) => TextHash.simHash63(Analyzer.termFreqs(Analyzer.tokenizeRaw(t))))
-    docs(spark, sfDir).select(col("doc_id"), sh(col("text")).as("simhash"))
+    Corpus.documents(spark, sfDir).select(col("doc_id"), sh(col("text")).as("simhash"))
       .orderBy("doc_id")
   }
 
@@ -311,7 +308,7 @@ object TextOps {
     * Output (a, b, hamming). */
   def simHashPairs(spark: SparkSession, sfDir: String, maxHam: Int,
                    cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame =
-    simHashPairsCore(docs(spark, sfDir), maxHam, cfg).orderBy("a", "b")
+    simHashPairsCore(Corpus.documents(spark, sfDir), maxHam, cfg).orderBy("a", "b")
 
   private def simHashPairsCore(source: DataFrame, maxHam: Int,
                                cfg: SimilarityConfig): DataFrame = {
@@ -360,7 +357,7 @@ object TextOps {
   def nearDupEdit(spark: SparkSession, sfDir: String, maxHam: Int = 3,
                   maxEdit: Int = 32,
                   cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame = {
-    val d = docs(spark, sfDir)
+    val d = Corpus.documents(spark, sfDir)
     val pairs = simHashPairsCore(d, maxHam, cfg)
     broadcast(pairs)
       .join(d.select(col("doc_id").as("a"), col("text").as("ta")), "a")
@@ -392,7 +389,7 @@ object TextOps {
         (st / stride, chunk.length.toLong, TextHash.polyHash31(chunk.mkString(" ")))
       }.toArray
     }
-    docs(spark, sfDir)
+    Corpus.documents(spark, sfDir)
       .select(col("doc_id"), explode(f(col("text"))).as("c"))
       .select(col("doc_id"), col("c._1").cast("long").as("chunk_id"),
         col("c._2").as("n_chunk_tokens"), col("c._3").as("chunk_hash"))
@@ -467,7 +464,7 @@ object TextOps {
       if (toks.length < 2) Array.empty[(String, String)]
       else Array.tabulate(toks.length - 1)(i => (toks(i), toks(i + 1)))
     }
-    val d = docs(spark, sfDir)
+    val d = Corpus.documents(spark, sfDir)
     val uni = d.select(explode(rawToksUdf(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
     val bgCounts = d.select(explode(bgUdf(col("text"))).as("g"))
@@ -505,7 +502,7 @@ object TextOps {
   def dedupIncremental(spark: SparkSession, sfDir: String,
                        batchMod: Long = 10L, batchRem: Long = 3L,
                        cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame = {
-    val bands = minHashBands(docs(spark, sfDir), cfg)
+    val bands = minHashBands(Corpus.documents(spark, sfDir), cfg)
     val fresh = bands.filter(col("doc_id") % batchMod === batchRem)
       .select(col("doc_id").as("new_id"), col("band"), col("key"))
     val old = bands.filter(col("doc_id") % batchMod =!= batchRem)
@@ -575,7 +572,7 @@ object TextOps {
   /** MinHash-LSH candidate pairs (a, b). */
   def minHashPairs(spark: SparkSession, sfDir: String,
                    cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame =
-    minHashCandidates(docs(spark, sfDir), cfg).orderBy("a", "b")
+    minHashCandidates(Corpus.documents(spark, sfDir), cfg).orderBy("a", "b")
 
   /** Near-dup CLUSTERING — the dedup-pipeline step after pair generation:
     * connected components over the MinHash-LSH candidate-pair graph.
@@ -586,7 +583,7 @@ object TextOps {
     * in ≥ 1 candidate pair, ordered by doc_id. */
   def dupClusters(spark: SparkSession, sfDir: String,
                   cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame =
-    connectedComponents(minHashCandidates(docs(spark, sfDir), cfg))
+    connectedComponents(minHashCandidates(Corpus.documents(spark, sfDir), cfg))
       .orderBy("doc_id")
 
   /** Distributed min-label propagation over an (a, b) edge list: each
@@ -670,7 +667,7 @@ object TextOps {
     * and the shared driver oracle). */
   def dupClustersStar(spark: SparkSession, sfDir: String,
                       cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame =
-    connectedComponentsStar(minHashCandidates(docs(spark, sfDir), cfg))
+    connectedComponentsStar(minHashCandidates(Corpus.documents(spark, sfDir), cfg))
       .orderBy("doc_id")
 
   /** Alternating large-star/small-star connected components (Kiveris et
@@ -785,7 +782,7 @@ object TextOps {
     * term-keyed hash aggregates + one term-keyed join — the standard
     * corpus-statistics shape, no driver-side state. */
   def surprisal(spark: SparkSession, sfDir: String): DataFrame = {
-    val toks = docs(spark, sfDir)
+    val toks = Corpus.documents(spark, sfDir)
       .select(col("doc_id"), explode(rawToksUdf(col("text"))).as("term"))
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val ctf = tf.groupBy("term").agg(sum("tf").as("ctf"))
@@ -794,7 +791,7 @@ object TextOps {
       .withColumn("su", col("tf") *
         round(lit(10000.0) * log(col("total").cast("double") / col("ctf"))).cast("long"))
       .groupBy("doc_id").agg(sum("su").as("ssum"), sum("tf").as("n"))
-    docs(spark, sfDir).select(col("doc_id"))
+    Corpus.documents(spark, sfDir).select(col("doc_id"))
       .join(s, Seq("doc_id"), "left_outer")
       .select(col("doc_id"),
         coalesce(col("n"), lit(0L)).cast("long").as("n_tokens"),
@@ -811,9 +808,9 @@ object TextOps {
     * fits); the corpus side is a single column-pruned scan. */
   def dedupApply(spark: SparkSession, sfDir: String,
                  cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame = {
-    val drop = connectedComponents(minHashCandidates(docs(spark, sfDir), cfg))
+    val drop = connectedComponents(minHashCandidates(Corpus.documents(spark, sfDir), cfg))
       .filter(!col("keep")).select("doc_id")
-    docs(spark, sfDir).select("doc_id")
+    Corpus.documents(spark, sfDir).select("doc_id")
       .join(drop, Seq("doc_id"), "left_anti")
       .orderBy("doc_id")
   }
@@ -826,7 +823,7 @@ object TextOps {
     * (a, b, jaccard). */
   def ngramJaccard(spark: SparkSession, sfDir: String, minJ: Double,
                    cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame =
-    ngramJaccardOver(docs(spark, sfDir), minJ, cfg)
+    ngramJaccardOver(Corpus.documents(spark, sfDir), minJ, cfg)
 
   /** Shared recall+verify kernel for the exact-overlap family
     * ([[ngramJaccard]], [[containment]]): MinHash-banded candidate pairs
@@ -899,7 +896,7 @@ object TextOps {
     * shingle tables, broadcast candidate set — never all-pairs. */
   def containment(spark: SparkSession, sfDir: String, minC: Double,
                   cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame =
-    containmentOver(docs(spark, sfDir), minC, cfg)
+    containmentOver(Corpus.documents(spark, sfDir), minC, cfg)
 
   private[graft] def containmentOver(source: DataFrame, minC: Double,
       cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame =
@@ -940,7 +937,7 @@ object TextOps {
     * span_end exclusive, ordered (doc_id, span_start).
     */
   def substrDupSpans(spark: SparkSession, sfDir: String, n: Int = 8): DataFrame =
-    substrDupSpansOver(docs(spark, sfDir), n)
+    substrDupSpansOver(Corpus.documents(spark, sfDir), n)
 
   /** One fused tokenize + windowed-hash pass per doc: (pos, h1, h2) per
     * n-token shingle, two independent 64-bit seeds = a 128-bit dedup key.
@@ -1010,7 +1007,7 @@ object TextOps {
     * bytes but adds two AQE stage-jobs and measured slower at sf0.1 in an
     * alternating A/B, so it stays out; see OPTIMIZATION_r06.md.) */
   def substrDedupApply(spark: SparkSession, sfDir: String, n: Int = 8): DataFrame =
-    substrDedupApplyOver(docs(spark, sfDir), n)
+    substrDedupApplyOver(Corpus.documents(spark, sfDir), n)
 
   private[graft] def substrDedupApplyOver(source: DataFrame, n: Int): DataFrame = {
     val toks = source

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.functions.VectorFunctions.cosineSim
+import graft.sources.Corpus
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
@@ -49,13 +50,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 object VectorOps {
 
   val Dim = 64
-
-  /** The raw vectors (vec_id, embedding: array<float>, …): [[CosineSim]]
-    * widens each float to double in its codegen loop (exact IEEE
-    * widening), so the per-query corpus scans never run an interpreted
-    * decode projection; only the persisted corpus decodes, once. */
-  private def raw(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
 
   // ---- random-hyperplane LSH ------------------------------------------------
 
@@ -219,9 +213,12 @@ object VectorOps {
     cents.indices.sortBy(c => (d2(tq, 0, cents(c)), c)).take(nprobe)
 
   /** Brute-force cosine top-k against the vector with vec_id = targetId,
-    * straight off the RAW FLOAT vectors. */
+    * straight off the RAW FLOAT vectors: [[CosineSim]] widens each float
+    * to double in its codegen loop (exact IEEE widening), so the per-query
+    * corpus scans never run an interpreted decode projection; only the
+    * persisted corpus decodes, once. */
   def cosTopK(spark: SparkSession, sfDir: String, targetId: Long, k: Int): DataFrame = {
-    val v = raw(spark, sfDir)
+    val v = Corpus.embeddings(spark, sfDir)
     exactTop(v, v, targetId, k)
   }
 
@@ -236,7 +233,7 @@ object VectorOps {
     * filtered slice. */
   def cosTopKFiltered(spark: SparkSession, sfDir: String, targetId: Long,
                       label: Int, k: Int): DataFrame = {
-    val v = raw(spark, sfDir)
+    val v = Corpus.embeddings(spark, sfDir)
     exactTop(v, v.filter(col("label") === label), targetId, k)
   }
 
@@ -347,7 +344,7 @@ object VectorOps {
   private val corpora = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def corpus(spark: SparkSession, sfDir: String): DataFrame = {
     corpora.computeIfPresent(sfDir, (_, q) => if (q.sparkSession.sparkContext.isStopped) null else q)
-    corpora.computeIfAbsent(sfDir, _ => raw(spark, sfDir)
+    corpora.computeIfAbsent(sfDir, _ => Corpus.embeddings(spark, sfDir)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("e"))
       .withColumn("qv", quantize(col("e")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -494,7 +491,7 @@ object VectorOps {
     * old decode-first plan. */
   def similarPairs(spark: SparkSession, sfDir: String, n: Int,
                    cfg: SimilarityConfig = SimilarityConfig.Default): DataFrame = {
-    val buckets = raw(spark, sfDir)
+    val buckets = Corpus.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").as("e"),
         posexplode(bandKeysUdf(cfg)(col("embedding"))).as(Seq("band", "key")))
       .groupBy("band", "key")

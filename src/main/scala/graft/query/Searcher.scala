@@ -133,7 +133,11 @@ final class Searcher(spark: SparkSession, indexDir: String,
   private val postingsPaths: Seq[String] =
     s"$indexDir/postings" +: graft.build.IndexBuilder.segmentPathsAsOf(spark, indexDir, generation)
   private val postingsDF = maybeCache(graft.sources.TableIO.read(spark, postingsPaths))
-  private val dfDF = maybeCache(graft.sources.TableIO.read(spark,
+  /** The (term, df) table of this generation (cached when cacheTables):
+    * the one df reader of the query surface — dictionary scans (prefix,
+    * fuzzy, wildcard, suggest) and tf·idf joins read it, never the df
+    * files by path. */
+  private[graft] val dfDF = maybeCache(graft.sources.TableIO.read(spark,
     graft.build.IndexBuilder.dfPathAsOf(indexDir, generation)))
   /** The df files, listed once for [[dfSlice]]'s point reads. */
   private val dfFiles: Seq[String] = PointRead.files(dfDF)
@@ -141,8 +145,8 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * [[dfSlice]], the shard job and [[hitLookup]]. */
   private val hadoopConf = spark.sparkContext.broadcast(
     new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))
-  /** Coverage-filtered doc-meta projection, the base of the relational
-    * doc map below. Kernel hits never read it: they resolve inside the
+  /** Coverage-filtered doc-meta projection, the base of [[scoreAll]]'s
+    * zero-score rows. Kernel hits never read it: they resolve inside the
     * shard task through [[hitLookup]]. */
   private lazy val hitMetaDF = maybeCache {
     val base = graft.sources.TableIO.read(spark, s"$indexDir/analyzed")
@@ -154,11 +158,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
     * with the broadcast anti-join, layered over the shared cached frame. */
   private lazy val docMetaDF = tombstoneFree(hitMetaDF)
 
-  /** The shared (cached when cacheTables) doc-meta projection — exposed so
-    * the query surface's repeated doc-map reads (candidate resolution,
-    * doc-length views) hit the hot frame instead of re-scanning analyzed/
-    * per query. Same rows as [[Searcher.docMeta]] on an index with no
-    * unrefreshed appends; coverage-filtered, tombstones not hidden. */
+  /** The (cached when cacheTables) doc-meta projection, coverage-filtered,
+    * tombstones not hidden. No engine code reads it: only perfbench's
+    * traced hit-resolution span does. */
   private[graft] def hitMeta: DataFrame = hitMetaDF
 
   /** In-task (conv_id, turn_idx) resolution of kernel hits over this
@@ -208,6 +210,19 @@ final class Searcher(spark: SparkSession, indexDir: String,
 
   private def covered(df: DataFrame): DataFrame =
     tombstoneFree(coveredOnly.fold(df)(df.where))
+
+  /** One (docId, conv_id, turn_idx, len, term, tf) row per (doc, term) of
+    * the analyzed docs that `scan` keeps — the relational paths' one
+    * reader of analyzed terms. `scan` filters the analyzed scan itself, so
+    * a conv_id or docId predicate reaches Parquet before the explode;
+    * coverage and tombstones then apply as on every relational path.
+    * Lazy and never cached. */
+  private[graft] def termRows(scan: org.apache.spark.sql.Column = lit(true)): DataFrame =
+    covered(graft.sources.TableIO.read(spark, s"$indexDir/analyzed").where(scan))
+      .select(col("docId"), col("conv_id"), col("turn_idx"), col("len"),
+        explode(arrays_zip(col("terms"), col("tfs"))).as("tt"))
+      .select(col("docId"), col("conv_id"), col("turn_idx"), col("len"),
+        col("tt.terms").as("term"), col("tt.tfs").cast("long").as("tf"))
   val n: Long = statsOverride.map(_._1).getOrElse(statsRow.getAs[Long]("n"))
   val avgdl: Double = statsOverride.map(_._2).getOrElse(statsRow.getAs[Double]("avgdl"))
   /** Exact total token count (stats `sumlen`) — the collection-model
@@ -421,8 +436,9 @@ final class Searcher(spark: SparkSession, indexDir: String,
 
   /** Completion suggester (ES completion / Lucene prefix termsEnum over
     * the dictionary): dictionary terms starting with `prefix`, popularity-
-    * ranked (df desc, term asc). One pushed-down StartsWith scan of the
-    * vocabulary-sized df table — never touches postings or the corpus. */
+    * ranked (df desc, term asc). One StartsWith filter over the df frame
+    * (pushed into the Parquet scan when the frame is not cached) — never
+    * touches postings or the corpus. */
   def complete(prefix: String, k: Int): DataFrame =
     dfDF.where(col("term").startsWith(prefix))
       .select(col("term"), col("df"))
@@ -554,11 +570,11 @@ final class Searcher(spark: SparkSession, indexDir: String,
   /** Per-term score breakdown for ONE document — Lucene's explain(): each
     * query term's (tf, df, contribution) on `docId`, the contributions
     * summing to the doc's [[topK]]/[[scoreAll]] score exactly (same
-    * codegen'd expression, same global stats). A PRUNED point read of the
-    * doc's analyzed row (docId filter pushed to the scan) joined to the
-    * broadcast query + df slices — never a corpus scan. Coverage and
-    * tombstones apply: explaining a deleted or not-yet-refreshed doc
-    * returns no rows, matching its absence from every query path. */
+    * codegen'd expression, same global stats). The doc's [[termRows]]
+    * (docId filter pushed to the scan) joined to the broadcast query + df
+    * slices — never a corpus scan. Coverage and tombstones apply:
+    * explaining a deleted or not-yet-refreshed doc returns no rows,
+    * matching its absence from every query path. */
   def explain(query: String, docId: Long): DataFrame = {
     val qtf = analyzeQuery(query)
     val empty = Seq.empty[(String, Long, Long, Double)].toDF("term", "tf", "df", "contrib")
@@ -567,16 +583,13 @@ final class Searcher(spark: SparkSession, indexDir: String,
     if (dfm.isEmpty) return empty
     val qdf = qtf.toSeq.toDF("term", "qtf")
     val dfTable = dfm.toSeq.toDF("term", "df")
-    covered(graft.sources.TableIO.read(spark, s"$indexDir/analyzed"))
-      .where(col("docId") === docId)
-      .select(col("len"), explode(arrays_zip(col("terms"), col("tfs"))).as("tt"))
-      .select(col("len"), col("tt.terms").as("term"), col("tt.tfs").as("tf"))
+    termRows(col("docId") === docId)
+      .select(col("len"), col("term"), col("tf"))
       .join(broadcast(qdf), "term")
       .join(broadcast(dfTable), "term")
       .withColumn("contrib", Bm25.scoreCol(col("tf"), col("qtf"), col("df"),
         col("len"), lit(n), lit(avgdl), params))
-      .select(col("term"), col("tf").cast("long").as("tf"),
-        col("df").cast("long").as("df"), col("contrib"))
+      .select(col("term"), col("tf"), col("df").cast("long").as("df"), col("contrib"))
       .orderBy(col("term"))
   }
 
@@ -802,13 +815,7 @@ final class Searcher(spark: SparkSession, indexDir: String,
     val qdf = qtf.toSeq.toDF("term", "qtf")
     val dfTable = dfDF
       .where(col("term").isin(qtf.keys.toSeq: _*))
-    val analyzed = covered(graft.sources.TableIO.read(spark, s"$indexDir/analyzed"))
-    val exploded = analyzed
-      .select($"docId", $"conv_id", $"turn_idx", $"len",
-        explode(arrays_zip($"terms", $"tfs")).as("tt"))
-      .select($"docId", $"conv_id", $"turn_idx", $"len",
-        $"tt.terms".as("term"), $"tt.tfs".as("tf"))
-    val scored = exploded
+    val scored = termRows()
       .join(broadcast(qdf), "term")
       .join(broadcast(dfTable), "term")
       .withColumn("part", Bm25.scoreCol($"tf", $"qtf", $"df", $"len", lit(n), lit(avgdl), params))

@@ -33,7 +33,11 @@ class BenchSmokeSpec extends AnyFunSuite {
   test("Bench.main emits a parseable partial line before scaling and a complete final line") {
     val javaBin = new java.io.File(
       new java.io.File(System.getProperty("java.home"), "bin"), "java").getAbsolutePath
-    val cmd = Seq(javaBin, "-Xmx8g", "-cp", System.getProperty("java.class.path")) ++
+    // -Xmx3g: the run needs the HostProbe's 2 GiB array plus < 0.4 GB live
+    // (GC log at -Xmx3g: no full GC, peak RSS 3.8 GB; at -Xmx2g the probe
+    // allocation fails) — a larger cap only lets G1 grow the child beside
+    // the suite JVM's own pre-touched heap
+    val cmd = Seq(javaBin, "-Xmx3g", "-cp", System.getProperty("java.class.path")) ++
       addOpens ++ Seq("graft.Bench")
     val pb = new ProcessBuilder(cmd: _*)
     // temp cwd: Bench dumps audit copies to <cwd>/BENCH/*.json — the

@@ -71,8 +71,7 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("every trained-vector path shares one persisted quantized corpus") {
-    // a fresh corpus dir: nothing of it is cached or built yet (the
-    // registry derives its dirs beside the documents table)
+    // a fresh corpus dir: nothing of it is cached or built yet
     val fresh = TestSpark.tmpDir("vecsf")
     Seq("embeddings.parquet", "documents.parquet").foreach(f =>
       spark.read.parquet(s"$sf/$f").write.parquet(s"$fresh/$f"))
@@ -85,12 +84,24 @@ class PqSpec extends AnyFunSuite {
       VectorOps.embedCluster(spark, fresh).collect()
       val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
       assert(added.size == 1, s"persisted ${added.size} frames, expected the quantized corpus only")
-    } finally {
-      val hash = Integer.toHexString(fresh.hashCode)
-      Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles()).getOrElse(Array.empty)
-        .filter(d => d.getName.startsWith("graft_") && d.getName.endsWith(s"_$hash"))
-        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-    }
+    } finally TestSpark.dropDerived(fresh)
+  }
+
+  test("an embeddings-only corpus dir trains and serves its vector indexes") {
+    // the vector dirs derive from the embeddings table alone: a corpus
+    // dir without documents.parquet must serve the same answers
+    val fresh = TestSpark.tmpDir("vecsf_emb")
+    spark.read.parquet(s"$sf/embeddings.parquet").write.parquet(s"$fresh/embeddings.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    try {
+      for ((name, run) <- Seq[(String, String => org.apache.spark.sql.DataFrame)](
+          "annIvf" -> (d => VectorOps.annIvf(spark, d, 0L, 10, 2)),
+          "annPq" -> (d => VectorOps.annPq(spark, d, 0L, 10)),
+          "embedCluster" -> (d => VectorOps.embedCluster(spark, d)))) {
+        val got = rows(run(fresh))
+        assert(got.nonEmpty && got == rows(run(sf)), s"$name on the embeddings-only dir")
+      }
+    } finally TestSpark.dropDerived(fresh)
   }
 
   test("non-default PQ geometry trains and serves (pqM=16, pqK=8)") {

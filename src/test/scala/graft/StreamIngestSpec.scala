@@ -156,4 +156,40 @@ class StreamIngestSpec extends AnyFunSuite {
     val hits = after.topK("zeppelin archive", 5).select("conv_id").as[String].collect()
     assert(hits.contains("cSTREAM"))
   }
+
+  test("streaming into a doc-meta index lands each batch's sidecar rows with it") {
+    // a corpus dir of its own: DocQueries derives its main index, built
+    // with the doc-meta sidecar, from this documents table
+    val sf = TestSpark.tmpDir("stream_meta_sf")
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .write.parquet(s"$sf/documents.parquet")
+    try {
+      val idxDir = graft.ops.DocQueries.indexDir(spark, sf)
+      val lenSrc = graft.analysis.Analyzer.analyze("wiki", graft.analysis.StopWords.english)._1
+      val doc = Seq((900001L, "zeppelin zeppelin archive fresh streamed turn", "en", "wiki", 44L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars").withColumn("len_src", lit(lenSrc))
+      val turns = Transcripts.fromDocuments(doc, Seq("lang", "source", "n_chars", "len_src"))
+      // a stream without the sidecar's columns is refused before it starts
+      val bare = TestSpark.tmpDir("stream_meta_bare")
+      turns.drop("n_chars").write.mode("append").parquet(bare)
+      val err = intercept[IllegalArgumentException](StreamIngest.start(spark,
+        spark.readStream.schema(turns.drop("n_chars").schema).parquet(bare), idxDir, shards = 8))
+      assert(err.getMessage.contains("n_chars"))
+
+      val srcDir = TestSpark.tmpDir("stream_meta_src")
+      turns.write.mode("append").parquet(srcDir)
+      val q = StreamIngest.start(spark,
+        spark.readStream.schema(turns.schema).parquet(srcDir), idxDir, shards = 8)
+      q.processAllAvailable()
+      q.stop()
+      val meta = graft.build.Fsck.run(spark, idxDir).filter(_.check == "docmeta")
+      assert(meta.nonEmpty && meta.forall(_.ok), s"fsck docmeta after streaming: $meta")
+      graft.build.IndexBuilder.refresh(spark, idxDir)
+      val bad = graft.build.Fsck.run(spark, idxDir).filterNot(_.ok)
+      assert(bad.isEmpty, s"fsck after refresh: $bad")
+      val top = graft.ops.DocQueries.funcScoreTopK(spark, sf, "zeppelin archive", 3)
+        .select("doc_id").as[Long].collect()
+      assert(top.headOption.contains(900001L), s"streamed doc not ranked first: ${top.toSeq}")
+    } finally TestSpark.dropDerived(sf)
+  }
 }

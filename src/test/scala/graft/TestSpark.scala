@@ -19,4 +19,14 @@ object TestSpark {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Deletes every index dir `DocQueries.derived` made from the corpus
+    * dir `sfDir` (`graft_<tag>_v<format>_<hash of sfDir>` under
+    * java.io.tmpdir). */
+  def dropDerived(sfDir: String): Unit = {
+    val hash = Integer.toHexString(sfDir.hashCode)
+    Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles()).getOrElse(Array.empty)
+      .filter(d => d.getName.startsWith("graft_") && d.getName.endsWith(s"_$hash"))
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
 }
